@@ -37,7 +37,7 @@ object Bench {
       // 2-3 codegen units), so by the end of pass 1 the early entries
       // are evicted and passes 2-3 of the bench's best-of-3 recompile
       // AND re-JIT every pass from scratch (cold pass ≈ 9× warm CPU —
-      // the r16 TestAggShape measurement). A larger cache lets a
+      // the r16 A/B recorded in OPTIMIZATION_r16.md). A larger cache lets a
       // repeated identical query reuse the loaded (and JIT-warmed)
       // classes — the same reuse every NON-fit query already gets
       // from the default cache. Scale-independent: a production

@@ -203,24 +203,17 @@ object FittedDecisionTree {
 class DecisionTree(val params: DecisionTreeParams,
                    val categoricalColumns: Seq[String] = Seq.empty,
                    val weightColumn: Option[String] = None) {
-  import FitInternals.{MaxLevels, NodeStats}
+  import FitInternals.{MaxLevels, NodeStats, numOr}
 
-  /** Per-feature category-cardinality cap (the k-ary learners'
-    * discipline): a higher-cardinality column is a hash feature.
+  /** The weighted label product's pre-projection name: distinct from
+    * every feature product (`__pv_wv_<feature>`), so a feature named
+    * like the label never reuses it.
     */
-  val MaxCategories = 64
+  private val LabelProduct = "__pv_wy"
 
-  def fit(dataset: DataFrame, prune: Boolean = false): FittedDecisionTree = {
-    // fit scans the data 2× per level — materialize the projected
-    // working set (features + label only) once instead of re-running
-    // the upstream plan every pass
-    val work = FitInternals.rightSizeForRepeatedScans(dataset.select(
-      (params.featureColumns ++ categoricalColumns ++ weightColumn
-        :+ params.classColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitOn(work, prune)
-    finally { work.unpersist(blocking = false); () }
-  }
+  def fit(dataset: DataFrame, prune: Boolean = false): FittedDecisionTree =
+    FitInternals.withWorkingSet(dataset, params.featureColumns ++
+      categoricalColumns ++ weightColumn :+ params.classColumn)(fitOn(_, prune))
 
   /** Fit on an already-prepared (projected + cached) working set —
     * no extra projection or persist. Used by ensemble learners that
@@ -236,51 +229,12 @@ class DecisionTree(val params: DecisionTreeParams,
     val clsCol = col(params.classColumn).cast("double")
     val metric = params.metric
     val method = params.method
-    // categorical child thresholds compose from per-category sums —
-    // a ratio of sums is a MEAN, not a median/midpoint (the k-ary
-    // learners' restriction)
-    require(catFeatures.isEmpty || features.isEmpty || method == MeanSplitter,
-      "categorical splits compose child thresholds from per-category " +
-        s"sums; use the mean splitter (got ${params.splittingMethod})")
     // WEIGHTED fit (r12): every count becomes sum(w), every rate a
-    // w-weighted mean — integer weights are provably row replication
-    // (spec-pinned). Thresholds must be MEANS (a weighted median is
-    // not a ratio of sums); weights must be present and positive
-    // (zero/negative mass poisons rates and stopping rules silently).
+    // w-weighted mean (FitInternals.WeightedAggs)
     val wcol = weightColumn.map(c => col(c).cast("double"))
-    require(weightColumn.isEmpty || features.isEmpty || method == MeanSplitter,
-      "weighted fits use w-weighted mean thresholds; use the mean " +
-        s"splitter (got ${params.splittingMethod})")
-    wcol.foreach { w =>
-      val bad = dataset.agg(
-        count(when(w.isNull || w <= 0.0, lit(1)))).collect()(0).getLong(0)
-      require(bad == 0L,
-        s"weight column ${weightColumn.get} has $bad NULL/non-positive " +
-          "rows; weighted fits require strictly positive weights")
-    }
-    // NULL categoricals rejected at fit time (the family contract,
-    // r11 advice): per-category cells exclude NULL rows while serving
-    // routes them right — impute a sentinel category upstream
-    if (catFeatures.nonEmpty) {
-      val nullAggs = catFeatures.map(q =>
-        count(when(col(q).isNull, lit(1))).as(s"nn_$q"))
-      val nulls = dataset.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
-      catFeatures.zipWithIndex.foreach { case (q, i) =>
-        require(nulls.getLong(i) == 0L,
-          s"categorical feature $q has ${nulls.getLong(i)} NULL rows; " +
-            "fit requires non-null categorical columns (impute a " +
-            "sentinel category upstream)")
-      }
-    }
-    val catDict: Map[String, Seq[String]] = catFeatures.map { q =>
-      val vs = dataset.select(col(q).cast("string").as("v"))
-        .filter(col("v").isNotNull).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      require(vs.size <= MaxCategories,
-        s"categorical feature $q has ${vs.size} values; " +
-          s"MaxCategories=$MaxCategories — hash-encode it instead")
-      q -> vs
-    }.toMap
+    FitInternals.requireMeanSplitter(params, catFeatures.nonEmpty, weightColumn.nonEmpty)
+    FitInternals.requirePositiveWeights(dataset, weightColumn)
+    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
 
     // nodeId -> decided split; nodeId -> leaf label; nodeId -> majority
     val splits = mutable.Map.empty[Long, SplitParams]
@@ -289,70 +243,8 @@ class DecisionTree(val params: DecisionTreeParams,
     val majorities = mutable.Map.empty[Long, Int]
     val p1s = mutable.Map.empty[Long, Double]
 
-    def nodeIdExpr(id: Long): Column = splits.get(id) match {
-      case Some(s) =>
-        when(col(s.attribute) <= lit(s.threshold), nodeIdExpr(2 * id))
-          .otherwise(nodeIdExpr(2 * id + 1))
-      case None => catSplits.get(id) match {
-        case Some((a, vs)) =>
-          when(col(a).cast("string").isin(vs: _*), nodeIdExpr(2 * id))
-            .otherwise(nodeIdExpr(2 * id + 1))
-        case None => lit(id)
-      }
-    }
-
     var open: Seq[Long] = Seq(1L)
     var depth = 0
-
-    def numOr(v: Any, dflt: Double): Double =
-      if (v == null) dflt else v.asInstanceOf[Number].doubleValue()
-
-    // Per-row PRE-PROJECTION of aggregate inputs (r17 — the r16
-    // RegressionTree.fitOn factoring ported to the classifier, guide
-    // §4): each level pass's side booleans (the per-node threshold
-    // CASE comparisons) and weighted value products are registered
-    // ONCE into a projection under the aggregate instead of being
-    // re-evaluated inside every aggregate update — Catalyst's
-    // subexpression elimination cannot hoist expressions under
-    // conditional branches. Same IEEE operations over the same rows
-    // in the same order, merely factored.
-    var activePre = mutable.LinkedHashMap.empty[String, Column]
-    def pv(nm: String, c: => Column): Column = {
-      activePre.getOrElseUpdate(nm, c); col(nm)
-    }
-    def withPre(df: DataFrame): DataFrame =
-      if (activePre.isEmpty) df
-      else df.select(col("*") +:
-        activePre.map { case (n, c) => c.as(n) }.toSeq: _*)
-
-    // weighted-aware aggregate kernels: with no weight column these
-    // are EXACTLY the reference expressions (count / avg /
-    // thresholdExpr) so unweighted fits stay byte-identical; with one,
-    // counts become sum(w), rates and thresholds w-weighted means
-    // (guarded — an all-excluded side reads null, same as avg's)
-    def cntAgg(cond: Option[Column]): Column = wcol match {
-      case None => count(cond.map(c => when(c, lit(1))).getOrElse(lit(1)))
-      case Some(w) =>
-        val p = pv("__pv_w", w)
-        sum(cond.map(c => when(c, p)).getOrElse(p))
-    }
-    def rateAgg(cond: Option[Column], v: Column, vn: String): Column = wcol match {
-      case None => avg(cond.map(c => when(c, v)).getOrElse(v))
-      case Some(w) =>
-        val wp = pv("__pv_w", w)
-        val wv = pv(s"__pv_wv_$vn", w * v)
-        val ws = sum(cond.map(c => when(c, wp)).getOrElse(wp))
-        when(ws > 0.0,
-          sum(cond.map(c => when(c, wv)).getOrElse(wv)) / ws)
-    }
-    def thrAgg(cond: Option[Column], g: Column, gn: String): Column = wcol match {
-      case None => method.thresholdExpr(cond.map(c => when(c, g)).getOrElse(g))
-      case Some(_) => rateAgg(cond, g, gn)
-    }
-    def sumAgg(cond: Column, v: Column, vn: String): Column = wcol match {
-      case None => sum(when(cond, v))
-      case Some(w) => sum(when(cond, pv(s"__pv_wv_$vn", w * v)))
-    }
 
     // ROOT stats — the ONLY dedicated stats pass. Every deeper
     // node's (count, p1, thresholds) are computed inside its
@@ -362,12 +254,13 @@ class DecisionTree(val params: DecisionTreeParams,
     // the dominant cost at every scale where the scan itself is
     // sub-second — and at 100 TB, one saved pass per level is one
     // saved full-corpus scan).
-    activePre = mutable.LinkedHashMap.empty
+    val rootPass = new FitInternals.WeightedAggs(wcol, method)
     val rootAggs =
-      cntAgg(None).as("n") +:
-      rateAgg(None, clsCol, "y").as("p1") +:
-      features.map(f => thrAgg(None, col(f).cast("double"), f).as(s"thr_$f"))
-    val rootRow = withPre(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
+      rootPass.mass(None).as("n") +:
+      rootPass.rate(None, clsCol, LabelProduct).as("p1") +:
+      features.map(f => rootPass.threshold(None, col(f).cast("double"),
+        s"__pv_wv_$f").as(s"thr_$f"))
+    val rootRow = rootPass.under(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
     // open node -> stats, inherited level to level
     var openStats: Map[Long, NodeStats] =
       if (numOr(rootRow.get(0), 0.0) == 0.0) Map.empty
@@ -402,28 +295,27 @@ class DecisionTree(val params: DecisionTreeParams,
         // their own. Candidate threshold dispatch per node via
         // FitInternals.levelThresholdExpr (O(1) array lookup at
         // shallow levels, when-chain past the bound).
-        val nodeCol = nodeIdExpr(1L).as("node")
+        val nodeCol = FitInternals.routeExpr(splits, catSplits).as("node")
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExpr(
             toSplit.map { case (id, st) => id -> st.thresholds(f) }, depth)
         // fresh pre-projection per level: the side booleans are
         // computed once per row instead of inside every aggregate
-        // (see the pv() note above)
-        activePre = mutable.LinkedHashMap.empty
+        val pass = new FitInternals.WeightedAggs(wcol, method)
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pv(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pass(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pass(s"__pv_gt_$f", fc > thrExpr(f))
           Seq(
-            rateAgg(Some(le), clsCol, "y").as(s"lp1_$f"),
-            rateAgg(Some(gt), clsCol, "y").as(s"rp1_$f"),
-            cntAgg(Some(le)).as(s"ln_$f"),
-            cntAgg(Some(gt)).as(s"rn_$f")) ++
+            pass.rate(Some(le), clsCol, LabelProduct).as(s"lp1_$f"),
+            pass.rate(Some(gt), clsCol, LabelProduct).as(s"rp1_$f"),
+            pass.mass(Some(le)).as(s"ln_$f"),
+            pass.mass(Some(gt)).as(s"rn_$f")) ++
           features.flatMap { g =>
             val gc = col(g).cast("double")
             Seq(
-              thrAgg(Some(le), gc, g).as(s"cthl_${f}__$g"),
-              thrAgg(Some(gt), gc, g).as(s"cthr_${f}__$g"))
+              pass.threshold(Some(le), gc, s"__pv_wv_$g").as(s"cthl_${f}__$g"),
+              pass.threshold(Some(gt), gc, s"__pv_wv_$g").as(s"cthr_${f}__$g"))
           }
         }
         // categorical cells fused into the SAME aggregate (the k-ary
@@ -434,16 +326,16 @@ class DecisionTree(val params: DecisionTreeParams,
         val catAggs = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
           val qc = col(q).cast("string")
           catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pv(s"__pv_in_${qi}_$vi", qc === v)
+            val in = pass(s"__pv_in_${qi}_$vi", qc === v)
             Seq(
-              sumAgg(in, clsCol, "y").as(s"qs_${qi}_$vi"),
-              cntAgg(Some(in)).as(s"qn_${qi}_$vi")) ++
-            features.map(g =>
-              sumAgg(in, col(g).cast("double"), g).as(s"qg_${qi}_${vi}_$g"))
+              pass.sumOf(in, clsCol, LabelProduct).as(s"qs_${qi}_$vi"),
+              pass.mass(Some(in)).as(s"qn_${qi}_$vi")) ++
+            features.map(g => pass.sumOf(in, col(g).cast("double"),
+              s"__pv_wv_$g").as(s"qg_${qi}_${vi}_$g"))
           }
         }
         val allAggs = splitAggs ++ catAggs
-        val splitRows = withPre(dataset
+        val splitRows = pass.under(dataset
           .select(col("*"), nodeCol))
           .groupBy("node")
           .agg(allAggs.head, allAggs.tail: _*)
@@ -493,9 +385,7 @@ class DecisionTree(val params: DecisionTreeParams,
                 val m = metric.evalFromP1(lp1) + metric.evalFromP1(rp1)
                 (lf.map(_._1), lp1, rp1, ln, rn, if (m.isNaN) 0.0 else m, b)
               }
-              val bb =
-                if (metric.seekMinimum) bounds.minBy(t => (t._6, t._7))
-                else bounds.minBy(t => (-t._6, t._7))
+              val bb = FitInternals.pickBest(bounds, metric)(_._6, _._7).get
               Some(Cand(q, Right(bb._1), bb._2, bb._3, bb._4, bb._5, bb._6,
                 degenerate = false))
             }
@@ -515,11 +405,7 @@ class DecisionTree(val params: DecisionTreeParams,
           val cands =
             (if (catFeatures.isEmpty) allCands
              else allCands.filterNot(_.degenerate)).sortBy(_.name)
-          val bestOpt =
-            if (cands.isEmpty) None
-            else Some(
-              if (metric.seekMinimum) cands.minBy(c => (c.m, c.name))
-              else cands.minBy(c => (-c.m, c.name)))
+          val bestOpt = FitInternals.pickBest(cands, metric)(_.m, _.name)
           if (bestOpt.isEmpty || bestOpt.get.degenerate) {
             leaves(id) = st.majority // reference dtree.py:233-234
           } else {
@@ -562,36 +448,11 @@ class DecisionTree(val params: DecisionTreeParams,
       }
       depth += 1
     }
-    // Nodes still open at the safety cap never got their own stats —
-    // fall back to the nearest ancestor's known majority.
-    def ancestorMajority(id: Long): Int = {
-      var cur = id
-      while (cur >= 1 && !majorities.contains(cur)) cur /= 2
-      majorities.getOrElse(cur, 0)
-    }
-    open.foreach(id => leaves(id) = ancestorMajority(id))
-
-    def build(id: Long): TreeNode = {
-      def pruned(node: TreeNode): TreeNode =
-        if (prune && node.leafLabels.toSet.size == 1)
-          LeafNode(majorities.getOrElse(id, node.leafLabels.head),
-            params.classColumn)
-        else node
-      splits.get(id) match {
-        case Some(s) =>
-          pruned(DecisionNode(s.attribute, s.threshold,
-            build(2 * id), build(2 * id + 1)))
-        case None => catSplits.get(id) match {
-          case Some((a, vs)) =>
-            pruned(CatDecisionNode(a, vs, build(2 * id), build(2 * id + 1)))
-          case None =>
-            LeafNode(leaves.getOrElse(id, majorities.getOrElse(id, 0)),
-              params.classColumn)
-        }
-      }
-    }
-
-    new FittedDecisionTree(params, build(1L),
+    // nodes still open at the safety cap never got their own stats:
+    // they take the nearest ancestor's majority
+    val root = FitInternals.buildClassifier(splits, catSplits, leaves,
+      majorities, params.classColumn, prune)
+    new FittedDecisionTree(params, root,
       nodeSplits = splits.toMap, nodeP1 = p1s.toMap,
       nodeCatSplits = catSplits.toMap)
   }

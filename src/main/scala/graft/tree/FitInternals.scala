@@ -1,16 +1,294 @@
 package graft.tree
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Internals shared by the level-wise learners (DecisionTree,
-  * RandomForest's fused fit, RegressionTree) so the reference
-  * semantics — stopping rules, deterministic tie-breaks, per-level
-  * threshold dispatch — exist in exactly one place. The fused forest
-  * fit is documented to produce trees IDENTICAL to tree-at-a-time
-  * fitting; sharing these is what keeps that invariant from drifting.
+import scala.collection.mutable
+
+/** The level-fit scaffold shared by the six level-wise learners (the
+  * three trees and their three fused forests) and the three boosters:
+  * working set, input contract, node routing, per-pass
+  * pre-projection, weighted aggregate kernels, split pick and
+  * classifier tree assembly — plus the reference semantics (stopping
+  * rules, deterministic tie-breaks, per-level threshold dispatch). The
+  * fused forest fits are documented to produce trees IDENTICAL to
+  * tree-at-a-time fitting; defining each piece once is what keeps that
+  * invariant from drifting.
   */
 private[tree] object FitInternals {
+
+  /** Per-feature category-cardinality cap: the fused aggregate carries
+    * |V| × (class or moment cells + numeric features) columns per
+    * categorical feature; a higher-cardinality column (url, user id)
+    * is a HASH feature, not a categorical split.
+    */
+  val MaxCategories = 64
+
+  /** Column names the level passes add to the working set themselves:
+    * the node id, the forests' tree index and explode struct, and
+    * every pre-projected aggregate input.
+    */
+  private val ReservedColumns = Set("node", "t", "e")
+  private val PreProjectionPrefix = "__pv_"
+
+  /** Reject fit input columns that would collide with a fit-internal
+    * name — as an ambiguous reference deep inside a level pass, or
+    * (for `__pv_*`) as a silently reused pre-projection.
+    */
+  def requireUnreserved(columns: Seq[String]): Unit = columns.foreach { c =>
+    require(!ReservedColumns(c) && !c.startsWith(PreProjectionPrefix),
+      s"fit input column $c collides with a fit-internal column name " +
+        s"(${ReservedColumns.mkString(", ")} or $PreProjectionPrefix*); rename it")
+  }
+
+  /** Run `fit` on the projected, right-sized and cached working set of
+    * `columns`: a fit scans its input once or twice per level, so the
+    * upstream plan runs once instead of every pass. Ensemble learners
+    * cache ONE base table this way and fit many trees against filtered
+    * views of it.
+    */
+  def withWorkingSet[A](dataset: DataFrame, columns: Seq[String])(
+      fit: DataFrame => A): A = {
+    requireUnreserved(columns)
+    val work = rightSizeForRepeatedScans(
+      dataset.select(columns.distinct.map(col): _*))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try fit(work)
+    finally { work.unpersist(blocking = false); () }
+  }
+
+  /** Categorical child thresholds compose from per-category sums and
+    * weighted thresholds are w-weighted means: a ratio of sums is a
+    * MEAN, never a median or midpoint.
+    */
+  def requireMeanSplitter(params: DecisionTreeParams, categorical: Boolean,
+                          weighted: Boolean): Unit = {
+    val composes = params.featureColumns.nonEmpty && params.method != MeanSplitter
+    require(!(categorical && composes),
+      "categorical splits compose child thresholds from per-category " +
+        s"sums; use the mean splitter (got ${params.splittingMethod})")
+    require(!(weighted && composes),
+      "weighted fits use w-weighted mean thresholds; use the mean " +
+        s"splitter (got ${params.splittingMethod})")
+  }
+
+  /** Weights must be present and strictly positive: zero or negative
+    * mass poisons rates and stopping rules silently.
+    */
+  def requirePositiveWeights(dataset: DataFrame, weightColumn: Option[String]): Unit =
+    weightColumn.foreach { c =>
+      val w = col(c).cast("double")
+      val bad = dataset.agg(
+        count(when(w.isNull || w <= 0.0, lit(1)))).collect()(0).getLong(0)
+      require(bad == 0L,
+        s"weight column $c has $bad NULL/non-positive " +
+          "rows; weighted fits require strictly positive weights")
+    }
+
+  /** Per-categorical-feature category dictionaries (one tiny distinct
+    * each, sorted for a deterministic cell layout), after rejecting
+    * NULL categoricals. Per-category cells exclude NULL rows while
+    * serving routes them right, and the fused forests recompute child
+    * stats over routed rows while the sequential paths compose them
+    * from cells — fitting on NULLs would count rows the composed stats
+    * never saw and break the fused ≡ sequential contract. Impute a
+    * sentinel category upstream; NULL routes right at serve time only.
+    */
+  def categoryDictionary(dataset: DataFrame,
+                         catFeatures: Seq[String]): Map[String, Seq[String]] = {
+    if (catFeatures.nonEmpty) {
+      val nullAggs = catFeatures.map(q =>
+        count(when(col(q).isNull, lit(1))).as(s"nn_$q"))
+      val nulls = dataset.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
+      catFeatures.zipWithIndex.foreach { case (q, i) =>
+        require(nulls.getLong(i) == 0L,
+          s"categorical feature $q has ${nulls.getLong(i)} NULL rows; " +
+            "fit requires non-null categorical columns (impute a " +
+            "sentinel category upstream)")
+      }
+    }
+    catFeatures.map { q =>
+      val vs = dataset.select(col(q).cast("string").as("v"))
+        .filter(col("v").isNotNull).distinct()
+        .collect().map(_.getString(0)).sorted.toSeq
+      require(vs.size <= MaxCategories,
+        s"categorical feature $q has ${vs.size} values; " +
+          s"MaxCategories=$MaxCategories — hash-encode it instead")
+      q -> vs
+    }.toMap
+  }
+
+  /** A collected aggregate cell as a double; `dflt` for NULL. */
+  def numOr(v: Any, dflt: Double): Double =
+    if (v == null) dflt else v.asInstanceOf[Number].doubleValue()
+
+  /** Each row's node id as one nested `when` over the splits decided so
+    * far (numeric `<=` goes left; a categorical IN-set goes left, NULL
+    * and unseen categories right) — no node column is persisted and
+    * lineage grows by the expression only.
+    */
+  def routeExpr(splits: collection.Map[Long, SplitParams],
+                catSplits: collection.Map[Long, (String, Seq[String])]): Column = {
+    def go(id: Long): Column = splits.get(id) match {
+      case Some(s) =>
+        when(col(s.attribute) <= lit(s.threshold), go(2 * id))
+          .otherwise(go(2 * id + 1))
+      case None => catSplits.get(id) match {
+        case Some((a, vs)) =>
+          when(col(a).cast("string").isin(vs: _*), go(2 * id))
+            .otherwise(go(2 * id + 1))
+        case None => lit(id)
+      }
+    }
+    go(1L)
+  }
+
+  /** The fused forests' per-level input: each row once per tree whose
+    * bag holds it, with the tree index `t` and that tree's `node`.
+    * Rows outside a tree's bag get node = -1 inside the explode and
+    * are dropped after it (cheaper than a filter() HOF allocating a
+    * second array per row).
+    */
+  def forestMemberships(dataset: DataFrame, numTrees: Int,
+                        bagFilter: Int => Column, route: Int => Column): DataFrame = {
+    val membership = array((0 until numTrees).map { i =>
+      struct(lit(i).as("t"),
+        when(bagFilter(i), route(i)).otherwise(lit(-1L)).as("node"))
+    }: _*)
+    dataset
+      .select(col("*"), explode(membership).as("e"))
+      .select(col("*"), col("e.t").as("t"), col("e.node").as("node"))
+      .where(col("node") >= 0)
+  }
+
+  /** Per-row PRE-PROJECTION of one pass's aggregate inputs. Inline, an
+    * aggregate update re-evaluates its condition (the per-node
+    * threshold CASE, a class-membership test) and its value product
+    * (w·y, |y|·g, …) — Catalyst's subexpression elimination cannot
+    * hoist them because they sit under conditional branches, so a
+    * level pass pays O(aggs · expr-size) CPU per row. A pass instead
+    * registers each condition and product ONCE under a `__pv_` name;
+    * `under` places the projection beneath the aggregate, whose
+    * expressions reference plain attributes. Same IEEE operations over
+    * the same rows in the same order, merely factored — every
+    * aggregate value is bit-identical (measured 25-30% off a level
+    * pass; see OPTIMIZATION_r16.md). One registry per pass: the
+    * thresholds differ level to level.
+    */
+  class PreProjection {
+    private val registered = mutable.LinkedHashMap.empty[String, Column]
+
+    /** Register `c` under `name` (first registration wins) and refer
+      * to it by name. */
+    def apply(name: String, c: => Column): Column = {
+      registered.getOrElseUpdate(name, c); col(name)
+    }
+
+    def under(df: DataFrame): DataFrame =
+      if (registered.isEmpty) df
+      else df.select(col("*") +:
+        registered.map { case (n, c) => c.as(n) }.toSeq: _*)
+  }
+
+  /** Weighted-aware aggregate kernels over one pass's pre-projection.
+    * With no weight column they are EXACTLY the unweighted expressions
+    * (count / avg / thresholdExpr / sum), so unweighted fits stay
+    * byte-identical; with one, counts become sum(w) and rates and
+    * thresholds w-weighted means (guarded — an all-excluded side
+    * reads null, same as avg's). Integer weights ≡ row replication
+    * (spec-pinned). `product` names the registered w·v column.
+    */
+  final class WeightedAggs(weight: Option[Column], method: SplittingMethod)
+      extends PreProjection {
+    private def over(cond: Option[Column], v: Column): Column =
+      cond.map(c => when(c, v)).getOrElse(v)
+
+    /** Row count, or mass sum(w). */
+    def mass(cond: Option[Column]): Column = weight match {
+      case None => count(over(cond, lit(1)))
+      case Some(w) => sum(over(cond, this("__pv_w", w)))
+    }
+
+    /** Mean of `v`, or its w-weighted mean. */
+    def rate(cond: Option[Column], v: Column, product: String): Column = weight match {
+      case None => avg(over(cond, v))
+      case Some(w) =>
+        val wp = this("__pv_w", w)
+        val wv = this(product, w * v)
+        val ws = sum(over(cond, wp))
+        when(ws > 0.0, sum(over(cond, wv)) / ws)
+    }
+
+    /** The splitting method's threshold, or the w-weighted mean. */
+    def threshold(cond: Option[Column], g: Column, product: String): Column =
+      weight match {
+        case None => method.thresholdExpr(over(cond, g))
+        case Some(_) => rate(cond, g, product)
+      }
+
+    /** Sum of `v` (w·v when weighted) where `cond` holds. */
+    def sumOf(cond: Column, v: Column, product: String): Column = weight match {
+      case None => sum(when(cond, v))
+      case Some(w) => sum(when(cond, this(product, w * v)))
+    }
+
+    /** Sum of `v` (w·v when weighted), pre-projected either way. */
+    def projectedSum(cond: Option[Column], v: Column, product: String): Column =
+      sum(over(cond, this(product, weight.map(_ * v).getOrElse(v))))
+  }
+
+  /** Deterministic argmin of candidate `score`s — (score asc|desc by
+    * the metric, then `tie` asc), the same tie-break as
+    * Splitting.computeAllSplits. None when there is no candidate.
+    */
+  def pickBest[A, K: Ordering](xs: Seq[A], metric: SplitMetric)(
+      score: A => Double, tie: A => K): Option[A] =
+    if (xs.isEmpty) None
+    else if (metric.seekMinimum) Some(xs.minBy(a => (score(a), tie(a))))
+    else Some(xs.minBy(a => (-score(a), tie(a))))
+
+  /** Nearest ancestor's majority — the classifiers' label for a node
+    * that never got stats of its own (still open at the level cap, or
+    * stats-less); 0 when no ancestor is known.
+    */
+  def ancestorMajority(majorities: collection.Map[Long, Int], id: Long): Int = {
+    var cur = id
+    while (cur >= 1 && !majorities.contains(cur)) cur /= 2
+    majorities.getOrElse(cur, 0)
+  }
+
+  /** Assemble a classifier tree from its decided splits. Leaves take
+    * their recorded label; a node still open at the level cap takes
+    * its nearest ancestor's majority. `prune` collapses subtrees whose
+    * leaves all agree into a leaf labelled with the node's majority
+    * (dtree.py:246-250).
+    */
+  def buildClassifier(splits: collection.Map[Long, SplitParams],
+                      catSplits: collection.Map[Long, (String, Seq[String])],
+                      leaves: collection.Map[Long, Int],
+                      majorities: collection.Map[Long, Int],
+                      classColumn: String, prune: Boolean = false): TreeNode = {
+    def build(id: Long): TreeNode = {
+      def pruned(node: TreeNode): TreeNode =
+        if (prune && node.leafLabels.toSet.size == 1)
+          LeafNode(majorities.getOrElse(id, node.leafLabels.head), classColumn)
+        else node
+      splits.get(id) match {
+        case Some(s) =>
+          pruned(DecisionNode(s.attribute, s.threshold,
+            build(2 * id), build(2 * id + 1)))
+        case None => catSplits.get(id) match {
+          case Some((a, vs)) =>
+            pruned(CatDecisionNode(a, vs, build(2 * id), build(2 * id + 1)))
+          case None =>
+            LeafNode(leaves.getOrElse(id, ancestorMajority(majorities, id)),
+              classColumn)
+        }
+      }
+    }
+    build(1L)
+  }
 
   /** Aggregate per-stage gain importances, weighted by each stage's
     * raw total gain (r12) — the boosters' cross-stage importance.
@@ -42,8 +320,7 @@ private[tree] object FitInternals {
     * stages just to count partitions; if the probe fails for any
     * reason the working set is left as-is.
     */
-  private[tree] def rightSizeForRepeatedScans(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def rightSizeForRepeatedScans(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     val parts =
       try df.queryExecution.sparkPlan.execute().getNumPartitions
@@ -85,16 +362,6 @@ private[tree] object FitInternals {
       st.entropy >= params.minSplitEntropy &&
       st.count >= params.minSplitSamples &&
       depth != params.maxDepth
-
-  /** Deterministic best-feature pick: (metric asc|desc, name asc) —
-    * the same tie-break as Splitting.computeAllSplits. Tuples are
-    * (feature, threshold, leftN, rightN, metricValue).
-    */
-  def pickBest(
-      scored: Seq[(String, Double, Long, Long, Double)],
-      metric: SplitMetric): (String, Double, Long, Long, Double) =
-    if (metric.seekMinimum) scored.minBy(t => (t._5, t._1))
-    else scored.minBy(t => (-t._5, t._1))
 
   /** Per-level candidate-threshold expression keyed on the `node`
     * column: O(1) constant-folded dense-array lookup while the level

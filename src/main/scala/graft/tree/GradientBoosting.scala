@@ -58,19 +58,19 @@ class GradientBoosting(
   require(validationFraction >= 0.0 && validationFraction < 1.0)
   require(marginCheckpointInterval >= 0)
 
-  def fit(dataset: DataFrame): FittedGBT = {
+  // ONE projected + cached base table for all stages; the residual
+  // is an expression over it, computed on the fly inside each stage's
+  // aggregates (a per-stage fit would re-read the source and
+  // materialize a fresh cache per stage).
+  def fit(dataset: DataFrame): FittedGBT =
+    FitInternals.withWorkingSet(dataset, featureColumns ++ categoricalColumns ++
+      weightColumn :+ targetColumn)(fitOn)
+
+  private def fitOn(work: DataFrame): FittedGBT = {
     val y = col(targetColumn).cast("double")
-    // ONE projected + cached base table for all stages; the residual
-    // is an expression over it, computed on the fly inside each
-    // stage's aggregates (a per-stage fit would re-read the source
-    // and materialize a fresh cache per stage).
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select((featureColumns ++ categoricalColumns ++ weightColumn
-        :+ targetColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // `cur` is the live working set: `work` until the first margin
     // checkpoint, then the latest checkpointed copy (owned = we must
-    // unpersist it; `work` itself is released in the finally).
+    // unpersist it; `work` itself is released by withWorkingSet).
     var cur: DataFrame = work
     var curOwned = false
     try {
@@ -168,7 +168,6 @@ class GradientBoosting(
         FitInternals.aggregateImportances(kept))
     } finally {
       if (curOwned) cur.unpersist(blocking = false)
-      work.unpersist(blocking = false); ()
     }
   }
 }
@@ -297,12 +296,12 @@ class GradientBoostingClassifier(
   require(validationFraction >= 0.0 && validationFraction < 1.0)
   require(marginCheckpointInterval >= 0)
 
-  def fit(dataset: DataFrame): FittedGBTClassifier = {
+  def fit(dataset: DataFrame): FittedGBTClassifier =
+    FitInternals.withWorkingSet(dataset, featureColumns ++ categoricalColumns ++
+      weightColumn :+ targetColumn)(fitOn)
+
+  private def fitOn(work: DataFrame): FittedGBTClassifier = {
     val y = col(targetColumn).cast("double")
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select((featureColumns ++ categoricalColumns ++ weightColumn
-        :+ targetColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cur: DataFrame = work
     var curOwned = false
     try {
@@ -403,7 +402,6 @@ class GradientBoostingClassifier(
         FitInternals.aggregateImportances(kept))
     } finally {
       if (curOwned) cur.unpersist(blocking = false)
-      work.unpersist(blocking = false); ()
     }
   }
 }

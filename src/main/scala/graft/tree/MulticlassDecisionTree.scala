@@ -42,7 +42,7 @@ import scala.collection.mutable
 class MulticlassDecisionTree(val params: DecisionTreeParams,
                              val categoricalColumns: Seq[String] = Seq.empty,
                              val weightColumn: Option[String] = None) {
-  import FitInternals.MaxLevels
+  import FitInternals.{MaxLevels, numOr}
 
   /** Hard cap on distinct labels: the per-level aggregate carries
     * features × k count columns; past ~64 classes the label space is
@@ -50,22 +50,9 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
     */
   val MaxClasses = 64
 
-  /** Hard cap on per-feature category cardinality — the same
-    * column-count discipline as MaxClasses (the fused aggregate
-    * carries |V| × (k + numeric features) columns per categorical
-    * feature); a higher-cardinality column (url, user id) is a HASH
-    * feature, not a categorical split.
-    */
-  val MaxCategories = 64
-
-  def fit(dataset: DataFrame, prune: Boolean = false): FittedMulticlassTree = {
-    val work = FitInternals.rightSizeForRepeatedScans(dataset.select(
-      (params.featureColumns ++ categoricalColumns ++ weightColumn
-        :+ params.classColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitOn(work, prune)
-    finally { work.unpersist(blocking = false); () }
-  }
+  def fit(dataset: DataFrame, prune: Boolean = false): FittedMulticlassTree =
+    FitInternals.withWorkingSet(dataset, params.featureColumns ++
+      categoricalColumns ++ weightColumn :+ params.classColumn)(fitOn(_, prune))
 
   private def fitOn(dataset: DataFrame, prune: Boolean): FittedMulticlassTree = {
     val features = params.featureColumns
@@ -73,62 +60,11 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
     val clsCol = col(params.classColumn).cast("int")
     val metric = params.metric
     val method = params.method
-    // a categorical split's CHILD thresholds for the numeric features
-    // compose exactly from the per-category (sum, count) cells the
-    // fused aggregate already carries — but only for the MEAN
-    // splitter (a median/midpoint is not a ratio of sums)
-    require(catFeatures.isEmpty || features.isEmpty || method == MeanSplitter,
-      "categorical splits compose child thresholds from per-category " +
-        s"sums; use the mean splitter (got ${params.splittingMethod})")
     // WEIGHTED fit (r12): class counts become class MASSES sum(w),
-    // thresholds w-weighted means; integer weights ≡ row replication
-    // (spec-pinned). Weights must be present and strictly positive.
+    // thresholds w-weighted means (FitInternals.WeightedAggs)
     val wcol = weightColumn.map(c => col(c).cast("double"))
-    require(weightColumn.isEmpty || features.isEmpty || method == MeanSplitter,
-      "weighted fits use w-weighted mean thresholds; use the mean " +
-        s"splitter (got ${params.splittingMethod})")
-    wcol.foreach { w =>
-      val bad = dataset.agg(
-        count(when(w.isNull || w <= 0.0, lit(1)))).collect()(0).getLong(0)
-      require(bad == 0L,
-        s"weight column ${weightColumn.get} has $bad NULL/non-positive " +
-          "rows; weighted fits require strictly positive weights")
-    }
-    // Per-row PRE-PROJECTION of aggregate inputs (r17 — the r16
-    // RegressionTree.fitOn factoring ported to the k-ary learner,
-    // guide §4): side booleans (threshold-CASE comparisons,
-    // class-membership tests) and weighted products are registered
-    // ONCE into a projection under the aggregate; the aggregate
-    // expressions reference plain attributes. Same IEEE operations
-    // over the same rows in the same order, merely factored.
-    var activePre = mutable.LinkedHashMap.empty[String, Column]
-    def pv(nm: String, c: => Column): Column = {
-      activePre.getOrElseUpdate(nm, c); col(nm)
-    }
-    def withPre(df: DataFrame): DataFrame =
-      if (activePre.isEmpty) df
-      else df.select(col("*") +:
-        activePre.map { case (n, c) => c.as(n) }.toSeq: _*)
-
-    // weighted-aware aggregate kernels (cf. DecisionTree.fitOn): the
-    // unweighted forms are the exact pre-r12 expressions
-    def clsMassAgg(cond: Column): Column = wcol match {
-      case None => count(when(cond, lit(1)))
-      case Some(w) => sum(when(cond, pv("__pv_w", w)))
-    }
-    def thrAgg(cond: Option[Column], g: Column, gn: String): Column = wcol match {
-      case None => method.thresholdExpr(cond.map(c => when(c, g)).getOrElse(g))
-      case Some(w) =>
-        val wp = pv("__pv_w", w)
-        val wg = pv(s"__pv_wv_$gn", w * g)
-        val ws = sum(cond.map(c => when(c, wp)).getOrElse(wp))
-        when(ws > 0.0,
-          sum(cond.map(c => when(c, wg)).getOrElse(wg)) / ws)
-    }
-    def sumAgg(cond: Column, v: Column, vn: String): Column = wcol match {
-      case None => sum(when(cond, v))
-      case Some(w) => sum(when(cond, pv(s"__pv_wv_$vn", w * v)))
-    }
+    FitInternals.requireMeanSplitter(params, catFeatures.nonEmpty, weightColumn.nonEmpty)
+    FitInternals.requirePositiveWeights(dataset, weightColumn)
 
     // the label DICTIONARY: one tiny distinct over the class column —
     // k values collected, sorted for deterministic column layout
@@ -137,39 +73,7 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
     require(classes.nonEmpty, "empty training set")
     require(classes.size <= MaxClasses,
       s"${classes.size} distinct labels exceed MaxClasses=$MaxClasses")
-
-    // NULL categorical values are REJECTED at fit time (r11 advice):
-    // the fused-forest path derives a categorical split's child stats
-    // over actually-routed rows (NULL would route right AND count)
-    // while this sequential path composes them from per-category
-    // cells (NULL excluded) — fitting on NULLs would silently break
-    // the documented fused≡sequential contract. Serving still routes
-    // NULL right (IN over null → not true); only FIT requires
-    // completeness — impute a sentinel category upstream.
-    if (catFeatures.nonEmpty) {
-      val nullAggs = catFeatures.map(q =>
-        count(when(col(q).isNull, lit(1))).as(s"nn_$q"))
-      val nulls = dataset.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
-      catFeatures.zipWithIndex.foreach { case (q, i) =>
-        require(nulls.getLong(i) == 0L,
-          s"categorical feature $q has ${nulls.getLong(i)} NULL rows; " +
-            "fit requires non-null categorical columns (impute a " +
-            "sentinel category upstream) — NULL routes right at " +
-            "serve time only")
-      }
-    }
-    // per-categorical-feature category DICTIONARIES (the class-dict
-    // pattern): one tiny distinct each, sorted for deterministic
-    // column layout
-    val catDict: Map[String, Seq[String]] = catFeatures.map { q =>
-      val vs = dataset.select(col(q).cast("string").as("v"))
-        .filter(col("v").isNotNull).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      require(vs.size <= MaxCategories,
-        s"categorical feature $q has ${vs.size} values; " +
-          s"MaxCategories=$MaxCategories — hash-encode it instead")
-      q -> vs
-    }.toMap
+    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
 
     final case class McStats(counts: Seq[Double], thresholds: Map[String, Double]) {
       def count: Double = counts.sum
@@ -191,29 +95,15 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
     // per-feature total impurity-mass decrease (gain importances, r12)
     val gains = mutable.Map.empty[String, Double].withDefaultValue(0.0)
 
-    def nodeIdExpr(id: Long): Column = splits.get(id) match {
-      case Some(s) =>
-        when(col(s.attribute) <= lit(s.threshold), nodeIdExpr(2 * id))
-          .otherwise(nodeIdExpr(2 * id + 1))
-      case None => catSplits.get(id) match {
-        case Some((a, vs)) =>
-          when(col(a).cast("string").isin(vs: _*), nodeIdExpr(2 * id))
-            .otherwise(nodeIdExpr(2 * id + 1))
-        case None => lit(id)
-      }
-    }
-
-    def numOr(v: Any, dflt: Double): Double =
-      if (v == null) dflt else v.asInstanceOf[Number].doubleValue()
-
     // ROOT stats — the only dedicated stats pass (see DecisionTree:
     // every deeper node's stats are fused into its parent's split
     // aggregate)
-    activePre = mutable.LinkedHashMap.empty
+    val rootPass = new FitInternals.WeightedAggs(wcol, method)
     val rootAggs =
-      classes.map(c => clsMassAgg(clsCol === c).as(s"n_$c")) ++
-      features.map(f => thrAgg(None, col(f).cast("double"), f).as(s"thr_$f"))
-    val rootRow = withPre(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
+      classes.map(c => rootPass.mass(Some(clsCol === c)).as(s"n_$c")) ++
+      features.map(f => rootPass.threshold(None, col(f).cast("double"),
+        s"__pv_wv_$f").as(s"thr_$f"))
+    val rootRow = rootPass.under(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
     val rootCounts = classes.indices.map(i => numOr(rootRow.get(i), 0.0))
     var openStats: Map[Long, McStats] =
       if (rootCounts.sum == 0.0) Map.empty
@@ -244,35 +134,32 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
       // stats-less open node (unreachable while empty-side splits are
       // rejected): fall back to the nearest ancestor's majority, the
       // same rule the post-loop handling uses — never class 0
-      open.filterNot(openStats.contains).foreach { id =>
-        var cur = id
-        while (cur >= 1 && !majorities.contains(cur)) cur /= 2
-        leaves(id) = majorities.getOrElse(cur, 0)
-      }
+      open.filterNot(openStats.contains).foreach(id =>
+        leaves(id) = FitInternals.ancestorMajority(majorities, id))
 
       if (toSplit.nonEmpty) {
-        val nodeCol = nodeIdExpr(1L).as("node")
+        val nodeCol = FitInternals.routeExpr(splits, catSplits).as("node")
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExpr(
             toSplit.map { case (id, st) => id -> st.thresholds(f) }, depth)
         // fresh pre-projection per level: side booleans and class
-        // memberships computed once per row (see the pv() note above)
-        activePre = mutable.LinkedHashMap.empty
+        // memberships computed once per row
+        val pass = new FitInternals.WeightedAggs(wcol, method)
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pv(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pass(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pass(s"__pv_gt_$f", fc > thrExpr(f))
           classes.flatMap { c =>
-            val cc = pv(s"__pv_c_$c", clsCol === c)
+            val cc = pass(s"__pv_c_$c", clsCol === c)
             Seq(
-              clsMassAgg(le && cc).as(s"lc_${f}__$c"),
-              clsMassAgg(gt && cc).as(s"rc_${f}__$c"))
+              pass.mass(Some(le && cc)).as(s"lc_${f}__$c"),
+              pass.mass(Some(gt && cc)).as(s"rc_${f}__$c"))
           } ++
           features.flatMap { g =>
             val gc = col(g).cast("double")
             Seq(
-              thrAgg(Some(le), gc, g).as(s"cthl_${f}__$g"),
-              thrAgg(Some(gt), gc, g).as(s"cthr_${f}__$g"))
+              pass.threshold(Some(le), gc, s"__pv_wv_$g").as(s"cthl_${f}__$g"),
+              pass.threshold(Some(gt), gc, s"__pv_wv_$g").as(s"cthr_${f}__$g"))
           }
         }
         // categorical cells, fused into the SAME aggregate: per
@@ -285,18 +172,17 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
         val catAggs = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
           val qc = col(q).cast("string")
           catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pv(s"__pv_in_${qi}_$vi", qc === v)
+            val in = pass(s"__pv_in_${qi}_$vi", qc === v)
             classes.map { c =>
-              val cc = pv(s"__pv_c_$c", clsCol === c)
-              clsMassAgg(in && cc).as(s"qc_${qi}_${vi}_$c")
+              val cc = pass(s"__pv_c_$c", clsCol === c)
+              pass.mass(Some(in && cc)).as(s"qc_${qi}_${vi}_$c")
             } ++
-            features.map(g =>
-              sumAgg(in, col(g).cast("double"), g)
-                .as(s"qs_${qi}_${vi}_$g"))
+            features.map(g => pass.sumOf(in, col(g).cast("double"),
+              s"__pv_wv_$g").as(s"qs_${qi}_${vi}_$g"))
           }
         }
         val allAggs = splitAggs ++ catAggs
-        val splitRows = withPre(dataset
+        val splitRows = pass.under(dataset
           .select(col("*"), nodeCol))
           .groupBy("node")
           .agg(allAggs.head, allAggs.tail: _*)
@@ -367,9 +253,7 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
                   + rc.sum * metric.evalFromMasses(rc)) / n
                 (left.map(_._1), lc, rc, if (m.isNaN) 0.0 else m, b)
               }
-              val best =
-                if (metric.seekMinimum) bounds.minBy(t => (t._4, t._5))
-                else bounds.minBy(t => (-t._4, t._5))
+              val best = FitInternals.pickBest(bounds, metric)(_._4, _._5).get
               Some(Cand(q, Right(best._1), best._2, best._3, best._4,
                 degenerate = false))
             }
@@ -382,12 +266,7 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
           // Leaf only when no non-degenerate candidate remains.
           val cands = (scoredNumeric ++ scoredCats).filterNot(_.degenerate)
             .sortBy(_.name)
-          val best =
-            if (cands.isEmpty) None
-            else Some(
-              if (metric.seekMinimum) cands.minBy(c => (c.cost, c.name))
-              else cands.minBy(c => (-c.cost, c.name)))
-          best match {
+          FitInternals.pickBest(cands, metric)(_.cost, _.name) match {
             case None =>
               leaves(id) = st.majority // every candidate degenerate
             case Some(Cand(bf, choice, lc, rc, bestCost, _)) =>
@@ -435,38 +314,13 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
       }
       depth += 1
     }
-    def ancestorMajority(id: Long): Int = {
-      var cur = id
-      while (cur >= 1 && !majorities.contains(cur)) cur /= 2
-      majorities.getOrElse(cur, 0)
-    }
-    open.foreach(id => leaves(id) = ancestorMajority(id))
-
-    def build(id: Long): TreeNode = {
-      def pruned(node: TreeNode): TreeNode =
-        if (prune && node.leafLabels.toSet.size == 1)
-          LeafNode(majorities.getOrElse(id, node.leafLabels.head),
-            params.classColumn)
-        else node
-      splits.get(id) match {
-        case Some(s) =>
-          pruned(DecisionNode(s.attribute, s.threshold,
-            build(2 * id), build(2 * id + 1)))
-        case None => catSplits.get(id) match {
-          case Some((a, vs)) =>
-            pruned(CatDecisionNode(a, vs, build(2 * id), build(2 * id + 1)))
-          case None =>
-            LeafNode(leaves.getOrElse(id, majorities.getOrElse(id, 0)),
-              params.classColumn)
-        }
-      }
-    }
-
     val totalGain = gains.values.sum
     val importances =
       if (totalGain <= 0.0) Map.empty[String, Double]
       else gains.map { case (f, g) => f -> g / totalGain }.toMap
-    new FittedMulticlassTree(params, classes, build(1L),
+    new FittedMulticlassTree(params, classes,
+      FitInternals.buildClassifier(splits, catSplits, leaves, majorities,
+        params.classColumn, prune),
       splits.toMap, dists.toMap, catSplits.toMap, importances)
   }
 }

@@ -55,9 +55,8 @@ class MulticlassRandomForest(
     }
   }
 
-  private def allColumns: Seq[String] =
-    (params.featureColumns ++ categoricalColumns ++ weightColumn
-      :+ params.classColumn).distinct
+  private def workingColumns: Seq[String] =
+    params.featureColumns ++ categoricalColumns ++ weightColumn :+ params.classColumn
 
   /** Deterministic per-tree row bag: hash of the feature values —
     * identical arithmetic to [[RandomForest.bagFilter]] (categorical
@@ -69,32 +68,23 @@ class MulticlassRandomForest(
     pmod(h, lit(1000L)) < lit((bagFraction * 1000).toLong)
   }
 
-  def fit(dataset: DataFrame): FittedMulticlassForest = {
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select(allColumns.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitFusedOn(work)
-    finally { work.unpersist(blocking = false); () }
-  }
+  def fit(dataset: DataFrame): FittedMulticlassForest =
+    FitInternals.withWorkingSet(dataset, workingColumns)(fitFusedOn)
 
   /** Tree-at-a-time reference implementation the fused fit is
     * verified against. */
-  private[tree] def fitSequential(dataset: DataFrame): FittedMulticlassForest = {
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select(allColumns.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  private[tree] def fitSequential(dataset: DataFrame): FittedMulticlassForest =
+    FitInternals.withWorkingSet(dataset, workingColumns) { work =>
       val fitted = (0 until numTrees).map { i =>
         val treeParams = params.copy(featureColumns = featuresFor(i))
         new MulticlassDecisionTree(treeParams, catsFor(i), weightColumn)
           .fit(work.filter(bagFilter(i)))
       }
       new FittedMulticlassForest(this, fitted.head.classes, fitted)
-    } finally { work.unpersist(blocking = false); () }
-  }
+    }
 
   private def fitFusedOn(dataset: DataFrame): FittedMulticlassForest = {
-    import FitInternals.MaxLevels
+    import FitInternals.{MaxLevels, numOr}
     val features = params.featureColumns
     val catFeatures = categoricalColumns
     val clsCol = col(params.classColumn).cast("int")
@@ -102,24 +92,13 @@ class MulticlassRandomForest(
     val method = params.method
     val treeFeatures = (0 until numTrees).map(featuresFor)
     val treeCats = (0 until numTrees).map(catsFor)
-    require(catFeatures.isEmpty || features.isEmpty || method == MeanSplitter,
-      "categorical splits in the sequential-parity path compose child " +
-        s"thresholds from sums; use the mean splitter (got ${params.splittingMethod})")
     // WEIGHTED fit (r12): class counts become class MASSES sum(w),
-    // thresholds w-weighted means — identical kernels to
-    // MulticlassDecisionTree so the fused ≡ sequential contract
-    // extends to weighted fits unchanged
+    // thresholds w-weighted means — the MulticlassDecisionTree
+    // kernels' values, so the fused ≡ sequential contract extends to
+    // weighted fits unchanged
     val wcol = weightColumn.map(c => col(c).cast("double"))
-    require(weightColumn.isEmpty || features.isEmpty || method == MeanSplitter,
-      "weighted fits use w-weighted mean thresholds; use the mean " +
-        s"splitter (got ${params.splittingMethod})")
-    wcol.foreach { w =>
-      val bad = dataset.agg(
-        count(when(w.isNull || w <= 0.0, lit(1)))).collect()(0).getLong(0)
-      require(bad == 0L,
-        s"weight column ${weightColumn.get} has $bad NULL/non-positive " +
-          "rows; weighted fits require strictly positive weights")
-    }
+    FitInternals.requireMeanSplitter(params, catFeatures.nonEmpty, weightColumn.nonEmpty)
+    FitInternals.requirePositiveWeights(dataset, weightColumn)
     def clsMassAgg(cond: Column): Column = wcol match {
       case None => count(when(cond, lit(1)))
       case Some(w) => sum(when(cond, w))
@@ -136,38 +115,14 @@ class MulticlassRandomForest(
     require(classes.nonEmpty, "empty training set")
     val k = classes.size
 
-    // NULL categoricals rejected at fit time, exactly as in
-    // MulticlassDecisionTree (r11 advice): the two paths derive a
-    // categorical split's child stats differently for NULL rows
-    // (this fused path recomputes over routed rows; the sequential
-    // path composes from per-category cells), so the fused≡sequential
-    // contract holds only on null-free categorical columns — and,
-    // for the child-threshold recompute-vs-compose step, EXACTLY only
-    // when numeric features are integer-valued (both paths' mean
-    // thresholds are then the same exact doubles; non-integer
-    // features can differ in ULPs and flip a later split — the
-    // documented FP caveat the parity specs fixture around).
-    if (catFeatures.nonEmpty) {
-      val nullAggs = catFeatures.map(q =>
-        count(when(col(q).isNull, lit(1))).as(s"nn_$q"))
-      val nulls = dataset.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
-      catFeatures.zipWithIndex.foreach { case (q, i) =>
-        require(nulls.getLong(i) == 0L,
-          s"categorical feature $q has ${nulls.getLong(i)} NULL rows; " +
-            "fit requires non-null categorical columns (impute a " +
-            "sentinel category upstream) — NULL routes right at " +
-            "serve time only")
-      }
-    }
-    // global category dictionaries (the MulticlassDecisionTree cap)
-    val catDict: Map[String, Seq[String]] = catFeatures.map { q =>
-      val vs = dataset.select(col(q).cast("string").as("v"))
-        .filter(col("v").isNotNull).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      require(vs.size <= 64,
-        s"categorical feature $q has ${vs.size} values; cap is 64")
-      q -> vs
-    }.toMap
+    // fused ≡ sequential is exact on null-free categoricals (rejected
+    // by categoryDictionary) and, for the child-threshold
+    // recompute-vs-compose step, only when numeric features are
+    // integer-valued (both paths' mean thresholds are then the same
+    // exact doubles; non-integer features can differ in ULPs and flip
+    // a later split — the documented FP caveat the parity specs
+    // fixture around)
+    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
 
     final case class McStats(counts: Seq[Double], thresholds: Map[String, Double]) {
       def count: Double = counts.sum
@@ -183,26 +138,8 @@ class MulticlassRandomForest(
     val majorities = Array.fill(numTrees)(mutable.Map.empty[Long, Int])
     val dists = Array.fill(numTrees)(mutable.Map.empty[Long, Seq[Double]])
 
-    def nodeIdExpr(tree: Int, id: Long): Column = splits(tree).get(id) match {
-      case Some(s) =>
-        when(col(s.attribute) <= lit(s.threshold), nodeIdExpr(tree, 2 * id))
-          .otherwise(nodeIdExpr(tree, 2 * id + 1))
-      case None => catSplits(tree).get(id) match {
-        case Some((a, vs)) =>
-          when(col(a).cast("string").isin(vs: _*), nodeIdExpr(tree, 2 * id))
-            .otherwise(nodeIdExpr(tree, 2 * id + 1))
-        case None => lit(id)
-      }
-    }
-
-    def membership: Column =
-      array((0 until numTrees).map { i =>
-        struct(lit(i).as("t"),
-          when(bagFilter(i), nodeIdExpr(i, 1L)).otherwise(lit(-1L)).as("node"))
-      }: _*)
-
-    def numOr(v: Any, dflt: Double): Double =
-      if (v == null) dflt else v.asInstanceOf[Number].doubleValue()
+    def exploded: DataFrame = FitInternals.forestMemberships(dataset, numTrees,
+      bagFilter, i => FitInternals.routeExpr(splits(i), catSplits(i)))
 
     val open = Array.fill(numTrees)(Seq(1L))
     var depth = 0
@@ -212,10 +149,7 @@ class MulticlassRandomForest(
       val statAggs =
         classes.map(c => clsMassAgg(clsCol === c).as(s"n_$c")) ++
         features.map(f => thrAgg(col(f).cast("double")).as(s"thr_$f"))
-      val statRows = dataset
-        .select(col("*"), explode(membership).as("e"))
-        .select(col("*"), col("e.t").as("t"), col("e.node").as("node"))
-        .where(col("node") >= 0)
+      val statRows = exploded
         .groupBy("t", "node")
         .agg(statAggs.head, statAggs.tail: _*)
         .collect()
@@ -244,11 +178,8 @@ class MulticlassRandomForest(
         lf.foreach { case (id, st) => leaves(i)(id) = st.majority }
         // stats-less fallback = nearest-ancestor majority (see
         // MulticlassDecisionTree — same rule as the post-loop path)
-        open(i).filterNot(id => statRows.contains((i, id))).foreach { id =>
-          var cur = id
-          while (cur >= 1 && !majorities(i).contains(cur)) cur /= 2
-          leaves(i)(id) = majorities(i).getOrElse(cur, 0)
-        }
+        open(i).filterNot(id => statRows.contains((i, id))).foreach(id =>
+          leaves(i)(id) = FitInternals.ancestorMajority(majorities(i), id))
         sp.foreach { case (id, st) => toSplit += ((i, id, st)) }
       }
 
@@ -258,14 +189,9 @@ class MulticlassRandomForest(
           FitInternals.levelThresholdExprForest(
             toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq,
             depth, numTrees)
-        // per-row pre-projection of the side booleans and class
-        // memberships (r17 — the RandomForest.fitFusedOn factoring;
-        // the threshold dispatch CASE and class tests are computed
-        // once per exploded row instead of inside every aggregate)
-        val activePre = mutable.LinkedHashMap.empty[String, Column]
-        def pv(nm: String, c: => Column): Column = {
-          activePre.getOrElseUpdate(nm, c); col(nm)
-        }
+        // side booleans and class memberships pre-projected once per
+        // exploded row, not inside every aggregate
+        val pv = new FitInternals.PreProjection
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
           val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
@@ -292,12 +218,7 @@ class MulticlassRandomForest(
             }
           }
         }
-        val splitRows = dataset
-          .select(col("*"), explode(membership).as("e"))
-          .select(col("*"), col("e.t").as("t"), col("e.node").as("node"))
-          .where(col("node") >= 0)
-          .select(col("*") +:
-            activePre.map { case (n, c) => c.as(n) }.toSeq: _*)
+        val splitRows = pv.under(exploded)
           .groupBy("t", "node")
           .agg(splitAggs.head, splitAggs.tail: _*)
           .collect()
@@ -341,9 +262,7 @@ class MulticlassRandomForest(
                 (ordered.take(b).map(_._1), lc.sum, rc.sum,
                   if (m.isNaN) 0.0 else m, b)
               }
-              val best =
-                if (metric.seekMinimum) bounds.minBy(t => (t._4, t._5))
-                else bounds.minBy(t => (-t._4, t._5))
+              val best = FitInternals.pickBest(bounds, metric)(_._4, _._5).get
               Some(Cand(q, Right(best._1), best._2, best._3, best._4,
                 degenerate = false))
             }
@@ -353,12 +272,7 @@ class MulticlassRandomForest(
           // lockstep for the fused≡sequential parity contract)
           val cands = (scoredNumeric ++ scoredCats).filterNot(_.degenerate)
             .sortBy(_.name)
-          val best =
-            if (cands.isEmpty) None
-            else Some(
-              if (metric.seekMinimum) cands.minBy(c => (c.cost, c.name))
-              else cands.minBy(c => (-c.cost, c.name)))
-          best match {
+          FitInternals.pickBest(cands, metric)(_.cost, _.name) match {
             case None =>
               leaves(i)(id) = st.majority
             case Some(Cand(bf, Left(bt), _, _, _, _)) =>
@@ -379,26 +293,10 @@ class MulticlassRandomForest(
     }
 
     val fitted = (0 until numTrees).map { i =>
-      def ancestorMajority(id: Long): Int = {
-        var cur = id
-        while (cur >= 1 && !majorities(i).contains(cur)) cur /= 2
-        majorities(i).getOrElse(cur, 0)
-      }
-      open(i).foreach(id => leaves(i)(id) = ancestorMajority(id))
-      def build(id: Long): TreeNode = splits(i).get(id) match {
-        case Some(s) =>
-          DecisionNode(s.attribute, s.threshold, build(2 * id), build(2 * id + 1))
-        case None => catSplits(i).get(id) match {
-          case Some((a, vs)) =>
-            CatDecisionNode(a, vs, build(2 * id), build(2 * id + 1))
-          case None =>
-            LeafNode(leaves(i).getOrElse(id, majorities(i).getOrElse(id, 0)),
-              params.classColumn)
-        }
-      }
       new FittedMulticlassTree(params.copy(featureColumns = treeFeatures(i)),
-        classes, build(1L), splits(i).toMap, dists(i).toMap,
-        catSplits(i).toMap)
+        classes, FitInternals.buildClassifier(splits(i), catSplits(i),
+          leaves(i), majorities(i), params.classColumn),
+        splits(i).toMap, dists(i).toMap, catSplits(i).toMap)
     }
     new FittedMulticlassForest(this, classes, fitted)
   }

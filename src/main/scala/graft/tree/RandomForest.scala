@@ -67,35 +67,27 @@ class RandomForest(
     * IDENTICAL to fitting each one with DecisionTree.fit (spec-checked
     * against the sequential path).
     */
-  def fit(dataset: DataFrame): FittedRandomForest = {
-    val work = FitInternals.rightSizeForRepeatedScans(dataset.select(
-      (params.featureColumns ++ categoricalColumns :+ params.classColumn)
-        .distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitFusedOn(work)
-    finally { work.unpersist(blocking = false); () }
-  }
+  def fit(dataset: DataFrame): FittedRandomForest =
+    FitInternals.withWorkingSet(dataset, workingColumns)(fitFusedOn)
 
   /** The straightforward tree-at-a-time fit (kept as the reference
     * implementation the fused fit is verified against).
     */
-  private[tree] def fitSequential(dataset: DataFrame): FittedRandomForest = {
-    val work = FitInternals.rightSizeForRepeatedScans(dataset.select(
-      (params.featureColumns ++ categoricalColumns :+ params.classColumn)
-        .distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  private[tree] def fitSequential(dataset: DataFrame): FittedRandomForest =
+    FitInternals.withWorkingSet(dataset, workingColumns) { work =>
       val trees = (0 until numTrees).map { i =>
         val treeParams = params.copy(featureColumns = featuresFor(i))
         new DecisionTree(treeParams, catsFor(i))
           .fitCached(work.filter(bagFilter(i)))
       }
       new FittedRandomForest(this, trees)
-    } finally { work.unpersist(blocking = false); () }
-  }
+    }
+
+  private def workingColumns: Seq[String] =
+    params.featureColumns ++ categoricalColumns :+ params.classColumn
 
   private def fitFusedOn(dataset: DataFrame): FittedRandomForest = {
-    import FitInternals.{MaxLevels, NodeStats}
+    import FitInternals.{MaxLevels, NodeStats, numOr}
     import scala.collection.mutable
     val features = params.featureColumns
     val catFeatures = categoricalColumns
@@ -104,32 +96,10 @@ class RandomForest(
     val method = params.method
     val treeFeatures = (0 until numTrees).map(featuresFor)
     val treeCats = (0 until numTrees).map(catsFor)
-    require(catFeatures.isEmpty || features.isEmpty || method == MeanSplitter,
-      "categorical splits in the sequential-parity path compose child " +
-        s"thresholds from sums; use the mean splitter (got ${params.splittingMethod})")
-    // the k-ary forests' fit-time contracts, verbatim (r12): NULL
-    // categoricals rejected (fused recomputes child stats over routed
-    // rows, sequential composes from per-category cells; parity is
-    // exact on null-free, integer-valued-numeric fixtures)
-    if (catFeatures.nonEmpty) {
-      val nullAggs = catFeatures.map(q =>
-        count(when(col(q).isNull, lit(1))).as(s"nn_$q"))
-      val nulls = dataset.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
-      catFeatures.zipWithIndex.foreach { case (q, i) =>
-        require(nulls.getLong(i) == 0L,
-          s"categorical feature $q has ${nulls.getLong(i)} NULL rows; " +
-            "fit requires non-null categorical columns (impute a " +
-            "sentinel category upstream)")
-      }
-    }
-    val catDict: Map[String, Seq[String]] = catFeatures.map { q =>
-      val vs = dataset.select(col(q).cast("string").as("v"))
-        .filter(col("v").isNotNull).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      require(vs.size <= 64,
-        s"categorical feature $q has ${vs.size} values; cap is 64")
-      q -> vs
-    }.toMap
+    // the single tree's fit-time contracts (categorical child
+    // thresholds compose from sums; NULL categoricals rejected)
+    FitInternals.requireMeanSplitter(params, catFeatures.nonEmpty, weighted = false)
+    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
 
     val splits = Array.fill(numTrees)(mutable.Map.empty[Long, SplitParams])
     val catSplits =
@@ -138,27 +108,8 @@ class RandomForest(
     val majorities = Array.fill(numTrees)(mutable.Map.empty[Long, Int])
     val p1s = Array.fill(numTrees)(mutable.Map.empty[Long, Double])
 
-    def nodeIdExpr(tree: Int, id: Long): Column = splits(tree).get(id) match {
-      case Some(s) =>
-        when(col(s.attribute) <= lit(s.threshold), nodeIdExpr(tree, 2 * id))
-          .otherwise(nodeIdExpr(tree, 2 * id + 1))
-      case None => catSplits(tree).get(id) match {
-        case Some((a, vs)) =>
-          when(col(a).cast("string").isin(vs: _*), nodeIdExpr(tree, 2 * id))
-            .otherwise(nodeIdExpr(tree, 2 * id + 1))
-        case None => lit(id)
-      }
-    }
-
-    /** Each row's (tree, node) memberships; rows outside a tree's bag
-      * get node = -1 and are dropped after the explode (cheaper than a
-      * filter() HOF allocating a second array per row).
-      */
-    def membership: Column =
-      array((0 until numTrees).map { i =>
-        struct(lit(i).as("t"),
-          when(bagFilter(i), nodeIdExpr(i, 1L)).otherwise(lit(-1L)).as("node"))
-      }: _*)
+    def exploded: DataFrame = FitInternals.forestMemberships(dataset, numTrees,
+      bagFilter, i => FitInternals.routeExpr(splits(i), catSplits(i)))
 
     val open = Array.fill(numTrees)(Seq(1L))
     var depth = 0
@@ -169,17 +120,14 @@ class RandomForest(
         count(lit(1)).as("n") +:
         avg(clsCol).as("p1") +:
         features.map(f => method.thresholdExpr(col(f).cast("double")).as(s"thr_$f"))
-      val statRows = dataset
-        .select(col("*"), explode(membership).as("e"))
-        .select(col("*"), col("e.t").as("t"), col("e.node").as("node"))
-        .where(col("node") >= 0)
+      val statRows = exploded
         .groupBy("t", "node")
         .agg(statAggs.head, statAggs.tail: _*)
         .collect()
         .map { r =>
           val thr = features.zipWithIndex.map { case (f, i) =>
-            val v = r.get(4 + i) // layout: t, node, n, p1, thr_0, ...
-            f -> (if (v == null) Double.NaN else v.asInstanceOf[Number].doubleValue())
+            // layout: t, node, n, p1, thr_0, ...
+            f -> numOr(r.get(4 + i), Double.NaN)
           }.toMap
           (r.getInt(0), r.getLong(1)) -> NodeStats(r.getLong(2).toDouble, r.getDouble(3), thr)
         }.toMap
@@ -211,18 +159,9 @@ class RandomForest(
           FitInternals.levelThresholdExprForest(
             toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq,
             depth, numTrees)
-        // Per-row PRE-PROJECTION of the side booleans (r17 — the r16
-        // RegressionTree factoring ported to the fused forest, guide
-        // §4): the per-(tree, node) threshold dispatch CASE used to
-        // re-evaluate inside all four aggregates of every feature —
-        // over the ×numTrees exploded membership rows. Each side
-        // boolean is now computed once per exploded row in a
-        // projection under the aggregate. Same IEEE comparisons over
-        // the same rows, merely factored.
-        val activePre = mutable.LinkedHashMap.empty[String, Column]
-        def pv(nm: String, c: => Column): Column = {
-          activePre.getOrElseUpdate(nm, c); col(nm)
-        }
+        // side booleans pre-projected once per exploded row, not
+        // inside all four aggregates of every feature
+        val pv = new FitInternals.PreProjection
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
           val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
@@ -245,13 +184,7 @@ class RandomForest(
               count(when(in, lit(1))).as(s"qn_${qi}_$vi"))
           }
         }
-        val exploded = dataset
-          .select(col("*"), explode(membership).as("e"))
-          .select(col("*"), col("e.t").as("t"), col("e.node").as("node"))
-          .where(col("node") >= 0)
-        val splitRows = exploded
-          .select(col("*") +:
-            activePre.map { case (n, c) => c.as(n) }.toSeq: _*)
+        val splitRows = pv.under(exploded)
           .groupBy("t", "node")
           .agg(splitAggs.head, splitAggs.tail: _*)
           .collect()
@@ -262,8 +195,6 @@ class RandomForest(
         toSplit.foreach { case (i, id, st) =>
           val row = splitRows((i, id))
           def cell(nm: String): Any = row.get(row.fieldIndex(nm))
-          def numOr(v: Any, d: Double): Double =
-            if (v == null) d else v.asInstanceOf[Number].doubleValue()
           // unified candidates under the REFERENCE objective and
           // leaf-if-degenerate-best rule — the exact DecisionTree
           // scorer, per tree subset (parity contract)
@@ -295,9 +226,7 @@ class RandomForest(
                 val m = metric.evalFromP1(lp1) + metric.evalFromP1(rp1)
                 (lf.map(_._1), ln, rn, if (m.isNaN) 0.0 else m, b)
               }
-              val bb =
-                if (metric.seekMinimum) bounds.minBy(t => (t._4, t._5))
-                else bounds.minBy(t => (-t._4, t._5))
+              val bb = FitInternals.pickBest(bounds, metric)(_._4, _._5).get
               Some(Cand(q, Right(bb._1), bb._2, bb._3, bb._4,
                 degenerate = false))
             }
@@ -311,11 +240,7 @@ class RandomForest(
           val cands =
             (if (treeCats(i).isEmpty) allCands
              else allCands.filterNot(_.degenerate)).sortBy(_.name)
-          val bestOpt =
-            if (cands.isEmpty) None
-            else Some(
-              if (metric.seekMinimum) cands.minBy(c => (c.m, c.name))
-              else cands.minBy(c => (-c.m, c.name)))
+          val bestOpt = FitInternals.pickBest(cands, metric)(_.m, _.name)
           if (bestOpt.isEmpty || bestOpt.get.degenerate) {
             leaves(i)(id) = st.majority
           } else bestOpt.get.choice match {
@@ -337,24 +262,9 @@ class RandomForest(
     }
 
     val trees = (0 until numTrees).map { i =>
-      def ancestorMajority(id: Long): Int = {
-        var cur = id
-        while (cur >= 1 && !majorities(i).contains(cur)) cur /= 2
-        majorities(i).getOrElse(cur, 0)
-      }
-      open(i).foreach(id => leaves(i)(id) = ancestorMajority(id))
-      def build(id: Long): TreeNode = splits(i).get(id) match {
-        case Some(s) =>
-          DecisionNode(s.attribute, s.threshold, build(2 * id), build(2 * id + 1))
-        case None => catSplits(i).get(id) match {
-          case Some((a, vs)) =>
-            CatDecisionNode(a, vs, build(2 * id), build(2 * id + 1))
-          case None =>
-            LeafNode(leaves(i).getOrElse(id, majorities(i).getOrElse(id, 0)),
-              params.classColumn)
-        }
-      }
-      new FittedDecisionTree(params.copy(featureColumns = treeFeatures(i)), build(1L),
+      new FittedDecisionTree(params.copy(featureColumns = treeFeatures(i)),
+        FitInternals.buildClassifier(splits(i), catSplits(i), leaves(i),
+          majorities(i), params.classColumn),
         nodeSplits = splits(i).toMap, nodeP1 = p1s(i).toMap,
         nodeCatSplits = catSplits(i).toMap)
     }

@@ -59,20 +59,12 @@ class RegressionRandomForest(
     pmod(h, lit(1000L)) < lit((bagFraction * 1000).toLong)
   }
 
-  def fit(dataset: DataFrame): FittedRegressionForest = {
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select((featureColumns :+ targetColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitFusedOn(work)
-    finally { work.unpersist(blocking = false); () }
-  }
+  def fit(dataset: DataFrame): FittedRegressionForest =
+    FitInternals.withWorkingSet(dataset, featureColumns :+ targetColumn)(fitFusedOn)
 
   /** Tree-at-a-time reference fit the fused path is verified against. */
-  private[tree] def fitSequential(dataset: DataFrame): FittedRegressionForest = {
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select((featureColumns :+ targetColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  private[tree] def fitSequential(dataset: DataFrame): FittedRegressionForest =
+    FitInternals.withWorkingSet(dataset, featureColumns :+ targetColumn) { work =>
       val trees = (0 until numTrees).map { i =>
         new RegressionTree(featuresFor(i), targetColumn,
           maxDepth = maxDepth, minSplitSamples = minSplitSamples,
@@ -80,11 +72,10 @@ class RegressionRandomForest(
           .fitCached(work.filter(bagFilter(i))).root
       }
       new FittedRegressionForest(numTrees, trees)
-    } finally { work.unpersist(blocking = false); () }
-  }
+    }
 
   private def fitFusedOn(dataset: DataFrame): FittedRegressionForest = {
-    import FitInternals.MaxLevels
+    import FitInternals.{MaxLevels, numOr}
     val y = col(targetColumn).cast("double")
     val features = featureColumns
     val treeFeatures = (0 until numTrees).map(featuresFor)
@@ -96,26 +87,8 @@ class RegressionRandomForest(
     val leaves = Array.fill(numTrees)(mutable.Map.empty[Long, Double])
     val means = Array.fill(numTrees)(mutable.Map.empty[Long, Double])
 
-    def nodeIdExpr(tree: Int, id: Long): Column = splits(tree).get(id) match {
-      case Some(s) =>
-        when(col(s.attribute) <= lit(s.threshold), nodeIdExpr(tree, 2 * id))
-          .otherwise(nodeIdExpr(tree, 2 * id + 1))
-      case None => lit(id)
-    }
-
-    def membership: Column =
-      array((0 until numTrees).map { i =>
-        struct(lit(i).as("t"),
-          when(bagFilter(i), nodeIdExpr(i, 1L)).otherwise(lit(-1L)).as("node"))
-      }: _*)
-
-    def exploded: DataFrame = dataset
-      .select(col("*"), explode(membership).as("e"))
-      .select(col("*"), col("e.t").as("t"), col("e.node").as("node"))
-      .where(col("node") >= 0)
-
-    def numOr(v: Any, dflt: Double): Double =
-      if (v == null) dflt else v.asInstanceOf[Number].doubleValue()
+    def exploded: DataFrame = FitInternals.forestMemberships(dataset, numTrees,
+      bagFilter, i => FitInternals.routeExpr(splits(i), Map.empty))
 
     // ROOT stats — ONE aggregate for all trees (deeper nodes' stats
     // compose inside their parent's fused split pass, exactly as in
@@ -156,14 +129,9 @@ class RegressionRandomForest(
           FitInternals.levelThresholdExprForest(
             toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq,
             depth, numTrees)
-        // per-row pre-projection of the side booleans (r17 — the
-        // RandomForest.fitFusedOn factoring; the per-(tree, node)
-        // threshold dispatch CASE is computed once per exploded row
-        // instead of inside every aggregate)
-        val activePre = mutable.LinkedHashMap.empty[String, Column]
-        def pv(nm: String, c: => Column): Column = {
-          activePre.getOrElseUpdate(nm, c); col(nm)
-        }
+        // side booleans pre-projected once per exploded row, not
+        // inside every aggregate
+        val pv = new FitInternals.PreProjection
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
           val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
@@ -182,9 +150,7 @@ class RegressionRandomForest(
               avg(when(gt, gc)).as(s"cthr_${f}__$g"))
           }
         }
-        val rows = exploded
-          .select(col("*") +:
-            activePre.map { case (n, c) => c.as(n) }.toSeq: _*)
+        val rows = pv.under(exploded)
           .groupBy("t", "node")
           .agg(splitAggs.head, splitAggs.tail: _*)
           .collect()

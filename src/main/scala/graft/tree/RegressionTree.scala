@@ -162,25 +162,14 @@ class RegressionTree(
     val gradientWeightedThresholds: Boolean = false,
     val categoricalColumns: Seq[String] = Seq.empty,
     val weightColumn: Option[String] = None) {
-
-  /** Per-feature category-cardinality cap — the same column-count
-    * discipline as the k-ary learner (the fused aggregate carries
-    * |V| × (3 + features) cells per categorical); a
-    * higher-cardinality column is a hash feature, not a categorical.
-    */
-  val MaxCategories = 64
+  import FitInternals.numOr
 
   private case class NodeStats(count: Double, mean: Double, variance: Double,
                                thresholds: Map[String, Double])
 
-  def fit(dataset: DataFrame): FittedRegressionTree = {
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select((featureColumns ++ categoricalColumns ++ weightColumn
-        :+ targetColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitOn(work)._1
-    finally { work.unpersist(blocking = false); () }
-  }
+  def fit(dataset: DataFrame): FittedRegressionTree =
+    FitInternals.withWorkingSet(dataset, featureColumns ++ categoricalColumns ++
+      weightColumn :+ targetColumn)(fitOn(_)._1)
 
   /** Fit on an already-prepared working set (cf. DecisionTree.fitCached). */
   private[tree] def fitCached(dataset: DataFrame): FittedRegressionTree =
@@ -221,99 +210,19 @@ class RegressionTree(
     val y = col(targetColumn).cast("double")
     val catFeatures = categoricalColumns
     // WEIGHTED fit (r12): counts become sum(w), target sums w-scaled,
-    // thresholds w-weighted means; integer weights ≡ row replication
-    // (spec-pinned). Weights must be present and strictly positive.
+    // thresholds w-weighted means (FitInternals.WeightedAggs)
     val wcol = weightColumn.map(c => col(c).cast("double"))
-    wcol.foreach { w =>
-      val bad = train.agg(
-        count(when(w.isNull || w <= 0.0, lit(1)))).collect()(0).getLong(0)
-      require(bad == 0L,
-        s"weight column ${weightColumn.get} has $bad NULL/non-positive " +
-          "rows; weighted fits require strictly positive weights")
-    }
-    // Per-row PRE-PROJECTION of aggregate inputs (r16, guide §4):
-    // every aggregate update used to re-evaluate its condition (the
-    // per-node threshold CASE) and its value product (w·y, |y|·g, …)
-    // inline — Catalyst's subexpression elimination cannot hoist them
-    // because they sit under conditional branches, so a level pass
-    // paid O(aggs · expr-size) CPU per row. Each pass now registers
-    // its conditions and products ONCE into a projection placed under
-    // the aggregate, and the agg expressions reference plain
-    // attributes. Same IEEE operations over the same rows in the same
-    // order, merely factored — every aggregate value is bit-identical
-    // (measured 25-30% off a level pass; see OPTIMIZATION_r16.md).
-    var activePre = mutable.LinkedHashMap.empty[String, Column]
-    def pv(nm: String, c: => Column): Column = {
-      activePre.getOrElseUpdate(nm, c); col(nm)
-    }
-    def withPre(df: DataFrame): DataFrame =
-      if (activePre.isEmpty) df
-      else df.select(col("*") +:
-        activePre.map { case (n, c) => c.as(n) }.toSeq: _*)
-    // weighted-aware kernels (cf. DecisionTree.fitOn): the unweighted
-    // forms are the exact pre-r12 expressions
-    def cntAgg(cond: Option[Column]): Column = wcol match {
-      case None => count(cond.map(c => when(c, lit(1))).getOrElse(lit(1)))
-      case Some(w) =>
-        val p = pv("__pv_w", w)
-        sum(cond.map(c => when(c, p)).getOrElse(p))
-    }
-    def sumAggOf(cond: Option[Column], v: Column, vn: String): Column = {
-      val p = pv(s"__pv_v_$vn", wcol.map(_ * v).getOrElse(v))
-      sum(cond.map(c => when(c, p)).getOrElse(p))
-    }
+    FitInternals.requirePositiveWeights(train, weightColumn)
     val splits = mutable.Map.empty[Long, SplitParams]
     val catSplits = mutable.Map.empty[Long, (String, Seq[String])]
     val leaves = mutable.Map.empty[Long, Double]
     val means = mutable.Map.empty[Long, Double]
     // per-feature total SSE decrease (gain-based importance, r12)
     val gains = mutable.Map.empty[String, Double].withDefaultValue(0.0)
-
-    // NULL categoricals rejected at fit time (the k-ary learners'
-    // contract, r11 advice): per-category cells exclude NULL rows
-    // while serving routes them right — fitting on NULLs would count
-    // rows the composed child stats never saw. Impute a sentinel
-    // category upstream; NULL routes right at serve time only.
-    if (catFeatures.nonEmpty) {
-      val nullAggs = catFeatures.map(q =>
-        count(when(col(q).isNull, lit(1))).as(s"nn_$q"))
-      val nulls = train.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
-      catFeatures.zipWithIndex.foreach { case (q, i) =>
-        require(nulls.getLong(i) == 0L,
-          s"categorical feature $q has ${nulls.getLong(i)} NULL rows; " +
-            "fit requires non-null categorical columns (impute a " +
-            "sentinel category upstream)")
-      }
-    }
-    // per-categorical-feature category DICTIONARIES: one tiny
-    // distinct each, sorted for deterministic cell layout
-    val catDict: Map[String, Seq[String]] = catFeatures.map { q =>
-      val vs = train.select(col(q).cast("string").as("v"))
-        .filter(col("v").isNotNull).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      require(vs.size <= MaxCategories,
-        s"categorical feature $q has ${vs.size} values; " +
-          s"MaxCategories=$MaxCategories — hash-encode it instead")
-      q -> vs
-    }.toMap
-
-    def nodeIdExpr(id: Long): Column = splits.get(id) match {
-      case Some(s) =>
-        when(col(s.attribute) <= lit(s.threshold), nodeIdExpr(2 * id))
-          .otherwise(nodeIdExpr(2 * id + 1))
-      case None => catSplits.get(id) match {
-        case Some((a, vs)) =>
-          when(col(a).cast("string").isin(vs: _*), nodeIdExpr(2 * id))
-            .otherwise(nodeIdExpr(2 * id + 1))
-        case None => lit(id)
-      }
-    }
+    val catDict = FitInternals.categoryDictionary(train, catFeatures)
 
     var open: Seq[Long] = Seq(1L)
     var depth = 0
-
-    def numOr(v: Any, dflt: Double): Double =
-      if (v == null) dflt else v.asInstanceOf[Number].doubleValue()
 
     // Candidate-threshold aggregate for feature g over the rows where
     // `cond` holds. Plain mode: the side's feature mean — thresholds
@@ -328,29 +237,23 @@ class RegressionTree(
     // instead of a sampling step). Falls back to the plain mean when
     // the side's residuals are all zero; the division is guarded (a
     // zero weight sum would THROW under ANSI mode, not yield null).
-    def thrAggOver(g: String, cond: Option[Column], name: String): Column = {
+    def thrAggOver(pass: FitInternals.WeightedAggs, g: String,
+                   cond: Option[Column], name: String): Column = {
       val gc = col(g).cast("double")
       def over(e: Column): Column = cond.map(c => when(c, e)).getOrElse(e)
       if (!gradientWeightedThresholds) {
-        wcol match {
-          case None => avg(over(gc)).as(name)
-          case Some(w) =>
-            val wp = pv("__pv_w", w)
-            val wg = pv(s"__pv_wg_$g", w * gc)
-            val ws = sum(over(wp))
-            when(ws > 0.0, sum(over(wg)) / ws).as(name)
-        }
+        pass.rate(cond, gc, s"__pv_wg_$g").as(name)
       } else {
         // gradient focus stacks ON TOP of sample weights: the
         // effective threshold weight is w·|residual|
-        val wp = pv("__pv_weff", wcol.map(_ * abs(y)).getOrElse(abs(y)))
-        val wg = pv(s"__pv_weffg_$g",
+        val wp = pass("__pv_weff", wcol.map(_ * abs(y)).getOrElse(abs(y)))
+        val wg = pass(s"__pv_weffg_$g",
           wcol.map(_ * abs(y)).getOrElse(abs(y)) * gc)
         val ws = sum(over(wp))
         val fallback = wcol match {
           case None => avg(over(gc))
           case Some(w0) =>
-            sum(over(pv(s"__pv_wg_$g", w0 * gc))) / sum(over(pv("__pv_w", w0)))
+            sum(over(pass(s"__pv_wg_$g", w0 * gc))) / sum(over(pass("__pv_w", w0)))
         }
         when(ws > 0.0, sum(over(wg)) / ws)
           .otherwise(fallback).as(name)
@@ -361,24 +264,24 @@ class RegressionTree(
     // DecisionTree.fitOn): each deeper node's (count, mean, variance,
     // thresholds) are computed inside its parent's fused split
     // aggregate, so a fit of depth d runs d+1 jobs instead of 2d.
-    activePre = mutable.LinkedHashMap.empty
+    val rootPass = new FitInternals.WeightedAggs(wcol, MeanSplitter)
     val rootAggs = (wcol match {
       case None => Seq(
         count(rc(lit(1))).cast("double").as("n"), avg(rc(y)).as("mean"),
         var_pop(rc(y)).as("v"))
       case Some(w) =>
         // weighted moments from sums: mean = Σwy/Σw, var clamped at 0
-        val ws = sum(rc(pv("__pv_w", w)))
-        val m = sum(rc(pv("__pv_v_y", w * y))) / ws
+        val ws = sum(rc(rootPass("__pv_w", w)))
+        val m = sum(rc(rootPass("__pv_v_y", w * y))) / ws
         Seq(ws.as("n"), m.as("mean"),
           greatest(lit(0.0),
-            sum(rc(pv("__pv_v_yy", w * y * y))) / ws - m * m).as("v"))
-    }) ++ featureColumns.map(f => thrAggOver(f, trainCond, s"thr_$f")) ++
+            sum(rc(rootPass("__pv_v_yy", w * y * y))) / ws - m * m).as("v"))
+    }) ++ featureColumns.map(f => thrAggOver(rootPass, f, trainCond, s"thr_$f")) ++
       extraRootAggs
     // the root pass runs over the FULL frame (trainCond rides inside
     // each aggregate) so the caller's extra aggregates can see every
     // row — the fit's own stats are unchanged (see rc())
-    val rootRow = withPre(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
+    val rootRow = rootPass.under(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
     val extraValues: Seq[Any] = extraRootAggs.indices
       .map(i => rootRow.get(3 + featureColumns.size + i))
     var openStats: Map[Long, NodeStats] =
@@ -403,25 +306,24 @@ class RegressionTree(
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExpr(
             toSplit.map { case (id, st) => id -> st.thresholds(f) }, depth)
-        // fresh pre-projection per level (thresholds differ per level;
-        // the side booleans are computed once per row instead of
-        // inside every aggregate — see the pv() note above)
-        activePre = mutable.LinkedHashMap.empty
+        // fresh pre-projection per level: the side booleans are
+        // computed once per row instead of inside every aggregate
+        val pass = new FitInternals.WeightedAggs(wcol, MeanSplitter)
         val splitAggs = featureColumns.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pv(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pass(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pass(s"__pv_gt_$f", fc > thrExpr(f))
           Seq(
-            sumAggOf(Some(le), y, "y").as(s"ls_$f"),
-            sumAggOf(Some(le), y * y, "yy").as(s"lq_$f"),
-            cntAgg(Some(le)).as(s"ln_$f"),
-            sumAggOf(Some(gt), y, "y").as(s"rs_$f"),
-            sumAggOf(Some(gt), y * y, "yy").as(s"rq_$f"),
-            cntAgg(Some(gt)).as(s"rn_$f")) ++
+            pass.projectedSum(Some(le), y, "__pv_v_y").as(s"ls_$f"),
+            pass.projectedSum(Some(le), y * y, "__pv_v_yy").as(s"lq_$f"),
+            pass.mass(Some(le)).as(s"ln_$f"),
+            pass.projectedSum(Some(gt), y, "__pv_v_y").as(s"rs_$f"),
+            pass.projectedSum(Some(gt), y * y, "__pv_v_yy").as(s"rq_$f"),
+            pass.mass(Some(gt)).as(s"rn_$f")) ++
           featureColumns.flatMap { g =>
             Seq(
-              thrAggOver(g, Some(le), s"cthl_${f}__$g"),
-              thrAggOver(g, Some(gt), s"cthr_${f}__$g"))
+              thrAggOver(pass, g, Some(le), s"cthl_${f}__$g"),
+              thrAggOver(pass, g, Some(gt), s"cthr_${f}__$g"))
           }
         }
         // categorical cells, fused into the SAME aggregate (the k-ary
@@ -434,17 +336,17 @@ class RegressionTree(
         val catAggs = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
           val qc = col(q).cast("string")
           catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pv(s"__pv_in_${qi}_$vi", qc === v)
-            val weff = pv("__pv_weff", wcol.map(_ * abs(y)).getOrElse(abs(y)))
+            val in = pass(s"__pv_in_${qi}_$vi", qc === v)
+            val weff = pass("__pv_weff", wcol.map(_ * abs(y)).getOrElse(abs(y)))
             Seq(
-              sumAggOf(Some(in), y, "y").as(s"qs_${qi}_$vi"),
-              sumAggOf(Some(in), y * y, "yy").as(s"qq_${qi}_$vi"),
-              cntAgg(Some(in)).as(s"qn_${qi}_$vi")) ++
+              pass.projectedSum(Some(in), y, "__pv_v_y").as(s"qs_${qi}_$vi"),
+              pass.projectedSum(Some(in), y * y, "__pv_v_yy").as(s"qq_${qi}_$vi"),
+              pass.mass(Some(in)).as(s"qn_${qi}_$vi")) ++
             featureColumns.flatMap { g =>
               val gc = col(g).cast("double")
-              sumAggOf(Some(in), gc, s"g_$g").as(s"qg_${qi}_${vi}_$g") +:
+              pass.projectedSum(Some(in), gc, s"__pv_v_g_$g").as(s"qg_${qi}_${vi}_$g") +:
                 (if (!gradientWeightedThresholds) Seq.empty
-                 else Seq(sum(when(in, pv(s"__pv_weffg_$g",
+                 else Seq(sum(when(in, pass(s"__pv_weffg_$g",
                      wcol.map(_ * abs(y)).getOrElse(abs(y)) * gc)))
                    .as(s"qwg_${qi}_${vi}_$g")))
             } ++
@@ -453,7 +355,8 @@ class RegressionTree(
           }
         }
         val allAggs = splitAggs ++ catAggs
-        val rows = withPre(train.select(col("*"), nodeIdExpr(1L).as("node")))
+        val rows = pass.under(train.select(col("*"),
+          FitInternals.routeExpr(splits, catSplits).as("node")))
           .groupBy("node").agg(allAggs.head, allAggs.tail: _*)
           .collect().map(r => r.getLong(0) -> r).toMap
 

@@ -38,12 +38,12 @@ class SoftmaxGradientBoosting(
   require(numStages >= 1 && learningRate > 0)
   require(marginCheckpointInterval >= 0)
 
-  def fit(dataset: DataFrame): FittedSoftmaxGBT = {
+  def fit(dataset: DataFrame): FittedSoftmaxGBT =
+    FitInternals.withWorkingSet(dataset, featureColumns ++ categoricalColumns ++
+      weightColumn :+ targetColumn)(fitOn)
+
+  private def fitOn(work: DataFrame): FittedSoftmaxGBT = {
     val cls = col(targetColumn).cast("int")
-    val work = FitInternals.rightSizeForRepeatedScans(
-      dataset.select((featureColumns ++ categoricalColumns ++ weightColumn
-        :+ targetColumn).distinct.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cur: DataFrame = work
     var curOwned = false
     try {
@@ -111,7 +111,6 @@ class SoftmaxGradientBoosting(
           fittedStages.flatMap(_.values.toSeq)))
     } finally {
       if (curOwned) cur.unpersist(blocking = false)
-      work.unpersist(blocking = false); ()
     }
   }
 }

@@ -1,0 +1,75 @@
+package graft.tree
+
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+
+/** The fit-time input contract, checked table-driven across all six
+  * level-wise learners: NULL categoricals, categoricals past
+  * FitInternals.MaxCategories, non-positive weights (where the learner
+  * takes weights) and column names reserved by the level passes are
+  * each rejected with an IllegalArgumentException before any fit work.
+  */
+class FitContractSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** A learner under contract: fit(data, feature, categoricals, weight). */
+  private case class Learner(name: String, categorical: Boolean, weighted: Boolean,
+                             fit: (DataFrame, String, Seq[String], Option[String]) => Any)
+
+  private def params(feature: String) =
+    DecisionTreeParams(Seq(feature), "class", "mean", "gini", maxDepth = 2)
+
+  private val learners = Seq(
+    Learner("DecisionTree", categorical = true, weighted = true, (df, f, cats, w) =>
+      new DecisionTree(params(f), cats, w).fit(df)),
+    Learner("MulticlassDecisionTree", categorical = true, weighted = true, (df, f, cats, w) =>
+      new MulticlassDecisionTree(params(f), cats, w).fit(df)),
+    Learner("RegressionTree", categorical = true, weighted = true, (df, f, cats, w) =>
+      new RegressionTree(Seq(f), "class", maxDepth = 2, categoricalColumns = cats,
+        weightColumn = w).fit(df)),
+    Learner("RandomForest", categorical = true, weighted = false, (df, f, cats, _) =>
+      new RandomForest(params(f), numTrees = 2, categoricalColumns = cats).fit(df)),
+    Learner("MulticlassRandomForest", categorical = true, weighted = true, (df, f, cats, w) =>
+      new MulticlassRandomForest(params(f), numTrees = 2, categoricalColumns = cats,
+        weightColumn = w).fit(df)),
+    Learner("RegressionRandomForest", categorical = false, weighted = false, (df, f, _, _) =>
+      new RegressionRandomForest(Seq(f), "class", numTrees = 2, maxDepth = 2).fit(df)))
+
+  /** (x, lang, class, w) rows; `lang` takes `categories` values. */
+  private def rows(categories: Int, lang: Int => Option[String] = i => Some(s"v$i"),
+                   w: Int => Double = _ => 1.0): DataFrame =
+    (0 until math.max(categories, 4)).map { i =>
+      (i.toDouble, lang(i % categories), i % 2, w(i))
+    }.toDF("x", "lang", "class", "w")
+
+  private def rejected(fit: => Any): String =
+    intercept[IllegalArgumentException](fit).getMessage
+
+  learners.foreach { l =>
+    if (l.categorical) {
+      test(s"${l.name} rejects a NULL categorical") {
+        val df = rows(3, lang = i => if (i == 0) None else Some(s"v$i"))
+        assert(rejected(l.fit(df, "x", Seq("lang"), None)).contains("NULL"))
+      }
+      test(s"${l.name} rejects a categorical past MaxCategories") {
+        val df = rows(FitInternals.MaxCategories + 1)
+        val msg = rejected(l.fit(df, "x", Seq("lang"), None))
+        assert(msg.contains(s"${FitInternals.MaxCategories + 1} values") &&
+          msg.contains(s"MaxCategories=${FitInternals.MaxCategories}"), msg)
+      }
+    }
+    if (l.weighted) {
+      test(s"${l.name} rejects a non-positive weight") {
+        val df = rows(3, w = i => if (i == 1) 0.0 else 1.0)
+        assert(rejected(l.fit(df, "x", Seq.empty, Some("w"))).contains("positive"))
+      }
+    }
+    test(s"${l.name} rejects reserved input column names") {
+      Seq("node", "t", "e", "__pv_le_x").foreach { reserved =>
+        val df = rows(3).withColumnRenamed("x", reserved)
+        val msg = rejected(l.fit(df, reserved, Seq.empty, None))
+        assert(msg.contains(s"input column $reserved "), msg)
+      }
+    }
+  }
+}

@@ -145,6 +145,27 @@ class WeightedFitSpec extends SparkSpec {
     assert(roots(fused) == roots(repl), "weighted ≠ replicated")
   }
 
+  test("binary tree: a weighted fit with a feature named y ≡ the same feature renamed") {
+    // the weighted label product and the feature products share one
+    // pre-projection registry: a feature literally named `y` must not
+    // pick up the label product (or vice versa)
+    def renamed(n: TreeNode): TreeNode = n match {
+      case DecisionNode(a, t, l, r) =>
+        DecisionNode(if (a == "x") "y" else a, t, renamed(l), renamed(r))
+      case CatDecisionNode(a, vs, l, r) =>
+        CatDecisionNode(a, vs, renamed(l), renamed(r))
+      case leaf => leaf
+    }
+    def fitOn(feature: String): TreeNode = {
+      val p = DecisionTreeParams(Seq(feature), "class", "mean", "entropy", maxDepth = 4)
+      new DecisionTree(p, categoricalColumns = Seq("lang"), weightColumn = Some("w"))
+        .fit(base.toDF("lang", feature, "class", "w")).root
+    }
+    val asY = fitOn("y")
+    val asX = fitOn("x")
+    assert(asY == renamed(asX), s"feature y ${asY.caseSql}\nfeature x ${asX.caseSql}")
+  }
+
   test("NULL / non-positive weights are rejected at fit time") {
     val df = Seq((1.0, 1, 0.0), (2.0, 0, 1.0)).toDF("x", "class", "w")
     val p = DecisionTreeParams(Seq("x"), "class", "mean", "gini", maxDepth = 2)

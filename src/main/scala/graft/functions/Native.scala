@@ -4,10 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -1687,8 +1689,226 @@ case class VectorMoments(
     copy(child = newChildren(0))
 }
 
+/** One tree's decided splits as data, for [[TreeRoute]]: one slot per
+  * node reached so far (slot 0 is the root). A slot's `feature` is -1
+  * when terminal, a numeric input index below `nums.length`, else that
+  * length plus a categorical input index; `left`/`right` are the child
+  * slots, so a walk is O(depth) array reads.
+  */
+final class SplitTable private (
+    ids: Array[Long], feature: Array[Int], threshold: Array[Double],
+    inSet: Array[java.util.HashSet[UTF8String]],
+    left: Array[Int], right: Array[Int]) extends Serializable {
+
+  /** The node id a row reaches. Numeric: `x <= t` under SQL double
+    * ordering (NaN largest, -0.0 = 0.0) goes left, NULL right.
+    * Categorical: IN-set goes left, NULL and unseen categories right.
+    */
+  def route(nums: Array[Double], numNull: Array[Boolean],
+            cats: Array[UTF8String]): Long = {
+    var s = 0
+    while (feature(s) >= 0) {
+      val f = feature(s)
+      val goLeft =
+        if (f < nums.length)
+          !numNull(f) && SQLOrderingUtil.compareDoubles(nums(f), threshold(s)) <= 0
+        else {
+          val c = cats(f - nums.length)
+          c != null && inSet(s).contains(c)
+        }
+      s = if (goLeft) left(s) else right(s)
+    }
+    ids(s)
+  }
+
+  override def toString: String = s"SplitTable(${ids.length} nodes)"
+}
+
+object SplitTable {
+  /** From node id -> (numeric input index, threshold) and node id ->
+    * (categorical input index, left set); `numNumeric` numeric inputs
+    * come first.
+    */
+  def apply(numNumeric: Int,
+            numeric: collection.Map[Long, (Int, Double)],
+            categorical: collection.Map[Long, (Int, Seq[String])]): SplitTable = {
+    val ids = mutable.ArrayBuffer.empty[Long]
+    val feature = mutable.ArrayBuffer.empty[Int]
+    val threshold = mutable.ArrayBuffer.empty[Double]
+    val inSet = mutable.ArrayBuffer.empty[java.util.HashSet[UTF8String]]
+    val left = mutable.ArrayBuffer.empty[Int]
+    val right = mutable.ArrayBuffer.empty[Int]
+    def add(id: Long): Int = {
+      val s = ids.size
+      ids += id; feature += -1; threshold += Double.NaN; inSet += null
+      left += -1; right += -1
+      (numeric.get(id), categorical.get(id)) match {
+        case (Some((f, t)), _) =>
+          require(f >= 0 && f < numNumeric, s"node $id splits on an unknown numeric input")
+          feature(s) = f; threshold(s) = t
+        case (None, Some((q, vs))) =>
+          require(q >= 0, s"node $id splits on an unknown categorical input")
+          val set = new java.util.HashSet[UTF8String]()
+          vs.foreach(v => set.add(UTF8String.fromString(v)))
+          feature(s) = numNumeric + q; inSet(s) = set
+        case _ =>
+      }
+      if (feature(s) >= 0) {
+        val l = add(2 * id); left(s) = l
+        val r = add(2 * id + 1); right(s) = r
+      }
+      s
+    }
+    add(1L)
+    new SplitTable(ids.toArray, feature.toArray, threshold.toArray,
+      inSet.toArray, left.toArray, right.toArray)
+  }
+}
+
+/** A row's node id in a tree whose decided splits come from `table`.
+  * `children` are the fit's numeric inputs (double) followed by its
+  * categorical inputs (string); the table rides in codegen's
+  * references, so the generated code depends only on the input lists
+  * — one class serves every level, threshold and chosen attribute.
+  */
+case class TreeRoute(children: Seq[Expression], numNumeric: Int, table: SplitTable)
+    extends Expression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val nums = new Array[Double](numNumeric)
+    val nulls = new Array[Boolean](numNumeric)
+    val cats = new Array[UTF8String](children.size - numNumeric)
+    var i = 0
+    while (i < children.size) {
+      val v = children(i).eval(input)
+      if (i >= numNumeric) cats(i - numNumeric) = v.asInstanceOf[UTF8String]
+      else if (v == null) nulls(i) = true
+      else nums(i) = v.asInstanceOf[Double]
+      i += 1
+    }
+    table.route(nums, nulls, cats)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tableRef = ctx.addReferenceObj("splitTable", table, classOf[SplitTable].getName)
+    val nCat = children.size - numNumeric
+    val nums = ctx.addMutableState("double[]", "routeNums",
+      v => s"$v = new double[$numNumeric];")
+    val nulls = ctx.addMutableState("boolean[]", "routeNulls",
+      v => s"$v = new boolean[$numNumeric];")
+    val cats = ctx.addMutableState("UTF8String[]", "routeCats",
+      v => s"$v = new UTF8String[$nCat];")
+    val fills = children.zipWithIndex.map { case (c, i) =>
+      val e = c.genCode(ctx)
+      if (i < numNumeric)
+        s"${e.code}\n$nums[$i] = ${e.value};\n$nulls[$i] = ${e.isNull};"
+      else s"${e.code}\n$cats[${i - numNumeric}] = ${e.isNull} ? null : ${e.value};"
+    }
+    ev.copy(code = code"""
+      |${fills.mkString("\n")}
+      |long ${ev.value} = $tableRef.route($nums, $nulls, $cats);
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): TreeRoute = copy(children = newChildren)
+}
+
+/** (tree, node) -> value by open addressing (load <= 1/2); a key not
+  * in the table — a node that is not open — reads NaN.
+  */
+final class NodeValueTable private (
+    trees: Array[Int], nodes: Array[Long], values: Array[Double]) extends Serializable {
+
+  def get(tree: Int, node: Long): Double = {
+    if (node == 0L) return Double.NaN // 0 marks an empty slot; no node has id 0
+    var i = NodeValueTable.slot(tree, node, nodes.length - 1)
+    while (nodes(i) != 0L) {
+      if (nodes(i) == node && trees(i) == tree) return values(i)
+      i = (i + 1) & (nodes.length - 1)
+    }
+    Double.NaN
+  }
+
+  override def toString: String = s"NodeValueTable(${nodes.count(_ != 0L)} nodes)"
+}
+
+object NodeValueTable {
+  private def slot(tree: Int, node: Long, mask: Int): Int = {
+    val h = (node + tree.toLong * 0x632BE59BD9B4E019L) * 0x9E3779B97F4A7C15L
+    (h ^ (h >>> 32)).toInt & mask
+  }
+
+  def apply(entries: Seq[(Int, Long, Double)]): NodeValueTable = {
+    var cap = 4
+    while (cap < 2 * entries.size) cap <<= 1
+    val trees = new Array[Int](cap)
+    val nodes = new Array[Long](cap)
+    val values = new Array[Double](cap)
+    entries.foreach { case (t, id, v) =>
+      require(id != 0L, "node ids start at 1")
+      var i = slot(t, id, cap - 1)
+      while (nodes(i) != 0L && !(nodes(i) == id && trees(i) == t)) i = (i + 1) & (cap - 1)
+      trees(i) = t; nodes(i) = id; values(i) = v
+    }
+    new NodeValueTable(trees, nodes, values)
+  }
+}
+
+/** A per-node value (a level's candidate thresholds) looked up by the
+  * row's (tree, node) in a table carried in codegen's references — the
+  * generated code never changes with the level or the values.
+  */
+case class NodeValue(left: Expression, right: Expression, table: NodeValueTable)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val t = left.eval(input)
+    val n = right.eval(input)
+    if (t == null || n == null) Double.NaN
+    else table.get(t.asInstanceOf[Int], n.asInstanceOf[Long])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tableRef = ctx.addReferenceObj("nodeValues", table, classOf[NodeValueTable].getName)
+    val t = left.genCode(ctx)
+    val n = right.genCode(ctx)
+    ev.copy(code = code"""
+      |${t.code}
+      |${n.code}
+      |double ${ev.value} = (${t.isNull} || ${n.isNull}) ? Double.NaN
+      |  : $tableRef.get(${t.value}, ${n.value});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NodeValue =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Column-API entry points for the native expressions. */
 object Native {
+  /** Codegen'd node id of each row in the tree `table` describes (see
+    * TreeRoute); numeric inputs are cast to double, categorical ones
+    * to string, as the split predicates compare them.
+    */
+  def treeRoute(numeric: Seq[Column], categorical: Seq[Column], table: SplitTable): Column =
+    GraftBridge.column(TreeRoute(
+      (numeric.map(_.cast("double")) ++ categorical.map(_.cast("string")))
+        .map(GraftBridge.expression), numeric.size, table))
+
+  /** Codegen'd per-(tree, node) value lookup; NaN off the table. */
+  def nodeValue(tree: Column, node: Column, table: NodeValueTable): Column =
+    GraftBridge.column(NodeValue(
+      GraftBridge.expression(tree.cast("int")),
+      GraftBridge.expression(node.cast("long")), table))
+
   /** Codegen'd dot product; inputs are cast to array<double> so
     * float arrays don't silently read garbage through getDouble.
     */

@@ -184,9 +184,9 @@ object FittedDecisionTree {
   *      thresholds → per (node, feature) left/right class-1 rate and
   *      counts.
   *
-  * The node id of each row is computed on the fly by a nested `when`
-  * expression compiled from the splits decided so far — no node column
-  * is persisted, no lineage growth beyond the expression itself.
+  * The node id of each row is computed on the fly from a table of the
+  * splits decided so far (FitInternals.routeExpr) — no node column is
+  * persisted, and every level pass runs the same generated code.
   * Driver state is O(nodes × features) scalars; row data never reaches
   * the driver. Stopping rules, tie-breaks, empty-side handling and
   * pruning match the reference (dtree.py:216-250):
@@ -234,7 +234,7 @@ class DecisionTree(val params: DecisionTreeParams,
     val wcol = weightColumn.map(c => col(c).cast("double"))
     FitInternals.requireMeanSplitter(params, catFeatures.nonEmpty, weightColumn.nonEmpty)
     FitInternals.requirePositiveWeights(dataset, weightColumn)
-    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
+    val catDict = FitInternals.dictionaries(dataset, None, catFeatures)._2
 
     // nodeId -> decided split; nodeId -> leaf label; nodeId -> majority
     val splits = mutable.Map.empty[Long, SplitParams]
@@ -259,8 +259,10 @@ class DecisionTree(val params: DecisionTreeParams,
       rootPass.mass(None).as("n") +:
       rootPass.rate(None, clsCol, LabelProduct).as("p1") +:
       features.map(f => rootPass.threshold(None, col(f).cast("double"),
-        s"__pv_wv_$f").as(s"thr_$f"))
+        s"__pv_wv_$f").as(s"thr_$f")) :+
+      FitInternals.nullCount(clsCol).as("nulls")
     val rootRow = rootPass.under(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
+    FitInternals.requireNonNullLabel(params.classColumn, rootRow.getLong(2 + features.size))
     // open node -> stats, inherited level to level
     var openStats: Map[Long, NodeStats] =
       if (numOr(rootRow.get(0), 0.0) == 0.0) Map.empty
@@ -293,12 +295,11 @@ class DecisionTree(val params: DecisionTreeParams,
         // side) — so after the best feature is picked, both children
         // arrive with complete NodeStats and need no stats pass of
         // their own. Candidate threshold dispatch per node via
-        // FitInternals.levelThresholdExpr (O(1) array lookup at
-        // shallow levels, when-chain past the bound).
-        val nodeCol = FitInternals.routeExpr(splits, catSplits).as("node")
+        // FitInternals.levelThresholdExpr.
+        val nodeCol = FitInternals.routeExpr(features, catFeatures, splits, catSplits).as("node")
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExpr(
-            toSplit.map { case (id, st) => id -> st.thresholds(f) }, depth)
+            toSplit.map { case (id, st) => id -> st.thresholds(f) })
         // fresh pre-projection per level: the side booleans are
         // computed once per row instead of inside every aggregate
         val pass = new FitInternals.WeightedAggs(wcol, method)

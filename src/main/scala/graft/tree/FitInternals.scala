@@ -1,5 +1,6 @@
 package graft.tree
 
+import graft.functions.{Native, NodeValueTable, SplitTable}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -15,6 +16,19 @@ import scala.collection.mutable
   * fused forest fits are documented to produce trees IDENTICAL to
   * tree-at-a-time fitting; defining each piece once is what keeps that
   * invariant from drifting.
+  *
+  * Level passes are FIXED-SHAPE: routing (`routeExpr`) and the
+  * per-node candidate thresholds (`levelThresholdExpr`) carry the
+  * tree as data in codegen's references, so a fit compiles its level
+  * pass once and every later level, threshold and chosen attribute
+  * reuses that class (pinned by FixedShapeFitSpec). The per-level
+  * loops and split scorers are still six copies, one per learner.
+  *
+  * Counting compiles: Spark 4.1 keys its generated-class cache by
+  * (class loader, source), and in local mode the driver and the
+  * executor threads use different loaders, so every distinct
+  * whole-stage class compiles twice from byte-identical source. A
+  * cold count of two per distinct class is expected, not a leak.
   */
 private[tree] object FitInternals {
 
@@ -86,63 +100,80 @@ private[tree] object FitInternals {
           "rows; weighted fits require strictly positive weights")
     }
 
-  /** Per-categorical-feature category dictionaries (one tiny distinct
-    * each, sorted for a deterministic cell layout), after rejecting
-    * NULL categoricals. Per-category cells exclude NULL rows while
-    * serving routes them right, and the fused forests recompute child
-    * stats over routed rows while the sequential paths compose them
-    * from cells — fitting on NULLs would count rows the composed stats
-    * never saw and break the fused ≡ sequential contract. Impute a
-    * sentinel category upstream; NULL routes right at serve time only.
+  /** Rows where `c` is NULL, as an aggregate. */
+  def nullCount(c: Column): Column = count(when(c.isNull, lit(1)))
+
+  /** Reject a label or target column with NULL rows: a NULL class
+    * has no dictionary slot, and counts would include the row while
+    * rates and sums skip it.
     */
-  def categoryDictionary(dataset: DataFrame,
-                         catFeatures: Seq[String]): Map[String, Seq[String]] = {
-    if (catFeatures.nonEmpty) {
-      val nullAggs = catFeatures.map(q =>
-        count(when(col(q).isNull, lit(1))).as(s"nn_$q"))
-      val nulls = dataset.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
-      catFeatures.zipWithIndex.foreach { case (q, i) =>
-        require(nulls.getLong(i) == 0L,
-          s"categorical feature $q has ${nulls.getLong(i)} NULL rows; " +
-            "fit requires non-null categorical columns (impute a " +
-            "sentinel category upstream)")
-      }
+  def requireNonNullLabel(column: String, nulls: Long): Unit =
+    require(nulls == 0L, s"label column $column has $nulls NULL rows; " +
+      "fit requires a non-null label or target")
+
+  /** The fit's dictionaries from ONE non-grouped aggregate: with a
+    * `classColumn`, its sorted distinct int labels (after rejecting
+    * NULL labels; `checkClasses` then validates them), and per
+    * categorical feature its sorted distinct values, after rejecting
+    * NULL categoricals and then any past MaxCategories. Per-category
+    * cells exclude NULL rows while serving routes them right, and the
+    * fused forests recompute child stats over routed rows while the
+    * sequential paths compose them from cells — fitting on NULLs would
+    * count rows the composed stats never saw and break the fused ≡
+    * sequential contract. Impute a sentinel category upstream; NULL
+    * routes right at serve time only.
+    */
+  def dictionaries(dataset: DataFrame, classColumn: Option[String],
+                   catFeatures: Seq[String],
+                   checkClasses: Seq[Int] => Unit = _ => ())
+      : (Seq[Int], Map[String, Seq[String]]) = {
+    val inputs = classColumn.map(c => col(c).cast("int")).toSeq ++
+      catFeatures.map(q => col(q).cast("string"))
+    if (inputs.isEmpty) return (Seq.empty, Map.empty)
+    val aggs = inputs.flatMap(c => Seq(nullCount(c), collect_set(c)))
+    val row = dataset.agg(aggs.head, aggs.tail: _*).collect()(0)
+    def sorted[A: Ordering](i: Int): Seq[A] = row.getSeq[A](2 * i + 1).sorted
+    val classes = classColumn.fold(Seq.empty[Int]) { c =>
+      requireNonNullLabel(c, row.getLong(0))
+      val cs = sorted[Int](0)
+      checkClasses(cs)
+      cs
     }
-    catFeatures.map { q =>
-      val vs = dataset.select(col(q).cast("string").as("v"))
-        .filter(col("v").isNotNull).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
+    val first = classColumn.size
+    catFeatures.zipWithIndex.foreach { case (q, i) =>
+      val nulls = row.getLong(2 * (first + i))
+      require(nulls == 0L,
+        s"categorical feature $q has $nulls NULL rows; " +
+          "fit requires non-null categorical columns (impute a " +
+          "sentinel category upstream)")
+    }
+    val dict = catFeatures.zipWithIndex.map { case (q, i) =>
+      val vs = sorted[String](first + i)
       require(vs.size <= MaxCategories,
         s"categorical feature $q has ${vs.size} values; " +
           s"MaxCategories=$MaxCategories — hash-encode it instead")
       q -> vs
     }.toMap
+    (classes, dict)
   }
 
   /** A collected aggregate cell as a double; `dflt` for NULL. */
   def numOr(v: Any, dflt: Double): Double =
     if (v == null) dflt else v.asInstanceOf[Number].doubleValue()
 
-  /** Each row's node id as one nested `when` over the splits decided so
-    * far (numeric `<=` goes left; a categorical IN-set goes left, NULL
-    * and unseen categories right) — no node column is persisted and
-    * lineage grows by the expression only.
+  /** Each row's node id under the splits decided so far (numeric `<=`
+    * goes left; a categorical IN-set goes left, NULL and unseen
+    * categories right). The splits travel as a table in codegen's
+    * references, so the level pass's generated code depends only on
+    * the `numeric` and `categorical` input lists: one class serves
+    * every level, and no node column is persisted.
     */
-  def routeExpr(splits: collection.Map[Long, SplitParams],
-                catSplits: collection.Map[Long, (String, Seq[String])]): Column = {
-    def go(id: Long): Column = splits.get(id) match {
-      case Some(s) =>
-        when(col(s.attribute) <= lit(s.threshold), go(2 * id))
-          .otherwise(go(2 * id + 1))
-      case None => catSplits.get(id) match {
-        case Some((a, vs)) =>
-          when(col(a).cast("string").isin(vs: _*), go(2 * id))
-            .otherwise(go(2 * id + 1))
-        case None => lit(id)
-      }
-    }
-    go(1L)
-  }
+  def routeExpr(numeric: Seq[String], categorical: Seq[String],
+                splits: collection.Map[Long, SplitParams],
+                catSplits: collection.Map[Long, (String, Seq[String])]): Column =
+    Native.treeRoute(numeric.map(col), categorical.map(col), SplitTable(numeric.size,
+      splits.map { case (id, s) => id -> (numeric.indexOf(s.attribute), s.threshold) },
+      catSplits.map { case (id, (a, vs)) => id -> (categorical.indexOf(a), vs) }))
 
   /** The fused forests' per-level input: each row once per tree whose
     * bag holds it, with the tree index `t` and that tree's `node`.
@@ -328,20 +359,6 @@ private[tree] object FitInternals {
     if (parts < par) df.repartition(par) else df
   }
 
-  /** Deepest level that uses the O(1) literal-array threshold lookup;
-    * past it (2^depth literals per feature would bloat the plan, and
-    * level indices overflow Int past 2^31) the when-chain fallback is
-    * used — at such depths only a handful of nodes stay open, so the
-    * chain stays short.
-    */
-  val MaxArrayLookupDepth = 12
-
-  /** Cap on total literal-array entries (numTrees · 2^depth) for the
-    * forest variant's dense-array path — keeps plan size bounded for
-    * wide forests, not just deep ones.
-    */
-  val MaxForestArrayEntries = 4096L
-
   /** `count` is a Double: the weighted fit's node mass is sum(w)
     * (fractional for soft-dedup 1/n weights); unweighted fits pass
     * exact whole-number doubles (< 2^53), so comparisons and
@@ -363,58 +380,16 @@ private[tree] object FitInternals {
       st.count >= params.minSplitSamples &&
       depth != params.maxDepth
 
-  /** Per-level candidate-threshold expression keyed on the `node`
-    * column: O(1) constant-folded dense-array lookup while the level
-    * is shallow (2^depth literals is cheap), and a constant-folded
-    * MAP lookup past MaxArrayLookupDepth — the map holds one entry
-    * per OPEN node, stays flat no matter how bushy the level is (a
-    * nested when-chain per node would stack-overflow Catalyst's
-    * recursive transforms on a bushy deep level), and misses return
-    * null → NaN (rows routed to leaves closed at shallower levels
-    * match no side).
+  /** Per-level candidate thresholds keyed on the `node` column: a
+    * node-keyed table in codegen's references holding one entry per
+    * OPEN node; every other node (a leaf closed at a shallower level)
+    * reads NaN, and its group's aggregates are never read.
     */
-  def levelThresholdExpr(entries: Seq[(Long, Double)], depth: Int): Column = {
-    val levelBase = 1L << depth
-    if (depth <= MaxArrayLookupDepth) {
-      val width = 1 << depth
-      val vals = Array.fill(width)(Double.NaN)
-      entries.foreach { case (id, t) => vals((id - levelBase).toInt) = t }
-      when(col("node") >= lit(levelBase),
-        element_at(array(vals.map(v => lit(v)).toIndexedSeq: _*),
-          (col("node") - levelBase + 1).cast("int")))
-        .otherwise(lit(Double.NaN))
-    } else {
-      val kvs = entries.flatMap { case (id, t) => Seq(lit(id), lit(t)) }
-      coalesce(element_at(map(kvs.toIndexedSeq: _*), col("node")), lit(Double.NaN))
-    }
-  }
+  def levelThresholdExpr(entries: Seq[(Long, Double)]): Column =
+    Native.nodeValue(lit(0), col("node"),
+      NodeValueTable(entries.map { case (id, t) => (0, id, t) }))
 
-  /** Forest variant keyed on (`t`, `node`); the deep-level map key is
-    * the string "t_node" (immune to id arithmetic overflow at any
-    * depth).
-    */
-  def levelThresholdExprForest(
-      entries: Seq[(Int, Long, Double)], depth: Int, numTrees: Int): Column = {
-    val levelBase = 1L << depth
-    // the array path emits numTrees · 2^depth literals (× 4 aggregate
-    // expressions downstream) — gate on the PRODUCT, not depth alone,
-    // or a 100-tree forest at depth 12 emits ~400k literals per
-    // feature and blows codegen / the constant pool
-    if (depth <= MaxArrayLookupDepth &&
-        numTrees.toLong * (1L << depth) <= MaxForestArrayEntries) {
-      val width = 1 << depth
-      val vals = Array.fill(numTrees * width)(Double.NaN)
-      entries.foreach { case (i, id, t) => vals(i * width + (id - levelBase).toInt) = t }
-      when(col("node") >= lit(levelBase),
-        element_at(array(vals.map(v => lit(v)).toIndexedSeq: _*),
-          (col("t") * width + (col("node") - levelBase) + 1).cast("int")))
-        .otherwise(lit(Double.NaN))
-    } else {
-      val kvs = entries.flatMap { case (i, id, t) => Seq(lit(s"${i}_$id"), lit(t)) }
-      coalesce(
-        element_at(map(kvs.toIndexedSeq: _*),
-          concat_ws("_", col("t"), col("node"))),
-        lit(Double.NaN))
-    }
-  }
+  /** Forest variant keyed on (`t`, `node`). */
+  def levelThresholdExprForest(entries: Seq[(Int, Long, Double)]): Column =
+    Native.nodeValue(col("t"), col("node"), NodeValueTable(entries))
 }

@@ -66,14 +66,14 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
     FitInternals.requireMeanSplitter(params, catFeatures.nonEmpty, weightColumn.nonEmpty)
     FitInternals.requirePositiveWeights(dataset, weightColumn)
 
-    // the label DICTIONARY: one tiny distinct over the class column —
-    // k values collected, sorted for deterministic column layout
-    val classes: Seq[Int] = dataset.select(clsCol.as("c")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    require(classes.nonEmpty, "empty training set")
-    require(classes.size <= MaxClasses,
-      s"${classes.size} distinct labels exceed MaxClasses=$MaxClasses")
-    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
+    // the label DICTIONARY (k values, sorted for a deterministic
+    // column layout) and the category dictionaries: one aggregate
+    val (classes, catDict) = FitInternals.dictionaries(dataset,
+      Some(params.classColumn), catFeatures, { cs =>
+        require(cs.nonEmpty, "empty training set")
+        require(cs.size <= MaxClasses,
+          s"${cs.size} distinct labels exceed MaxClasses=$MaxClasses")
+      })
 
     final case class McStats(counts: Seq[Double], thresholds: Map[String, Double]) {
       def count: Double = counts.sum
@@ -138,10 +138,10 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
         leaves(id) = FitInternals.ancestorMajority(majorities, id))
 
       if (toSplit.nonEmpty) {
-        val nodeCol = FitInternals.routeExpr(splits, catSplits).as("node")
+        val nodeCol = FitInternals.routeExpr(features, catFeatures, splits, catSplits).as("node")
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExpr(
-            toSplit.map { case (id, st) => id -> st.thresholds(f) }, depth)
+            toSplit.map { case (id, st) => id -> st.thresholds(f) })
         // fresh pre-projection per level: side booleans and class
         // memberships computed once per row
         val pass = new FitInternals.WeightedAggs(wcol, method)

@@ -110,19 +110,17 @@ class MulticlassRandomForest(
         when(ws > 0.0, sum(w * g) / ws)
     }
 
-    val classes: Seq[Int] = dataset.select(clsCol.as("c")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    require(classes.nonEmpty, "empty training set")
-    val k = classes.size
-
     // fused ≡ sequential is exact on null-free categoricals (rejected
-    // by categoryDictionary) and, for the child-threshold
+    // by FitInternals.dictionaries) and, for the child-threshold
     // recompute-vs-compose step, only when numeric features are
     // integer-valued (both paths' mean thresholds are then the same
     // exact doubles; non-integer features can differ in ULPs and flip
     // a later split — the documented FP caveat the parity specs
     // fixture around)
-    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
+    val (classes, catDict) = FitInternals.dictionaries(dataset,
+      Some(params.classColumn), catFeatures,
+      cs => require(cs.nonEmpty, "empty training set"))
+    val k = classes.size
 
     final case class McStats(counts: Seq[Double], thresholds: Map[String, Double]) {
       def count: Double = counts.sum
@@ -139,7 +137,7 @@ class MulticlassRandomForest(
     val dists = Array.fill(numTrees)(mutable.Map.empty[Long, Seq[Double]])
 
     def exploded: DataFrame = FitInternals.forestMemberships(dataset, numTrees,
-      bagFilter, i => FitInternals.routeExpr(splits(i), catSplits(i)))
+      bagFilter, i => FitInternals.routeExpr(features, catFeatures, splits(i), catSplits(i)))
 
     val open = Array.fill(numTrees)(Seq(1L))
     var depth = 0
@@ -187,8 +185,7 @@ class MulticlassRandomForest(
         // Pass 2: per-(tree, node, feature) left/right class counts.
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExprForest(
-            toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq,
-            depth, numTrees)
+            toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq)
         // side booleans and class memberships pre-projected once per
         // exploded row, not inside every aggregate
         val pv = new FitInternals.PreProjection

@@ -99,7 +99,7 @@ class RandomForest(
     // the single tree's fit-time contracts (categorical child
     // thresholds compose from sums; NULL categoricals rejected)
     FitInternals.requireMeanSplitter(params, catFeatures.nonEmpty, weighted = false)
-    val catDict = FitInternals.categoryDictionary(dataset, catFeatures)
+    val catDict = FitInternals.dictionaries(dataset, None, catFeatures)._2
 
     val splits = Array.fill(numTrees)(mutable.Map.empty[Long, SplitParams])
     val catSplits =
@@ -109,21 +109,26 @@ class RandomForest(
     val p1s = Array.fill(numTrees)(mutable.Map.empty[Long, Double])
 
     def exploded: DataFrame = FitInternals.forestMemberships(dataset, numTrees,
-      bagFilter, i => FitInternals.routeExpr(splits(i), catSplits(i)))
+      bagFilter, i => FitInternals.routeExpr(features, catFeatures, splits(i), catSplits(i)))
 
     val open = Array.fill(numTrees)(Seq(1L))
     var depth = 0
 
     while (open.exists(_.nonEmpty) && depth < MaxLevels) {
       // Pass 1: per-(tree, node) count, p1, and per-feature thresholds.
+      // (the label NULL count rides along; the root level checks it)
       val statAggs =
         count(lit(1)).as("n") +:
         avg(clsCol).as("p1") +:
-        features.map(f => method.thresholdExpr(col(f).cast("double")).as(s"thr_$f"))
-      val statRows = exploded
+        features.map(f => method.thresholdExpr(col(f).cast("double")).as(s"thr_$f")) :+
+        FitInternals.nullCount(clsCol).as("nulls")
+      val rawStats = exploded
         .groupBy("t", "node")
         .agg(statAggs.head, statAggs.tail: _*)
         .collect()
+      if (depth == 0) FitInternals.requireNonNullLabel(params.classColumn,
+        rawStats.map(_.getLong(4 + features.size)).sum)
+      val statRows = rawStats
         .map { r =>
           val thr = features.zipWithIndex.map { case (f, i) =>
             // layout: t, node, n, p1, thr_0, ...
@@ -151,14 +156,10 @@ class RandomForest(
 
       if (toSplit.nonEmpty) {
         // Pass 2: per-(tree, node, feature) split stats. Candidate
-        // threshold dispatch per (tree, node) via FitInternals (O(1)
-        // constant-array lookup at shallow levels — a when-chain here
-        // costs O(trees × nodes) per row and measured 2x slower —
-        // falling back to the chain past the array-size bound).
+        // threshold dispatch per (tree, node) via FitInternals.
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExprForest(
-            toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq,
-            depth, numTrees)
+            toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq)
         // side booleans pre-projected once per exploded row, not
         // inside all four aggregates of every feature
         val pv = new FitInternals.PreProjection

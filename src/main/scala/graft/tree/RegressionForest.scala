@@ -88,23 +88,26 @@ class RegressionRandomForest(
     val means = Array.fill(numTrees)(mutable.Map.empty[Long, Double])
 
     def exploded: DataFrame = FitInternals.forestMemberships(dataset, numTrees,
-      bagFilter, i => FitInternals.routeExpr(splits(i), Map.empty))
+      bagFilter, i => FitInternals.routeExpr(features, Nil, splits(i), Map.empty))
 
     // ROOT stats — ONE aggregate for all trees (deeper nodes' stats
     // compose inside their parent's fused split pass, exactly as in
     // RegressionTree: d+1 jobs for a depth-d ensemble fit)
     val rootAggs =
       count(lit(1)).as("n") +: avg(y).as("mean") +: var_pop(y).as("v") +:
-      features.map(f => avg(col(f).cast("double")).as(s"thr_$f"))
-    var openStats: Map[(Int, Long), NodeStats] = exploded
-      .groupBy("t").agg(rootAggs.head, rootAggs.tail: _*)
-      .collect().map { r =>
-        (r.getInt(0), 1L) -> NodeStats(r.getLong(1), r.getDouble(2),
-          if (r.isNullAt(3)) 0.0 else r.getDouble(3),
-          features.zipWithIndex.map { case (f, i) =>
-            f -> numOr(r.get(4 + i), Double.NaN)
-          }.toMap)
-      }.toMap
+      features.map(f => avg(col(f).cast("double")).as(s"thr_$f")) :+
+      FitInternals.nullCount(y).as("nulls")
+    val rootRows = exploded
+      .groupBy("t").agg(rootAggs.head, rootAggs.tail: _*).collect()
+    FitInternals.requireNonNullLabel(targetColumn,
+      rootRows.map(_.getLong(4 + features.size)).sum)
+    var openStats: Map[(Int, Long), NodeStats] = rootRows.map { r =>
+      (r.getInt(0), 1L) -> NodeStats(r.getLong(1), r.getDouble(2),
+        if (r.isNullAt(3)) 0.0 else r.getDouble(3),
+        features.zipWithIndex.map { case (f, i) =>
+          f -> numOr(r.get(4 + i), Double.NaN)
+        }.toMap)
+    }.toMap
 
     val open = Array.fill(numTrees)(Seq(1L))
     var depth = 0
@@ -127,8 +130,7 @@ class RegressionRandomForest(
       if (toSplit.nonEmpty) {
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExprForest(
-            toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq,
-            depth, numTrees)
+            toSplit.map { case (i, id, st) => (i, id, st.thresholds(f)) }.toSeq)
         // side booleans pre-projected once per exploded row, not
         // inside every aggregate
         val pv = new FitInternals.PreProjection

@@ -219,7 +219,7 @@ class RegressionTree(
     val means = mutable.Map.empty[Long, Double]
     // per-feature total SSE decrease (gain-based importance, r12)
     val gains = mutable.Map.empty[String, Double].withDefaultValue(0.0)
-    val catDict = FitInternals.categoryDictionary(train, catFeatures)
+    val catDict = FitInternals.dictionaries(train, None, catFeatures)._2
 
     var open: Seq[Long] = Seq(1L)
     var depth = 0
@@ -277,13 +277,14 @@ class RegressionTree(
           greatest(lit(0.0),
             sum(rc(rootPass("__pv_v_yy", w * y * y))) / ws - m * m).as("v"))
     }) ++ featureColumns.map(f => thrAggOver(rootPass, f, trainCond, s"thr_$f")) ++
-      extraRootAggs
+      (count(rc(when(y.isNull, lit(1)))).as("nulls") +: extraRootAggs)
     // the root pass runs over the FULL frame (trainCond rides inside
     // each aggregate) so the caller's extra aggregates can see every
     // row — the fit's own stats are unchanged (see rc())
     val rootRow = rootPass.under(dataset).agg(rootAggs.head, rootAggs.tail: _*).collect()(0)
+    FitInternals.requireNonNullLabel(targetColumn, rootRow.getLong(3 + featureColumns.size))
     val extraValues: Seq[Any] = extraRootAggs.indices
-      .map(i => rootRow.get(3 + featureColumns.size + i))
+      .map(i => rootRow.get(4 + featureColumns.size + i))
     var openStats: Map[Long, NodeStats] =
       if (numOr(rootRow.get(0), 0.0) == 0.0) Map.empty
       else Map(1L -> NodeStats(rootRow.getDouble(0), rootRow.getDouble(1),
@@ -305,7 +306,7 @@ class RegressionTree(
         // per-node threshold dispatch (see FitInternals.levelThresholdExpr)
         def thrExpr(f: String): Column =
           FitInternals.levelThresholdExpr(
-            toSplit.map { case (id, st) => id -> st.thresholds(f) }, depth)
+            toSplit.map { case (id, st) => id -> st.thresholds(f) })
         // fresh pre-projection per level: the side booleans are
         // computed once per row instead of inside every aggregate
         val pass = new FitInternals.WeightedAggs(wcol, MeanSplitter)
@@ -356,7 +357,7 @@ class RegressionTree(
         }
         val allAggs = splitAggs ++ catAggs
         val rows = pass.under(train.select(col("*"),
-          FitInternals.routeExpr(splits, catSplits).as("node")))
+          FitInternals.routeExpr(featureColumns, catFeatures, splits, catSplits).as("node")))
           .groupBy("node").agg(allAggs.head, allAggs.tail: _*)
           .collect().map(r => r.getLong(0) -> r).toMap
 

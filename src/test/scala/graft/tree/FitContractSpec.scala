@@ -2,9 +2,10 @@ package graft.tree
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, when}
 
 /** The fit-time input contract, checked table-driven across all six
-  * level-wise learners: NULL categoricals, categoricals past
+  * level-wise learners: NULL labels, NULL categoricals, categoricals past
   * FitInternals.MaxCategories, non-positive weights (where the learner
   * takes weights) and column names reserved by the level passes are
   * each rejected with an IllegalArgumentException before any fit work.
@@ -63,6 +64,12 @@ class FitContractSpec extends SparkSpec {
         val df = rows(3, w = i => if (i == 1) 0.0 else 1.0)
         assert(rejected(l.fit(df, "x", Seq.empty, Some("w"))).contains("positive"))
       }
+    }
+    test(s"${l.name} rejects a NULL label") {
+      val df = rows(8).withColumn("class",
+        when($"x" % 2 === 0.0, lit(null)).otherwise($"class"))
+      val msg = rejected(l.fit(df, "x", Seq.empty, None))
+      assert(msg.contains("label column class has") && msg.contains("NULL"), msg)
     }
     test(s"${l.name} rejects reserved input column names") {
       Seq("node", "t", "e", "__pv_le_x").foreach { reserved =>

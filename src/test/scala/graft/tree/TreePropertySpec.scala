@@ -61,12 +61,12 @@ class TreePropertySpec extends SparkSpec {
       }
   }
 
-  test("deep fit past the array-lookup bound uses the when-chain fallback") {
+  test("deep fit past depth 12 routes through the same node-keyed lookup") {
     import spark.implicits._
     // a single impure path: only x ∈ {0, 1} mix labels, so midpoint
     // splits walk one branch down to depth ~15 with ≤2 open nodes per
-    // level — the realistic deep-tree shape (the array lookup stops
-    // at MaxArrayLookupDepth = 12; past it the when-chain takes over)
+    // level — the realistic deep-tree shape, whose node ids outgrow
+    // any dense per-level array
     val df = (0 until (1 << 15)).map(i => (i.toDouble, if (i < 2) i % 2 else 0))
       .toDF("x", "class")
     val fitted = new DecisionTree(

@@ -2,6 +2,7 @@
 """Local oracle pre-check: compare a graft.Verify dump against DuckDB.
 
 Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir> [--bench]
+       python3 tools/check_oracle.py <verify_out_dir> --same-models <other_verify_out_dir>
 
 Mirrors the driver's compare: per query, run the oracle SQL from
 oracle_sql.json in DuckDB over the same parquet tables, sort columns
@@ -9,6 +10,13 @@ by name, round floats to 6 decimals, and compare row count + sorted
 value multiset. With --bench, also times each oracle SQL in DuckDB
 (median of 3) and prints a JSON timing map — the single-node baseline
 for BASELINE.md.
+
+With --same-models, no oracle runs: the two dumps' oracle_sql.json files
+(the oracle SQL, which embeds every fitted model as rendered SQL) are
+compared byte for byte; each query whose SQL differs is named, and the
+exit status is non-zero unless the files are identical. Use it to show
+that a change to how models are fitted left every rendered model as it
+was.
 """
 import json
 import math
@@ -47,7 +55,25 @@ def frame_key(cols, rows):
     return [cols[i] for i in order], data
 
 
+def same_models(a_dir, b_dir):
+    a = (a_dir / "oracle_sql.json").read_bytes()
+    b = (b_dir / "oracle_sql.json").read_bytes()
+    qa, qb = json.loads(a), json.loads(b)
+    names = sorted(set(qa) | set(qb))
+    differ = [n for n in names if qa.get(n) != qb.get(n)]
+    for n in differ:
+        side = ("only in " + str(b_dir) if n not in qa else
+                "only in " + str(a_dir) if n not in qb else "DIFFERENT")
+        print(f"{n}: {side}")
+    print(f"SAME {len(names) - len(differ)}/{len(names)} queries; "
+          f"oracle_sql.json {'byte-identical' if a == b else 'differs'}")
+    return 0 if a == b else 1
+
+
 def main():
+    if "--same-models" in sys.argv:
+        other = sys.argv[sys.argv.index("--same-models") + 1]
+        sys.exit(same_models(Path(sys.argv[1]), Path(other)))
     out_dir, sf_dir = Path(sys.argv[1]), Path(sys.argv[2])
     bench = "--bench" in sys.argv
     oracle = json.loads((out_dir / "oracle_sql.json").read_text())

@@ -3,53 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // correctness must not depend on host configuration: the NTZ
-      // timestamp normalization in Tables.events interprets naive
-      // values in the session timezone, and the DuckDB oracle reads
-      // them naively — both sides must agree on UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned to the project-wide dialect (see Verify.scala) so the
-      // timed plans are the verified plans; SPARK_GRAFT_ANSI=false
-      // opts into the legacy mode for A/B adjudication only (the
-      // r9-era structural bests were recorded under ANSI-off — see
-      // BASELINE.md round 11)
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      // subset co-partitioning ON (r15): the persisted indexes are
-      // bucketed on ONE key (bkey/cell/id/src) while some probe joins
-      // carry extra equi-keys; with the Spark default (true) the
-      // planner refuses the single-key co-partition and RESHUFFLES the
-      // bucketed index side on every probe (caught by the r15 real
-      // plan walk - the old inputPlan-based spec was vacuous).
-      // SPARK_GRAFT_COPART=true restores the Spark default for A/B
-      // adjudication only (the plan-wide flip is a timing suspect
-      // whenever a whole window drifts).
-      .config("spark.sql.requireAllClusterKeysForCoPartition",
-        sys.env.getOrElse("SPARK_GRAFT_COPART", "false"))
-      // r17 (guide §1.2 step 3, applied AFTER the algorithmic work):
-      // the generated-class cache (static conf, default 100 entries)
-      // is too small for the iterative fit/GD/graph queries — one
-      // fit alone generates >100 distinct classes (45+ level passes ×
-      // 2-3 codegen units), so by the end of pass 1 the early entries
-      // are evicted and passes 2-3 of the bench's best-of-3 recompile
-      // AND re-JIT every pass from scratch (cold pass ≈ 9× warm CPU —
-      // the r16 A/B recorded in OPTIMIZATION_r16.md). A larger cache lets a
-      // repeated identical query reuse the loaded (and JIT-warmed)
-      // classes — the same reuse every NON-fit query already gets
-      // from the default cache. Scale-independent: a production
-      // driver running repeated similar queries wants the same
-      // (cost: cached bytecode, ~50 KB/class → ~200 MB at 4096 on a
-      // 48 GB driver); SPARK_GRAFT_CODEGEN_CACHE=100 restores the
-      // Spark default for A/B adjudication.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cores(4)
+    val spark = LocalSession(cpus)
     // JVM/Spark warmup so the first timed queries aren't charged for
     // classloading + JIT/codegen compiler spin-up. One representative
     // per expression family: relational agg, level-wise fit (large

@@ -60,21 +60,7 @@ object DialectAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outPath = if (args.length > 1) args(1) else "DIALECT_AUDIT.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // subset co-partitioning ON (r15): the persisted indexes are
-      // bucketed on ONE key (bkey/cell/id/src) while some probe joins
-      // carry extra equi-keys; with the Spark default (true) the
-      // planner refuses the single-key co-partition and RESHUFFLES the
-      // bucketed index side on every probe (caught by the r15 real
-      // plan walk - the old inputPlan-based spec was vacuous)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cores(8), logLevel = "ERROR")
 
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSet)
     def keep(name: String) = only.forall(_.contains(name))

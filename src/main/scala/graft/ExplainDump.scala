@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named queries to files — the
@@ -8,11 +7,10 @@ import java.nio.file.{Files, Paths}
   *
   *   sbt "runMain graft.ExplainDump plans/r16 before q_a,q_b [sfDir]"
   *
-  * Writes `<outDir>/<query>_<tag>.txt` per query. Session confs match
-  * Bench exactly (same dialect, same co-partition flag, shuffle
-  * partitions = SPARK_GRAFT_CPUS) so the dumped plan is the timed
-  * plan's initial form; note AQE finalizes at runtime — exchange
-  * counts here are the static plan's.
+  * Writes `<outDir>/<query>_<tag>.txt` per query. The session is
+  * Bench's (`LocalSession`), so the dumped plan is the timed plan's
+  * initial form; note AQE finalizes at runtime — exchange counts here
+  * are the static plan's.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -21,16 +19,7 @@ object ExplainDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(LocalSession.cores(8), logLevel = "ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

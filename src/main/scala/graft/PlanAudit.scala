@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -27,22 +26,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // pinned to the project-wide dialect (see Verify.scala)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // subset co-partitioning ON (r15): the persisted indexes are
-      // bucketed on ONE key (bkey/cell/id/src) while some probe joins
-      // carry extra equi-keys; with the Spark default (true) the
-      // planner refuses the single-key co-partition and RESHUFFLES the
-      // bucketed index side on every probe (caught by the r15 real
-      // plan walk - the old inputPlan-based spec was vacuous)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("8", logLevel = "ERROR")
 
     println("| query | exchanges | scans | broadcast joins | codegen | notes |")
     println("|---|---|---|---|---|---|")

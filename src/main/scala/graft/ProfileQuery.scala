@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -16,24 +15,9 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // match the bench session (r17 — see the Bench.scala note)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(",")).map(_.split("=", 2)).foreach {
-        case Array(k, v) => b = b.config(k, v)
-        case _ =>
-      }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(",")).map(_.split("=", 2)).collect { case Array(k, v) => k -> v }
+    val spark = LocalSession(LocalSession.cores(32), extraConf = extraConf)
     def evaluate(df: org.apache.spark.sql.DataFrame): Unit = {
       df.queryExecution.toRdd.count(); ()
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build an N× scaled copy of a testdata directory for wall-clock
@@ -26,21 +26,7 @@ object ScaleUp {
     val dst = args.lift(1).getOrElse("/tmp/sf1.0")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1, s"factor must be >= 1: $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // subset co-partitioning ON (r15): the persisted indexes are
-      // bucketed on ONE key (bkey/cell/id/src) while some probe joins
-      // carry extra equi-keys; with the Spark default (true) the
-      // planner refuses the single-key co-partition and RESHUFFLES the
-      // bucketed index side on every probe (caught by the r15 real
-      // plan walk - the old inputPlan-based spec was vacuous)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cores(8))
 
     def replicate(name: String)(remap: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")

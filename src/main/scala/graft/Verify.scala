@@ -1,40 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ONE SQL dialect everywhere: ANSI on (the Spark 4 default, and
-      // what every green round before commit 048cb16 actually ran).
-      // 048cb16 defaulted this to "false" and silently flipped the
-      // dump's dialect out from under the measurements — the round-9
-      // q_strip_spans red. SPARK_GRAFT_ANSI=false now opts INTO the
-      // legacy mode for auditing; graft.DialectAudit mechanically
-      // hash-compares the two modes per query.
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      // subset co-partitioning ON (r15): the persisted indexes are
-      // bucketed on ONE key (bkey/cell/id/src) while some probe joins
-      // carry extra equi-keys; with the Spark default (true) the
-      // planner refuses the single-key co-partition and RESHUFFLES the
-      // bucketed index side on every probe (caught by the r15 real
-      // plan walk - the old inputPlan-based spec was vacuous)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // larger generated-class cache for the iterative fit/GD/graph
-      // queries (r17 — see the Bench.scala note; results unchanged,
-      // classes merely stay loaded and JIT-warm across repeats)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cores(4))
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated query filter for fast local iteration;
     // the driver never sets it, so the full dump is unchanged.

@@ -305,8 +305,8 @@ class DecisionTree(val params: DecisionTreeParams,
         val pass = new FitInternals.WeightedAggs(wcol, method)
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pass(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pass(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pass.side(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pass.side(s"__pv_gt_$f", fc > thrExpr(f))
           Seq(
             pass.rate(Some(le), clsCol, LabelProduct).as(s"lp1_$f"),
             pass.rate(Some(gt), clsCol, LabelProduct).as(s"rp1_$f"),
@@ -319,35 +319,23 @@ class DecisionTree(val params: DecisionTreeParams,
               pass.threshold(Some(gt), gc, s"__pv_wv_$g").as(s"cthr_${f}__$g"))
           }
         }
-        // categorical cells fused into the SAME aggregate (the k-ary
-        // layout at k = 2): per (feature, category) the class-1 sum
-        // and count — every prefix split of the p1-ordered categories
-        // scores from these, driver-side — plus per numeric feature
-        // the sums a chosen set composes its child thresholds from
-        val catAggs = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-          val qc = col(q).cast("string")
-          catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pass(s"__pv_in_${qi}_$vi", qc === v)
-            Seq(
-              pass.sumOf(in, clsCol, LabelProduct).as(s"qs_${qi}_$vi"),
-              pass.mass(Some(in)).as(s"qn_${qi}_$vi")) ++
-            features.map(g => pass.sumOf(in, col(g).cast("double"),
-              s"__pv_wv_$g").as(s"qg_${qi}_${vi}_$g"))
-          }
-        }
-        val allAggs = splitAggs ++ catAggs
-        val splitRows = pass.under(dataset
-          .select(col("*"), nodeCol))
-          .groupBy("node")
-          .agg(allAggs.head, allAggs.tail: _*)
-          .collect()
-          .map(r => r.getLong(0) -> r)
-          .toMap
+        // categorical cells (the k-ary layout at k = 2): per (feature,
+        // category) the class-1 sum and count — every prefix split of
+        // the p1-ordered categories scores from these, driver-side —
+        // plus per numeric feature the sum a chosen set composes its
+        // child thresholds from
+        def cellAggs = Seq(
+          pass.sumOf(clsCol, LabelProduct).as("cs"),
+          pass.mass(None).as("cn")) ++
+          features.map(g => pass.sumOf(col(g).cast("double"), s"__pv_wv_$g").as(s"cg_$g"))
+        val level = FitInternals.levelAggregate(dataset.select(col("*"), nodeCol),
+          Seq("node"), pass, splitAggs, catFeatures, cellAggs,
+          s"DecisionTree.fit level=$depth")(_.getLong(0))
 
         val nextOpen = mutable.Buffer.empty[Long]
         val nextStats = Map.newBuilder[Long, NodeStats]
         toSplit.foreach { case (id, st) =>
-          val row = splitRows(id)
+          val row = level(id)
           def cell(nm: String): Any = row.get(row.fieldIndex(nm))
           // unified candidate: a numeric threshold (Left) or a
           // categorical left-set (Right); the REFERENCE objective
@@ -371,9 +359,9 @@ class DecisionTree(val params: DecisionTreeParams,
           // categorical: Breiman p1-ordered prefixes (provably optimal
           // at k = 2 for concave impurities) from the |V| cells
           val scoredCats = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-            val perCat = catDict(q).zipWithIndex.map { case (v, vi) =>
-              (v, numOr(cell(s"qn_${qi}_$vi"), 0.0),
-                numOr(cell(s"qs_${qi}_$vi"), 0.0))
+            val perCat = catDict(q).map { v =>
+              (v, numOr(level.cell(id, qi, v, "cn"), 0.0),
+                numOr(level.cell(id, qi, v, "cs"), 0.0))
             }.filter(_._2 > 0.0)
             if (perCat.size < 2) None
             else {
@@ -424,13 +412,10 @@ class DecisionTree(val params: DecisionTreeParams,
                 // sums: mean = Σ side sums / side n
                 val qi = catFeatures.indexOf(best.name)
                 val inLeft = leftSet.toSet
-                val sideIdx = catDict(best.name).zipWithIndex
                 def composed(left: Boolean, n: Double): Map[String, Double] =
                   features.map { g =>
-                    val s = sideIdx.collect {
-                      case (v, vi) if inLeft(v) == left =>
-                        numOr(cell(s"qg_${qi}_${vi}_$g"), 0.0)
-                    }.sum
+                    val s = catDict(best.name).filter(inLeft(_) == left)
+                      .map(v => numOr(level.cell(id, qi, v, s"cg_$g"), 0.0)).sum
                     g -> (if (n == 0.0) Double.NaN else s / n)
                   }.toMap
                 (composed(left = true, best.ln),

@@ -1,7 +1,7 @@
 package graft.tree
 
 import graft.functions.{Native, NodeValueTable, SplitTable}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,8 +21,20 @@ import scala.collection.mutable
   * per-node candidate thresholds (`levelThresholdExpr`) carry the
   * tree as data in codegen's references, so a fit compiles its level
   * pass once and every later level, threshold and chosen attribute
-  * reuses that class (pinned by FixedShapeFitSpec). The per-level
-  * loops and split scorers are still six copies, one per learner.
+  * reuses that class (pinned by FixedShapeFitSpec). Their width does
+  * not depend on the category dictionaries either: categorical cells
+  * are rows of the level aggregate (`levelAggregate`, pinned by
+  * LevelPassSpec). Width matters because of a cliff: an aggregate
+  * with more than `spark.sql.codegen.maxFields` (100) output or input
+  * fields runs outside whole-stage codegen, and then every task
+  * regenerates the Java source of its projections. The compiled
+  * class is cached, so a compile counter reads 0 and cannot see that
+  * per-task cost; a profiler can (CodeGeneratorWithInterpretedFallback
+  * .createObject). The numeric side still grows with |F|²: the k-ary
+  * learner's is 2·|F|·(k + |F|) columns, and its partial aggregate
+  * carries 2·|F|·(k + 2·|F|) buffer fields (a mean is a sum and a
+  * count), past 100 at |F| ≥ 5 when k = 3. The per-level loops and
+  * split scorers are still six copies, one per learner.
   *
   * Counting compiles: Spark 4.1 keys its generated-class cache by
   * (class loader, source), and in local mode the driver and the
@@ -32,10 +44,13 @@ import scala.collection.mutable
   */
 private[tree] object FitInternals {
 
-  /** Per-feature category-cardinality cap: the fused aggregate carries
-    * |V| × (class or moment cells + numeric features) columns per
-    * categorical feature; a higher-cardinality column (url, user id)
-    * is a HASH feature, not a categorical split.
+  /** Per-feature category-cardinality cap. The level pass's width no
+    * longer depends on |V| (categorical cells are rows, see
+    * `levelAggregate`); the cap bounds the driver-side prefix scoring
+    * (|V| − 1 candidates per node and feature, each summing |V| cells)
+    * and the size of the IN-lists the fitted tree serves. A
+    * higher-cardinality column (url, user id) is a HASH feature, not a
+    * categorical split.
     */
   val MaxCategories = 64
 
@@ -193,6 +208,88 @@ private[tree] object FitInternals {
       .where(col("node") >= 0)
   }
 
+  /** Run `body` with Spark job description `label` (what the UI, the
+    * event log and listeners show for its jobs), restoring the
+    * caller's description afterwards.
+    */
+  def withJobDescription[A](df: DataFrame, label: String)(body: => A): A = {
+    val sc = df.sparkSession.sparkContext
+    val key = "spark.job.description"
+    val previous = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, label)
+    try body finally sc.setLocalProperty(key, previous)
+  }
+
+  /** One level pass, collected: the numeric-side row of each group, and
+    * the categorical cells of each (group, categorical feature,
+    * category).
+    */
+  final class LevelRows[K] private[FitInternals] (
+      groups: Map[K, Row], cells: Map[(K, Int, String), Row]) {
+    def apply(group: K): Row = groups(group)
+
+    /** Cell aggregate `name` of categorical feature `qi` (its index in
+      * the fit's categorical list) at category `v`; NULL when no row of
+      * the group holds `v`.
+      */
+    def cell(group: K, qi: Int, v: String, name: String): Any =
+      cells.get((group, qi, v)).map(r => r.get(r.fieldIndex(name))).orNull
+  }
+
+  /** The level pass: `aggs` per group of `keys` (`node`, or `t`, `node`)
+    * over the `routed` rows, under `pass`'s pre-projection, plus — when
+    * the fit has `categorical` features — `cellAggs` per (group,
+    * categorical feature, category), collected under the job
+    * description `label`.
+    *
+    * Categorical cells are ROWS, not columns: each routed row becomes
+    * one numeric cell plus one cell per categorical feature, and the
+    * aggregate groups by (keys, slot, category). Its width is then
+    * |aggs| + |cellAggs| whatever the dictionaries hold (why that
+    * matters: the `maxFields` cliff in the object's Scaladoc). Only the
+    * numeric cell's group is read for `aggs`, so they see each routed
+    * row once; the `pass.side` conditions read NULL on the categorical
+    * cells to skip work there. The cells' own aggregates also run over
+    * the numeric cell, whose values nobody reads. A cell
+    * sums the same rows, in the same order, as a per-category
+    * `sum(when(q = v, …))` column would, so its values are
+    * bit-identical to that column layout's. With no categorical
+    * feature the pass is the plain group-by, with no Generate node.
+    */
+  def levelAggregate[K](routed: DataFrame, keys: Seq[String], pass: PreProjection,
+                        aggs: Seq[Column], categorical: Seq[String],
+                        cellAggs: => Seq[Column], label: String)(
+      key: Row => K): LevelRows[K] = {
+    val grouped =
+      if (categorical.isEmpty)
+        pass.under(routed).groupBy(keys.head, keys.tail: _*).agg(aggs.head, aggs.tail: _*)
+      else {
+        // before `under`: building the cell aggregates may register
+        // pre-projections (and a numeric-only pass never builds them)
+        val all = aggs ++ cellAggs
+        val sides = pass.sideNames.toSeq
+        def slot(i: Int, category: Column, side: String => Column): Column =
+          struct(lit(i).as("__pv_slot") +: category.as("__pv_cat") +:
+            sides.map(s => side(s).as(s)): _*)
+        val slots = slot(0, lit(null).cast("string"), col) +:
+          categorical.zipWithIndex.map { case (q, qi) =>
+            slot(qi + 1, col(q).cast("string"), _ => lit(null).cast("boolean"))
+          }
+        pass.under(routed)
+          .select(col("*"), explode(array(slots: _*)).as("__pv_cell"))
+          .drop(sides: _*)
+          .select(col("*"), col("__pv_cell.*"))
+          .groupBy(keys.head, keys.tail :+ "__pv_slot" :+ "__pv_cat": _*)
+          .agg(all.head, all.tail: _*)
+      }
+    val rows = withJobDescription(routed, label)(grouped.collect())
+    val slotAt = keys.size
+    val (numeric, cells) =
+      rows.partition(r => categorical.isEmpty || r.getInt(slotAt) == 0)
+    new LevelRows(numeric.map(r => key(r) -> r).toMap,
+      cells.map(r => (key(r), r.getInt(slotAt) - 1, r.getString(slotAt + 1)) -> r).toMap)
+  }
+
   /** Per-row PRE-PROJECTION of one pass's aggregate inputs. Inline, an
     * aggregate update re-evaluates its condition (the per-node
     * threshold CASE, a class-membership test) and its value product
@@ -215,6 +312,17 @@ private[tree] object FitInternals {
     def apply(name: String, c: => Column): Column = {
       registered.getOrElseUpdate(name, c); col(name)
     }
+
+    /** Register a numeric-side condition (`x <= threshold`, `x >
+      * threshold`): `levelAggregate` reads it as NULL on categorical
+      * cell rows, so the aggregates it conditions skip those rows
+      * instead of computing values nobody reads (12% off a 400k-row,
+      * 64-category, three-feature k-ary fit on 4 cores). */
+    def side(name: String, c: => Column): Column = {
+      sideNames += name; apply(name, c)
+    }
+
+    private[FitInternals] val sideNames = mutable.LinkedHashSet.empty[String]
 
     def under(df: DataFrame): DataFrame =
       if (registered.isEmpty) df
@@ -258,10 +366,10 @@ private[tree] object FitInternals {
         case Some(_) => rate(cond, g, product)
       }
 
-    /** Sum of `v` (w·v when weighted) where `cond` holds. */
-    def sumOf(cond: Column, v: Column, product: String): Column = weight match {
-      case None => sum(when(cond, v))
-      case Some(w) => sum(when(cond, this(product, w * v)))
+    /** Sum of `v` (w·v when weighted). */
+    def sumOf(v: Column, product: String): Column = weight match {
+      case None => sum(v)
+      case Some(w) => sum(this(product, w * v))
     }
 
     /** Sum of `v` (w·v when weighted), pre-projected either way. */

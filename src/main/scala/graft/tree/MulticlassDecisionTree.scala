@@ -147,8 +147,8 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
         val pass = new FitInternals.WeightedAggs(wcol, method)
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pass(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pass(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pass.side(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pass.side(s"__pv_gt_$f", fc > thrExpr(f))
           classes.flatMap { c =>
             val cc = pass(s"__pv_c_$c", clsCol === c)
             Seq(
@@ -162,38 +162,24 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
               pass.threshold(Some(gt), gc, s"__pv_wv_$g").as(s"cthr_${f}__$g"))
           }
         }
-        // categorical cells, fused into the SAME aggregate: per
-        // (feature, category) the class-count vector (every prefix
-        // split of the rate-ordered categories scores from these,
-        // driver-side) and per numeric feature the side SUM (a chosen
-        // set's child mean threshold = Σ sums / Σ counts — no second
-        // pass). No per-candidate-set columns exist: the set is
-        // decided AFTER the aggregate, from |V| cells, not 2^|V|.
-        val catAggs = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-          val qc = col(q).cast("string")
-          catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pass(s"__pv_in_${qi}_$vi", qc === v)
-            classes.map { c =>
-              val cc = pass(s"__pv_c_$c", clsCol === c)
-              pass.mass(Some(in && cc)).as(s"qc_${qi}_${vi}_$c")
-            } ++
-            features.map(g => pass.sumOf(in, col(g).cast("double"),
-              s"__pv_wv_$g").as(s"qs_${qi}_${vi}_$g"))
-          }
-        }
-        val allAggs = splitAggs ++ catAggs
-        val splitRows = pass.under(dataset
-          .select(col("*"), nodeCol))
-          .groupBy("node")
-          .agg(allAggs.head, allAggs.tail: _*)
-          .collect()
-          .map(r => r.getLong(0) -> r)
-          .toMap
+        // categorical cells: per (feature, category) the class-mass
+        // vector (every prefix split of the rate-ordered categories
+        // scores from these, driver-side) and per numeric feature the
+        // SUM (a chosen set's child mean threshold = Σ sums / Σ
+        // masses — no second pass). No per-candidate-set cells exist:
+        // the set is decided AFTER the aggregate, from |V| cells, not
+        // 2^|V|.
+        def cellAggs =
+          classes.map(c => pass.mass(Some(pass(s"__pv_c_$c", clsCol === c))).as(s"cc_$c")) ++
+          features.map(g => pass.sumOf(col(g).cast("double"), s"__pv_wv_$g").as(s"cg_$g"))
+        val level = FitInternals.levelAggregate(dataset.select(col("*"), nodeCol),
+          Seq("node"), pass, splitAggs, catFeatures, cellAggs,
+          s"MulticlassDecisionTree.fit level=$depth")(_.getLong(0))
 
         val nextOpen = mutable.Buffer.empty[Long]
         val nextStats = Map.newBuilder[Long, McStats]
         toSplit.foreach { case (id, st) =>
-          val row = splitRows(id)
+          val row = level(id)
           def cnt(nm: String): Double =
             numOr(row.get(row.fieldIndex(nm)), 0.0)
           def cell(nm: String): Any = row.get(row.fieldIndex(nm))
@@ -236,8 +222,8 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
           // PREFIX boundary of that order. |V|−1 candidates from |V|
           // count cells; the winning prefix becomes the IN-list.
           val scoredCats = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-            val perCat = catDict(q).zipWithIndex.map { case (v, vi) =>
-              (v, classes.map(c => cnt(s"qc_${qi}_${vi}_$c")))
+            val perCat = catDict(q).map { v =>
+              (v, classes.map(c => numOr(level.cell(id, qi, v, s"cc_$c"), 0.0)))
             }.filter(_._2.sum > 0.0)
             if (perCat.size < 2) None
             else {
@@ -288,13 +274,11 @@ class MulticlassDecisionTree(val params: DecisionTreeParams,
                   // per-category sums: mean = Σ side sums / side n
                   val qi = catFeatures.indexOf(bf)
                   val inLeft = leftSet.toSet
-                  val sideIdx = catDict(bf).zipWithIndex
                   def composed(left: Boolean, total: Double): Map[String, Double] =
                     features.map { g =>
-                      val s = sideIdx.collect {
-                        case (v, vi) if inLeft(v) == left =>
-                          cell(s"qs_${qi}_${vi}_$g")
-                      }.filter(_ != null).map(_.asInstanceOf[Number].doubleValue())
+                      val s = catDict(bf).filter(inLeft(_) == left)
+                        .map(v => level.cell(id, qi, v, s"cg_$g"))
+                        .filter(_ != null).map(_.asInstanceOf[Number].doubleValue())
                       g -> (if (total == 0.0 || s.isEmpty) Double.NaN
                             else s.sum / total)
                     }.toMap

@@ -147,10 +147,9 @@ class MulticlassRandomForest(
       val statAggs =
         classes.map(c => clsMassAgg(clsCol === c).as(s"n_$c")) ++
         features.map(f => thrAgg(col(f).cast("double")).as(s"thr_$f"))
-      val statRows = exploded
-        .groupBy("t", "node")
-        .agg(statAggs.head, statAggs.tail: _*)
-        .collect()
+      val stats = exploded.groupBy("t", "node").agg(statAggs.head, statAggs.tail: _*)
+      val statRows = FitInternals.withJobDescription(stats,
+          s"MulticlassRandomForest.fit level=$depth")(stats.collect())
         .map { r =>
           val counts = classes.indices.map(i => numOr(r.get(2 + i), 0.0))
           val thr = features.zipWithIndex.map { case (f, i) =>
@@ -189,42 +188,29 @@ class MulticlassRandomForest(
         // side booleans and class memberships pre-projected once per
         // exploded row, not inside every aggregate
         val pv = new FitInternals.PreProjection
+        def classIs(c: Int): Column = pv(s"__pv_c_$c", clsCol === c)
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pv(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pv.side(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pv.side(s"__pv_gt_$f", fc > thrExpr(f))
           classes.flatMap { c =>
-            val cc = pv(s"__pv_c_$c", clsCol === c)
             Seq(
-              clsMassAgg(le && cc).as(s"lc_${f}__$c"),
-              clsMassAgg(gt && cc).as(s"rc_${f}__$c"))
-          }
-        } ++
-        // categorical cells (the MulticlassDecisionTree layout): per
-        // (feature, category) class counts, same columns for every
-        // (tree, node) row; prefix splits score driver-side. Child
-        // numeric thresholds need nothing here — pass 1 of the next
-        // level recomputes them over the actual child rows.
-        catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-          val qc = col(q).cast("string")
-          catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pv(s"__pv_in_${qi}_$vi", qc === v)
-            classes.map { c =>
-              val cc = pv(s"__pv_c_$c", clsCol === c)
-              clsMassAgg(in && cc).as(s"qc_${qi}_${vi}_$c")
-            }
+              clsMassAgg(le && classIs(c)).as(s"lc_${f}__$c"),
+              clsMassAgg(gt && classIs(c)).as(s"rc_${f}__$c"))
           }
         }
-        val splitRows = pv.under(exploded)
-          .groupBy("t", "node")
-          .agg(splitAggs.head, splitAggs.tail: _*)
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1)) -> r)
-          .toMap
+        // categorical cells (the MulticlassDecisionTree's): per
+        // (feature, category) class masses; prefix splits score
+        // driver-side. Child numeric thresholds need nothing here —
+        // pass 1 of the next level recomputes them over the actual
+        // child rows.
+        val level = FitInternals.levelAggregate(exploded, Seq("t", "node"), pv,
+          splitAggs, catFeatures, classes.map(c => clsMassAgg(classIs(c)).as(s"cc_$c")),
+          s"MulticlassRandomForest.fit level=$depth")(r => (r.getInt(0), r.getLong(1)))
 
         val nextOpen = Array.fill(numTrees)(mutable.Buffer.empty[Long])
         toSplit.foreach { case (i, id, st) =>
-          val row = splitRows((i, id))
+          val row = level((i, id))
           def cnt(nm: String): Double =
             numOr(row.get(row.fieldIndex(nm)), 0.0)
           val n = st.count
@@ -243,8 +229,8 @@ class MulticlassRandomForest(
           }
           val scoredCats = treeCats(i).flatMap { q =>
             val qi = catFeatures.indexOf(q)
-            val perCat = catDict(q).zipWithIndex.map { case (v, vi) =>
-              (v, classes.map(c => cnt(s"qc_${qi}_${vi}_$c")))
+            val perCat = catDict(q).map { v =>
+              (v, classes.map(c => numOr(level.cell((i, id), qi, v, s"cc_$c"), 0.0)))
             }.filter(_._2.sum > 0.0)
             if (perCat.size < 2) None
             else {

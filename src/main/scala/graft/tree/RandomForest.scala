@@ -122,10 +122,9 @@ class RandomForest(
         avg(clsCol).as("p1") +:
         features.map(f => method.thresholdExpr(col(f).cast("double")).as(s"thr_$f")) :+
         FitInternals.nullCount(clsCol).as("nulls")
-      val rawStats = exploded
-        .groupBy("t", "node")
-        .agg(statAggs.head, statAggs.tail: _*)
-        .collect()
+      val stats = exploded.groupBy("t", "node").agg(statAggs.head, statAggs.tail: _*)
+      val rawStats =
+        FitInternals.withJobDescription(stats, s"RandomForest.fit level=$depth")(stats.collect())
       if (depth == 0) FitInternals.requireNonNullLabel(params.classColumn,
         rawStats.map(_.getLong(4 + features.size)).sum)
       val statRows = rawStats
@@ -165,36 +164,24 @@ class RandomForest(
         val pv = new FitInternals.PreProjection
         val splitAggs = features.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pv(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pv(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pv.side(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pv.side(s"__pv_gt_$f", fc > thrExpr(f))
           Seq(
             avg(when(le, clsCol)).as(s"lp1_$f"),
             avg(when(gt, clsCol)).as(s"rp1_$f"),
             count(when(le, lit(1))).as(s"ln_$f"),
             count(when(gt, lit(1))).as(s"rn_$f"))
-        } ++
-        // categorical cells (the k-ary forest layout at k = 2): per
-        // (feature, category) class-1 sum + count; prefix splits
-        // score driver-side, child stats recompute next level
-        catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-          val qc = col(q).cast("string")
-          catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pv(s"__pv_in_${qi}_$vi", qc === v)
-            Seq(
-              sum(when(in, clsCol)).as(s"qs_${qi}_$vi"),
-              count(when(in, lit(1))).as(s"qn_${qi}_$vi"))
-          }
         }
-        val splitRows = pv.under(exploded)
-          .groupBy("t", "node")
-          .agg(splitAggs.head, splitAggs.tail: _*)
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1)) -> r)
-          .toMap
+        // categorical cells (the k-ary forest's at k = 2): class-1 sum
+        // + count; prefix splits score driver-side, child stats
+        // recompute next level
+        val level = FitInternals.levelAggregate(exploded, Seq("t", "node"), pv,
+          splitAggs, catFeatures, Seq(sum(clsCol).as("cs"), count(lit(1)).as("cn")),
+          s"RandomForest.fit level=$depth")(r => (r.getInt(0), r.getLong(1)))
 
         val nextOpen = Array.fill(numTrees)(mutable.Buffer.empty[Long])
         toSplit.foreach { case (i, id, st) =>
-          val row = splitRows((i, id))
+          val row = level((i, id))
           def cell(nm: String): Any = row.get(row.fieldIndex(nm))
           // unified candidates under the REFERENCE objective and
           // leaf-if-degenerate-best rule — the exact DecisionTree
@@ -212,9 +199,9 @@ class RandomForest(
           }
           val scoredCats = treeCats(i).flatMap { q =>
             val qi = catFeatures.indexOf(q)
-            val perCat = catDict(q).zipWithIndex.map { case (v, vi) =>
-              (v, row.getLong(row.fieldIndex(s"qn_${qi}_$vi")),
-                numOr(cell(s"qs_${qi}_$vi"), 0.0))
+            val perCat = catDict(q).map { v =>
+              (v, numOr(level.cell((i, id), qi, v, "cn"), 0.0).toLong,
+                numOr(level.cell((i, id), qi, v, "cs"), 0.0))
             }.filter(_._2 > 0L)
             if (perCat.size < 2) None
             else {

@@ -152,12 +152,9 @@ class RegressionRandomForest(
               avg(when(gt, gc)).as(s"cthr_${f}__$g"))
           }
         }
-        val rows = pv.under(exploded)
-          .groupBy("t", "node")
-          .agg(splitAggs.head, splitAggs.tail: _*)
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1)) -> r)
-          .toMap
+        val rows = FitInternals.levelAggregate(exploded, Seq("t", "node"), pv,
+          splitAggs, Nil, Nil, s"RegressionRandomForest.fit level=$depth")(
+          r => (r.getInt(0), r.getLong(1)))
 
         val nextOpen = Array.fill(numTrees)(mutable.Buffer.empty[Long])
         val nextStats = Map.newBuilder[(Int, Long), NodeStats]

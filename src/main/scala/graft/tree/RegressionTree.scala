@@ -312,8 +312,8 @@ class RegressionTree(
         val pass = new FitInternals.WeightedAggs(wcol, MeanSplitter)
         val splitAggs = featureColumns.flatMap { f =>
           val fc = col(f).cast("double")
-          val le = pass(s"__pv_le_$f", fc <= thrExpr(f))
-          val gt = pass(s"__pv_gt_$f", fc > thrExpr(f))
+          val le = pass.side(s"__pv_le_$f", fc <= thrExpr(f))
+          val gt = pass.side(s"__pv_gt_$f", fc > thrExpr(f))
           Seq(
             pass.projectedSum(Some(le), y, "__pv_v_y").as(s"ls_$f"),
             pass.projectedSum(Some(le), y * y, "__pv_v_yy").as(s"lq_$f"),
@@ -327,44 +327,36 @@ class RegressionTree(
               thrAggOver(pass, g, Some(gt), s"cthr_${f}__$g"))
           }
         }
-        // categorical cells, fused into the SAME aggregate (the k-ary
-        // learner's layout, L2 flavor): per (feature, category) the
-        // target sum/sumsq/count — every prefix split of the
-        // mean-ordered categories scores from these, driver-side —
-        // plus, per numeric feature, the sums a chosen set composes
-        // its child thresholds from (plain Σg; gradient mode also
-        // Σ|y| and Σ|y|·g for the |residual|-weighted mean).
-        val catAggs = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-          val qc = col(q).cast("string")
-          catDict(q).zipWithIndex.flatMap { case (v, vi) =>
-            val in = pass(s"__pv_in_${qi}_$vi", qc === v)
-            val weff = pass("__pv_weff", wcol.map(_ * abs(y)).getOrElse(abs(y)))
-            Seq(
-              pass.projectedSum(Some(in), y, "__pv_v_y").as(s"qs_${qi}_$vi"),
-              pass.projectedSum(Some(in), y * y, "__pv_v_yy").as(s"qq_${qi}_$vi"),
-              pass.mass(Some(in)).as(s"qn_${qi}_$vi")) ++
-            featureColumns.flatMap { g =>
-              val gc = col(g).cast("double")
-              pass.projectedSum(Some(in), gc, s"__pv_v_g_$g").as(s"qg_${qi}_${vi}_$g") +:
-                (if (!gradientWeightedThresholds) Seq.empty
-                 else Seq(sum(when(in, pass(s"__pv_weffg_$g",
-                     wcol.map(_ * abs(y)).getOrElse(abs(y)) * gc)))
-                   .as(s"qwg_${qi}_${vi}_$g")))
-            } ++
-            (if (!gradientWeightedThresholds) Seq.empty
-             else Seq(sum(when(in, weff)).as(s"qw_${qi}_$vi")))
-          }
+        // categorical cells (the k-ary learner's, L2 flavor): per
+        // (feature, category) the target sum/sumsq/mass — every prefix
+        // split of the mean-ordered categories scores from these,
+        // driver-side — plus, per numeric feature, the sums a chosen
+        // set composes its child thresholds from (plain Σg; gradient
+        // mode also Σ|y| and Σ|y|·g for the |residual|-weighted mean)
+        def cellAggs = {
+          val weff = wcol.map(_ * abs(y)).getOrElse(abs(y))
+          Seq(
+            pass.projectedSum(None, y, "__pv_v_y").as("cy"),
+            pass.projectedSum(None, y * y, "__pv_v_yy").as("cyy"),
+            pass.mass(None).as("cn")) ++
+          featureColumns.flatMap { g =>
+            val gc = col(g).cast("double")
+            pass.projectedSum(None, gc, s"__pv_v_g_$g").as(s"cg_$g") +:
+              (if (!gradientWeightedThresholds) Seq.empty
+               else Seq(sum(pass(s"__pv_weffg_$g", weff * gc)).as(s"cwg_$g")))
+          } ++
+          (if (!gradientWeightedThresholds) Seq.empty
+           else Seq(sum(pass("__pv_weff", weff)).as("cw")))
         }
-        val allAggs = splitAggs ++ catAggs
-        val rows = pass.under(train.select(col("*"),
-          FitInternals.routeExpr(featureColumns, catFeatures, splits, catSplits).as("node")))
-          .groupBy("node").agg(allAggs.head, allAggs.tail: _*)
-          .collect().map(r => r.getLong(0) -> r).toMap
+        val level = FitInternals.levelAggregate(train.select(col("*"),
+            FitInternals.routeExpr(featureColumns, catFeatures, splits, catSplits).as("node")),
+          Seq("node"), pass, splitAggs, catFeatures, cellAggs,
+          s"RegressionTree.fit level=$depth")(_.getLong(0))
 
         val nextOpen = mutable.Buffer.empty[Long]
         val nextStats = Map.newBuilder[Long, NodeStats]
         toSplit.foreach { case (id, st) =>
-          val row = rows(id)
+          val row = level(id)
           def cellD(nm: String): Double = row.getDouble(row.fieldIndex(nm))
           def cellN(nm: String): Double =
             numOr(row.get(row.fieldIndex(nm)), 0.0)
@@ -397,10 +389,9 @@ class RegressionTree(
           // optimal for binary partitions under squared loss), then
           // every PREFIX boundary scored from the |V| cells
           val scoredCats = catFeatures.zipWithIndex.flatMap { case (q, qi) =>
-            val perCat = catDict(q).zipWithIndex.map { case (v, vi) =>
-              (v, cellN(s"qn_${qi}_$vi"),
-                numOr(cell(s"qs_${qi}_$vi"), 0.0),
-                numOr(cell(s"qq_${qi}_$vi"), 0.0))
+            def qcell(v: String, nm: String): Double = numOr(level.cell(id, qi, v, nm), 0.0)
+            val perCat = catDict(q).map { v =>
+              (v, qcell(v, "cn"), qcell(v, "cy"), qcell(v, "cyy"))
             }.filter(_._2 > 0.0)
             if (perCat.size < 2) None
             else {
@@ -459,23 +450,17 @@ class RegressionTree(
                   catSplits(id) = (c.name, leftSet)
                   val qi = catFeatures.indexOf(c.name)
                   val inLeft = leftSet.toSet
-                  val sideIdx = catDict(c.name).zipWithIndex
                   def composed(left: Boolean, n: Double): Map[String, Double] =
                     featureColumns.map { g =>
-                      val cells = sideIdx.filter { case (v, _) =>
-                        inLeft(v) == left }
-                      def sumOf(pfx: String, perG: Boolean): Double =
-                        cells.map { case (_, vi) =>
-                          numOr(cell(
-                            if (perG) s"${pfx}_${qi}_${vi}_$g"
-                            else s"${pfx}_${qi}_$vi"), 0.0)
-                        }.sum
+                      def sumOf(nm: String): Double =
+                        catDict(c.name).filter(inLeft(_) == left)
+                          .map(v => numOr(level.cell(id, qi, v, nm), 0.0)).sum
                       val plain =
-                        if (n == 0.0) Double.NaN else sumOf("qg", perG = true) / n
+                        if (n == 0.0) Double.NaN else sumOf(s"cg_$g") / n
                       g -> (if (!gradientWeightedThresholds) plain
                             else {
-                              val w = sumOf("qw", perG = false)
-                              if (w > 0.0) sumOf("qwg", perG = true) / w
+                              val w = sumOf("cw")
+                              if (w > 0.0) sumOf(s"cwg_$g") / w
                               else plain
                             })
                     }.toMap

@@ -84,6 +84,20 @@ class MulticlassForestSpec extends SparkSpec {
       fused.trees.map(_.caseSql).mkString("\n"))
   }
 
+  test("categorical forest at MaxCategories categories, NaN numerics: fused ≡ sequential") {
+    val df = WideCategorical.rows.map { case (lang, x, z, cls, _) => (lang, x, z, cls) }
+      .toDF("lang", "x", "z", "class")
+    val p = DecisionTreeParams(Seq("x", "z"), "class", "mean", "gini", maxDepth = 4)
+    val forest = new MulticlassRandomForest(p, numTrees = 3,
+      categoricalColumns = Seq("lang"))
+    val fused = forest.fit(df).trees.map(_.caseSql)
+    val seq = forest.fitSequential(df).trees.map(_.caseSql)
+    fused.zip(seq).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"tree $i diverged:\n$a\nvs\n$b")
+    }
+    assert(fused.exists(_.contains("CAST(lang AS STRING) IN")), fused.mkString("\n"))
+  }
+
   test("vote ties resolve to the larger label") {
     // two single-leaf trees voting for different labels -> 1-1 tie
     val p0 = DecisionTreeParams(Seq("x"), "class", "mean", "entropy", maxDepth = 0)

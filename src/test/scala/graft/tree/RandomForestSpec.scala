@@ -128,6 +128,20 @@ class RandomForestSpec extends SparkSpec {
         categoricalColumns = Seq.empty).fit(df).toJValue)
   }
 
+  test("binary forest at MaxCategories categories, NaN numerics: fused ≡ sequential") {
+    import spark.implicits._
+    val df = WideCategorical.rows.map { case (lang, x, z, cls, _) => (lang, x, z, cls % 2) }
+      .toDF("lang", "x", "z", "class")
+    val p = DecisionTreeParams(Seq("x", "z"), "class", "mean", "entropy", maxDepth = 4)
+    val forest = new RandomForest(p, numTrees = 3, categoricalColumns = Seq("lang"))
+    val fused = forest.fit(df).trees.map(_.root.caseSql)
+    val seq = forest.fitSequential(df).trees.map(_.root.caseSql)
+    fused.zip(seq).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"tree $i diverged:\n$a\nvs\n$b")
+    }
+    assert(fused.exists(_.contains("CAST(lang AS STRING) IN")), fused.mkString("\n"))
+  }
+
   test("k-ary OOB error mirrors the binary contract") {
     val tiers = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
       .withColumn("class",

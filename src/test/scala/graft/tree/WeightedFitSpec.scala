@@ -72,25 +72,32 @@ class WeightedFitSpec extends SparkSpec {
       s"weighted ${wFit.caseSql}\nreplicated ${rFit.caseSql}")
   }
 
-  test("logistic GBT: integer weights ≡ row replication across stages (structural, fp-tolerant)") {
-    // The single-tree learners' parity is BITWISE because integer
-    // fixtures make every weighted sum the exact replicated sum. A
-    // boosted stage's target is y − σ(margin) — transcendental — so
-    // w·r and r summed w times differ in the last ULP by fp
-    // associativity (the same honest bound as the spill-path spec's
-    // order-dependent aggregates). Contract: identical STRUCTURE
-    // (split features, IN-sets), thresholds and leaves ≤ 1e-9
-    // relative.
-    def structEq(a: RegTreeNode, b: RegTreeNode): Boolean = (a, b) match {
+  /** The boosters' weighted ≡ replicated contract. The single-tree
+    * learners' parity is BITWISE because integer fixtures make every
+    * weighted sum the exact replicated sum. A boosted stage's target
+    * is a residual — y − σ(margin), or y minus a non-dyadic mean — so
+    * w·r and r summed w times differ in the last ULP by fp
+    * associativity (the same honest bound as the spill-path spec's
+    * order-dependent aggregates). Contract: identical STRUCTURE (split
+    * features, IN-sets), thresholds and leaves ≤ 1e-9 relative. With
+    * `ordered = false` an IN-list may list its values in another
+    * order: categories whose rates tie up to that last ULP sort either
+    * way in the prefix order, the set they form does not move.
+    */
+  private def structEq(a: RegTreeNode, b: RegTreeNode, ordered: Boolean = true): Boolean =
+    (a, b) match {
       case (RegLeaf(x), RegLeaf(y)) =>
         math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x))
       case (RegSplit(fa, ta, la, ra), RegSplit(fb, tb, lb, rb)) =>
         fa == fb && math.abs(ta - tb) <= 1e-9 * math.max(1.0, math.abs(ta)) &&
-          structEq(la, lb) && structEq(ra, rb)
+          structEq(la, lb, ordered) && structEq(ra, rb, ordered)
       case (RegCatSplit(fa, va, la, ra), RegCatSplit(fb, vb, lb, rb)) =>
-        fa == fb && va == vb && structEq(la, lb) && structEq(ra, rb)
+        fa == fb && (if (ordered) va == vb else va.sorted == vb.sorted) &&
+          structEq(la, lb, ordered) && structEq(ra, rb, ordered)
       case _ => false
     }
+
+  test("logistic GBT: integer weights ≡ row replication across stages (structural, fp-tolerant)") {
     val wFit = new GradientBoostingClassifier(Seq("x"), "class",
       numStages = 3, learningRate = 0.5, maxDepth = 2,
       categoricalColumns = Seq("lang"), weightColumn = Some("w"))
@@ -143,6 +150,63 @@ class WeightedFitSpec extends SparkSpec {
     val repl = new MulticlassRandomForest(p, numTrees = 3,
       categoricalColumns = Seq("lang")).fit(rDf)
     assert(roots(fused) == roots(repl), "weighted ≠ replicated")
+  }
+
+  test("every weighted learner at MaxCategories categories, NaN numerics: weights ≡ replication") {
+    val wDf = WideCategorical.rows.toDF("lang", "x", "z", "class", "w")
+      .withColumn("bin", col("class") % 2)
+      .withColumn("y", col("class") * 10.0 + col("z"))
+    val rDf = wDf.withColumn("w", explode(sequence(lit(1), col("w")))).drop("w")
+    val cats = Seq("lang")
+    val p = DecisionTreeParams(Seq("x", "z"), "class", "mean", "gini", maxDepth = 4)
+    def splitsOnLang(caseSql: String) = assert(caseSql.contains("CAST(lang AS STRING) IN"), caseSql)
+
+    val bin = p.copy(classColumn = "bin", splitMetric = "entropy")
+    val dt = Seq(new DecisionTree(bin, cats, Some("w")).fit(wDf),
+      new DecisionTree(bin, cats).fit(rDf)).map(_.root.caseSql)
+    assert(dt(0) == dt(1), s"DecisionTree weighted ${dt(0)}\nreplicated ${dt(1)}")
+    splitsOnLang(dt(0))
+
+    val mc = Seq(new MulticlassDecisionTree(p, cats, Some("w")).fit(wDf),
+      new MulticlassDecisionTree(p, cats).fit(rDf))
+    assert(mc(0).caseSql == mc(1).caseSql,
+      s"MulticlassDecisionTree weighted ${mc(0).caseSql}\nreplicated ${mc(1).caseSql}")
+    mc(1).classes.foreach(c => assert(mc(0).probCaseSql(c) == mc(1).probCaseSql(c), s"class $c"))
+    splitsOnLang(mc(0).caseSql)
+
+    Seq(false, true).foreach { gradient =>
+      def rt(w: Option[String]) = new RegressionTree(Seq("x", "z"), "y", maxDepth = 4,
+        gradientWeightedThresholds = gradient, categoricalColumns = cats, weightColumn = w)
+      val (a, b) = (rt(Some("w")).fit(wDf).caseSql, rt(None).fit(rDf).caseSql)
+      assert(a == b, s"RegressionTree (gradient=$gradient) weighted $a\nreplicated $b")
+      splitsOnLang(a)
+    }
+
+    def forest(w: Option[String]) = new MulticlassRandomForest(p.copy(maxDepth = 3),
+      numTrees = 3, categoricalColumns = cats, weightColumn = w)
+    val fused = forest(Some("w")).fit(wDf).trees.map(_.caseSql)
+    assert(fused == forest(Some("w")).fitSequential(wDf).trees.map(_.caseSql),
+      "weighted fused ≠ weighted sequential")
+    assert(fused == forest(None).fit(rDf).trees.map(_.caseSql), "weighted ≠ replicated")
+
+    def stagesEq(name: String, a: Seq[RegTreeNode], b: Seq[RegTreeNode]): Unit = {
+      assert(a.size == b.size, name)
+      a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
+        assert(structEq(x, y, ordered = false), s"$name stage $i:\n${x.caseSql}\n${y.caseSql}")
+      }
+    }
+    def gbt(w: Option[String]) = new GradientBoosting(Seq("x", "z"), "y", maxDepth = 2,
+      categoricalColumns = cats, weightColumn = w)
+    stagesEq("GradientBoosting", gbt(Some("w")).fit(wDf).stages, gbt(None).fit(rDf).stages)
+    def gbc(w: Option[String]) = new GradientBoostingClassifier(Seq("x", "z"), "bin",
+      maxDepth = 2, categoricalColumns = cats, weightColumn = w)
+    stagesEq("GradientBoostingClassifier",
+      gbc(Some("w")).fit(wDf).stages, gbc(None).fit(rDf).stages)
+    def sgb(w: Option[String]) = new SoftmaxGradientBoosting(Seq("x", "z"), "class",
+      numStages = 2, categoricalColumns = cats, weightColumn = w)
+    val (sw, sr) = (sgb(Some("w")).fit(wDf), sgb(None).fit(rDf))
+    stagesEq("SoftmaxGradientBoosting", sw.stages.flatMap(m => m.toSeq.sortBy(_._1).map(_._2)),
+      sr.stages.flatMap(m => m.toSeq.sortBy(_._1).map(_._2)))
   }
 
   test("binary tree: a weighted fit with a feature named y ≡ the same feature renamed") {

@@ -1711,6 +1711,7 @@ object SparkEntry {
       val labeled = Tables.labeledLineitem(s, dir)
       val params = DecisionTreeParams(dtFeatures, "class", "mean", "entropy", maxDepth = 4)
       val fitted = new DecisionTree(params).fit(labeled)
+      fitOracleCases("q_dt_fit_predict") = fitted.root.caseSql
       fitted.transform(labeled)
         .select(col("l_orderkey"), col("l_linenumber"), col("class"), col("prediction"))
         .orderBy("l_orderkey", "l_linenumber")
@@ -5585,6 +5586,9 @@ object SparkEntry {
       n
     })
 
+  /** The deterministic sf0.01 fit's label tree (q_dt_fit_predict). */
+  private val DtFitCase = "(CASE WHEN l_quantity <= 25.40225 THEN 0 ELSE (CASE WHEN l_discount <= 0.04982873963070275 THEN 1 ELSE (CASE WHEN l_discount <= 0.07252212659463375 THEN (CASE WHEN l_discount <= 0.059914387369357815 THEN 1 ELSE 0 END) ELSE 0 END) END) END)"
+
   /** The deterministic sf0.01 fit's probability tree (extracted via
     * FittedDecisionTree.probCaseSql).
     */
@@ -8290,17 +8294,19 @@ object SparkEntry {
          |ORDER BY ${entropySql("left_p1")} + ${entropySql("right_p1")}, variable
          |LIMIT 1""".stripMargin,
 
-    // Oracle for the FIT itself: the learner is deterministic, so the
-    // tree fitted at sf0.01 (mean splitter, entropy, depth 4) is known;
-    // its CASE form below was extracted from a reference fit. Data
-    // values are discrete (quantities are integers, discounts 0.01
-    // steps), so threshold last-ulp jitter cannot flip a prediction.
+    // Oracle for the FIT itself: the tree the query fitted (mean
+    // splitter, entropy, depth 4) rendered as a CASE at the harness's
+    // own scale factor (fitOracleCases); the literal is the sf0.01
+    // tree, the fallback for reading oracleSql without running the
+    // query. Data values are discrete (quantities are integers,
+    // discounts 0.01 steps), so threshold last-ulp jitter cannot flip
+    // a prediction.
     "q_dt_fit_predict" ->
       """SELECT l_orderkey, l_linenumber, CAST(%LABEL% AS INT) AS class,
         | CAST(%TREE% AS INT) AS prediction
         |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
         .replace("%LABEL%", labelSql)
-        .replace("%TREE%", "(CASE WHEN l_quantity <= 25.40225 THEN 0 ELSE (CASE WHEN l_discount <= 0.04982873963070275 THEN 1 ELSE (CASE WHEN l_discount <= 0.07252212659463375 THEN (CASE WHEN l_discount <= 0.059914387369357815 THEN 1 ELSE 0 END) ELSE 0 END) END) END)"),
+        .replace("%TREE%", fitOracleCases.getOrElse("q_dt_fit_predict", DtFitCase)),
 
     "q_dt_classify" ->
       """SELECT l_orderkey, l_linenumber,

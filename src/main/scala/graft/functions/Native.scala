@@ -793,6 +793,262 @@ case class DupGramCounts(child: Expression, n: Int) extends UnaryExpression {
     copy(child = c)
 }
 
+/** The byte scans behind [[WsTokens]] and [[TextStats]]. Whitespace
+  * is exactly Java regex `\s` = [ \t\n\x0B\f\r], all ASCII, and an
+  * ASCII byte never occurs inside a multi-byte UTF-8 sequence, so a
+  * token is a maximal run of non-whitespace BYTES and needs no decode.
+  * Code-point counts need well-formed input: an ill-formed sequence
+  * (what Java's decoder replaces with U+FFFD) sends the affected
+  * count down the decoding path the composed forms take.
+  */
+object TextScan {
+
+  private val WsRegex = UTF8String.fromString("\\s+")
+
+  /** `b` an unsigned byte. */
+  @inline private def isSpace(b: Int): Boolean = b == 32 || (b >= 9 && b <= 13)
+
+  @inline private def byteAt(base: AnyRef, off: Long, i: Int): Int =
+    org.apache.spark.unsafe.Platform.getByte(base, off + i) & 0xff
+
+  /** Byte length of the well-formed sequence whose lead byte (≥ 0x80)
+    * is at `i`, or 0 if ill-formed (Unicode Table 3-7: no overlongs,
+    * surrogates or code points past U+10FFFF — exactly what Java's
+    * UTF-8 decoder accepts).
+    */
+  def seqLen(base: AnyRef, off: Long, i: Int, n: Int): Int = {
+    val b0 = byteAt(base, off, i)
+    def cont(j: Int, lo: Int, hi: Int): Boolean =
+      i + j < n && { val c = byteAt(base, off, i + j); c >= lo && c <= hi }
+    if (b0 >= 0xc2 && b0 <= 0xdf) { if (cont(1, 0x80, 0xbf)) 2 else 0 }
+    else if (b0 >= 0xe0 && b0 <= 0xef) {
+      val lo = if (b0 == 0xe0) 0xa0 else 0x80
+      val hi = if (b0 == 0xed) 0x9f else 0xbf
+      if (cont(1, lo, hi) && cont(2, 0x80, 0xbf)) 3 else 0
+    } else if (b0 >= 0xf0 && b0 <= 0xf4) {
+      val lo = if (b0 == 0xf0) 0x90 else 0x80
+      val hi = if (b0 == 0xf4) 0x8f else 0xbf
+      if (cont(1, lo, hi) && cont(2, 0x80, 0xbf) && cont(3, 0x80, 0xbf)) 4 else 0
+    } else 0
+  }
+
+  /** Whitespace tokens of `s`, as `filter(split(s, "\\s+"), length > 0)`
+    * computes them: views into `s`'s bytes, no copy. Ill-formed input
+    * takes that regex split, whose decode replaces malformed bytes.
+    */
+  def wsTokens(s: UTF8String): ArrayData = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var count = 0
+    var inToken = false
+    var i = 0
+    while (i < n) {
+      val b = byteAt(base, off, i)
+      if (isSpace(b)) { inToken = false; i += 1 }
+      else {
+        if (!inToken) { inToken = true; count += 1 }
+        if (b < 0x80) i += 1
+        else {
+          val w = seqLen(base, off, i, n)
+          if (w == 0)
+            return new GenericArrayData(s.split(WsRegex, -1).filter(_.numBytes > 0).toSeq)
+          i += w
+        }
+      }
+    }
+    val out = new Array[Any](count)
+    var k = 0
+    var start = -1
+    i = 0
+    while (i <= n) {
+      if (i == n || isSpace(byteAt(base, off, i))) {
+        if (start >= 0) {
+          out(k) = UTF8String.fromAddress(base, off + start, i - start)
+          k += 1
+          start = -1
+        }
+      } else if (start < 0) start = i
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Code points of `s` as Java decodes it (malformed bytes → U+FFFD). */
+  private def decodedLength(s: UTF8String): Int = {
+    val str = s.toString
+    str.codePointCount(0, str.length)
+  }
+
+  /** [[TextStats]]' counts of `text` and its lower-case form `lower`. */
+  def stats(text: UTF8String, lower: UTF8String, stops: StopwordTable): InternalRow = {
+    val hits = new Array[Int](stops.numSets)
+    var base = text.getBaseObject
+    var off = text.getBaseOffset
+    var n = text.numBytes
+    var chars = 0
+    var spaces = 0
+    var tokens = 0
+    var valid = true
+    var start = -1
+    var i = 0
+    while (i <= n) {
+      val b = if (i == n) 32 else byteAt(base, off, i)
+      if (isSpace(b)) {
+        if (start >= 0) {
+          tokens += 1
+          stops.count(base, off + start, i - start, hits)
+          start = -1
+        }
+        if (i < n) { spaces += 1; chars += 1 }
+        i += 1
+      } else {
+        if (start < 0) start = i
+        if (b < 0x80) { chars += 1; i += 1 }
+        else {
+          val w = seqLen(base, off, i, n)
+          if (w == 0) { valid = false; i += 1 } else { chars += 1; i += w }
+        }
+      }
+    }
+    val codePoints = if (valid) chars else decodedLength(text)
+    // Spark's length(): code points of well-formed text, its own
+    // lead-byte walk otherwise
+    val length = if (valid) chars else text.numChars()
+    base = lower.getBaseObject
+    off = lower.getBaseOffset
+    n = lower.numBytes
+    var lowerChars = 0
+    var alpha = 0
+    var alnumSpace = 0
+    var lowerValid = true
+    i = 0
+    while (i < n) {
+      val b = byteAt(base, off, i)
+      if (b < 0x80) {
+        if (b >= 'a' && b <= 'z') { alpha += 1; alnumSpace += 1 }
+        else if ((b >= '0' && b <= '9') || isSpace(b)) alnumSpace += 1
+        lowerChars += 1
+        i += 1
+      } else {
+        val w = seqLen(base, off, i, n)
+        if (w == 0) { lowerValid = false; i += 1 } else { lowerChars += 1; i += w }
+      }
+    }
+    val lowerCodePoints = if (lowerValid) lowerChars else decodedLength(lower)
+    val row = new Array[Any](5 + hits.length)
+    row(0) = length
+    row(1) = alpha
+    row(2) = lowerCodePoints - alnumSpace
+    row(3) = codePoints - spaces
+    row(4) = tokens
+    var j = 0
+    while (j < hits.length) { row(5 + j) = hits(j); j += 1 }
+    new GenericInternalRow(row)
+  }
+}
+
+/** Stopword sets for [[TextStats]] as UTF-8 byte strings; bit j of a
+  * word's mask says it belongs to set j.
+  */
+final class StopwordTable(sets: Seq[Seq[String]]) extends Serializable {
+  require(sets.size <= 32, s"at most 32 stopword sets, got ${sets.size}")
+
+  val numSets: Int = sets.size
+
+  private val (words, masks) = {
+    val byWord = sets.zipWithIndex
+      .flatMap { case (set, j) => set.map(_ -> (1 << j)) }
+      .groupMapReduce(_._1)(_._2)(_ | _).toArray
+    (byWord.map(_._1.getBytes(java.nio.charset.StandardCharsets.UTF_8)), byWord.map(_._2))
+  }
+
+  /** Adds the token at `(base, addr, len)` to the hit count of every
+    * set holding it.
+    */
+  def count(base: AnyRef, addr: Long, len: Int, hits: Array[Int]): Unit = {
+    var w = 0
+    while (w < words.length) {
+      if (words(w).length == len &&
+          org.apache.spark.unsafe.array.ByteArrayMethods.arrayEquals(base, addr,
+            words(w), org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len)) {
+        var m = masks(w)
+        var j = 0
+        while (m != 0) {
+          if ((m & 1) != 0) hits(j) += 1
+          m >>>= 1
+          j += 1
+        }
+        return
+      }
+      w += 1
+    }
+  }
+
+  override def toString: String = s"StopwordTable(${sets.size} sets)"
+}
+
+/** Whitespace tokens of a string: `filter(split(text, "\\s+"),
+  * length > 0)` as one byte scan (see [[TextScan]]) instead of a regex
+  * split plus an interpreted lambda. The tokens are views into the
+  * input's bytes; ill-formed UTF-8 takes the regex split, so the result
+  * is the composed form's, always.
+  */
+case class WsTokens(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def nullSafeEval(v: Any): Any = TextScan.wsTokens(v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextScan.wsTokens($c)")
+
+  override protected def withNewChildInternal(c: Expression): WsTokens = copy(child = c)
+}
+
+/** Per-document text counts in one pass over the text and one over
+  * its lower-case form — `lower` is Spark's own `lower(text)`, so case
+  * mapping (İ → i̇, Kelvin sign → k) is Spark's. A struct of ints:
+  *
+  *  - `chars`: `length(text)`;
+  *  - `alpha`: `length(regexp_replace(lower, "[^a-z]", ""))`;
+  *  - `punct`: `length(regexp_replace(lower, "[a-z0-9\\s]", ""))`;
+  *  - `nonspace`: `length(regexp_replace(text, "\\s", ""))`;
+  *  - `tokens`: the whitespace-token count, `size(wsTokens(text))`;
+  *  - `stop_<name>`: how many of those tokens set `name` holds.
+  *
+  * Each equals the composed expression it names on every input, so
+  * ratios built from these fields by the same casts and divisions are
+  * bit-identical to the composed ones.
+  */
+case class TextStats(text: Expression, lower: Expression, stopSets: Seq[(String, Seq[String])])
+    extends BinaryExpression {
+
+  override def left: Expression = text
+  override def right: Expression = lower
+
+  @transient private lazy val table = new StopwordTable(stopSets.map(_._2))
+
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(text, lower, stopSets.map(_._1).mkString("stop sets ", ",", ""))
+
+  override def dataType: DataType = StructType(
+    (Seq("chars", "alpha", "punct", "nonspace", "tokens") ++ stopSets.map("stop_" + _._1))
+      .map(StructField(_, IntegerType, nullable = false)))
+
+  override def nullSafeEval(t: Any, l: Any): Any =
+    TextScan.stats(t.asInstanceOf[UTF8String], l.asInstanceOf[UTF8String], table)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("stopwords", table, classOf[StopwordTable].getName)
+    defineCodeGen(ctx, ev, (t, l) => s"graft.functions.TextScan.stats($t, $l, $ref)")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): TextStats =
+    copy(text = newLeft, lower = newRight)
+}
+
 /** Winnowing fingerprint selection (Schleimer et al. SIGMOD'03) in
   * one pass: per-token 31-base polynomial hashes (the PolyMinHashGrams
   * composition — gram strings never materialize), k-gram hashes with
@@ -2022,6 +2278,18 @@ object Native {
                        params: Seq[(Long, Long)]): Column =
     GraftBridge.column(PolyMinHashGrams(
       GraftBridge.expression(tokens.cast("array<string>")), n, k, params))
+
+  /** Codegen'd whitespace tokens of a string (see WsTokens). */
+  def wsTokens(text: Column): Column =
+    GraftBridge.column(WsTokens(GraftBridge.expression(text.cast("string"))))
+
+  /** Codegen'd per-document counts struct (see TextStats). */
+  def textStats(text: Column, stopSets: Seq[(String, Seq[String])]): Column = {
+    val t = text.cast("string")
+    GraftBridge.column(TextStats(
+      GraftBridge.expression(t),
+      GraftBridge.expression(org.apache.spark.sql.functions.lower(t)), stopSets))
+  }
 
   /** Codegen'd within-doc duplicated-gram counts:
     * struct(dup_occ, covered) over a positional gram-hash array.

@@ -757,19 +757,22 @@ object Dedup {
       membersTable: Boolean = true): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
+    def write(table: String)(body: => Unit): Unit =
+      graft.JobLabel(spark, s"Dedup.buildBandIndex write=$table")(body)
     // Build parameters ride with the index in `<name>_meta` and the
     // probe path derives them from there: probing a shingleN=3 index
     // with shingleN=1 signatures would silently yield a wrong or
     // near-empty pair set — parameters must be a property of the
     // index, not a caller convention.
-    graft.io.Sources.writeTable(
+    write("meta")(graft.io.Sources.writeTable(
       Seq((shingleN, k, bands)).toDF("shingle_n", "k", "bands"),
-      s"${name}_meta")
+      s"${name}_meta"))
     val collapsed = collapseByContent(df, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // sigs persisted too: the signature pass is the expensive leaf
     // and BOTH the bands write and the sigs write consume it — left
-    // lazy it runs twice (measured ~2 s of a 7.7 s sf0.1 build).
+    // lazy it runs twice (measured ~2 s of a 7.7 s sf0.1 build). It
+    // runs inside the first write, so its jobs carry write=bands.
     val sigs = repSignatures(collapsed, shingleN, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -777,13 +780,14 @@ object Dedup {
           posexplode(bandKeys(col("sig"), k, bands)).as(Seq("band", "key")))
         .withColumn("bkey", xxhash64(col("band"), col("key")))
         .select("bkey", "band", "key", "id")
-      graft.io.Sources.writeBucketed(banded, s"${name}_bands", "bkey", buckets)
-      graft.io.Sources.writeBucketed(sigs, s"${name}_sigs", "id", buckets)
+      write("bands")(graft.io.Sources.writeBucketed(banded, s"${name}_bands", "bkey", buckets))
+      write("sigs")(graft.io.Sources.writeBucketed(sigs, s"${name}_sigs", "id", buckets))
       if (membersTable) {
         val members = memberFrame(df, idCol, textCol)
           .join(collapsed.select("content_key", "rep_id"), "content_key")
           .select(col("rep_id"), col("id"))
-        graft.io.Sources.writeBucketed(members, s"${name}_members", "rep_id", buckets)
+        write("members")(
+          graft.io.Sources.writeBucketed(members, s"${name}_members", "rep_id", buckets))
       }
     } finally { collapsed.unpersist(); sigs.unpersist() }
   }
@@ -871,7 +875,7 @@ object Dedup {
       incoming: DataFrame,
       idCol: String,
       textCol: String,
-      threshold: Double = 0.9): DataFrame = {
+      threshold: Double = 0.9): DataFrame = graft.JobLabel(spark, "Dedup.probe pairs") {
     val (ci, _, repPairs) = repPairsAgainstIndexImpl(
       spark, name, incoming, idCol, textCol, threshold)
     val idxMembers = spark.table(s"${name}_members")
@@ -909,7 +913,7 @@ object Dedup {
       idCol: String,
       textCol: String,
       threshold: Double = 0.9,
-      materialize: Boolean = true): DataFrame = {
+      materialize: Boolean = true): DataFrame = graft.JobLabel(spark, "Dedup.probe hits") {
     val (ci, si, repPairs) = repPairsAgainstIndexImpl(
       spark, name, incoming, idCol, textCol, threshold, persistSides = materialize)
     val hitReps = repPairs.select("rb").distinct()

@@ -5,10 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines.
   *
-  * Everything here is a pure `Column` expression (codegen'd
-  * higher-order functions, no UDFs), so the operators run inside
-  * whole-stage codegen and scale linearly with the corpus — the same
-  * expressions work unchanged on a 100 TB documents table.
+  * Everything here is a pure `Column` expression (no UDFs), so the
+  * operators scale linearly with the corpus — the same expressions
+  * work unchanged on a 100 TB documents table. The per-document
+  * signals (the ratios, `qualityScore`, `langScore`, `langId`,
+  * `langIdScore`) read one native `TextStats` struct of counts, and
+  * whitespace tokens come from the native `WsTokens` byte scan (both
+  * in `graft.functions`, codegen'd): no regex split and no lambda per
+  * document. The struct sits in every `when`'s always-evaluated
+  * predicate, so subexpression elimination computes it once per row
+  * however many signals a projection asks for. Some operators further
+  * down (`gopherRules`, `ngrams`, `fingerprint`) still compose
+  * higher-order functions, which Spark runs interpreted.
   *
   * All formulas are deliberately SQL-expressible so each operator has
   * a DuckDB oracle (see SparkEntry.oracleSql).
@@ -28,12 +36,11 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  /** Whitespace tokens ([] for blank input). Spark's `split` keeps
-    * leading/trailing empty strings (limit = -1 semantics), so empties
-    * are filtered — mirrored by list_filter in the SQL oracles.
+  /** Whitespace tokens ([] for blank input): the runs between Java
+    * `\s` characters, as `split(text, "\\s+")` with its empty
+    * strings dropped — mirrored by list_filter in the SQL oracles.
     */
-  def wsTokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => length(t) > 0)
+  def wsTokens(text: Column): Column = graft.functions.Native.wsTokens(text)
 
   /** Whitespace token count. */
   def wsTokenCount(text: Column): Column = size(wsTokens(text))
@@ -41,34 +48,38 @@ object TextAnalysis {
   /** BPE-ish regex token count (letter runs / digit runs / punct). */
   def regexTokenCount(text: Column): Column = regexp_count(text, lit(TokenPattern))
 
+  /** The per-document counts every signal below reads: one struct
+    * (see graft.functions.TextStats) for all of them.
+    */
+  private def stats(text: Column): Column =
+    graft.functions.Native.textStats(text, LangProfiles)
+
+  /** A count the composed forms took with `size`: NULL text reads what
+    * `size(NULL)` reads (NULL under ANSI, -1 in the legacy dialect),
+    * so NULL rows keep their values in both dialects.
+    */
+  private def sized(count: Column): Column =
+    coalesce(count, size(lit(null).cast("array<string>")))
+
+  private def ratio(num: Column, den: Column): Column =
+    when(den === 0, 0.0).otherwise(num.cast("double") / den)
+
   /** Fraction of characters that are letters, case-insensitive
     * (0 for empty).
     */
-  def alphaRatio(text: Column): Column =
-    when(length(text) === 0, 0.0)
-      .otherwise(length(regexp_replace(lower(text), "[^a-z]", "")).cast("double") / length(text))
+  def alphaRatio(text: Column): Column = ratio(stats(text)("alpha"), stats(text)("chars"))
 
   /** Fraction of characters that are punctuation (non-alnum,
     * non-space, case-insensitive).
     */
-  def punctRatio(text: Column): Column =
-    when(length(text) === 0, 0.0)
-      .otherwise(length(regexp_replace(lower(text), "[a-z0-9\\s]", "")).cast("double") / length(text))
+  def punctRatio(text: Column): Column = ratio(stats(text)("punct"), stats(text)("chars"))
 
   /** Mean whitespace-token length (0 when no tokens). */
-  def meanWordLen(text: Column): Column = {
-    val n = wsTokenCount(text)
-    when(n === 0, 0.0)
-      .otherwise(length(regexp_replace(text, "\\s", "")).cast("double") / n)
-  }
+  def meanWordLen(text: Column): Column =
+    ratio(stats(text)("nonspace"), sized(stats(text)("tokens")))
 
   /** Fraction of whitespace tokens that are English stopwords. */
-  def stopwordRatio(text: Column): Column = {
-    val stops = LangProfiles.toMap.apply("en")
-    val n = wsTokenCount(text)
-    val hits = size(filter(wsTokens(text), t => t.isInCollection(stops)))
-    when(n === 0, 0.0).otherwise(hits.cast("double") / n)
-  }
+  def stopwordRatio(text: Column): Column = langScore(text, "en")
 
   /** Composite document-quality score in [0,1]:
     * 0.3·min(tokens,100)/100 + 0.3·alpha + 0.2·(1−punct) + 0.2·stopword.
@@ -76,17 +87,19 @@ object TextAnalysis {
     * formula is deterministic and cheap (single codegen'd pass).
     */
   def qualityScore(text: Column): Column =
-    lit(0.3) * (least(wsTokenCount(text), lit(100)).cast("double") / 100.0) +
-      lit(0.3) * alphaRatio(text) +
-      lit(0.2) * (lit(1.0) - punctRatio(text)) +
-      lit(0.2) * stopwordRatio(text)
+    quality(sized(stats(text)("tokens")), alphaRatio(text), punctRatio(text),
+      stopwordRatio(text))
+
+  private def quality(tokens: Column, alpha: Column, punct: Column, stop: Column): Column =
+    lit(0.3) * (least(tokens, lit(100)).cast("double") / 100.0) +
+      lit(0.3) * alpha +
+      lit(0.2) * (lit(1.0) - punct) +
+      lit(0.2) * stop
 
   /** Per-language stopword-hit score (hits / tokens). */
   def langScore(text: Column, lang: String): Column = {
-    val stops = LangProfiles.toMap.apply(lang)
-    val n = wsTokenCount(text)
-    when(n === 0, 0.0)
-      .otherwise(size(filter(wsTokens(text), t => t.isInCollection(stops))).cast("double") / n)
+    require(LangProfiles.exists(_._1 == lang), s"no stopword profile for language $lang")
+    ratio(sized(stats(text)(s"stop_$lang")), sized(stats(text)("tokens")))
   }
 
   /** Heuristic language-ID: argmax of langScore over the profiles,
@@ -96,18 +109,40 @@ object TextAnalysis {
     * ordering, one linear pass instead of a per-row sort) — pure
     * expression.
     */
-  def langId(text: Column): Column = {
-    val entries = LangProfiles.map { case (l, _) =>
-      struct((-langScore(text, l)).as("s"), lit(l).as("l"))
-    }
-    array_min(array(entries: _*)).getField("l")
-  }
+  def langId(text: Column): Column = bestLang(langScore(text, _)).getField("l")
 
   /** Best lang-ID score (the max over profiles). */
-  def langIdScore(text: Column): Column =
-    -array_min(array(LangProfiles.map { case (l, _) =>
-      struct((-langScore(text, l)).as("s"), lit(l).as("l"))
-    }: _*)).getField("s")
+  def langIdScore(text: Column): Column = -bestLang(langScore(text, _)).getField("s")
+
+  private def bestLang(score: String => Column): Column =
+    array_min(array(LangProfiles.map { case (l, _) =>
+      struct((-score(l)).as("s"), lit(l).as("l"))
+    }: _*))
+
+  /** The composed forms the kernels replace — regex splits and
+    * interpreted lambdas — kept ONLY as the independent reference for
+    * TextStatsSpec's bit-identity checks. They share the arithmetic
+    * above (`ratio`, `quality`, `bestLang`); only the counts differ.
+    */
+  private[graft] object Composed {
+    def wsTokens(text: Column): Column = filter(split(text, "\\s+"), t => length(t) > 0)
+    def wsTokenCount(text: Column): Column = size(wsTokens(text))
+    def alphaRatio(text: Column): Column =
+      ratio(length(regexp_replace(lower(text), "[^a-z]", "")), length(text))
+    def punctRatio(text: Column): Column =
+      ratio(length(regexp_replace(lower(text), "[a-z0-9\\s]", "")), length(text))
+    def meanWordLen(text: Column): Column =
+      ratio(length(regexp_replace(text, "\\s", "")), wsTokenCount(text))
+    def stopwordRatio(text: Column): Column = langScore(text, "en")
+    def qualityScore(text: Column): Column =
+      quality(wsTokenCount(text), alphaRatio(text), punctRatio(text), stopwordRatio(text))
+    def langScore(text: Column, lang: String): Column = {
+      val stops = LangProfiles.toMap.apply(lang)
+      ratio(size(filter(wsTokens(text), t => t.isInCollection(stops))), wsTokenCount(text))
+    }
+    def langId(text: Column): Column = bestLang(langScore(text, _)).getField("l")
+    def langIdScore(text: Column): Column = -bestLang(langScore(text, _)).getField("s")
+  }
 
   /** 31-base polynomial rolling-hash fingerprint mod 1e9+7 over the
     * document's characters — the classic Rabin–Karp document

@@ -208,18 +208,6 @@ private[tree] object FitInternals {
       .where(col("node") >= 0)
   }
 
-  /** Run `body` with Spark job description `label` (what the UI, the
-    * event log and listeners show for its jobs), restoring the
-    * caller's description afterwards.
-    */
-  def withJobDescription[A](df: DataFrame, label: String)(body: => A): A = {
-    val sc = df.sparkSession.sparkContext
-    val key = "spark.job.description"
-    val previous = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, label)
-    try body finally sc.setLocalProperty(key, previous)
-  }
-
   /** One level pass, collected: the numeric-side row of each group, and
     * the categorical cells of each (group, categorical feature,
     * category).
@@ -282,7 +270,7 @@ private[tree] object FitInternals {
           .groupBy(keys.head, keys.tail :+ "__pv_slot" :+ "__pv_cat": _*)
           .agg(all.head, all.tail: _*)
       }
-    val rows = withJobDescription(routed, label)(grouped.collect())
+    val rows = graft.JobLabel(routed.sparkSession, label)(grouped.collect())
     val slotAt = keys.size
     val (numeric, cells) =
       rows.partition(r => categorical.isEmpty || r.getInt(slotAt) == 0)

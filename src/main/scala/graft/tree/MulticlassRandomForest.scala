@@ -148,7 +148,7 @@ class MulticlassRandomForest(
         classes.map(c => clsMassAgg(clsCol === c).as(s"n_$c")) ++
         features.map(f => thrAgg(col(f).cast("double")).as(s"thr_$f"))
       val stats = exploded.groupBy("t", "node").agg(statAggs.head, statAggs.tail: _*)
-      val statRows = FitInternals.withJobDescription(stats,
+      val statRows = graft.JobLabel(stats.sparkSession,
           s"MulticlassRandomForest.fit level=$depth")(stats.collect())
         .map { r =>
           val counts = classes.indices.map(i => numOr(r.get(2 + i), 0.0))

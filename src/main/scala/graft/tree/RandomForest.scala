@@ -124,7 +124,7 @@ class RandomForest(
         FitInternals.nullCount(clsCol).as("nulls")
       val stats = exploded.groupBy("t", "node").agg(statAggs.head, statAggs.tail: _*)
       val rawStats =
-        FitInternals.withJobDescription(stats, s"RandomForest.fit level=$depth")(stats.collect())
+        graft.JobLabel(stats.sparkSession, s"RandomForest.fit level=$depth")(stats.collect())
       if (depth == 0) FitInternals.requireNonNullLabel(params.classColumn,
         rawStats.map(_.getLong(4 + features.size)).sum)
       val statRows = rawStats

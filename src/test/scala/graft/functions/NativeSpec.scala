@@ -80,7 +80,9 @@ class NativeSpec extends SparkSpec {
         Native.sortedIntersectCount(
           array_sort($"hashes"), array_sort($"hashes")).as("k"),
         Native.concatExcluding($"toks", array(lit(0))).as("l"),
-        Native.dupGramCounts(Native.gramHashes($"toks", 2), 2).as("m"))
+        Native.dupGramCounts(Native.gramHashes($"toks", 2), 2).as("m"),
+        Native.wsTokens($"text").as("n"),
+        Native.textStats($"text", graft.ops.TextAnalysis.LangProfiles).as("o"))
       assert(probes.collect().length == 20)
       val vecs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
         .limit(10)

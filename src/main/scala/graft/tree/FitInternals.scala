@@ -7,15 +7,13 @@ import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
-/** The level-fit scaffold shared by the six level-wise learners (the
-  * three trees and their three fused forests) and the three boosters:
-  * working set, input contract, node routing, per-pass
-  * pre-projection, weighted aggregate kernels, split pick and
-  * classifier tree assembly — plus the reference semantics (stopping
-  * rules, deterministic tie-breaks, per-level threshold dispatch). The
-  * fused forest fits are documented to produce trees IDENTICAL to
-  * tree-at-a-time fitting; defining each piece once is what keeps that
-  * invariant from drifting.
+/** The level-fit scaffold under [[LevelFit]], the one level loop of the
+  * six level-wise learners (the three trees and their three fused
+  * forests) and the three boosters: working set, input contract, node
+  * routing, the level aggregate, per-pass pre-projection, weighted
+  * aggregate kernels and the split pick. The fused forest fits are
+  * documented to produce trees IDENTICAL to tree-at-a-time fitting;
+  * defining each piece once is what keeps that invariant from drifting.
   *
   * Level passes are FIXED-SHAPE: routing (`routeExpr`) and the
   * per-node candidate thresholds (`levelThresholdExpr`) carry the
@@ -33,8 +31,7 @@ import scala.collection.mutable
   * .createObject). The numeric side still grows with |F|²: the k-ary
   * learner's is 2·|F|·(k + |F|) columns, and its partial aggregate
   * carries 2·|F|·(k + 2·|F|) buffer fields (a mean is a sum and a
-  * count), past 100 at |F| ≥ 5 when k = 3. The per-level loops and
-  * split scorers are still six copies, one per learner.
+  * count), past 100 at |F| ≥ 5 when k = 3.
   *
   * Counting compiles: Spark 4.1 keys its generated-class cache by
   * (class loader, source), and in local mode the driver and the
@@ -53,6 +50,12 @@ private[tree] object FitInternals {
     * categorical split.
     */
   val MaxCategories = 64
+
+  /** Cap on a k-ary fit's distinct labels: its level aggregate carries
+    * features × k mass columns; past ~64 classes the label space is an
+    * embedding problem, not a tree's.
+    */
+  val MaxClasses = 64
 
   /** Column names the level passes add to the working set themselves:
     * the node id, the forests' tree index and explode struct, and
@@ -128,7 +131,7 @@ private[tree] object FitInternals {
 
   /** The fit's dictionaries from ONE non-grouped aggregate: with a
     * `classColumn`, its sorted distinct int labels (after rejecting
-    * NULL labels; `checkClasses` then validates them), and per
+    * NULL labels, then an empty set or one past MaxClasses), and per
     * categorical feature its sorted distinct values, after rejecting
     * NULL categoricals and then any past MaxCategories. Per-category
     * cells exclude NULL rows while serving routes them right, and the
@@ -139,9 +142,7 @@ private[tree] object FitInternals {
     * routes right at serve time only.
     */
   def dictionaries(dataset: DataFrame, classColumn: Option[String],
-                   catFeatures: Seq[String],
-                   checkClasses: Seq[Int] => Unit = _ => ())
-      : (Seq[Int], Map[String, Seq[String]]) = {
+                   catFeatures: Seq[String]): (Seq[Int], Map[String, Seq[String]]) = {
     val inputs = classColumn.map(c => col(c).cast("int")).toSeq ++
       catFeatures.map(q => col(q).cast("string"))
     if (inputs.isEmpty) return (Seq.empty, Map.empty)
@@ -151,7 +152,9 @@ private[tree] object FitInternals {
     val classes = classColumn.fold(Seq.empty[Int]) { c =>
       requireNonNullLabel(c, row.getLong(0))
       val cs = sorted[Int](0)
-      checkClasses(cs)
+      require(cs.nonEmpty, "empty training set")
+      require(cs.size <= MaxClasses,
+        s"${cs.size} distinct labels exceed MaxClasses=$MaxClasses")
       cs
     }
     val first = classColumn.size
@@ -213,7 +216,7 @@ private[tree] object FitInternals {
     * category).
     */
   final class LevelRows[K] private[FitInternals] (
-      groups: Map[K, Row], cells: Map[(K, Int, String), Row]) {
+      val groups: Map[K, Row], cells: Map[(K, Int, String), Row]) {
     def apply(group: K): Row = groups(group)
 
     /** Cell aggregate `name` of categorical feature `qi` (its index in
@@ -328,9 +331,6 @@ private[tree] object FitInternals {
     */
   final class WeightedAggs(weight: Option[Column], method: SplittingMethod)
       extends PreProjection {
-    private def over(cond: Option[Column], v: Column): Column =
-      cond.map(c => when(c, v)).getOrElse(v)
-
     /** Row count, or mass sum(w). */
     def mass(cond: Option[Column]): Column = weight match {
       case None => count(over(cond, lit(1)))
@@ -365,56 +365,31 @@ private[tree] object FitInternals {
       sum(over(cond, this(product, weight.map(_ * v).getOrElse(v))))
   }
 
-  /** Deterministic argmin of candidate `score`s — (score asc|desc by
-    * the metric, then `tie` asc), the same tie-break as
-    * Splitting.computeAllSplits. None when there is no candidate.
-    */
-  def pickBest[A, K: Ordering](xs: Seq[A], metric: SplitMetric)(
-      score: A => Double, tie: A => K): Option[A] =
-    if (xs.isEmpty) None
-    else if (metric.seekMinimum) Some(xs.minBy(a => (score(a), tie(a))))
-    else Some(xs.minBy(a => (-score(a), tie(a))))
+  /** `v` on the rows where `cond` holds (NULL elsewhere, which every
+    * aggregate skips). */
+  def over(cond: Option[Column], v: Column): Column = cond.map(c => when(c, v)).getOrElse(v)
 
-  /** Nearest ancestor's majority — the classifiers' label for a node
-    * that never got stats of its own (still open at the level cap, or
-    * stats-less); 0 when no ancestor is known.
+  /** Deterministic argmin of candidate `cost`s — (cost, then `tie`) asc,
+    * the same tie-break as Splitting.computeAllSplits (both split
+    * metrics seek their minimum). None when there is no candidate.
     */
-  def ancestorMajority(majorities: collection.Map[Long, Int], id: Long): Int = {
-    var cur = id
-    while (cur >= 1 && !majorities.contains(cur)) cur /= 2
-    majorities.getOrElse(cur, 0)
-  }
+  def pickBest[A, K: Ordering](xs: Seq[A])(cost: A => Double, tie: A => K): Option[A] =
+    if (xs.isEmpty) None else Some(xs.minBy(a => (cost(a), tie(a))))
 
-  /** Assemble a classifier tree from its decided splits. Leaves take
-    * their recorded label; a node still open at the level cap takes
-    * its nearest ancestor's majority. `prune` collapses subtrees whose
-    * leaves all agree into a leaf labelled with the node's majority
-    * (dtree.py:246-250).
-    */
-  def buildClassifier(splits: collection.Map[Long, SplitParams],
-                      catSplits: collection.Map[Long, (String, Seq[String])],
-                      leaves: collection.Map[Long, Int],
-                      majorities: collection.Map[Long, Int],
-                      classColumn: String, prune: Boolean = false): TreeNode = {
-    def build(id: Long): TreeNode = {
-      def pruned(node: TreeNode): TreeNode =
-        if (prune && node.leafLabels.toSet.size == 1)
-          LeafNode(majorities.getOrElse(id, node.leafLabels.head), classColumn)
-        else node
-      splits.get(id) match {
-        case Some(s) =>
-          pruned(DecisionNode(s.attribute, s.threshold,
-            build(2 * id), build(2 * id + 1)))
-        case None => catSplits.get(id) match {
-          case Some((a, vs)) =>
-            pruned(CatDecisionNode(a, vs, build(2 * id), build(2 * id + 1)))
-          case None =>
-            LeafNode(leaves.getOrElse(id, ancestorMajority(majorities, id)),
-              classColumn)
-        }
+  /** Fold a tree of heap-numbered splits (root 1, children 2i and
+    * 2i + 1) bottom-up: `leaf` at each id with no split. */
+  def foldSplits[A](splits: collection.Map[Long, SplitParams],
+                    catSplits: collection.Map[Long, (String, Seq[String])])(leaf: Long => A)(
+      numeric: (Long, SplitParams, A, A) => A,
+      categorical: (Long, String, Seq[String], A, A) => A): A = {
+    def go(id: Long): A = splits.get(id) match {
+      case Some(s) => numeric(id, s, go(2 * id), go(2 * id + 1))
+      case None => catSplits.get(id) match {
+        case Some((a, vs)) => categorical(id, a, vs, go(2 * id), go(2 * id + 1))
+        case None => leaf(id)
       }
     }
-    build(1L)
+    go(1L)
   }
 
   /** Aggregate per-stage gain importances, weighted by each stage's
@@ -454,27 +429,6 @@ private[tree] object FitInternals {
       catch { case scala.util.control.NonFatal(_) => par }
     if (parts < par) df.repartition(par) else df
   }
-
-  /** `count` is a Double: the weighted fit's node mass is sum(w)
-    * (fractional for soft-dedup 1/n weights); unweighted fits pass
-    * exact whole-number doubles (< 2^53), so comparisons and
-    * stopping rules are unchanged.
-    */
-  final case class NodeStats(count: Double, p1: Double, thresholds: Map[String, Double]) {
-    def entropy: Double = EntropySplitMetric.evalFromP1(p1)
-    def majority: Int = if (p1 >= 0.5) 1 else 0
-  }
-
-  /** Reference stopping rule (dtree.py:216-225): split unless pure,
-    * below the entropy/count floors, or at max depth. The stopping
-    * entropy is ALWAYS the entropy metric, even when splitting on
-    * gini (dtree.py:211-213).
-    */
-  def shouldSplit(st: NodeStats, params: DecisionTreeParams, depth: Int): Boolean =
-    st.entropy != 0.0 &&
-      st.entropy >= params.minSplitEntropy &&
-      st.count >= params.minSplitSamples &&
-      depth != params.maxDepth
 
   /** Per-level candidate thresholds keyed on the `node` column: a
     * node-keyed table in codegen's references holding one entry per

@@ -368,7 +368,7 @@ class GradientBoostingClassifier(
         // Weighting each stage's thresholds by |residual| pulls the
         // splits toward the rows the current margin still gets wrong —
         // the refinement that makes boosting beat the single tree
-        // (see RegressionTree.thrAggOver).
+        // (see RegressionMoments.threshold).
         val (tree, extras) = new RegressionTree(featureColumns, residualCol,
           maxDepth = maxDepth, gradientWeightedThresholds = true,
           categoricalColumns = categoricalColumns,

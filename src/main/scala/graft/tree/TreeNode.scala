@@ -17,7 +17,7 @@ import org.json4s._
   */
 sealed trait TreeNode {
   /** The tree as a single codegen-friendly Column expression. */
-  def predictionExpr: Column
+  def predictionExpr: Column = render(ColumnRender)(lit(_))
   def leafLabels: Seq[Int]
   def toJValue: JValue
 
@@ -25,15 +25,21 @@ sealed trait TreeNode {
     * export for serving the fitted tree in ANY engine (DuckDB,
     * Trino, BigQuery, …) without Spark.
     */
-  def caseSql: String
+  def caseSql: String = render(SqlRender)(label => s"($label)")
+
+  /** The tree through `r`, with `leaf(label)` at each leaf. */
+  private[tree] def render[A](r: SplitRender[A])(leaf: Int => A): A = this match {
+    case LeafNode(label, _) => leaf(label)
+    case DecisionNode(a, t, lt, rt) => r.numeric(a, t, lt.render(r)(leaf), rt.render(r)(leaf))
+    case CatDecisionNode(a, vs, lt, rt) =>
+      r.categorical(a, vs, lt.render(r)(leaf), rt.render(r)(leaf))
+  }
 }
 
 /** Constant prediction (reference dtree.py:39-65). */
 final case class LeafNode(label: Int, className: String = "class") extends TreeNode {
-  def predictionExpr: Column = lit(label)
   def leafLabels: Seq[Int] = Seq(label)
   def toJValue: JValue = JObject(className -> JInt(label))
-  def caseSql: String = s"($label)"
 }
 
 /** Binary split on `attribute <= threshold` (reference dtree.py:68-172). */
@@ -44,10 +50,6 @@ final case class DecisionNode(
     right: TreeNode) extends TreeNode {
 
   def toParams: SplitParams = SplitParams(attribute, threshold)
-
-  def predictionExpr: Column =
-    when(col(attribute) <= lit(threshold), left.predictionExpr)
-      .otherwise(right.predictionExpr)
 
   def leafLabels: Seq[Int] = left.leafLabels ++ right.leafLabels
 
@@ -60,9 +62,6 @@ final case class DecisionNode(
   def toJValue: JValue =
     JObject(conditionStr(lt = true) -> left.toJValue,
             conditionStr(lt = false) -> right.toJValue)
-
-  def caseSql: String =
-    s"(CASE WHEN $attribute <= $threshold THEN ${left.caseSql} ELSE ${right.caseSql} END)"
 }
 
 /** Binary split on `attribute IN (values)` — the categorical split
@@ -84,10 +83,6 @@ final case class CatDecisionNode(
     left: TreeNode,
     right: TreeNode) extends TreeNode {
 
-  def predictionExpr: Column =
-    when(col(attribute).cast("string").isin(values: _*), left.predictionExpr)
-      .otherwise(right.predictionExpr)
-
   def leafLabels: Seq[Int] = left.leafLabels ++ right.leafLabels
 
   /** Serde keys extend the reference's condition-string format with
@@ -104,13 +99,44 @@ final case class CatDecisionNode(
   def toJValue: JValue =
     JObject(conditionStr(in = true) -> left.toJValue,
             conditionStr(in = false) -> right.toJValue)
+}
 
-  private def sqlQuote(v: String): String = "'" + v.replace("'", "''") + "'"
+/** The two renders of a split: a Column when-chain for Spark, and
+  * portable ANSI SQL. Every fitted tree draws its Column and SQL forms
+  * from these, so the two cannot drift.
+  */
+private[tree] sealed trait SplitRender[A] {
+  def leaf(v: Double): A
+  def numeric(attribute: String, threshold: Double, left: A, right: A): A
+  def categorical(attribute: String, values: Seq[String], left: A, right: A): A
 
-  def caseSql: String =
+  /** The tree of heap-numbered splits (root 1, children 2i and 2i + 1)
+    * with leaf value `value(id)`. */
+  def tree(splits: collection.Map[Long, SplitParams],
+           catSplits: collection.Map[Long, (String, Seq[String])])(value: Long => Double): A =
+    FitInternals.foldSplits(splits, catSplits)(id => leaf(value(id)))(
+      (_, s, l, r) => numeric(s.attribute, s.threshold, l, r),
+      (_, a, vs, l, r) => categorical(a, vs, l, r))
+}
+
+private[tree] object ColumnRender extends SplitRender[Column] {
+  def leaf(v: Double): Column = lit(v)
+  def numeric(attribute: String, threshold: Double, left: Column, right: Column): Column =
+    when(col(attribute) <= lit(threshold), left).otherwise(right)
+  def categorical(attribute: String, values: Seq[String], left: Column, right: Column): Column =
+    when(col(attribute).cast("string").isin(values: _*), left).otherwise(right)
+}
+
+/** Double leaves render as Scala's Double.toString, which standard SQL
+  * parsers read back bit-exactly. */
+private[tree] object SqlRender extends SplitRender[String] {
+  def leaf(v: Double): String = s"($v)"
+  def numeric(attribute: String, threshold: Double, left: String, right: String): String =
+    s"(CASE WHEN $attribute <= $threshold THEN $left ELSE $right END)"
+  def categorical(attribute: String, values: Seq[String], left: String, right: String): String =
     s"(CASE WHEN CAST($attribute AS STRING) IN " +
-      s"${values.map(sqlQuote).mkString("(", ", ", ")")}" +
-      s" THEN ${left.caseSql} ELSE ${right.caseSql} END)"
+      values.map(v => "'" + v.replace("'", "''") + "'").mkString("(", ", ", ")") +
+      s" THEN $left ELSE $right END)"
 }
 
 object DecisionNode {

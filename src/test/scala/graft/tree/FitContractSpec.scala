@@ -6,16 +6,18 @@ import org.apache.spark.sql.functions.{lit, when}
 
 /** The fit-time input contract, checked table-driven across all six
   * level-wise learners: NULL labels, NULL categoricals, categoricals past
-  * FitInternals.MaxCategories, non-positive weights (where the learner
-  * takes weights) and column names reserved by the level passes are
-  * each rejected with an IllegalArgumentException before any fit work.
+  * FitInternals.MaxCategories, k-ary labels past FitInternals.MaxClasses,
+  * non-positive weights (where the learner takes weights) and column
+  * names reserved by the level passes are each rejected with an
+  * IllegalArgumentException before any fit work.
   */
 class FitContractSpec extends SparkSpec {
   import spark.implicits._
 
   /** A learner under contract: fit(data, feature, categoricals, weight). */
   private case class Learner(name: String, categorical: Boolean, weighted: Boolean,
-                             fit: (DataFrame, String, Seq[String], Option[String]) => Any)
+                             fit: (DataFrame, String, Seq[String], Option[String]) => Any,
+                             kary: Boolean = false)
 
   private def params(feature: String) =
     DecisionTreeParams(Seq(feature), "class", "mean", "gini", maxDepth = 2)
@@ -24,7 +26,7 @@ class FitContractSpec extends SparkSpec {
     Learner("DecisionTree", categorical = true, weighted = true, (df, f, cats, w) =>
       new DecisionTree(params(f), cats, w).fit(df)),
     Learner("MulticlassDecisionTree", categorical = true, weighted = true, (df, f, cats, w) =>
-      new MulticlassDecisionTree(params(f), cats, w).fit(df)),
+      new MulticlassDecisionTree(params(f), cats, w).fit(df), kary = true),
     Learner("RegressionTree", categorical = true, weighted = true, (df, f, cats, w) =>
       new RegressionTree(Seq(f), "class", maxDepth = 2, categoricalColumns = cats,
         weightColumn = w).fit(df)),
@@ -32,7 +34,7 @@ class FitContractSpec extends SparkSpec {
       new RandomForest(params(f), numTrees = 2, categoricalColumns = cats).fit(df)),
     Learner("MulticlassRandomForest", categorical = true, weighted = true, (df, f, cats, w) =>
       new MulticlassRandomForest(params(f), numTrees = 2, categoricalColumns = cats,
-        weightColumn = w).fit(df)),
+        weightColumn = w).fit(df), kary = true),
     Learner("RegressionRandomForest", categorical = false, weighted = false, (df, f, _, _) =>
       new RegressionRandomForest(Seq(f), "class", numTrees = 2, maxDepth = 2).fit(df)))
 
@@ -63,6 +65,15 @@ class FitContractSpec extends SparkSpec {
       test(s"${l.name} rejects a non-positive weight") {
         val df = rows(3, w = i => if (i == 1) 0.0 else 1.0)
         assert(rejected(l.fit(df, "x", Seq.empty, Some("w"))).contains("positive"))
+      }
+    }
+    if (l.kary) {
+      test(s"${l.name} rejects labels past MaxClasses") {
+        val df = (0 to FitInternals.MaxClasses).map(i => (i.toDouble, "v", i, 1.0))
+          .toDF("x", "lang", "class", "w")
+        val msg = rejected(l.fit(df, "x", Seq.empty, None))
+        assert(msg.contains(s"${FitInternals.MaxClasses + 1} distinct labels") &&
+          msg.contains(s"MaxClasses=${FitInternals.MaxClasses}"), msg)
       }
     }
     test(s"${l.name} rejects a NULL label") {

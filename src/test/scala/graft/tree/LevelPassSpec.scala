@@ -135,6 +135,26 @@ class LevelPassSpec extends SparkSpec {
     }
   }
 
+  /** Jobs per fit on `frame(4)`, as the level-wise fits ran them before
+    * they shared one level loop: a shared loop must neither add nor drop
+    * a pass. */
+  private val Jobs = Map(
+    "DecisionTree" -> 9, "MulticlassDecisionTree" -> 9, "RegressionTree" -> 9,
+    "RandomForest" -> 13, "MulticlassRandomForest" -> 13,
+    "RegressionRandomForest" -> 7, "RegressionTree (numeric only)" -> 7)
+
+  /** The learners whose jobs are counted, each with the label prefix of
+    * its jobs: the five above, the numeric-only regression forest and a
+    * numeric-only tree (their level passes are plain group-bys, with no
+    * Generate node).
+    */
+  private val counted: Seq[(String, String, DataFrame => Any)] =
+    learners.map { case (name, fit) => (name, name, fit) } ++ Seq(
+      ("RegressionRandomForest", "RegressionRandomForest", (df: DataFrame) =>
+        new RegressionRandomForest(numeric, "y", numTrees = 2, maxDepth = 2).fit(df)),
+      ("RegressionTree (numeric only)", "RegressionTree", (df: DataFrame) =>
+        new RegressionTree(numeric, "y", maxDepth = 2).fit(df)))
+
   test("level-pass jobs carry <Learner>.fit level=<d>; the caller's description is restored") {
     val df = frame(4).cache()
     val sc = spark.sparkContext
@@ -146,17 +166,25 @@ class LevelPassSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     sc.setJobDescription("caller")
-    try learners.foreach { case (name, fit) =>
-      descriptions.clear()
-      fit(df)
-      df.count()
-      ListenerBusDrain(sc)
-      val seen = descriptions.asScala.toSeq
-      Seq(0, 1).foreach { d =>
-        assert(seen.contains(s"$name.fit level=$d"), s"$name level $d unlabelled: $seen")
-      }
-      assert(seen.last == "caller", s"$name left its label behind: $seen")
-      assert(seen.forall(s => s == "caller" || s.startsWith(s"$name.fit level=")), seen)
+    df.count()
+    try {
+      val ran = counted.map { case (name, label, fit) =>
+        ListenerBusDrain(sc)
+        descriptions.clear()
+        fit(df)
+        ListenerBusDrain(sc)
+        val fitJobs = descriptions.size
+        df.count()
+        ListenerBusDrain(sc)
+        val seen = descriptions.asScala.toSeq
+        Seq(0, 1).foreach { d =>
+          assert(seen.contains(s"$label.fit level=$d"), s"$name level $d unlabelled: $seen")
+        }
+        assert(seen.last == "caller", s"$name left its label behind: $seen")
+        assert(seen.forall(s => s == "caller" || s.startsWith(s"$label.fit level=")), seen)
+        name -> fitJobs
+      }.toMap
+      assert(ran == Jobs, "jobs per fit")
     } finally {
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)

@@ -46,5 +46,9 @@ class ProbabilitySpec extends SparkSpec {
     val got = loaded.transformProb(df).orderBy("x")
       .select("p1").as[Double].collect()
     assert(got.toSet == Set(0.0, 1.0))
+    df.createOrReplaceTempView("prob_round_trip")
+    val viaSql = spark.sql(s"SELECT CAST(${loaded.probCaseSql} AS DOUBLE) AS p1 " +
+      "FROM prob_round_trip ORDER BY x").as[Double].collect()
+    assert(viaSql.toSeq == got.toSeq, loaded.probCaseSql)
   }
 }

@@ -113,17 +113,13 @@ object FittedDecisionTree {
       case JInt(i) => i.toLong; case JLong(l) => l; case JDouble(d) => d.toLong
       case o => throw new IllegalArgumentException(s"not int: $o")
     }
-    def dbl(v: JValue): Double = v match {
-      case JDouble(d) => d; case JInt(i) => i.toDouble; case JDecimal(d) => d.toDouble
-      case o => throw new IllegalArgumentException(s"not double: $o")
-    }
     val params = DecisionTreeParams(
       featureColumns = pm("feature_columns").asInstanceOf[JArray].arr.map(str),
       classColumn = str(pm("class_column")),
       splittingMethod = str(pm("splitting_method")),
       splitMetric = str(pm("split_metric")),
       minSplitSamples = int(pm("min_split_samples")),
-      minSplitEntropy = dbl(pm("min_split_entropy")),
+      minSplitEntropy = TreeNode.jDouble(pm("min_split_entropy")),
       maxDepth = int(pm("max_depth")).toInt)
     new FittedDecisionTree(params, TreeNode.fromJValue(fm("nodes")), int(fm("depth")).toInt)
   }

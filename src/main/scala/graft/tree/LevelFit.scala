@@ -102,10 +102,10 @@ private[tree] final case class Bags(numTrees: Int, numeric: Seq[String], categor
   * level). Recomputed (the binary and k-ary forests), each level first
   * runs a node pass over the routed rows, so a level costs two jobs.
   * Fused forests produce trees IDENTICAL to fitting each tree alone on
-  * its bag (the fitSequential references, spec-checked) on null-free
-  * categoricals; a recomputed child threshold is a mean over routed
-  * rows, a composed one a ratio of sums, so the recomputing forests
-  * match bit for bit only on integer-valued numeric features.
+  * its bag (the specs' tree-at-a-time reference fits, SequentialForests)
+  * on null-free categoricals; a recomputed child threshold is a mean
+  * over routed rows, a composed one a ratio of sums, so the recomputing
+  * forests match bit for bit only on integer-valued numeric features.
   *
   * The fitted structure is heap-numbered: root 1, children 2i (left:
   * numeric `<=`, categorical IN-set) and 2i + 1.

@@ -24,13 +24,13 @@ class MulticlassRandomForest(
 
   require(numTrees >= 1)
 
-  private val bags = Bags(numTrees, params.featureColumns, categoricalColumns,
+  private[tree] val bags = Bags(numTrees, params.featureColumns, categoricalColumns,
     featureSubsetSize, bagFraction, seed)
 
   /** Deterministic per-tree row bag (see [[Bags]]). */
   private[tree] def bagFilter(tree: Int): Column = bags.filter(tree)
 
-  private def workingColumns: Seq[String] =
+  private[tree] def workingColumns: Seq[String] =
     params.featureColumns ++ categoricalColumns ++ weightColumn :+ params.classColumn
 
   def fit(dataset: DataFrame): FittedMulticlassForest =
@@ -47,18 +47,6 @@ class MulticlassRandomForest(
           tree.classifier(params.classColumn, prune = false), tree.splits.toMap,
           tree.nodes.toMap, tree.catSplits.toMap)
       })
-    }
-
-  /** Tree-at-a-time reference implementation the fused fit is
-    * verified against. */
-  private[tree] def fitSequential(dataset: DataFrame): FittedMulticlassForest =
-    FitInternals.withWorkingSet(dataset, workingColumns) { work =>
-      val fitted = (0 until numTrees).map { i =>
-        val treeParams = params.copy(featureColumns = bags.features(i))
-        new MulticlassDecisionTree(treeParams, bags.categoricals(i), weightColumn)
-          .fit(work.filter(bagFilter(i)))
-      }
-      new FittedMulticlassForest(this, fitted.head.classes, fitted)
     }
 }
 

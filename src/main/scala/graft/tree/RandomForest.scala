@@ -25,7 +25,7 @@ class RandomForest(
 
   require(numTrees >= 1)
 
-  private val bags = Bags(numTrees, params.featureColumns, categoricalColumns,
+  private[tree] val bags = Bags(numTrees, params.featureColumns, categoricalColumns,
     featureSubsetSize, bagFraction, seed)
 
   /** Deterministic per-tree row bag (see [[Bags]]). */
@@ -48,20 +48,7 @@ class RandomForest(
       new FittedRandomForest(this, trees.map(DecisionTree.fitted(params, _, prune = false)))
     }
 
-  /** The straightforward tree-at-a-time fit (kept as the reference
-    * implementation the fused fit is verified against).
-    */
-  private[tree] def fitSequential(dataset: DataFrame): FittedRandomForest =
-    FitInternals.withWorkingSet(dataset, workingColumns) { work =>
-      val trees = (0 until numTrees).map { i =>
-        val treeParams = params.copy(featureColumns = bags.features(i))
-        new DecisionTree(treeParams, bags.categoricals(i))
-          .fitCached(work.filter(bagFilter(i)))
-      }
-      new FittedRandomForest(this, trees)
-    }
-
-  private def workingColumns: Seq[String] =
+  private[tree] def workingColumns: Seq[String] =
     params.featureColumns ++ categoricalColumns :+ params.classColumn
 }
 

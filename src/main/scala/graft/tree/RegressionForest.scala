@@ -36,10 +36,7 @@ class RegressionRandomForest(
 
   require(numTrees >= 1)
 
-  private val bags = Bags(numTrees, featureColumns, Nil, featureSubsetSize, bagFraction, seed)
-
-  /** Deterministic per-tree row bag (see [[Bags]]). */
-  private[tree] def bagFilter(tree: Int): Column = bags.filter(tree)
+  private[tree] val bags = Bags(numTrees, featureColumns, Nil, featureSubsetSize, bagFraction, seed)
 
   private def statistic = new RegressionMoments(targetColumn, maxDepth, minSplitSamples,
     minVarianceReduction, gradientWeighted = false, weight = None)
@@ -49,18 +46,6 @@ class RegressionRandomForest(
       val (trees, _) = LevelFit.fit("RegressionRandomForest", statistic,
         Forest(work, bags), featureColumns, Nil, Map.empty)
       new FittedRegressionForest(numTrees, trees.map(_.regression))
-    }
-
-  /** Tree-at-a-time reference fit the fused path is verified against. */
-  private[tree] def fitSequential(dataset: DataFrame): FittedRegressionForest =
-    FitInternals.withWorkingSet(dataset, featureColumns :+ targetColumn) { work =>
-      val trees = (0 until numTrees).map { i =>
-        new RegressionTree(bags.features(i), targetColumn,
-          maxDepth = maxDepth, minSplitSamples = minSplitSamples,
-          minVarianceReduction = minVarianceReduction)
-          .fitCached(work.filter(bagFilter(i))).root
-      }
-      new FittedRegressionForest(numTrees, trees)
     }
 }
 

@@ -107,13 +107,7 @@ object RegTreeNode {
             .getOrElse(throw new IllegalArgumentException(s"no > branch: $fields"))._2
           RegSplit(attr, thresh.toDouble, fromJValue(lv), fromJValue(rv))
         case _ => fields match {
-          case ("value", v) :: Nil => RegLeaf(v match {
-            case JDouble(d) => d
-            case JInt(i) => i.toDouble
-            case JDecimal(d) => d.toDouble
-            case JLong(l) => l.toDouble
-            case other => throw new IllegalArgumentException(s"bad leaf: $other")
-          })
+          case ("value", v) :: Nil => RegLeaf(TreeNode.jDouble(v))
           case other => throw new IllegalArgumentException(s"bad leaf dict: $other")
         }
       }

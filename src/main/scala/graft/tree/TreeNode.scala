@@ -159,7 +159,8 @@ object TreeNode {
   def classify(node: TreeNode, samples: DataFrame): DataFrame =
     samples.withColumn("prediction", node.predictionExpr.cast("int"))
 
-  private def jDouble(v: JValue): Double = v match {
+  /** A JSON number as a double: the one number reader of `tree/` serde. */
+  private[tree] def jDouble(v: JValue): Double = v match {
     case JDouble(d)  => d
     case JInt(i)     => i.toDouble
     case JDecimal(d) => d.toDouble

@@ -137,23 +137,40 @@ class LevelPassSpec extends SparkSpec {
 
   /** Jobs per fit on `frame(4)`, as the level-wise fits ran them before
     * they shared one level loop: a shared loop must neither add nor drop
-    * a pass. */
+    * a pass. The boosters' counts are those of their copied stage loops
+    * before they shared one boosting loop, less the three jobs with which
+    * the 5-stage classifier materialized its margin after stage 4. */
   private val Jobs = Map(
     "DecisionTree" -> 9, "MulticlassDecisionTree" -> 9, "RegressionTree" -> 9,
     "RandomForest" -> 13, "MulticlassRandomForest" -> 13,
-    "RegressionRandomForest" -> 7, "RegressionTree (numeric only)" -> 7)
+    "RegressionRandomForest" -> 7, "RegressionTree (numeric only)" -> 7,
+    "GradientBoosting" -> 29, "GradientBoostingClassifier" -> 43,
+    "SoftmaxGradientBoosting" -> 51)
 
   /** The learners whose jobs are counted, each with the label prefix of
-    * its jobs: the five above, the numeric-only regression forest and a
-    * numeric-only tree (their level passes are plain group-bys, with no
-    * Generate node).
+    * its level passes and, for a booster, the phases its own jobs must
+    * show (labelled "<Booster>.fit <phase>"): the five above, the numeric-only regression forest, a numeric-only tree
+    * (their level passes are plain group-bys, with no Generate node)
+    * and the three boosters (their level passes are RegressionTree's):
+    * an L2 fit with early stopping, so it runs the final-prefix loss, a
+    * 5-stage classifier, and a softmax fit, whose per-class fits run on
+    * driver threads.
     */
-  private val counted: Seq[(String, String, DataFrame => Any)] =
-    learners.map { case (name, fit) => (name, name, fit) } ++ Seq(
-      ("RegressionRandomForest", "RegressionRandomForest", (df: DataFrame) =>
+  private val counted: Seq[(String, String, Seq[String], DataFrame => Any)] =
+    learners.map { case (name, fit) => (name, name, Nil, fit) } ++ Seq(
+      ("RegressionRandomForest", "RegressionRandomForest", Nil, (df: DataFrame) =>
         new RegressionRandomForest(numeric, "y", numTrees = 2, maxDepth = 2).fit(df)),
-      ("RegressionTree (numeric only)", "RegressionTree", (df: DataFrame) =>
-        new RegressionTree(numeric, "y", maxDepth = 2).fit(df)))
+      ("RegressionTree (numeric only)", "RegressionTree", Nil, (df: DataFrame) =>
+        new RegressionTree(numeric, "y", maxDepth = 2).fit(df)),
+      ("GradientBoosting", "RegressionTree", Seq("base", "stage=3", "loss"), (df: DataFrame) =>
+        new GradientBoosting(numeric, "y", numStages = 3, maxDepth = 2,
+          categoricalColumns = Seq("lang"), validationFraction = 0.25).fit(df)),
+      ("GradientBoostingClassifier", "RegressionTree", Seq("base", "stage=5"), (df: DataFrame) =>
+        new GradientBoostingClassifier(numeric, "bin", numStages = 5,
+          maxDepth = 2, categoricalColumns = Seq("lang")).fit(df)),
+      ("SoftmaxGradientBoosting", "RegressionTree", Seq("base", "stage=2"), (df: DataFrame) =>
+        new SoftmaxGradientBoosting(numeric, "class", numStages = 2,
+          maxDepth = 2, categoricalColumns = Seq("lang")).fit(df)))
 
   test("level-pass jobs carry <Learner>.fit level=<d>; the caller's description is restored") {
     val df = frame(4).cache()
@@ -161,14 +178,14 @@ class LevelPassSpec extends SparkSpec {
     val descriptions = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(descriptions.add)
+        descriptions.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("<none>"))
     }
     sc.addSparkListener(listener)
     sc.setJobDescription("caller")
     df.count()
     try {
-      val ran = counted.map { case (name, label, fit) =>
+      val ran = counted.map { case (name, label, phases, fit) =>
         ListenerBusDrain(sc)
         descriptions.clear()
         fit(df)
@@ -180,8 +197,13 @@ class LevelPassSpec extends SparkSpec {
         Seq(0, 1).foreach { d =>
           assert(seen.contains(s"$label.fit level=$d"), s"$name level $d unlabelled: $seen")
         }
+        phases.foreach(p => assert(seen.contains(s"$name.fit $p"), s"$name: no $p job in $seen"))
         assert(seen.last == "caller", s"$name left its label behind: $seen")
-        assert(seen.forall(s => s == "caller" || s.startsWith(s"$label.fit level=")), seen)
+        // a booster labels all its jobs; a single learner's root pass
+        // runs under the caller's description
+        val own = if (phases.isEmpty) "caller" else s"$name.fit "
+        assert(seen.take(fitJobs).forall(s =>
+          s.startsWith(own) || s.startsWith(s"$label.fit level=")), s"$name: $seen")
         name -> fitJobs
       }.toMap
       assert(ran == Jobs, "jobs per fit")

@@ -1,6 +1,7 @@
 package graft.tree
 
 import graft.SparkSpec
+import graft.tree.SequentialForests._
 import org.apache.spark.sql.functions._
 
 class RandomForestSpec extends SparkSpec {

@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Line counter for source trees.
 
-Usage: python3 tools/loc.py <dir>...
+Usage: python3 tools/loc.py <path>...
 
-For each directory, prints the raw line count of its Scala, Java and
+For each directory or file, prints the raw line count of its Scala, Java and
 Python files (what `wc -l` reads) and the code-only count: the same
 files without blank lines and without lines that hold nothing but a
 comment (`//` or `#` line comments, and every line inside or opening
@@ -56,9 +56,14 @@ def count(path: Path):
 def main():
     if len(sys.argv) < 2:
         sys.exit(__doc__)
-    print(f"{'raw':>8} {'code':>8}  dir")
+    missing = [a for a in sys.argv[1:] if not Path(a).exists()]
+    if missing:
+        sys.exit(f"no such file or directory: {', '.join(missing)}")
+    print(f"{'raw':>8} {'code':>8}  path")
     for d in sys.argv[1:]:
-        files = sorted(p for p in Path(d).rglob("*")
+        path = Path(d)
+        candidates = [path] if path.is_file() else path.rglob("*")
+        files = sorted(p for p in candidates
                        if p.is_file() and p.suffix in SUFFIXES)
         raw = code = 0
         for p in files:

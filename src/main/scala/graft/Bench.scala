@@ -166,9 +166,9 @@ object Bench {
     // recorded STANDALONE time is a regression regardless of the
     // aggregate ratio (the structural set must not silently absorb
     // growth). Best-known times live in tools/structural_best.json
-    // (sf0.1 only); the file self-maintains — any new best observed
-    // here is merged back, so "best" means best-ever, not
-    // best-this-round. Suite-context numbers can read high on a
+    // (sf0.1 only). Bench only READS the file: a run never edits a
+    // tracked file, so a new best is recorded by editing it by hand
+    // from a standalone run. Suite-context numbers can read high on a
     // loaded window: a flagged query is a SUSPECT to re-time with
     // SPARK_GRAFT_BENCH_ONLY, not a verdict — but it is now a suspect
     // the artifact itself names.
@@ -182,16 +182,6 @@ object Bench {
           case (k, v) if bestKnown.get(k).exists(b => v > 1.5 * b) =>
             (k, v, bestKnown(k))
         }.sortBy(_._1)
-        val merged = (bestKnown.keySet ++ current.keySet).map { k =>
-          k -> math.min(bestKnown.getOrElse(k, Double.MaxValue),
-            current.getOrElse(k, Double.MaxValue))
-        }.toMap
-        try {
-          val body = merged.toSeq.sortBy(_._1)
-            .map { case (k, v) => s""" "$k": $v""" }.mkString("{\n", ",\n", "\n}")
-          java.nio.file.Files.write(java.nio.file.Paths.get(path),
-            body.getBytes("UTF-8"))
-        } catch { case scala.util.control.NonFatal(_) => }
         val frag = regressions
           .map { case (k, v, b) => s""""$k":{"cur":$v,"best":$b}""" }
           .mkString("{", ",", "}")
@@ -240,11 +230,10 @@ object Bench {
     * per query (java -cp classes:spark-jars graft.Bench with
     * SPARK_GRAFT_BENCH_ONLY=<query>, live baseline off, adjudication
     * off), best-of-`passes` inside the child — and emit
-    * `structural_adjudication`. The child's own structural-best merge
-    * folds a better solo time back into tools/structural_best.json,
-    * so the "best" self-maintains from the legit standalone source.
-    * Verdicts: `ambience` (solo ≤ 1.5× best — the marathon number was
-    * window load), `regression` (still >1.5× alone), `error` (child
+    * `structural_adjudication`. The child only reads
+    * tools/structural_best.json; a better solo time it reports is
+    * recorded there by hand. Verdicts: `ambience` (solo ≤ 1.5× best
+    * — the marathon number was window load), `regression` (still >1.5× alone), `error` (child
     * failed/timed out), `skipped` (past the child cap or the
     * wall-clock budget — EXPLICIT, never silent: the r15 artifact's
     * `regs.take(16)` silently dropped the round's largest flag).

@@ -40,12 +40,7 @@ object Sources {
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
                     buckets: Int): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    dropWithLocation(df.sparkSession, table)
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
@@ -55,9 +50,10 @@ object Sources {
 
   /** Append to an EXISTING bucketed table written by `writeBucketed`
     * — the delta-ingest path for persisted indexes: new rows land in
-    * the same bucket layout (Spark validates the bucket spec against
-    * the catalog), so readers keep their exchange-free joins while
-    * the index grows file-by-file instead of being rebuilt.
+    * the same bucket layout (`buckets` from `PersistedIndex.buckets`;
+    * Spark validates the spec against the catalog), so readers keep
+    * their exchange-free joins while the index grows file-by-file
+    * instead of being rebuilt.
     */
   def appendBucketed(df: DataFrame, table: String, bucketCol: String,
                      buckets: Int): Unit =
@@ -75,50 +71,6 @@ object Sources {
       .collect().headOption.map(_.getString(1).trim.toInt)
   }
 
-  /** Compact a bucketed table in place down to ONE file per bucket,
-    * WITHOUT a shuffle.
-    *
-    * Every `appendBucketed` delta adds a file per (write task,
-    * bucket); after months of daily appends a bucket is hundreds of
-    * small files and every probe pays their open/footer cost. The
-    * rewrite forces a BUCKETED scan of the source (autoBucketedScan
-    * off — by default the planner both disables the bucketed read
-    * for a scan with no join to feed AND drops any explicit
-    * repartition as "redundant" against the catalog bucket spec,
-    * leaving misaligned file-split partitions), so each read task
-    * holds exactly one bucket's rows end-to-end and the bucketed
-    * write emits exactly one file per bucket: a pure per-bucket file
-    * merge, no exchange at any scale. The fresh table is written
-    * COMPLETELY before the old one is dropped and the new one renamed
-    * in (a crash before the swap leaves the original intact); readers
-    * mid-query during the swap are not protected — this is a
-    * single-writer maintenance operation. Bucket count, sort order,
-    * and therefore every exchange-free probe plan are unchanged
-    * (spec'd: probe results identical before/after, file count drops
-    * to ≤ buckets).
-    */
-  def compactBucketed(spark: SparkSession, table: String,
-                      bucketCol: String): Unit = {
-    val buckets = numBuckets(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table is not bucketed"))
-    val tmp = s"${table}__compact"
-    val old = s"${table}__old"
-    val scanConf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prior = spark.conf.get(scanConf)
-    try {
-      spark.conf.set(scanConf, "false")
-      writeBucketed(spark.table(table), tmp, bucketCol, buckets)
-    } finally spark.conf.set(scanConf, prior)
-    // Swap via rename-rename-drop, not drop-then-rename: a crash
-    // between any two statements leaves BOTH copies on disk under
-    // recoverable names — drop-first would lose the table name (and
-    // with it the catalog's bucket spec) until a manual rename.
-    spark.sql(s"DROP TABLE IF EXISTS `$old`")
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    spark.sql(s"DROP TABLE `$old`")
-  }
-
   /** Compact a directory-partitioned parquet SINK (e.g. a streaming
     * foreachBatch sink's `root/batch_id=<id>/` directories, one per
     * micro-batch) down to one file per partition directory (r13):
@@ -131,7 +83,7 @@ object Sources {
     * partition. Replayed reads are row-identical: the directory name
     * (the partition column) and row contents are untouched.
     *
-    * Crash-safe by the compactBucketed rename discipline — write to a
+    * Crash-safe by the `PersistedIndex.replace` discipline — write to a
     * `_`-prefixed temp dir (hidden from Spark/Hadoop readers, so a
     * crash mid-compaction never corrupts the partition-value parse of
     * the root), rename-rename-delete. Skips directories already at
@@ -178,13 +130,17 @@ object Sources {
     * `writeBucketed`.
     */
   def writeTable(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
+    dropWithLocation(df.sparkSession, table)
+    df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
+  }
+
+  /** Drop `table` and any stale warehouse directory of its name. */
+  private def dropWithLocation(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
   }
 
   /** Hive-style partitioned write — the 100 TB layout tool for

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -730,13 +731,16 @@ object Dedup {
     *   `<name>_bands`   (bkey, band, key, id)  bucketed by bkey
     *   `<name>_sigs`    (id, sig)              bucketed by id
     *   `<name>_members` (rep_id, id)           bucketed by rep_id
+    *   `<name>_meta`    (shingle_n, k, bands)  one row
     *
     * Each table is bucketed on exactly the key the delta path joins
     * it on, so every index-side join in `minhashPairsAgainstIndex`
     * is exchange-free — the shuffle happened once, at write time.
     * This is the promoted form of the hand-built shape proven in
     * IncrementalDedupSpec; at 100 TB the index is written once per
-    * corpus version and read by every daily delta.
+    * corpus version and read by every daily delta. The `_meta` check,
+    * the append bucket count, compaction and dropping follow the
+    * shared contract of `graft.io.PersistedIndex`.
     */
   /** `membersTable = false` builds an INGEST-ONLY index: the
     * `_members` table (the largest, one row per corpus doc) exists to
@@ -764,9 +768,8 @@ object Dedup {
     // with shingleN=1 signatures would silently yield a wrong or
     // near-empty pair set — parameters must be a property of the
     // index, not a caller convention.
-    write("meta")(graft.io.Sources.writeTable(
-      Seq((shingleN, k, bands)).toDF("shingle_n", "k", "bands"),
-      s"${name}_meta"))
+    write("meta")(PersistedIndex.writeMeta(
+      Seq((shingleN, k, bands)).toDF("shingle_n", "k", "bands"), name))
     val collapsed = collapseByContent(df, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // sigs persisted too: the signature pass is the expensive leaf
@@ -792,6 +795,9 @@ object Dedup {
     } finally { collapsed.unpersist(); sigs.unpersist() }
   }
 
+  /** The tables of a band index, `<name>_<table>`. */
+  val BandIndexTables: Seq[String] = Seq("meta", "bands", "sigs", "members")
+
   /** Append a DELTA corpus to a persisted band index: collapse, sign
     * and band the delta with the index's own `_meta` parameters and
     * append to the bucketed tables — growing the corpus never
@@ -810,18 +816,8 @@ object Dedup {
       delta: DataFrame,
       idCol: String,
       textCol: String): Unit = {
-    val metaRows = spark.table(s"${name}_meta").collect()
-    require(metaRows.length == 1, s"index $name: malformed ${name}_meta")
-    val (shingleN, k, bands) =
-      (metaRows(0).getInt(0), metaRows(0).getInt(1), metaRows(0).getInt(2))
-    // the bucket spec comes from the catalog, never a default: an
-    // append under a guessed layout would route band rows to buckets
-    // the pruned probes never read — silently missing pairs (the
-    // TextIndex.appendToInvertedIndex contract)
-    val buckets = graft.io.Sources.numBuckets(spark, s"${name}_bands")
-      .getOrElse(throw new IllegalStateException(
-        s"index $name: ${name}_bands has no bucket spec in the catalog; " +
-        "refusing to append under a guessed layout"))
+    val (shingleN, k, bands) = bandMeta(spark, name)
+    val buckets = PersistedIndex.buckets(spark, s"${name}_bands")
     val collapsed = collapseByContent(delta, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = repSignatures(collapsed, shingleN, k)
@@ -843,7 +839,7 @@ object Dedup {
   }
 
   /** Compact a persisted band index's bucketed tables to one file
-    * per bucket (see `Sources.compactBucketed`) — the periodic
+    * per bucket (see `PersistedIndex.compact`) — the periodic
     * maintenance step after many `appendToBandIndex` deltas. Probe
     * results and the exchange-free probe plan are unchanged; only
     * the file count drops. `_meta` is one tiny unbucketed file and
@@ -851,10 +847,17 @@ object Dedup {
     */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
                        name: String): Unit = {
-    graft.io.Sources.compactBucketed(spark, s"${name}_bands", "bkey")
-    graft.io.Sources.compactBucketed(spark, s"${name}_sigs", "id")
+    PersistedIndex.compact(spark, s"${name}_bands", "bkey")
+    PersistedIndex.compact(spark, s"${name}_sigs", "id")
     if (spark.catalog.tableExists(s"${name}_members"))
-      graft.io.Sources.compactBucketed(spark, s"${name}_members", "rep_id")
+      PersistedIndex.compact(spark, s"${name}_members", "rep_id")
+  }
+
+  /** (shingleN, k, bands) of a persisted band index, from its `_meta`. */
+  private def bandMeta(spark: org.apache.spark.sql.SparkSession,
+                       name: String): (Int, Int, Int) = {
+    val m = PersistedIndex.meta(spark, name)
+    (m.getInt(0), m.getInt(1), m.getInt(2))
   }
 
   /** Near-dup pairs (`id_ex`, `id_in`, `est_jaccard`) between a
@@ -954,10 +957,7 @@ object Dedup {
       textCol: String,
       threshold: Double,
       persistSides: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
-    val metaRows = spark.table(s"${name}_meta").collect()
-    require(metaRows.length == 1, s"index $name: malformed ${name}_meta")
-    val (shingleN, k, bands) =
-      (metaRows(0).getInt(0), metaRows(0).getInt(1), metaRows(0).getInt(2))
+    val (shingleN, k, bands) = bandMeta(spark, name)
     val idxBands = spark.table(s"${name}_bands")
     val idxSigs = spark.table(s"${name}_sigs")
     def maybePersist(df: DataFrame): DataFrame =
@@ -1064,10 +1064,7 @@ object Dedup {
       idCol: String,
       textCol: String,
       threshold: Double = 0.9): DataFrame = {
-    val metaRows = spark.table(s"${name}_meta").collect()
-    require(metaRows.length == 1, s"index $name: malformed ${name}_meta")
-    val (shingleN, k, bands) =
-      (metaRows(0).getInt(0), metaRows(0).getInt(1), metaRows(0).getInt(2))
+    val (shingleN, k, bands) = bandMeta(spark, name)
     val hitExisting = minhashHitsAgainstIndex(
       spark, name, incoming, idCol, textCol, threshold)
     val afterCross = incoming.join(hitExisting, Seq(idCol), "left_anti")

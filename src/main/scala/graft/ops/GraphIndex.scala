@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.PersistedIndex
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,10 +51,13 @@ import VectorOps._
   * time and folds route promoted delta nodes into the upper layer's
   * own overlay automatically.
   *
-  * Maintenance is single-writer (the `compactBucketed` contract);
-  * readers racing a fold see either the pre- or post-fold overlay
-  * tail. Lifecycle: [[buildGraphIndex]] once per corpus version →
-  * [[addToGraphIndex]] per delta batch → [[compactGraphIndex]]
+  * The `_meta` check, the append bucket count (from the catalog
+  * entry of `_und`; `_meta.buckets` is informational), the crash-safe
+  * rewrites and dropping follow `graft.io.PersistedIndex`.
+  * Maintenance is single-writer; readers racing a fold see either the
+  * pre- or post-fold overlay tail. Lifecycle: [[buildGraphIndex]]
+  * once per corpus version → [[addToGraphIndex]] per delta batch →
+  * [[compactGraphIndex]]
   * (layout fold, served rows PRESERVED bit-exactly) on small-file /
   * overlay pressure → [[redescentGraphIndex]] (full re-descent — the
   * `recenterIvfIndex` analogue) when accumulated folds degrade graph
@@ -68,13 +72,23 @@ object GraphIndex {
     pmod(xxhash64(col("id")), lit(layerMod)) === 0
 
   /** Load + validate the metadata written by [[buildGraphIndex]]:
-    * (dim, k, layerMod, buckets).
+    * (dim, k, layerMod).
     */
-  def graphMeta(spark: SparkSession, name: String): (Int, Int, Int, Int) = {
-    val rows = spark.table(s"${name}_meta").collect()
-    require(rows.length == 1, s"index $name: malformed ${name}_meta")
-    (rows(0).getInt(0), rows(0).getInt(1), rows(0).getInt(2),
-      rows(0).getInt(3))
+  def graphMeta(spark: SparkSession, name: String): (Int, Int, Int) = {
+    val m = PersistedIndex.meta(spark, name)
+    (m.getInt(0), m.getInt(1), m.getInt(2))
+  }
+
+  /** Both layers' NN-Descent adjacency of vectors `c` (id, v) as one
+    * materialized (layer, src, dst, rank, cos) frame. */
+  private def descend(c: DataFrame, k: Int, layerMod: Int, iters: Int,
+                      buildK: Int): DataFrame = {
+    def layer(vs: DataFrame, l: Int) =
+      KnnGraph.nnDescent(vs, "id", "v", k, iters, buildK = buildK)
+        .select(lit(l).as("layer"), col("src"), col("dst"), col("rank"), col("cos"))
+    layer(c, BaseLayer)
+      .unionByName(layer(c.filter(promotedFilter(layerMod)), UpperLayer))
+      .localCheckpoint(true)
   }
 
   /** Build and persist the two-layer graph index. Deterministic end to
@@ -93,15 +107,7 @@ object GraphIndex {
     val c = corpus.select(col(idCol).cast("long").as("id"),
       toDoubleVec(col(vecCol)).as("v"))
     val dim = Similarity.vecDim(c, "v")
-    val adjBase = KnnGraph.nnDescent(c, "id", "v", k, iters, buildK = buildK)
-    val adjUpper = KnnGraph.nnDescent(c.filter(promotedFilter(layerMod)),
-      "id", "v", k, iters, buildK = buildK)
-    def layered(df: DataFrame, layer: Int) =
-      df.select(lit(layer).as("layer"), col("src"), col("dst"),
-        col("rank"), col("cos"))
-    val adj = layered(adjBase, BaseLayer)
-      .unionByName(layered(adjUpper, UpperLayer))
-      .localCheckpoint(true)
+    val adj = descend(c, k, layerMod, iters, buildK)
     graft.io.Sources.writeBucketed(adj, s"${name}_adj", "src", buckets)
     graft.io.Sources.writeBucketed(symmetrized(adj).distinct(),
       s"${name}_und", "src", buckets)
@@ -114,9 +120,8 @@ object GraphIndex {
     graft.io.Sources.writeBucketed(
       adj.select(col("layer"), col("src"), col("dst")).limit(0),
       s"${name}_und_delta", "src", buckets)
-    graft.io.Sources.writeTable(
-      Seq((dim, k, layerMod, buckets)).toDF("dim", "k", "layer_mod", "buckets"),
-      s"${name}_meta")
+    PersistedIndex.writeMeta(
+      Seq((dim, k, layerMod, buckets)).toDF("dim", "k", "layer_mod", "buckets"), name)
   }
 
   /** (layer, src, dst) + (layer, dst, src) of a layered edge frame. */
@@ -180,7 +185,7 @@ object GraphIndex {
     require(k > 0 && beam >= k && hops >= 0 && seedMod > 0,
       s"bad graphSearchAgainstIndex params k=$k beam=$beam hops=$hops " +
         s"seedMod=$seedMod")
-    val (dim, _, _, _) = graphMeta(spark, name)
+    val (dim, _, _) = graphMeta(spark, name)
     val c = spark.table(s"${name}_vecs")
     val q = queriesFrame(spark, name, dim, queries, qIdCol, qVecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -211,7 +216,7 @@ object GraphIndex {
       upperHops >= 0 && seedMod > 0,
       s"bad graphSearchHierAgainstIndex params k=$k beam=$beam hops=$hops " +
         s"entryBeam=$entryBeam upperHops=$upperHops seedMod=$seedMod")
-    val (dim, _, layerMod, _) = graphMeta(spark, name)
+    val (dim, _, layerMod) = graphMeta(spark, name)
     val c = spark.table(s"${name}_vecs")
     val q = queriesFrame(spark, name, dim, queries, qIdCol, qVecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -256,7 +261,8 @@ object GraphIndex {
   def addToGraphIndex(spark: SparkSession, name: String, delta: DataFrame,
                       idCol: String, vecCol: String, beam: Int = 32,
                       hops: Int = 3, seedMod: Int = 16): Unit = {
-    val (dim, k, layerMod, buckets) = graphMeta(spark, name)
+    val (dim, k, layerMod) = graphMeta(spark, name)
+    val buckets = PersistedIndex.buckets(spark, s"${name}_und")
     val corpus = spark.table(s"${name}_vecs")
     val d0 = delta.select(col(idCol).cast("long").as("id"),
       toDoubleVec(col(vecCol)).as("v"))
@@ -305,7 +311,6 @@ object GraphIndex {
     * [[redescentGraphIndex]]'s job.
     */
   def compactGraphIndex(spark: SparkSession, name: String): Unit = {
-    val (_, _, _, buckets) = graphMeta(spark, name)
     val adj = Seq(BaseLayer, UpperLayer).map { l =>
       resolveAdj(spark, name, l)
         .select(lit(l).as("layer"), col("src"), col("dst"),
@@ -314,11 +319,11 @@ object GraphIndex {
     val und = spark.table(s"${name}_und")
       .unionByName(spark.table(s"${name}_und_delta"))
       .distinct().localCheckpoint(true)
-    swapWrite(spark, s"${name}_adj", adj, "src", buckets)
-    swapWrite(spark, s"${name}_und", und, "src", buckets)
-    truncate(spark, s"${name}_adj_delta", "src", buckets)
-    truncate(spark, s"${name}_und_delta", "src", buckets)
-    graft.io.Sources.compactBucketed(spark, s"${name}_vecs", "id")
+    PersistedIndex.replace(adj, s"${name}_adj", "src")
+    PersistedIndex.replace(und, s"${name}_und", "src")
+    truncate(spark, s"${name}_adj_delta")
+    truncate(spark, s"${name}_und_delta")
+    PersistedIndex.compact(spark, s"${name}_vecs", "id")
   }
 
   /** Full NN-Descent rebuild of both layers from the index's CURRENT
@@ -331,56 +336,25 @@ object GraphIndex {
     */
   def redescentGraphIndex(spark: SparkSession, name: String,
                           iters: Int = 4, buildK: Int = 0): Unit = {
-    val (_, k, layerMod, buckets) = graphMeta(spark, name)
+    val (_, k, layerMod) = graphMeta(spark, name)
     val c = spark.table(s"${name}_vecs")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val adjBase = KnnGraph.nnDescent(c, "id", "v", k, iters, buildK = buildK)
-      val adjUpper = KnnGraph.nnDescent(c.filter(promotedFilter(layerMod)),
-        "id", "v", k, iters, buildK = buildK)
-      val adj = adjBase.select(lit(BaseLayer).as("layer"), col("src"),
-          col("dst"), col("rank"), col("cos"))
-        .unionByName(adjUpper.select(lit(UpperLayer).as("layer"), col("src"),
-          col("dst"), col("rank"), col("cos")))
-        .localCheckpoint(true)
-      swapWrite(spark, s"${name}_adj", adj, "src", buckets)
-      swapWrite(spark, s"${name}_und", symmetrized(adj).distinct(), "src",
-        buckets)
-      truncate(spark, s"${name}_adj_delta", "src", buckets)
-      truncate(spark, s"${name}_und_delta", "src", buckets)
+      val adj = descend(c, k, layerMod, iters, buildK)
+      PersistedIndex.replace(adj, s"${name}_adj", "src")
+      PersistedIndex.replace(symmetrized(adj).distinct(), s"${name}_und", "src")
+      truncate(spark, s"${name}_adj_delta")
+      truncate(spark, s"${name}_und_delta")
     } finally c.unpersist()
   }
 
-  /** Crash-safe bucketed-table replace: write the fresh copy
-    * COMPLETELY, then rename-rename-drop (the `compactBucketed`
-    * discipline — a crash between any two statements leaves both
-    * copies on disk under recoverable names). `df` must be
-    * MATERIALIZED (localCheckpoint) when it derives from `table`
-    * itself.
+  /** Rewrite an overlay table as empty, keeping its schema — through
+    * [[PersistedIndex.replace]]: a direct writeBucketed DROPs the old
+    * table first, so a crash in that window would leave the overlay
+    * table nonexistent and every subsequent resolveAdj/serve throwing
+    * table-not-found.
     */
-  private def swapWrite(spark: SparkSession, table: String, df: DataFrame,
-                        bucketCol: String, buckets: Int): Unit = {
-    val tmp = s"${table}__compact"
-    val old = s"${table}__old"
-    graft.io.Sources.writeBucketed(df, tmp, bucketCol, buckets)
-    spark.sql(s"DROP TABLE IF EXISTS `$old`")
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    spark.sql(s"DROP TABLE `$old`")
-  }
-
-  /** Rewrite a bucketed table as empty, keeping its schema — through
-    * the same write-complete-then-rename-rename-drop swap discipline
-    * as [[swapWrite]] (r16, advisor): a direct writeBucketed DROPs the
-    * old table first, so a crash in that window would leave the
-    * overlay table nonexistent and every subsequent resolveAdj/serve
-    * throwing table-not-found.
-    */
-  private def truncate(spark: SparkSession, table: String,
-                       bucketCol: String, buckets: Int): Unit = {
-    val schema = spark.table(table).schema
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-    swapWrite(spark, table, empty, bucketCol, buckets)
-  }
+  private def truncate(spark: SparkSession, table: String): Unit =
+    PersistedIndex.replace(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], spark.table(table).schema), table, "src")
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +47,9 @@ import org.apache.spark.sql.functions._
   * delta against the PERSISTED models (one delta scan, history
   * untouched); compact reconsolidates files; recenter retrains both
   * models from `_vecs` and rewrites the cells during a maintenance
-  * window (the `recenterIvfIndex` drift story, unchanged).
+  * window (the `recenterIvfIndex` drift story, unchanged). The
+  * `_meta` check, the append bucket count (from the catalog), the
+  * crash-safe rewrites and dropping follow `graft.io.PersistedIndex`.
   */
 object IvfPq {
   import VectorOps._
@@ -72,10 +75,9 @@ object IvfPq {
         (for (s <- 0 until m; cd <- 0 until kCodes)
           yield (s, cd, model.codebooks(s)(cd).toSeq)).toDF("sub", "code", "c"),
         s"${name}_codebooks", "sub", 1)
-      graft.io.Sources.writeTable(
+      PersistedIndex.writeMeta(
         Seq((nCells, dim, buckets, m, kCodes))
-          .toDF("n_cells", "dim", "buckets", "m", "k_codes"),
-        s"${name}_meta")
+          .toDF("n_cells", "dim", "buckets", "m", "k_codes"), name)
       graft.io.Sources.writeBucketed(pqCells(c, cents, model, metaCols),
         s"${name}_pqcells", "cell", buckets)
       graft.io.Sources.writeBucketed(
@@ -171,10 +173,16 @@ object IvfPq {
   }
 
   private def loadMeta(spark: SparkSession, name: String): (Int, Int, Int, Int, Int) = {
-    val rows = spark.table(s"${name}_meta").collect()
-    require(rows.length == 1, s"index $name: malformed ${name}_meta")
-    (rows(0).getInt(0), rows(0).getInt(1), rows(0).getInt(2),
-      rows(0).getInt(3), rows(0).getInt(4))
+    val r = PersistedIndex.meta(spark, name)
+    (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))
+  }
+
+  /** The persisted centroids and residual PQ model of index `name`
+    * (public: the q_ann_ivfpq oracle renders exactly these). */
+  def loadModels(spark: SparkSession,
+                 name: String): (Seq[(Long, Array[Double])], PqModel) = {
+    val (_, dim, _, m, kCodes) = loadMeta(spark, name)
+    (Similarity.loadCentroids(spark, name), loadModel(spark, name, m, kCodes, dim))
   }
 
   private def loadModel(spark: SparkSession, name: String,
@@ -195,7 +203,8 @@ object IvfPq {
     */
   def appendToIndex(spark: SparkSession, name: String,
                     delta: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (_, dim, buckets, m, kCodes) = loadMeta(spark, name)
+    val (_, dim, _, m, kCodes) = loadMeta(spark, name)
+    val buckets = PersistedIndex.buckets(spark, s"${name}_pqcells")
     // metadata columns discovered from the persisted schema (the
     // Similarity.ivfMetaCols contract): a delta must carry every one
     val metaCols = spark.table(s"${name}_pqcells").columns.toSeq
@@ -218,8 +227,8 @@ object IvfPq {
 
   /** One file per bucket after many appends; serving plans unchanged. */
   def compactIndex(spark: SparkSession, name: String): Unit = {
-    graft.io.Sources.compactBucketed(spark, s"${name}_pqcells", "cell")
-    graft.io.Sources.compactBucketed(spark, s"${name}_vecs", "id")
+    PersistedIndex.compact(spark, s"${name}_pqcells", "cell")
+    PersistedIndex.compact(spark, s"${name}_vecs", "id")
   }
 
   /** ANN top-k against the persisted index. Stage 1 ADC-scans ONLY
@@ -315,32 +324,21 @@ object IvfPq {
     try {
       val cents = Similarity.trainCentroids(c, dim, cellsN, lloydIters)
       val model = fitResidualModel(c, cents, m, kCodes, pqIters)
-      def swap(table: String, tmpDf: DataFrame, bucketCol: String,
-               nBuckets: Int): Unit = {
-        val tmp = s"${table}__recenter"
-        val old = s"${table}__old"
-        graft.io.Sources.writeBucketed(tmpDf, tmp, bucketCol, nBuckets)
-        spark.sql(s"DROP TABLE IF EXISTS `$old`")
-        spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-        spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-        spark.sql(s"DROP TABLE `$old`")
-      }
       // preserve the index's metadata columns through the rewrite
       // (`_vecs` carries them; everything beyond (id, v) is metadata)
       val metaCols = c.columns.toSeq.filterNot(Set("id", "v"))
-      swap(s"${name}_pqcells", pqCells(c, cents, model, metaCols),
-        "cell", buckets)
-      swap(s"${name}_centroids",
+      PersistedIndex.replace(pqCells(c, cents, model, metaCols),
+        s"${name}_pqcells", "cell")
+      PersistedIndex.replace(
         cents.map { case (cell, arr) => (cell, arr.toSeq) }.toDF("cell", "c"),
-        "cell", 1)
-      swap(s"${name}_codebooks",
+        s"${name}_centroids", "cell")
+      PersistedIndex.replace(
         (for (s <- 0 until m; cd <- 0 until kCodes)
           yield (s, cd, model.codebooks(s)(cd).toSeq)).toDF("sub", "code", "c"),
-        "sub", 1)
-      graft.io.Sources.writeTable(
+        s"${name}_codebooks", "sub")
+      PersistedIndex.writeMeta(
         Seq((cellsN, dim, buckets, m, kCodes))
-          .toDF("n_cells", "dim", "buckets", "m", "k_codes"),
-        s"${name}_meta")
+          .toDF("n_cells", "dim", "buckets", "m", "k_codes"), name)
     } finally { c.unpersist(); () }
   }
 }

@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   *
   * The result preserves no physical layout by itself; write it back
   * with the bucketed write-then-swap used by the index families
-  * (`Skew.compactBucketed` reconsolidates the small files appends
-  * accumulate).
+  * (`graft.io.PersistedIndex.replace`; `PersistedIndex.compact`
+  * reconsolidates the small files appends accumulate).
   */
 object Merge {
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -420,7 +421,9 @@ object Similarity {
     * assignment scan is the expensive step and it happens once per
     * corpus version, exactly like the dedup band index. Each table is
     * bucketed on exactly the key its serving join uses, so the index
-    * side adds zero exchanges.
+    * side adds zero exchanges. The `_meta` check, the append bucket
+    * count (from the catalog; `_meta.buckets` is informational), the
+    * crash-safe rewrites and dropping follow `graft.io.PersistedIndex`.
     */
   def buildIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -437,9 +440,8 @@ object Similarity {
       graft.io.Sources.writeBucketed(
         cents.map { case (cell, arr) => (cell, arr.toSeq) }.toDF("cell", "c"),
         s"${name}_centroids", "cell", 1)
-      graft.io.Sources.writeTable(
-        Seq((nCells, dim, buckets)).toDF("n_cells", "dim", "buckets"),
-        s"${name}_meta")
+      PersistedIndex.writeMeta(
+        Seq((nCells, dim, buckets)).toDF("n_cells", "dim", "buckets"), name)
       graft.io.Sources.writeBucketed(quantizedCells(c, cents, metaCols),
         s"${name}_cells", "cell", buckets)
       graft.io.Sources.writeBucketed(
@@ -447,6 +449,9 @@ object Similarity {
         s"${name}_vecs", "id", buckets)
     } finally c.unpersist()
   }
+
+  /** The tables of an IVF index, `<name>_<table>`. */
+  val IvfIndexTables: Seq[String] = Seq("cells", "vecs", "centroids", "meta")
 
   /** Metadata columns an index carries: everything in `_cells` beyond
     * the serving layout (r12 — filtered ANN). Discovered from the
@@ -484,9 +489,8 @@ object Similarity {
   /** Load + validate the index metadata written by `buildIvfIndex`. */
   private[ops] def ivfMeta(spark: org.apache.spark.sql.SparkSession,
                       name: String): (Int, Int, Int) = {
-    val rows = spark.table(s"${name}_meta").collect()
-    require(rows.length == 1, s"index $name: malformed ${name}_meta")
-    (rows(0).getInt(0), rows(0).getInt(1), rows(0).getInt(2))
+    val m = PersistedIndex.meta(spark, name)
+    (m.getInt(0), m.getInt(1), m.getInt(2))
   }
 
   /** Assign an incoming DELTA batch against the PERSISTED centroids
@@ -502,7 +506,8 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       name: String,
       delta: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (_, dim, buckets) = ivfMeta(spark, name)
+    val (_, dim, _) = ivfMeta(spark, name)
+    val buckets = PersistedIndex.buckets(spark, s"${name}_cells")
     // metadata columns are part of the index schema: a delta must
     // carry every one the index was built with (discovered, not
     // restated — see ivfMetaCols)
@@ -523,15 +528,15 @@ object Similarity {
   }
 
   /** Compact a persisted IVF index's bucketed tables to one file per
-    * bucket (see `Sources.compactBucketed`) — the maintenance step
+    * bucket (see `PersistedIndex.compact`) — the maintenance step
     * after many `appendToIvfIndex` deltas. Serving results and the
     * zero-exchange probe plan are unchanged; `_centroids` (nCells
     * rows, 1 bucket) and `_meta` stay as-is.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       name: String): Unit = {
-    graft.io.Sources.compactBucketed(spark, s"${name}_cells", "cell")
-    graft.io.Sources.compactBucketed(spark, s"${name}_vecs", "id")
+    PersistedIndex.compact(spark, s"${name}_cells", "cell")
+    PersistedIndex.compact(spark, s"${name}_vecs", "id")
   }
 
   /** Re-train the centroids from the index's CURRENT contents and
@@ -550,8 +555,8 @@ object Similarity {
     * corpus-version price `buildIvfIndex` paid), one assignment scan,
     * and the bucketed `_cells` rewrite (also a compaction — one file
     * per bucket). `_vecs` is untouched. The fresh cells/centroids
-    * tables are COMPLETELY written before the swap (the
-    * `compactBucketed` crash-safety order); `_meta` is rewritten
+    * tables are COMPLETELY written before the swap
+    * (`PersistedIndex.replace`); `_meta` is rewritten
     * last — it only carries informational n_cells plus dim/buckets,
     * both unchanged mid-swap.
     */
@@ -565,27 +570,16 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val cents = trainCentroids(c, dim, cells, lloydIters)
-      def swap(table: String, tmpDf: DataFrame, bucketCol: String,
-               nBuckets: Int): Unit = {
-        val tmp = s"${table}__recenter"
-        val old = s"${table}__old"
-        graft.io.Sources.writeBucketed(tmpDf, tmp, bucketCol, nBuckets)
-        spark.sql(s"DROP TABLE IF EXISTS `$old`")
-        spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-        spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-        spark.sql(s"DROP TABLE `$old`")
-      }
       // preserve the index's metadata columns through the rewrite
       // (`_vecs` carries them; everything beyond (id, v) is metadata)
       val metaCols = c.columns.toSeq.filterNot(Set("id", "v"))
-      swap(s"${name}_cells", quantizedCells(c, cents, metaCols),
-        "cell", buckets)
-      swap(s"${name}_centroids",
+      PersistedIndex.replace(quantizedCells(c, cents, metaCols),
+        s"${name}_cells", "cell")
+      PersistedIndex.replace(
         cents.map { case (cell, arr) => (cell, arr.toSeq) }.toDF("cell", "c"),
-        "cell", 1)
-      graft.io.Sources.writeTable(
-        Seq((cells, dim, buckets)).toDF("n_cells", "dim", "buckets"),
-        s"${name}_meta")
+        s"${name}_centroids", "cell")
+      PersistedIndex.writeMeta(
+        Seq((cells, dim, buckets)).toDF("n_cells", "dim", "buckets"), name)
     } finally c.unpersist()
   }
 

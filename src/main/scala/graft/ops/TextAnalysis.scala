@@ -54,13 +54,6 @@ object TextAnalysis {
   private def stats(text: Column): Column =
     graft.functions.Native.textStats(text, LangProfiles)
 
-  /** A count the composed forms took with `size`: NULL text reads what
-    * `size(NULL)` reads (NULL under ANSI, -1 in the legacy dialect),
-    * so NULL rows keep their values in both dialects.
-    */
-  private def sized(count: Column): Column =
-    coalesce(count, size(lit(null).cast("array<string>")))
-
   private def ratio(num: Column, den: Column): Column =
     when(den === 0, 0.0).otherwise(num.cast("double") / den)
 
@@ -76,7 +69,7 @@ object TextAnalysis {
 
   /** Mean whitespace-token length (0 when no tokens). */
   def meanWordLen(text: Column): Column =
-    ratio(stats(text)("nonspace"), sized(stats(text)("tokens")))
+    ratio(stats(text)("nonspace"), stats(text)("tokens"))
 
   /** Fraction of whitespace tokens that are English stopwords. */
   def stopwordRatio(text: Column): Column = langScore(text, "en")
@@ -87,7 +80,7 @@ object TextAnalysis {
     * formula is deterministic and cheap (single codegen'd pass).
     */
   def qualityScore(text: Column): Column =
-    quality(sized(stats(text)("tokens")), alphaRatio(text), punctRatio(text),
+    quality(stats(text)("tokens"), alphaRatio(text), punctRatio(text),
       stopwordRatio(text))
 
   private def quality(tokens: Column, alpha: Column, punct: Column, stop: Column): Column =
@@ -99,7 +92,7 @@ object TextAnalysis {
   /** Per-language stopword-hit score (hits / tokens). */
   def langScore(text: Column, lang: String): Column = {
     require(LangProfiles.exists(_._1 == lang), s"no stopword profile for language $lang")
-    ratio(sized(stats(text)(s"stop_$lang")), sized(stats(text)("tokens")))
+    ratio(stats(text)(s"stop_$lang"), stats(text)("tokens"))
   }
 
   /** Heuristic language-ID: argmax of langScore over the profiles,

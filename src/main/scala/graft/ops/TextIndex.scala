@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.PersistedIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,9 @@ import org.apache.spark.sql.functions._
   * rows). Daily deltas append new (token, doc_id) rows into the same
   * bucket layout (`appendToInvertedIndex`) — doc_ids are disjoint
   * across deltas so append never rewrites history; compaction
-  * (`Sources.compactBucketed`) bounds file counts.
+  * bounds file counts. The `_meta` check, the append bucket count
+  * (from the catalog), compaction and dropping follow the shared
+  * contract of `graft.io.PersistedIndex`.
   */
 object TextIndex {
 
@@ -44,8 +47,7 @@ object TextIndex {
                          name: String, buckets: Int = 32): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.io.Sources.writeTable(
-      Seq(Tokenizer).toDF("tokenizer"), s"${name}_meta")
+    PersistedIndex.writeMeta(Seq(Tokenizer).toDF("tokenizer"), name)
     graft.io.Sources.writeBucketed(
       postings(df, idCol, textCol), s"${name}_postings", "token", buckets)
     graft.io.Sources.writeBucketed(
@@ -61,13 +63,7 @@ object TextIndex {
                             delta: DataFrame, idCol: String,
                             textCol: String): Unit = {
     requireMeta(spark, name)
-    // the bucket spec comes from the catalog, never a default: an
-    // append under the wrong spec would route postings to buckets the
-    // pruned probes never read — silent missing matches
-    val buckets = graft.io.Sources.numBuckets(spark, s"${name}_postings")
-      .getOrElse(throw new IllegalStateException(
-        s"index $name: ${name}_postings has no bucket spec in the catalog; " +
-        "refusing to append under a guessed layout"))
+    val buckets = PersistedIndex.buckets(spark, s"${name}_postings")
     graft.io.Sources.appendBucketed(
       postings(delta, idCol, textCol), s"${name}_postings", "token", buckets)
     graft.io.Sources.appendBucketed(
@@ -76,8 +72,8 @@ object TextIndex {
 
   /** Compact after many appends; probe plans unchanged. */
   def compactInvertedIndex(spark: SparkSession, name: String): Unit = {
-    graft.io.Sources.compactBucketed(spark, s"${name}_postings", "token")
-    graft.io.Sources.compactBucketed(spark, s"${name}_docs", "doc_id")
+    PersistedIndex.compact(spark, s"${name}_postings", "token")
+    PersistedIndex.compact(spark, s"${name}_docs", "doc_id")
   }
 
   private def postings(df: DataFrame, idCol: String,
@@ -93,11 +89,9 @@ object TextIndex {
     df.select(col(idCol).cast("long").as("doc_id"),
       TextAnalysis.wsTokenCount(col(textCol)).cast("long").as("dl"))
 
-  private def requireMeta(spark: SparkSession, name: String): Unit = {
-    val rows = spark.table(s"${name}_meta").collect()
-    require(rows.length == 1 && rows(0).getString(0) == Tokenizer,
-      s"index $name: malformed or incompatible ${name}_meta")
-  }
+  private def requireMeta(spark: SparkSession, name: String): Unit =
+    require(PersistedIndex.meta(spark, name).getString(0) == Tokenizer,
+      s"index $name: ${name}_meta names another tokenizer")
 
   /** Documents containing `token`, with its term frequency —
     * `(doc_id, tf)`. A one-bucket pruned scan, no joins.

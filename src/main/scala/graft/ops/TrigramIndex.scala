@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.io.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `<name>_postings(gram, doc_id)` distinct per doc, bucketed
   * by gram; `<name>_text(doc_id, text)` bucketed by doc_id;
-  * `<name>_meta(n)` pinning the gram size.
+  * `<name>_meta(n)` pinning the gram size. The `_meta` check, the
+  * append bucket count (from the catalog), compaction and dropping
+  * follow the shared contract of `graft.io.PersistedIndex`.
   */
 object TrigramIndex {
 
@@ -45,7 +48,7 @@ object TrigramIndex {
                         name: String, buckets: Int = 32): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.io.Sources.writeTable(Seq(N).toDF("n"), s"${name}_meta")
+    PersistedIndex.writeMeta(Seq(N).toDF("n"), name)
     graft.io.Sources.writeBucketed(
       df.select(col(idCol).as("doc_id"),
         explode(charGrams(col(textCol))).as("gram")),
@@ -58,37 +61,31 @@ object TrigramIndex {
   /** Append a delta corpus into the existing bucket layout — the
     * daily-ingest path, same contract as the band/IVF/inverted
     * appends: delta doc ids must be disjoint from the corpus's.
-    * Bucket counts come from the CATALOG or throw — an append under
-    * a guessed layout silently corrupts bucket pruning downstream.
     */
   def appendToTrigramIndex(spark: SparkSession, name: String,
                            delta: DataFrame, idCol: String,
                            textCol: String): Unit = {
     requireMeta(spark, name)
-    def buckets(t: String) = graft.io.Sources.numBuckets(spark, t)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$t has no catalog bucket spec — refusing to append blind"))
+    val buckets = PersistedIndex.buckets(spark, s"${name}_postings")
     graft.io.Sources.appendBucketed(
       delta.select(col(idCol).as("doc_id"),
         explode(charGrams(col(textCol))).as("gram")),
-      s"${name}_postings", "gram", buckets(s"${name}_postings"))
+      s"${name}_postings", "gram", buckets)
     graft.io.Sources.appendBucketed(
       delta.select(col(idCol).as("doc_id"), col(textCol).as("text")),
-      s"${name}_text", "doc_id", buckets(s"${name}_text"))
+      s"${name}_text", "doc_id", buckets)
   }
 
   /** Shuffle-free per-bucket file merge of both index tables. */
   def compactTrigramIndex(spark: SparkSession, name: String): Unit = {
     requireMeta(spark, name)
-    graft.io.Sources.compactBucketed(spark, s"${name}_postings", "gram")
-    graft.io.Sources.compactBucketed(spark, s"${name}_text", "doc_id")
+    PersistedIndex.compact(spark, s"${name}_postings", "gram")
+    PersistedIndex.compact(spark, s"${name}_text", "doc_id")
   }
 
-  private def requireMeta(spark: SparkSession, name: String): Unit = {
-    val rows = spark.table(s"${name}_meta").collect()
-    require(rows.length == 1 && rows(0).getInt(0) == N,
-      s"index $name: malformed or incompatible ${name}_meta")
-  }
+  private def requireMeta(spark: SparkSession, name: String): Unit =
+    require(PersistedIndex.meta(spark, name).getInt(0) == N,
+      s"index $name: ${name}_meta pins another gram size")
 
   /** Candidate sets up to this size verify via the POINT-LOOKUP path:
     * ids collected to the driver and pushed as an `isin` predicate,
@@ -124,7 +121,7 @@ object TrigramIndex {
     // left on, the planner sees no join/exchange benefiting from the
     // gram bucketing and silently falls back to a plain scan — which
     // reads EVERY bucket and drops the SelectedBucketsCount pruning
-    // the whole layout exists for (the compactBucketed conf pattern).
+    // the whole layout exists for (the PersistedIndex.compact conf pattern).
     // The toggle is safe to scope here because the checkpoint below
     // materializes the probe eagerly.
     val scanConf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"

@@ -146,8 +146,8 @@ object StreamingDedup {
       out.localCheckpoint(true)
     } finally {
       if (prebuiltIndex.isEmpty)
-        for (t <- Seq("meta", "bands", "sigs", "members"))
-          spark.sql(s"DROP TABLE IF EXISTS `${indexName}_$t`")
+        graft.io.PersistedIndex.drop(spark, indexName,
+          graft.ops.Dedup.BandIndexTables)
       deleteRecursively(outPath)
     }
   }

@@ -118,8 +118,8 @@ object StreamingIngest {
       out.localCheckpoint(true)
     } finally {
       if (prebuiltIndex.isEmpty)
-        for (t <- Seq("meta", "bands", "sigs", "members"))
-          spark.sql(s"DROP TABLE IF EXISTS `${indexName}_$t`")
+        graft.io.PersistedIndex.drop(spark, indexName,
+          graft.ops.Dedup.BandIndexTables)
       StreamingDedup.deleteRecursively(ledgerPath)
     }
   }

@@ -125,6 +125,10 @@ private[tree] final class SoftmaxLoss(target: String, weight: Option[String])
   */
 private[tree] object Boosting {
 
+  /** Each stage's fit target, under the reserved pre-projection prefix
+    * so no fit input column can share its name. */
+  private val Target = "__pv_residual"
+
   /** A fit's base margins, its kept stages (one tree per margin each)
     * and their gain importances, weighted by each tree's total gain. */
   final case class Boosted(base: IndexedSeq[Double], stages: Seq[IndexedSeq[RegTreeNode]],
@@ -168,10 +172,10 @@ private[tree] object Boosting {
           .map(l => avg(when(isVal, l))).toSeq
         val phase = s"stage=${stages.size + 1}"
         def fitOne(i: Int) = labelled(phase) {
-          new RegressionTree(features, "__residual", maxDepth = maxDepth,
+          new RegressionTree(features, Target, maxDepth = maxDepth,
             gradientWeightedThresholds = loss.gradientWeighted,
             categoricalColumns = categorical, weightColumn = loss.weight)
-            .fitCachedWithRootExtras(work.withColumn("__residual", residual(i)), train,
+            .fitCachedWithRootExtras(work.withColumn(Target, residual(i)), train,
               if (i == 0) lossAggs else Nil)
         }
         val fitted =

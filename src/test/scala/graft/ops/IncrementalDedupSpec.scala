@@ -161,21 +161,26 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("appendToBandIndex refuses an index whose bands table has no bucket spec") {
-    import spark.implicits._
-    // simulate a corrupted/foreign catalog entry: _meta exists but
-    // the bands table is UNBUCKETED — appending under a guessed
-    // layout would silently route rows to buckets pruned probes never
-    // read, so the append must throw instead
-    graft.io.Sources.writeTable(
-      Seq((3, 32, 16)).toDF("shingle_n", "k", "bands"), "graft_test_nospec_meta")
-    graft.io.Sources.writeTable(
-      Seq((0L, 0, 0L, 1L)).toDF("bkey", "band", "key", "id"),
-      "graft_test_nospec_bands")
-    val delta = Seq((1L, "some delta text")).toDF("doc_id", "text")
-    val e = intercept[IllegalStateException] {
-      Dedup.appendToBandIndex(spark, "graft_test_nospec", delta, "doc_id", "text")
+    // ... and so does every index family's append, with one message:
+    // a hot table whose catalog entry lost its bucket spec must not be
+    // appended under a guessed layout, which would silently route rows
+    // to buckets the pruned probes never read
+    val outcomes = IndexFamilies.all.map { f =>
+      val name = s"graft_test_nospec_${f.family}"
+      val hot = s"${name}_${f.hot}"
+      val expected = s"$hot has no bucket spec in the catalog; " +
+        "refusing to write it under a guessed layout"
+      try {
+        f.build(spark, name)
+        IndexFamilies.unbucket(spark, hot)
+        f.family -> (scala.util.Try(f.append(spark, name)) match {
+          case scala.util.Failure(e: IllegalStateException) if e.getMessage == expected => "refused"
+          case scala.util.Failure(e) => s"threw ${e.getClass.getSimpleName}: ${e.getMessage}"
+          case scala.util.Success(_) => "appended"
+        })
+      } finally IndexFamilies.dropAll(spark, name)
     }
-    assert(e.getMessage.contains("no bucket spec"))
+    assert(outcomes.forall(_._2 == "refused"), outcomes.mkString("\n"))
   }
 
   test("compactBandIndex: fewer files, same bucket spec, same probe results") {

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions.{lit, when}
   * FitInternals.MaxCategories, k-ary labels past FitInternals.MaxClasses,
   * non-positive weights (where the learner takes weights) and column
   * names reserved by the level passes are each rejected with an
-  * IllegalArgumentException before any fit work.
+  * IllegalArgumentException before any fit work. A booster's own
+  * stage target never shadows an input column.
   */
 class FitContractSpec extends SparkSpec {
   import spark.implicits._
@@ -88,6 +89,36 @@ class FitContractSpec extends SparkSpec {
         val msg = rejected(l.fit(df, reserved, Seq.empty, None))
         assert(msg.contains(s"input column $reserved "), msg)
       }
+    }
+  }
+
+  /** The three boosters as fit(data, features) => model JSON, on the
+    * targets of [[boostRows]]. */
+  private val boosters: Seq[(String, (DataFrame, Seq[String]) => String)] = Seq(
+    "GradientBoosting" -> ((df, fs) =>
+      new GradientBoosting(fs, "y", numStages = 2, maxDepth = 2).fit(df).toJson),
+    "GradientBoostingClassifier" -> ((df, fs) =>
+      new GradientBoostingClassifier(fs, "class", numStages = 2, maxDepth = 2).fit(df).toJson),
+    "SoftmaxGradientBoosting" -> ((df, fs) =>
+      new SoftmaxGradientBoosting(fs, "k", numStages = 2, maxDepth = 2).fit(df).toJson))
+
+  /** (x, z, y, class, k): a real target y = 3x + noise, its binary and
+    * 3-class cuts, and an unrelated column z; continuous values, so
+    * no two candidate splits tie. */
+  private lazy val boostRows: DataFrame = {
+    val rng = new scala.util.Random(7)
+    (0 until 96).map { _ =>
+      val (x, z, e) = (rng.nextDouble(), rng.nextDouble(), rng.nextGaussian() * 0.3)
+      val y = 3 * x + e
+      (x, z, y, if (y > 1.5) 1 else 0, if (y < 1.0) 0 else if (y < 2.0) 1 else 2)
+    }.toDF("x", "z", "y", "class", "k")
+  }
+
+  boosters.foreach { case (name, fit) =>
+    test(s"$name fits a feature named __residual like any other column") {
+      val renamed = fit(boostRows, Seq("x", "z")).replace("\"z ", "\"__residual ")
+      val named = fit(boostRows.withColumnRenamed("z", "__residual"), Seq("x", "__residual"))
+      assert(named == renamed)
     }
   }
 }

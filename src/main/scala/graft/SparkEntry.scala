@@ -586,7 +586,7 @@ object SparkEntry {
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "text")
       VersionedTable.commit(docs, root, "initial")
       val recrawl = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("text", upper(col("text")))
+        .withColumn("text", graft.functions.Native.upper(col("text")))
       VersionedTable.commit(
         graft.ops.Merge.upsert(VersionedTable.read(s, root), recrawl,
           "doc_id"),
@@ -599,7 +599,7 @@ object SparkEntry {
         VersionedTable.read(s, root, Some(v))
           .agg(count(lit(1)).as("n_docs"),
             sum(length(col("text"))).cast("long").as("total_chars"),
-            sum(when(col("text") === upper(col("text")), 1L).otherwise(0L))
+            sum(when(col("text") === graft.functions.Native.upper(col("text")), 1L).otherwise(0L))
               .as("n_upper"))
           .select(lit(v).as("version"), col("n_docs"), col("total_chars"),
             col("n_upper"))
@@ -1032,7 +1032,7 @@ object SparkEntry {
       val corpus = docs
         .unionAll(docs.filter(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 20000000L).as("doc_id"),
-            upper(col("text")).as("text")))
+            graft.functions.Native.upper(col("text")).as("text")))
         .unionAll(docs.filter(col("doc_id") % 10 === 0)
           .select((col("doc_id") + 40000000L).as("doc_id"),
             concat(col("text"), lit(" !!! ??? ;;; :::")).as("text")))
@@ -2894,7 +2894,7 @@ object SparkEntry {
         .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
       val fresh = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 30000000L).as("doc_id"),
-          upper(col("text")).as("text"))
+          graft.functions.Native.upper(col("text")).as("text"))
       val freshDup = fresh.filter((col("doc_id") - 30000000L) % 14 === 0)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
       val incoming = recrawl.unionAll(fresh).unionAll(freshDup)
@@ -2939,7 +2939,7 @@ object SparkEntry {
         .select((col("doc_id") + 20000000L).as("doc_id"), col("text"))
       val fresh = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 30000000L).as("doc_id"),
-          upper(col("text")).as("text"))
+          graft.functions.Native.upper(col("text")).as("text"))
       val freshDup = fresh.filter((col("doc_id") - 30000000L) % 14 === 0)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
       val incoming = recrawl.unionAll(fresh).unionAll(freshDup)
@@ -5164,7 +5164,7 @@ object SparkEntry {
           concat(lit("customer #"), substring(col("name"), 10, 100)).as("name")))
       .unionAll(c.filter(col("k") % 10 === 0)
         .select((col("k") + 20000000L).as("k"),
-          lower(translate(col("name"), "#", "-")).as("name")))
+          graft.functions.Native.lower(translate(col("name"), "#", "-")).as("name")))
       .unionAll(c.filter(col("k") % 7 === 0)
         .select((col("k") + 30000000L).as("k"),
           concat(lit("Cliente#"), substring(col("name"), 10, 100)).as("name")))

@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport,
+  GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -793,6 +795,59 @@ case class DupGramCounts(child: Expression, n: Int) extends UnaryExpression {
     copy(child = c)
 }
 
+/** Spark's `lower` / `upper` as one kernel for `eval` and the
+  * generated code. Spark 4.1 sends both to `CollationSupport.Lower` /
+  * `Upper`; with `spark.sql.icu.caseMappings.enabled` (the default)
+  * those call `CollationAwareUTF8String`, whose static initializer
+  * title-cases every code point (1.6–1.7 s of one core and 3.2 GB of
+  * short-lived garbage per JVM on a 4-vCPU host) before its own ASCII
+  * check runs. Here UTF8_BINARY text that is all ASCII maps with
+  * `toLowerCaseAscii` / `toUpperCaseAscii`, which is what both of
+  * Spark's paths return for it, and any other input goes to the
+  * function Spark's `Lower` / `Upper` call, with the same collation
+  * and ICU flag.
+  */
+object CaseMapping {
+
+  private val Binary = CollationFactory.UTF8_BINARY_COLLATION_ID
+
+  def lower(v: UTF8String, collationId: Int, useICU: Boolean): UTF8String =
+    if (collationId == Binary && v.isFullAscii) v.toLowerCaseAscii
+    else CollationSupport.Lower.exec(v, collationId, useICU)
+
+  def upper(v: UTF8String, collationId: Int, useICU: Boolean): UTF8String =
+    if (collationId == Binary && v.isFullAscii) v.toUpperCaseAscii
+    else CollationSupport.Upper.exec(v, collationId, useICU)
+}
+
+/** `lower(child)` or `upper(child)` over [[CaseMapping]]: the same
+  * input types, result type, name and bytes as Spark's `Lower` /
+  * `Upper`, which read the collation and the ICU flag as these lazy
+  * vals do. Spark's optimizer folds its own `lower(upper(x))` to
+  * `lower(x)`, which differs on non-ASCII text (ß → SS → ss); it does
+  * not fold these, which compute the composition as written.
+  */
+case class CaseMap(child: Expression, toUpper: Boolean)
+    extends UnaryExpression with String2StringExpression {
+
+  private lazy val collationId: Int = child.dataType.asInstanceOf[StringType].collationId
+  private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def prettyName: String = if (toUpper) "upper" else "lower"
+
+  override def nullIntolerant: Boolean = true
+
+  override def convert(v: UTF8String): UTF8String =
+    if (toUpper) CaseMapping.upper(v, collationId, useICU)
+    else CaseMapping.lower(v, collationId, useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.CaseMapping.$prettyName($c, $collationId, $useICU)")
+
+  override protected def withNewChildInternal(c: Expression): CaseMap = copy(child = c)
+}
+
 /** The byte scans behind [[WsTokens]] and [[TextStats]]. Whitespace
   * is exactly Java regex `\s` = [ \t\n\x0B\f\r], all ASCII, and an
   * ASCII byte never occurs inside a multi-byte UTF-8 sequence, so a
@@ -880,8 +935,12 @@ object TextScan {
     str.codePointCount(0, str.length)
   }
 
-  /** [[TextStats]]' counts of `text` and its lower-case form `lower`. */
-  def stats(text: UTF8String, lower: UTF8String, stops: StopwordTable): InternalRow = {
+  /** [[TextStats]]' counts of `text`. Letters and punctuation are
+    * those of Spark's `lower(text)`: read off `text`'s own bytes when
+    * it is ASCII, whose lower-case form has the same letters, digits
+    * and spaces, else off [[CaseMapping.lower]] under `useICU`.
+    */
+  def stats(text: UTF8String, useICU: Boolean, stops: StopwordTable): InternalRow = {
     val hits = new Array[Int](stops.numSets)
     var base = text.getBaseObject
     var off = text.getBaseOffset
@@ -889,6 +948,9 @@ object TextScan {
     var chars = 0
     var spaces = 0
     var tokens = 0
+    var letters = 0
+    var digits = 0
+    var ascii = true
     var valid = true
     var start = -1
     var i = 0
@@ -904,8 +966,14 @@ object TextScan {
         i += 1
       } else {
         if (start < 0) start = i
-        if (b < 0x80) { chars += 1; i += 1 }
-        else {
+        if (b < 0x80) {
+          val folded = b | 0x20
+          if (folded >= 'a' && folded <= 'z') letters += 1
+          else if (b >= '0' && b <= '9') digits += 1
+          chars += 1
+          i += 1
+        } else {
+          ascii = false
           val w = seqLen(base, off, i, n)
           if (w == 0) { valid = false; i += 1 } else { chars += 1; i += w }
         }
@@ -915,27 +983,33 @@ object TextScan {
     // Spark's length(): code points of well-formed text, its own
     // lead-byte walk otherwise
     val length = if (valid) chars else text.numChars()
-    base = lower.getBaseObject
-    off = lower.getBaseOffset
-    n = lower.numBytes
-    var lowerChars = 0
-    var alpha = 0
-    var alnumSpace = 0
-    var lowerValid = true
-    i = 0
-    while (i < n) {
-      val b = byteAt(base, off, i)
-      if (b < 0x80) {
-        if (b >= 'a' && b <= 'z') { alpha += 1; alnumSpace += 1 }
-        else if ((b >= '0' && b <= '9') || isSpace(b)) alnumSpace += 1
-        lowerChars += 1
-        i += 1
-      } else {
-        val w = seqLen(base, off, i, n)
-        if (w == 0) { lowerValid = false; i += 1 } else { lowerChars += 1; i += w }
+    var alpha = letters
+    var alnumSpace = letters + digits + spaces
+    var lowerCodePoints = n
+    if (!ascii) {
+      val lower = CaseMapping.lower(text, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU)
+      base = lower.getBaseObject
+      off = lower.getBaseOffset
+      n = lower.numBytes
+      var lowerChars = 0
+      var lowerValid = true
+      alpha = 0
+      alnumSpace = 0
+      i = 0
+      while (i < n) {
+        val b = byteAt(base, off, i)
+        if (b < 0x80) {
+          if (b >= 'a' && b <= 'z') { alpha += 1; alnumSpace += 1 }
+          else if ((b >= '0' && b <= '9') || isSpace(b)) alnumSpace += 1
+          lowerChars += 1
+          i += 1
+        } else {
+          val w = seqLen(base, off, i, n)
+          if (w == 0) { lowerValid = false; i += 1 } else { lowerChars += 1; i += w }
+        }
       }
+      lowerCodePoints = if (lowerValid) lowerChars else decodedLength(lower)
     }
-    val lowerCodePoints = if (lowerValid) lowerChars else decodedLength(lower)
     val row = new Array[Any](5 + hits.length)
     row(0) = length
     row(1) = alpha
@@ -1006,13 +1080,16 @@ case class WsTokens(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): WsTokens = copy(child = c)
 }
 
-/** Per-document text counts in one pass over the text and one over
-  * its lower-case form — `lower` is Spark's own `lower(text)`, so case
-  * mapping (İ → i̇, Kelvin sign → k) is Spark's. A struct of ints:
+/** Per-document text counts in one pass over the text, plus one over
+  * its lower-case form when the text is not ASCII (see
+  * [[TextScan.stats]]). Case mapping is Spark's `lower(text)` under
+  * the session's `spark.sql.icu.caseMappings.enabled`, read as Spark's
+  * `Lower` reads it, so İ → i̇ and the Kelvin sign → k as there. A
+  * struct of ints:
   *
   *  - `chars`: `length(text)`;
-  *  - `alpha`: `length(regexp_replace(lower, "[^a-z]", ""))`;
-  *  - `punct`: `length(regexp_replace(lower, "[a-z0-9\\s]", ""))`;
+  *  - `alpha`: `length(regexp_replace(lower(text), "[^a-z]", ""))`;
+  *  - `punct`: `length(regexp_replace(lower(text), "[a-z0-9\\s]", ""))`;
   *  - `nonspace`: `length(regexp_replace(text, "\\s", ""))`;
   *  - `tokens`: the whitespace-token count, `size(wsTokens(text))`;
   *  - `stop_<name>`: how many of those tokens set `name` holds.
@@ -1021,32 +1098,28 @@ case class WsTokens(child: Expression) extends UnaryExpression {
   * ratios built from these fields by the same casts and divisions are
   * bit-identical to the composed ones.
   */
-case class TextStats(text: Expression, lower: Expression, stopSets: Seq[(String, Seq[String])])
-    extends BinaryExpression {
-
-  override def left: Expression = text
-  override def right: Expression = lower
+case class TextStats(child: Expression, stopSets: Seq[(String, Seq[String])])
+    extends UnaryExpression {
 
   @transient private lazy val table = new StopwordTable(stopSets.map(_._2))
+  private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 
   override protected def stringArgs: Iterator[Any] =
-    Iterator(text, lower, stopSets.map(_._1).mkString("stop sets ", ",", ""))
+    Iterator(child, stopSets.map(_._1).mkString("stop sets ", ",", ""))
 
   override def dataType: DataType = StructType(
     (Seq("chars", "alpha", "punct", "nonspace", "tokens") ++ stopSets.map("stop_" + _._1))
       .map(StructField(_, IntegerType, nullable = false)))
 
-  override def nullSafeEval(t: Any, l: Any): Any =
-    TextScan.stats(t.asInstanceOf[UTF8String], l.asInstanceOf[UTF8String], table)
+  override def nullSafeEval(t: Any): Any =
+    TextScan.stats(t.asInstanceOf[UTF8String], useICU, table)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("stopwords", table, classOf[StopwordTable].getName)
-    defineCodeGen(ctx, ev, (t, l) => s"graft.functions.TextScan.stats($t, $l, $ref)")
+    defineCodeGen(ctx, ev, t => s"graft.functions.TextScan.stats($t, $useICU, $ref)")
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TextStats =
-    copy(text = newLeft, lower = newRight)
+  override protected def withNewChildInternal(c: Expression): TextStats = copy(child = c)
 }
 
 /** Winnowing fingerprint selection (Schleimer et al. SIGMOD'03) in
@@ -2284,12 +2357,19 @@ object Native {
     GraftBridge.column(WsTokens(GraftBridge.expression(text.cast("string"))))
 
   /** Codegen'd per-document counts struct (see TextStats). */
-  def textStats(text: Column, stopSets: Seq[(String, Seq[String])]): Column = {
-    val t = text.cast("string")
-    GraftBridge.column(TextStats(
-      GraftBridge.expression(t),
-      GraftBridge.expression(org.apache.spark.sql.functions.lower(t)), stopSets))
-  }
+  def textStats(text: Column, stopSets: Seq[(String, Seq[String])]): Column =
+    GraftBridge.column(TextStats(GraftBridge.expression(text.cast("string")), stopSets))
+
+  /** Spark's `lower(c)`, byte for byte; ASCII text skips Spark's ICU
+    * table build (see [[CaseMapping]]). The one case-mapping entry
+    * point of `src/main`, kept so by `CaseMapLintSpec`.
+    */
+  def lower(c: Column): Column =
+    GraftBridge.column(CaseMap(GraftBridge.expression(c), toUpper = false))
+
+  /** Spark's `upper(c)`, byte for byte (see [[lower]]). */
+  def upper(c: Column): Column =
+    GraftBridge.column(CaseMap(GraftBridge.expression(c), toUpper = true))
 
   /** Codegen'd within-doc duplicated-gram counts:
     * struct(dup_occ, covered) over a positional gram-hash array.

@@ -121,7 +121,8 @@ object Dedup {
     * runs, trim. Pure codegen'd string expressions — one pass.
     */
   def normalizeText(text: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " "))
+    trim(regexp_replace(regexp_replace(graft.functions.Native.lower(text), "[^a-z0-9 ]", ""),
+      " +", " "))
 
   /** Content key of the NORMALIZED text: case / punctuation /
     * whitespace variants of the same content collapse to one group
@@ -870,7 +871,9 @@ object Dedup {
     * corpus the index was built from. The signature parameters
     * (shingleN, k, bands) are DERIVED from the index's `_meta` table
     * — they are build-time properties, and a probe signed with
-    * different parameters is meaningless.
+    * different parameters is meaningless. LAZY and cache-free: the
+    * incoming collapse and signatures are recomputed wherever the plan
+    * reads them, and the caller's cache is left as it was.
     */
   def minhashPairsAgainstIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -918,7 +921,7 @@ object Dedup {
       threshold: Double = 0.9,
       materialize: Boolean = true): DataFrame = graft.JobLabel(spark, "Dedup.probe hits") {
     val (ci, si, repPairs) = repPairsAgainstIndexImpl(
-      spark, name, incoming, idCol, textCol, threshold, persistSides = materialize)
+      spark, name, incoming, idCol, textCol, threshold, smallProbe = !materialize)
     val hitReps = repPairs.select("rb").distinct()
     if (!materialize) {
       // Small-probe member expansion without the memberFrame⋈collapse
@@ -935,19 +938,21 @@ object Dedup {
         .join(broadcast(hitKeys), "content_key")
         .select(col(idCol))
     } else {
+      // the collapse and its signatures feed several joins of the one
+      // materializing job: cached for it, released after it
+      Seq(ci, si).foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val mi = memberFrame(incoming, idCol, textCol)
         .join(ci.select("content_key", "rep_id"), "content_key")
         .select(col("rep_id").as("rb"), col("id").as(idCol))
-      val out0 = hitReps.join(mi, "rb").select(col(idCol)).distinct()
-      val out = out0.localCheckpoint()
-      ci.unpersist(false)
-      si.unpersist(false)
-      out
+      try hitReps.join(mi, "rb").select(col(idCol)).distinct().localCheckpoint()
+      finally Seq(ci, si).foreach(_.unpersist(false))
     }
   }
 
   /** Incoming-side collapse + representative-level pairs against a
-    * persisted band index (parameters derived from `_meta`).
+    * persisted band index (parameters derived from `_meta`). Nothing
+    * is cached here: a caller that caches the collapse or signatures
+    * releases them itself.
     */
   private def repPairsAgainstIndexImpl(
       spark: org.apache.spark.sql.SparkSession,
@@ -956,24 +961,20 @@ object Dedup {
       idCol: String,
       textCol: String,
       threshold: Double,
-      persistSides: Boolean = true): (DataFrame, DataFrame, DataFrame) = {
+      smallProbe: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
     val (shingleN, k, bands) = bandMeta(spark, name)
     val idxBands = spark.table(s"${name}_bands")
     val idxSigs = spark.table(s"${name}_sigs")
-    def maybePersist(df: DataFrame): DataFrame =
-      if (persistSides)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val ci = maybePersist(collapseByContent(incoming, idCol, textCol))
-    val si = maybePersist(repSignatures(ci, shingleN, k))
-    // In the small-probe mode (persistSides=false — a streaming
-    // micro-batch or other delta ≪ index) every probe-derived side is
-    // broadcast: each index-table join becomes a broadcast hash join
-    // over the bucketed scan, with zero shuffles and zero sorts of
-    // either side. The large-delta mode keeps the shuffle joins —
-    // broadcasting an unbounded delta would be wrong.
+    val ci = collapseByContent(incoming, idCol, textCol)
+    val si = repSignatures(ci, shingleN, k)
+    // In the small-probe mode (a streaming micro-batch or other
+    // delta ≪ index) every probe-derived side is broadcast: each
+    // index-table join becomes a broadcast hash join over the bucketed
+    // scan, with zero shuffles and zero sorts of either side. The
+    // large-delta mode keeps the shuffle joins — broadcasting an
+    // unbounded delta would be wrong.
     def probeSide(df: DataFrame): DataFrame =
-      if (persistSides) df else broadcast(df)
+      if (smallProbe) broadcast(df) else df
     val bi = si.select(col("id").as("rb"),
         posexplode(bandKeys(col("sig"), k, bands)).as(Seq("band", "key")))
       .withColumn("bkey", xxhash64(col("band"), col("key")))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Native
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -48,8 +49,8 @@ object HtmlExtract {
       transform(split(stripMarkup(html), "\n"), l => trim(l)),
       l => size(split(l, " ")) >= 5 &&
         l.rlike("[.!?\"]$") &&
-        !lower(l).rlike("javascript") &&
-        !lower(l).rlike("cookie"))
+        !Native.lower(l).rlike("javascript") &&
+        !Native.lower(l).rlike("cookie"))
 
   /** Extracted page text: retained lines joined by newline. */
   def extractText(html: Column): Column =
@@ -60,7 +61,7 @@ object HtmlExtract {
     * lines. */
   def pageKept(cleanText: Column, nLines: Column,
                minLines: Int = 3): Column =
-    !lower(cleanText).rlike("lorem ipsum") &&
+    !Native.lower(cleanText).rlike("lorem ipsum") &&
       !cleanText.rlike("[{}]") &&
       (nLines >= minLines)
 }

@@ -12,11 +12,17 @@ import org.apache.spark.sql.functions._
   * `langIdScore`) read one native `TextStats` struct of counts, and
   * whitespace tokens come from the native `WsTokens` byte scan (both
   * in `graft.functions`, codegen'd): no regex split and no lambda per
-  * document. The struct sits in every `when`'s always-evaluated
-  * predicate, so subexpression elimination computes it once per row
-  * however many signals a projection asks for. Some operators further
-  * down (`gopherRules`, `ngrams`, `fingerprint`) still compose
-  * higher-order functions, which Spark runs interpreted.
+  * document. The letter and punctuation counts are those of Spark's
+  * `lower(text)`: the kernel reads them off the bytes of ASCII text,
+  * and only other text is lower-cased, by the function Spark's `lower`
+  * calls, under the session's `spark.sql.icu.caseMappings.enabled`.
+  * Every other case mapping in `src/main` goes through
+  * `Native.lower` / `Native.upper`; Spark's own `lower` stays only in
+  * `Composed`, the reference. The struct sits in every `when`'s
+  * always-evaluated predicate, so subexpression elimination computes
+  * it once per row however many signals a projection asks for. Some
+  * operators further down (`gopherRules`, `ngrams`, `fingerprint`)
+  * still compose higher-order functions, which Spark runs interpreted.
   *
   * All formulas are deliberately SQL-expressible so each operator has
   * a DuckDB oracle (see SparkEntry.oracleSql).
@@ -96,13 +102,13 @@ object TextAnalysis {
   }
 
   /** Heuristic language-ID: argmax of langScore over the profiles,
-    * ties broken by language code ascending. Implemented as
-    * array_min over (−score, lang) structs (r16 — was sort_array +
-    * getItem(0): same least element under the identical struct
-    * ordering, one linear pass instead of a per-row sort) — pure
-    * expression.
+    * ties broken by language code ascending; NULL for NULL text.
+    * Implemented as array_min over (−score, lang) structs (r16 — was
+    * sort_array + getItem(0): same least element under the identical
+    * struct ordering, one linear pass instead of a per-row sort) —
+    * pure expression.
     */
-  def langId(text: Column): Column = bestLang(langScore(text, _)).getField("l")
+  def langId(text: Column): Column = langIdOf(langScore(text, _))
 
   /** Best lang-ID score (the max over profiles). */
   def langIdScore(text: Column): Column = -bestLang(langScore(text, _)).getField("s")
@@ -111,6 +117,14 @@ object TextAnalysis {
     array_min(array(LangProfiles.map { case (l, _) =>
       struct((-score(l)).as("s"), lit(l).as("l"))
     }: _*))
+
+  /** NULL text scores NULL for every profile, where `array_min` would
+    * tie-break on the language code; its id is NULL instead.
+    */
+  private def langIdOf(score: String => Column): Column = {
+    val best = bestLang(score)
+    when(best.getField("s").isNotNull, best.getField("l"))
+  }
 
   /** The composed forms the kernels replace — regex splits and
     * interpreted lambdas — kept ONLY as the independent reference for
@@ -133,7 +147,7 @@ object TextAnalysis {
       val stops = LangProfiles.toMap.apply(lang)
       ratio(size(filter(wsTokens(text), t => t.isInCollection(stops))), wsTokenCount(text))
     }
-    def langId(text: Column): Column = bestLang(langScore(text, _)).getField("l")
+    def langId(text: Column): Column = langIdOf(langScore(text, _))
     def langIdScore(text: Column): Column = -bestLang(langScore(text, _)).getField("s")
   }
 

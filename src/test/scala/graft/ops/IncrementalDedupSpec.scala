@@ -123,6 +123,31 @@ class IncrementalDedupSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
 
+  test("the index probes leave the session's cache as they found it") {
+    // a long-lived session probes once per delta: neither probe may
+    // leave the incoming collapse or its signatures cached behind it
+    val name = "graft_test_cache"
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val probe = existing.filter(col("doc_id") % 9 === 1)
+      .select((col("doc_id") + 9000000L).as("doc_id"),
+        concat(col("text"), lit(" probe edit")).as("text"))
+    try {
+      Dedup.buildBandIndex(existing.filter(col("doc_id") % 3 === 1), "doc_id", "text", name,
+        shingleN = 3, k = 32, bands = 16, buckets = 4)
+      spark.catalog.clearCache()
+      assert(Dedup.minhashPairsAgainstIndex(spark, name, probe, "doc_id", "text",
+        threshold = 0.5).count() > 0)
+      assert(cache.isEmpty, "the pairs probe left cached data")
+      assert(Dedup.minhashHitsAgainstIndex(spark, name, probe, "doc_id", "text",
+        threshold = 0.5).count() > 0)
+      assert(cache.isEmpty, "the hits probe left cached data")
+    } finally {
+      graft.io.PersistedIndex.drop(spark, name, Dedup.BandIndexTables)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("appendToBandIndex: grown index probes exactly like a full rebuild") {
     // build on part of the corpus, append the rest (params derived
     // from _meta, bucket count from the catalog); probing the grown

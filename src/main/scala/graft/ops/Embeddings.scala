@@ -71,12 +71,6 @@ object Embeddings {
       .select(explode(col("_m.pairs")).as("_p"))
       .select(col("_p.i").as("i"), col("_p.j").as("j"), col("_p.cov").as("cov"))
 
-  /** Per-dimension corpus mean from the same single-pass moments. */
-  def meanVector(df: org.apache.spark.sql.DataFrame,
-                 vecCol: String): org.apache.spark.sql.DataFrame =
-    df.agg(graft.functions.Native.vectorMoments(col(vecCol)).as("_m"))
-      .select(posexplode(col("_m.means")).as(Seq("i", "mean")))
-
   // ---- PCA compaction ------------------------------------------------
 
   /** Fitted PCA model: corpus means, top-k eigenvalues (descending)

@@ -312,21 +312,6 @@ object Multimodal {
     realPairs.unionByName(fallbackPairs)
   }
 
-  /** Back-compat alias for the pre-decoder name. */
-  @deprecated("use decodeImages — decode is real for JDK-supported image formats", "0.3")
-  def decodeImagesStub(
-      media: Dataset[MediaRow],
-      batchSize: Int = 64,
-      featureDim: Int = 8): Dataset[DecodedImage] =
-    decodeImages(media, batchSize, featureDim)
-
-  /** REAL image resize for JDK-decodable payloads: decode, scale the
-    * long side down to `maxSide` with bilinear interpolation
-    * (`Graphics2D`, pure JDK), re-encode as PNG. Payloads that are not
-    * decodable images — or already fit — pass through byte-identical.
-    * Same mapPartitions batching as `decodeImages`; CPU-bound per
-    * partition, no shuffle.
-    */
   /** Letterbox resize PLAN for a batch-decode stage: given per-item
     * (width, height), the aspect-preserving output geometry and pad
     * offsets for a square `target` canvas — the scheduling table a
@@ -354,6 +339,13 @@ object Multimodal {
         floor((lit(target) - col("out_h")) / 2).cast("int"))
   }
 
+  /** REAL image resize for JDK-decodable payloads: decode, scale the
+    * long side down to `maxSide` with bilinear interpolation
+    * (`Graphics2D`, pure JDK), re-encode as PNG. Payloads that are not
+    * decodable images — or already fit — pass through byte-identical.
+    * Same mapPartitions batching as `decodeImages`; CPU-bound per
+    * partition, no shuffle.
+    */
   def resizeImages(media: Dataset[MediaRow], maxSide: Int,
                    batchSize: Int = 64): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
@@ -396,31 +388,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Back-compat alias for the pre-resampler metadata-only stub: now
-    * delegates to the real resize's geometry (the decoded dimensions
-    * of `resizeImages` output match this projection exactly).
-    */
-  @deprecated("use resizeImages — resize is real for JDK-supported image formats", "0.3")
-  def resizeStub(decoded: Dataset[DecodedImage], maxSide: Int): Dataset[DecodedImage] = {
-    import decoded.sparkSession.implicits._
-    decoded.map { d =>
-      val scale = math.min(1.0, maxSide.toDouble / math.max(d.width, d.height))
-      d.copy(width = math.max(1, (d.width * scale).toInt),
-             height = math.max(1, (d.height * scale).toInt))
-    }
-  }
-
-  /** STUB frame sampling for video payloads: emits every `stride`-th
-    * synthetic frame id, preserving the (media_id, frame_no) shape of a
-    * real frame sampler.
-    */
-  @deprecated("use sampleFrames — sampling is real for animated GIF payloads", "0.4")
-  def sampleFramesStub(media: Dataset[MediaRow], stride: Int): DataFrame = {
-    val nFrames = (col("byte_len") / 16 + 1).cast("int")
-    media.toDF().select(col("media_id"), explode(
-      sequence(lit(0), nFrames - 1, lit(stride))).as("frame_no"))
   }
 
   /** One sampled frame: decoded raster stats when `real`, synthetic

@@ -46,110 +46,54 @@ object Sessionize {
   // ---- streaming ----------------------------------------------------
 
   /** Batch-equivalence harness for the streaming path: replays the
-    * events table through a REAL file-source stream (several files,
-    * `maxFilesPerTrigger`-bounded micro-batches) into the day/type
-    * aggregation and returns the final aggregate — which must equal
-    * the batch `q_events_agg` result exactly, making the streaming
-    * engine oracle-able by the same DuckDB SQL. Complete-mode memory
-    * sink is the verification harness only; the production shape for
-    * unbounded input is append mode + watermark (`windowedCounts`)
-    * or foreachBatch → parquet (ForeachBatchSinkSpec).
+    * events table through a REAL file-source stream (two chunk files,
+    * one micro-batch each) into the day/type aggregation and returns
+    * the final aggregate — which must equal the batch `q_events_agg`
+    * result exactly, making the streaming engine oracle-able by the
+    * same DuckDB SQL. Complete-mode memory sink is the verification
+    * harness only; the production shape for unbounded input is append
+    * mode + watermark (`windowedCounts`) or foreachBatch → parquet
+    * (ForeachBatchSinkSpec).
     */
-  def streamedDailyAgg(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    // 4 files / 2 per trigger = 2 micro-batches: enough to prove the
-    // streamed aggregate converges across batches; each extra
-    // micro-batch is ~0.5-1 s of pure trigger overhead in the bench
-    val srcPath = preparedSource("graft-stream-events",
-      events.queryExecution.logical.semanticHash().toLong) { p =>
-      events.repartition(4).write.mode("overwrite").parquet(p.toString)
+  def streamedDailyAgg(events: DataFrame): DataFrame =
+    // 2 micro-batches: enough to prove the streamed aggregate
+    // converges across batches; each extra micro-batch is ~0.5-1 s of
+    // pure trigger overhead in the bench
+    Replay.drain(Replay.Source("dailyAgg", events, Seq("event_id"), 2),
+        OutputMode.Complete) { stream =>
+      // Sum as DECIMAL: exact, so the result is independent of the
+      // micro-batch accumulation order — the double sum differed from
+      // the batch answer by an ULP depending on file arrival order.
+      // The average divides the exact sum (as double) by the count,
+      // the same two deterministic operations the oracle performs.
+      stream
+        .groupBy(date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(38,9)")).as("sum_value"))
+    } { agg =>
+      agg.select(col("day"), col("event_type"), col("n"),
+          round(col("sum_value"), 4).cast("double").as("total_value"),
+          round(col("sum_value").cast("double") / col("n"), 6).as("avg_value"))
+        .orderBy("day", "event_type")
     }
-    val srcDir = srcPath.toString
-    val batch = spark.read.parquet(srcDir)
-
-    // The stream runs on a CLONED session (shared SparkContext and
-    // catalog, isolated SQLConf) with few shuffle partitions: a
-    // stateful streaming operator disables AQE and instantiates one
-    // state-store per shuffle partition PER MICRO-BATCH, so the
-    // session-wide 32 meant 32 state commits × N batches of pure
-    // overhead on a replay whose per-batch data is tiny. In
-    // production this knob is the stream's own parallelism, sized to
-    // the cluster — the point is that it is the STREAM's setting,
-    // not inherited ambiently from whatever the batch session used.
-    val ss = streamSession(spark)
-    val qname = "graft_streamed_daily_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = ss.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", 2).parquet(srcDir)
-    // Sum as DECIMAL: exact, so the result is independent of the
-    // micro-batch accumulation order — the double sum differed from
-    // the batch answer by an ULP depending on file arrival order. The
-    // average divides the exact sum (as double) by the count, the same
-    // two deterministic operations the oracle performs.
-    val agg = stream
-      .groupBy(date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(38,9)")).as("sum_value"))
-    val q = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val out = ss.table(qname)
-      .select(col("day"), col("event_type"), col("n"),
-        round(col("sum_value"), 4).cast("double").as("total_value"),
-        round(col("sum_value").cast("double") / col("n"), 6).as("avg_value"))
-      .orderBy("day", "event_type")
-    // The memory sink's table and the temp source dir are harness
-    // scaffolding — materialize the (small, final) aggregate and drop
-    // both, so repeated calls in a long-lived session don't accumulate
-    // registered tables and temp files.
-    // executor-side materialization, not a driver collect — see
-    // StreamingIngest: the replay output may be corpus-sized
-    val result = out.localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    result
-  }
-
-  /** Cloned session for a replay's streaming query: same
-    * SparkContext and catalog, isolated SQLConf with a small shuffle
-    * partition count (stateful operators disable AQE, so every
-    * shuffle partition is a state-store instance paying commit
-    * overhead per micro-batch — size it to the stream, not to the
-    * batch session's setting).
-    */
-  private[streaming] def streamSession(
-      spark: org.apache.spark.sql.SparkSession,
-      partitions: Int = 4): org.apache.spark.sql.SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    // Micro-batch plans here are tiny (a chunk of a delta, a few
-    // thousand rows): AQE turns every exchange into its own
-    // materialized query-stage JOB, and per-job scheduling dominates
-    // sub-second batches. Static planning pipelines the whole batch
-    // into one job; the partition count above is already stream-sized
-    // so AQE's coalescing has nothing left to do.
-    ss.conf.set("spark.sql.adaptive.enabled", "false")
-    ss
-  }
 
   /** Batch-equivalence harness for the STATEFUL sessionizer: replays
-    * the events table in global timestamp order through a real
-    * file-source stream (one chunk file per micro-batch) into
-    * `streamingSessionize`, closes every session by advancing the
-    * watermark with a far-future sentinel event, and re-shapes the
-    * emitted sessions into exactly the batch `sessionize` schema — so
-    * the operator most likely to diverge from batch (incremental
-    * per-user state + event-time timeouts) is oracle-able by the same
-    * DuckDB SQL as `q_sessionize`.
+    * the events table in (ts, event_id) order through a real
+    * file-source stream into `streamingSessionize`, closes every
+    * session by advancing the watermark with a far-future sentinel
+    * event (its own last micro-batch), and re-shapes the emitted
+    * sessions into exactly the batch `sessionize` schema — so the
+    * operator most likely to diverge from batch (incremental per-user
+    * state + event-time timeouts) is oracle-able by the same DuckDB
+    * SQL as `q_sessionize`.
     *
     * Ordered delivery matters: the handler merges events into the
     * open session incrementally, which is only equivalent to the
     * batch window computation when micro-batches replay the timeline
     * in order (a production stream gets this from its source ordering
-    * + watermark; the harness reconstructs it with sequentially
-    * written chunk files and maxFilesPerTrigger=1). The global
-    * row_number sort is harness-only driver-side shaping, not a
-    * production path.
+    * + watermark; the harness gets it from `Replay`'s key-ordered
+    * chunks).
     */
   def streamedSessionize(events: DataFrame,
                          gapMinutes: Int = DefaultGapMinutes,
@@ -159,109 +103,28 @@ object Sessionize {
     import org.apache.spark.sql.expressions.Window
     val base = events.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"), col("value"))
-    val srcPath = preparedSource("graft-stream-sessions",
-      events.queryExecution.logical.semanticHash().toLong * 31L +
-        gapMinutes * 7L + nChunks) { p =>
-      val srcDir = p.toString
-      val n = base.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      val chunked = base
-        .withColumn("_rn", row_number().over(Window.orderBy("ts", "event_id")))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val maxTs = base.agg(max("ts")).head().getTimestamp(0)
-      try {
-        val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-        val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(srcDir)
-          // EXPLICIT strictly-increasing mod-times per chunk: the file
-          // source replays in mod-time order, and relying on the wall
-          // clock (a sleep between writes) breaks on coarse-mtime
-          // filesystems where two chunks can tie and swap.
-          stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-        // sentinel far past the last event: advances the watermark so
-        // every real session's event-time timeout fires and is emitted
-        val sentinelTs = new java.sql.Timestamp(
-          maxTs.getTime + gapMinutes * 60L * 1000L * 100)
-        Seq((Long.MaxValue, sentinelTs, -1L, "sentinel", 0.0))
-          .toDF("event_id", "ts", "user_id", "event_type", "value")
-          .coalesce(1).write.mode("append").parquet(srcDir)
-        stampNewFiles(p, seen, stampBase + nChunks * 60000L)
-      } finally { chunked.unpersist(); () }
-    }
-    val srcDir = srcPath.toString
-
-    val schema = spark.read.parquet(srcDir).schema
-    val qname = "graft_streamed_sessions_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val ss = streamSession(spark)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val sessions = streamingSessionize(stream.as[Event], gapMinutes)
-    val q = sessions.writeStream.format("memory").queryName(qname)
-      .outputMode(OutputMode.Append).start()
-    try q.processAllAvailable() finally q.stop()
-
+    // sentinel far past the last event: advances the watermark so
+    // every real session's event-time timeout fires and is emitted
+    val maxTs = base.agg(max("ts")).head().getTimestamp(0)
+    val sentinel = Seq((Long.MaxValue,
+        new java.sql.Timestamp(maxTs.getTime + gapMinutes * 60L * 1000L * 100),
+        -1L, "sentinel", 0.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
     val byUser = Window.partitionBy("user_id").orderBy("start_ms")
-    val out = ss.table(qname)
-      .filter(col("user_id") >= 0) // drop the sentinel user
-      .withColumn("session_no", row_number().over(byUser).cast("long"))
-      .select(col("user_id"), col("session_no"), col("n_events"),
-        round(col("total_value"), 4).as("total_value"),
-        date_format(timestamp_millis(col("start_ms")), "yyyy-MM-dd HH:mm:ss")
-          .as("session_start"),
-        date_format(timestamp_millis(col("end_ms")), "yyyy-MM-dd HH:mm:ss")
-          .as("session_end"))
-      .orderBy("user_id", "session_no")
-    // executor-side materialization, not a driver collect — see
-    // StreamingIngest: the replay output may be corpus-sized
-    val result = out.localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    result
-  }
-
-  /** Stamp the data files a chunk write just added with one explicit
-    * mod-time, so successive chunks carry strictly increasing stamps
-    * regardless of filesystem mtime granularity or clock jitter —
-    * the file source's replay order is then deterministic. Shared by
-    * every chunked-replay harness in this package.
-    */
-  /** Memoized replay SOURCE directories, keyed by (harness tag,
-    * input-plan semantic hash, parameters): a replay's chunk files
-    * are a deterministic function of the input, and writing them is
-    * driver-side harness scaffolding, not the streaming engine under
-    * test — so repeated calls (bench passes, a long-lived session)
-    * re-measure the engine replay against the SAME prepared files
-    * instead of re-spending jobs rebuilding them. Dirs live under
-    * the JVM's temp root and are reclaimed on exit; Verify's single
-    * pass still pays (and thus covers) the prep path.
-    */
-  private val preparedSrcs =
-    new scala.collection.concurrent.TrieMap[(String, Long), java.nio.file.Path]()
-
-  private[streaming] def preparedSource(tag: String, key: Long)(
-      prep: java.nio.file.Path => Unit): java.nio.file.Path =
-    preparedSrcs.getOrElseUpdate((tag, key), {
-      val p = java.nio.file.Files.createTempDirectory(tag)
-      prep(p)
-      p
-    })
-
-  private[streaming] def stampNewFiles(
-      dir: java.nio.file.Path,
-      seen: scala.collection.mutable.Set[java.nio.file.Path],
-      stampMs: Long): Unit = {
-    import scala.jdk.CollectionConverters._
-    val parts = java.nio.file.Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-")).toSeq
-    parts.filterNot(seen).foreach { p =>
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(stampMs))
-      seen += p
+    Replay.drain(Replay.Source("sessionize", base, Seq("ts", "event_id"), nChunks,
+        last = Some(sentinel)), OutputMode.Append) { stream =>
+      streamingSessionize(stream.as[Event], gapMinutes).toDF()
+    } { sessions =>
+      sessions
+        .filter(col("user_id") >= 0) // drop the sentinel user
+        .withColumn("session_no", row_number().over(byUser).cast("long"))
+        .select(col("user_id"), col("session_no"), col("n_events"),
+          round(col("total_value"), 4).as("total_value"),
+          date_format(timestamp_millis(col("start_ms")), "yyyy-MM-dd HH:mm:ss")
+            .as("session_start"),
+          date_format(timestamp_millis(col("end_ms")), "yyyy-MM-dd HH:mm:ss")
+            .as("session_end"))
+        .orderBy("user_id", "session_no")
     }
   }
 
@@ -286,7 +149,7 @@ object Sessionize {
   private def toNanos(v: Double): Long = math.rint(v * ValueScale).toLong
 
   /** Streaming windowed counts per event_type with a watermark —
-    * the readStream → window agg → writeStream shape.
+    * the stream → window agg → sink shape.
     */
   def windowedCounts(events: DataFrame, windowMinutes: Int = 5,
                      watermark: String = "10 minutes"): DataFrame =

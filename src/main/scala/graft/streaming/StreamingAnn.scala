@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * probe per batch with zero index-side exchanges, the probe cost per
   * batch O(batch × probed cells), never a corpus scan.
   *
-  * Replay shape (the house streamed-replay pattern): the query set is
-  * staged as a 4-file parquet source read 2 files per trigger → 2
-  * real micro-batches on a cloned stream session; per batch the
+  * Replay shape ([[Replay]]): the query set replays as 2 qid-ordered
+  * chunks, 2 real micro-batches on a cloned stream session; per batch the
   * answers write to a batchId-keyed parquet sink (idempotent under
   * retry — a replayed batch overwrites its own directory; answers
   * never transit the driver) and the replay returns the read-back
@@ -27,39 +26,24 @@ object StreamingAnn {
                        nQueries: Int, k: Int, nprobe: Int,
                        overfetch: Int): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val srcPath = Sessionize.preparedSource("graft-stream-ann",
-      queries.queryExecution.logical.semanticHash().toLong ^ nQueries.toLong) { p =>
-      queries.repartition(4).write.mode("overwrite").parquet(p.toString)
-    }
-    val ss = Sessionize.streamSession(spark)
-    val schema = ss.read.parquet(srcPath.toString).schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).parquet(srcPath.toString)
-    val outPath = java.nio.file.Files.createTempDirectory("graft-ann-answers")
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bs = batch.sparkSession
-          // batchId-keyed idempotent sink: answers land on the
-          // executors' writers, never in a driver buffer — at serving
-          // scale the answer stream is unbounded
-          graft.ops.Similarity.ivfTopKAgainstIndex(bs, indexName,
-              batch, "qid", "qv", k, nprobe = nprobe, overfetch = overfetch)
-            .write.mode("overwrite")
-            .parquet(BatchProcessors.batchDir(outPath, batchId))
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+    Replay.withDir("ann-answers") { outPath =>
+      Replay.fold(Replay.Source("ann", queries, Seq("qid"), 2), ()) { (_, batch, batchId) =>
+        // batchId-keyed idempotent sink: answers land on the
+        // executors' writers, never in a driver buffer — at serving
+        // scale the answer stream is unbounded
+        graft.ops.Similarity.ivfTopKAgainstIndex(batch.sparkSession, indexName,
+            batch, "qid", "qv", k, nprobe = nprobe, overfetch = overfetch)
+          .write.mode("overwrite")
+          .parquet(BatchProcessors.batchDir(outPath, batchId))
+      }
+      // materialize before the temp sink is deleted (see
+      // StreamingIngest — executor-side, parallel)
       spark.read.parquet(outPath.toString)
-        .select(col("qid"), col("id"), col("rank"),
-          round(col("cos"), 6).as("cos"))
+        .select(col("qid"), col("id"), col("rank"), round(col("cos"), 6).as("cos"))
         .orderBy("qid", "rank")
-        // materialize before the temp sink is deleted (see
-        // StreamingIngest — executor-side, parallel)
         .localCheckpoint(true)
-    } finally StreamingDedup.deleteRecursively(outPath)
+    }
   }
 }

@@ -62,7 +62,6 @@ object StreamingDedup {
       nChunks: Int = 3,
       prebuiltIndex: Option[String] = None): DataFrame = {
     val spark = existing.sparkSession
-    import org.apache.spark.sql.expressions.Window
     val indexName = prebuiltIndex.getOrElse {
       val n = "graft_stream_dedup_idx_" +
         java.util.UUID.randomUUID().toString.replace("-", "").take(12)
@@ -72,52 +71,12 @@ object StreamingDedup {
         shingleN, k, bands, buckets = 16, membersTable = false)
       n
     }
-    // chunk files are a deterministic function of `incoming` —
-    // prepared once per input (see Sessionize.preparedSource); the
-    // accepted-survivor sink stays per-call (it is mutable state)
-    val srcPath = Sessionize.preparedSource("graft-stream-dedup-src",
-      incoming.queryExecution.logical.semanticHash().toLong * 31L + nChunks) { p =>
-      val base = incoming.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      // ascending-id chunks: the batch survivor rule is min-id per
-      // content, so the stream must see smaller ids first for
-      // first-accepted-wins to agree with it
-      val n = base.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      val chunked = base
-        .withColumn("_rn", row_number().over(Window.orderBy("doc_id")))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-      val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-      try {
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(p.toString)
-          Sessionize.stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-      } finally { chunked.unpersist(); () }
-    }
-    val outPath = java.nio.file.Files.createTempDirectory("graft-stream-dedup-out")
-    try {
-      val base = incoming.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val base = incoming.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    try Replay.withDir("dedup-out") { outPath =>
       // seed the sink inside a batchId-keyed partition directory so
       // the root stays a valid partitioned table even with zero
       // batches (r12: batch writes are per-batch OVERWRITE dirs)
-      base.limit(0).write.mode("overwrite")
-        .parquet(BatchProcessors.batchDir(outPath, -1L))
-
-      val schema = spark.read.parquet(srcPath.toString).schema
-      // stream on a cloned low-shuffle-partition session (see
-      // Sessionize.streamSession): the foreachBatch joins/aggs run
-      // over tiny per-batch data where 32-partition shuffles are
-      // pure task-launch overhead; every handle inside the batch
-      // body comes from batch.sparkSession so the whole micro-batch
-      // resolves in ONE session (the persistent index tables live in
-      // the shared catalog either way)
-      val ss = Sessionize.streamSession(spark)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcPath.toString)
+      base.limit(0).write.parquet(BatchProcessors.batchDir(outPath, -1L))
       // Accepted-so-far rides BETWEEN batches as an eagerly
       // checkpointed in-memory frame (each generation's lineage is
       // truncated, so the chain never deepens): the parquet sink
@@ -125,30 +84,24 @@ object StreamingDedup {
       // file-listing + footer pass per micro-batch just to rebuild
       // state the driver already had. A restarted stream would
       // re-seed `acceptedState` from one read of the sink.
-      val initialState = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.schema(schema).parquet(srcPath.toString).schema)
-        .select("doc_id", "text")
       // batchId-keyed idempotent body (r12, see BatchProcessors): a
       // retry overwrites its own batch_id directory instead of
       // double-appending, and the state fold applies once per batchId
-      val proc = new DedupBatchProcessor(indexName, threshold,
-        outPath, initialState)
-      val q = stream.writeStream.foreachBatch {
-        (batch: DataFrame, batchId: Long) => proc.process(batch, batchId)
-      }.start()
-      try q.processAllAvailable() finally q.stop()
-
-      val out = spark.read.parquet(outPath.toString)
-        .select("doc_id").orderBy("doc_id")
+      val proc = new DedupBatchProcessor(indexName, threshold, outPath, base.limit(0))
+      // ascending-id chunks: the batch survivor rule is min-id per
+      // content, so the stream must see smaller ids first for
+      // first-accepted-wins to agree with it
+      Replay.fold(Replay.Source("dedup", base, Seq("doc_id"), nChunks), ()) {
+        (_, batch, id) => proc.process(batch, id)
+      }
       // executor-side materialization, not a driver collect — see
       // StreamingIngest: the survivor ledger may be corpus-sized
-      out.localCheckpoint(true)
+      spark.read.parquet(outPath.toString).select("doc_id").orderBy("doc_id")
+        .localCheckpoint(true)
     } finally {
       if (prebuiltIndex.isEmpty)
         graft.io.PersistedIndex.drop(spark, indexName,
           graft.ops.Dedup.BandIndexTables)
-      deleteRecursively(outPath)
     }
   }
 

@@ -29,48 +29,13 @@ object StreamingDistinct {
     */
   def maintainedDistinct(rows: DataFrame, groupCol: String, keyCol: String,
                          b: Int = 8, nChunks: Int = 3): DataFrame = {
-    val spark = rows.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val srcPath = Sessionize.preparedSource("graft-stream-distinct-src",
-      rows.queryExecution.logical.semanticHash().toLong * 31L
-        + nChunks * 17L + b) { p =>
-      val base = rows.select(col(groupCol).cast("string").as("g"),
-        col(keyCol).cast("string").as("k"))
-      val n = base.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      // identical (g, k) rows are interchangeable between chunks —
-      // register max-folding is order-independent, so the replay's
-      // ANSWER (unlike its chunking) is deterministic
-      val chunked = base
-        .withColumn("_rn", row_number().over(Window.orderBy("g", "k")))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-      val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-      try {
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(p.toString)
-          Sessionize.stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-      } finally { chunked.unpersist(); () }
+    import graft.ops.Profiling.{hllEstimateFromRegisters, hllRegisters, maintainHllRegisters}
+    val base = rows.select(col(groupCol).cast("string").as("g"),
+      col(keyCol).cast("string").as("k"))
+    val regs = Replay.fold(Replay.Source("distinct", base, Seq("g", "k"), nChunks),
+        hllRegisters(base.limit(0), "g", "k", b)) { (regs, batch, _) =>
+      maintainHllRegisters(regs, hllRegisters(batch, "g", "k", b)).localCheckpoint()
     }
-    val schema = spark.read.parquet(srcPath.toString).schema
-    val ss = Sessionize.streamSession(spark)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcPath.toString)
-    var regs = graft.ops.Profiling.hllRegisters(
-      spark.read.parquet(srcPath.toString).limit(0), "g", "k", b)
-    val q = stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        regs = graft.ops.Profiling.maintainHllRegisters(regs,
-          graft.ops.Profiling.hllRegisters(batch, "g", "k", b))
-          .localCheckpoint()
-        ()
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    graft.ops.Profiling.hllEstimateFromRegisters(regs, b)
-      .withColumnRenamed("g", groupCol)
+    hllEstimateFromRegisters(regs, b).withColumnRenamed("g", groupCol)
   }
 }

@@ -31,41 +31,14 @@ object StreamingDrift {
                     idCol: String, textCol: String,
                     nChunks: Int = 3): DataFrame = {
     val spark = reference.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val srcPath = Sessionize.preparedSource("graft-stream-drift-src",
-      incoming.queryExecution.logical.semanticHash().toLong * 41L + nChunks) { p =>
-      val base = incoming.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      val n = base.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      val chunked = base
-        .withColumn("_rn", row_number().over(Window.orderBy("doc_id")))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-      val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-      try {
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(p.toString)
-          Sessionize.stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-      } finally { chunked.unpersist(); () }
+    val base = incoming.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val counts = Replay.fold(Replay.Source("drift", base, Seq("doc_id"), nChunks),
+        spark.range(0).select(lit("").as("tok"), lit(0L).as("c2")).limit(0)) {
+      (counts, batch, _) =>
+        counts.unionByName(graft.ops.Snapshot.tokenCounts(batch, "text", "c2"))
+          .groupBy("tok").agg(sum("c2").as("c2"))
+          .localCheckpoint()
     }
-    val schema = spark.read.parquet(srcPath.toString).schema
-    val ss = Sessionize.streamSession(spark)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcPath.toString)
-    var counts = spark.range(0).select(
-      lit("").as("tok"), lit(0L).as("c2")).limit(0)
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val bc = graft.ops.Snapshot.tokenCounts(batch, "text", "c2")
-      counts = counts.unionByName(bc)
-        .groupBy("tok").agg(sum("c2").as("c2"))
-        .localCheckpoint()
-      ()
-    }.start()
-    try q.processAllAvailable() finally q.stop()
     graft.ops.Snapshot.driftFromCounts(
       graft.ops.Snapshot.tokenCounts(reference, textCol, "c1"), counts)
   }

@@ -17,32 +17,16 @@ import org.apache.spark.sql.DataFrame
   * contract): the fold drops ids already present in `_vecs`, so a
   * retried batch re-folds to a no-op — no ledger needed.
   *
-  * Replay shape (the house streamed-replay pattern, see
-  * [[Sessionize]]): the delta stages as a 4-file parquet source read
-  * 2 files per trigger → 2 real micro-batches on a cloned stream
-  * session; `processAllAvailable` drains, then the CALLER serves
-  * against the index by name.
+  * Replay shape ([[Replay]]): the delta replays as 2 id-ordered
+  * chunks, 2 real micro-batches on a cloned stream session; once they
+  * are folded, the CALLER serves against the index by name.
   */
 object StreamingGraphIndex {
 
   def streamedGraphMaintain(delta: DataFrame, indexName: String,
                             idCol: String, vecCol: String): Unit = {
-    val spark = delta.sparkSession
-    val srcPath = Sessionize.preparedSource("graft-stream-graph",
-      delta.queryExecution.logical.semanticHash().toLong ^
-        indexName.hashCode.toLong) { p =>
-      delta.repartition(4).write.mode("overwrite").parquet(p.toString)
+    Replay.fold(Replay.Source("graph", delta, Seq(idCol), 2), ()) { (_, batch, _) =>
+      graft.ops.GraphIndex.addToGraphIndex(batch.sparkSession, indexName, batch, idCol, vecCol)
     }
-    val ss = Sessionize.streamSession(spark)
-    val schema = ss.read.parquet(srcPath.toString).schema
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).parquet(srcPath.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.GraphIndex.addToGraphIndex(batch.sparkSession,
-          indexName, batch, idCol, vecCol)
-        ()
-      }.start()
-    try q.processAllAvailable() finally q.stop()
   }
 }

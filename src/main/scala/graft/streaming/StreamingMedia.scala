@@ -42,54 +42,23 @@ object StreamingMedia {
                                payloadCol: String,
                                nChunks: Int = 3): DataFrame = {
     val spark = incoming.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val srcPath = Sessionize.preparedSource("graft-stream-media-src",
-      incoming.queryExecution.logical.semanticHash().toLong * 31L + nChunks) { p =>
-      val base = incoming.select(col(idCol).as("doc_id"),
-        col(payloadCol).cast("binary").as("payload"))
+    val base = incoming.select(col(idCol).as("doc_id"),
+      col(payloadCol).cast("binary").as("payload"))
+    Replay.withDir("media-out") { outPath =>
+      val accepted = spark.range(0).select(col("id").as("doc_id"), lit(0L).as("vhash"))
+        .limit(0)
+      accepted.write.parquet(BatchProcessors.batchDir(outPath, -1L))
+      val proc = new MediaDedupBatchProcessor(outPath, accepted)
       // ascending-id chunks: first-accepted-wins must agree with the
       // batch min-id-per-fingerprint rule
-      val n = base.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      val chunked = base
-        .withColumn("_rn", row_number().over(Window.orderBy("doc_id")))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-      val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-      try {
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(p.toString)
-          Sessionize.stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-      } finally { chunked.unpersist(); () }
-    }
-    val outPath = java.nio.file.Files.createTempDirectory("graft-stream-media-out")
-    try {
-      spark.range(0).select(col("id").as("doc_id"),
-          lit(0L).as("vhash"))
-        .limit(0).write.mode("overwrite")
-        .parquet(BatchProcessors.batchDir(outPath, -1L))
-      val schema = spark.read.parquet(srcPath.toString).schema
-      val ss = Sessionize.streamSession(spark)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcPath.toString)
-      val initialState = spark.range(0).select(col("id").as("doc_id"),
-        lit(0L).as("vhash")).limit(0)
-      val proc = new MediaDedupBatchProcessor(outPath, initialState)
-      val q = stream.writeStream.foreachBatch {
-        (batch: DataFrame, batchId: Long) => proc.process(batch, batchId)
-      }.start()
-      try q.processAllAvailable() finally q.stop()
-
-      val out = spark.read.parquet(outPath.toString)
-        .select("doc_id").orderBy("doc_id")
+      Replay.fold(Replay.Source("media", base, Seq("doc_id"), nChunks), ()) {
+        (_, batch, id) => proc.process(batch, id)
+      }
       // executor-side materialization, not a driver collect — see
       // StreamingIngest: the ledger may be corpus-sized
-      out.localCheckpoint(true)
-    } finally StreamingDedup.deleteRecursively(outPath)
+      spark.read.parquet(outPath.toString).select("doc_id").orderBy("doc_id")
+        .localCheckpoint(true)
+    }
   }
 }
 

@@ -31,8 +31,6 @@ object StreamingMerge {
   def maintainedCorpus(corpus: DataFrame, deltas: DataFrame,
                        keyCol: String, opCol: String,
                        nChunks: Int = 3): DataFrame = {
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.expressions.Window
     // The replay ≡ one-shot guarantee rests on one-delta-row-per-key;
     // upsertDelete fail-fasts only the PER-BATCH delta∩delete overlap,
     // so a duplicate upsert of a key split ACROSS micro-batches would
@@ -54,39 +52,15 @@ object StreamingMerge {
         s"'$keyCol' rows in deltas — the CDC contract is one delta row " +
         "per key; compact upstream (replay order would otherwise pick a " +
         "winner the one-shot merge does not)")
-    val srcPath = Sessionize.preparedSource("graft-stream-merge-src",
-      deltas.queryExecution.logical.semanticHash().toLong * 31L + nChunks) { p =>
-      val n = deltas.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      // chunk by key order: any split works — one-delta-row-per-key
-      // makes the fold order irrelevant — but a DETERMINISTIC split
-      // keeps the replay reproducible run to run
-      val chunked = deltas
-        .withColumn("_rn", row_number().over(Window.orderBy(keyCol)))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-      val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-      try {
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(p.toString)
-          Sessionize.stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-      } finally { chunked.unpersist(); () }
-    }
-    val schema = spark.read.parquet(srcPath.toString).schema
-    val ss = Sessionize.streamSession(spark)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcPath.toString)
+    // chunk by key order: any split works — one-delta-row-per-key
+    // makes the fold order irrelevant — but a DETERMINISTIC split
+    // keeps the replay reproducible run to run.
     // batchId-guarded body (r12): an at-least-once retry of an
     // already-applied batch is a no-op instead of a double fold
     val proc = new MergeBatchProcessor(corpus, keyCol, opCol)
-    val q = stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => proc.process(batch, batchId)
-    }.start()
-    try q.processAllAvailable() finally q.stop()
+    Replay.fold(Replay.Source("merge", deltas, Seq(keyCol), nChunks), ()) {
+      (_, batch, id) => proc.process(batch, id)
+    }
     proc.state
   }
 }

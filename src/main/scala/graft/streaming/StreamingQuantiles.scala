@@ -28,48 +28,13 @@ object StreamingQuantiles {
                           valueCol: String, qs: Seq[(Int, Int)],
                           m: Int = graft.ops.QuantileSketch.MantissaBits,
                           nChunks: Int = 3): DataFrame = {
-    val spark = rows.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val srcPath = Sessionize.preparedSource("graft-stream-quantiles-src",
-      rows.queryExecution.logical.semanticHash().toLong * 31L
-        + nChunks * 13L + m) { p =>
-      val base = rows.select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("long").as("v"))
-      val n = base.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      // identical (g, v) rows are interchangeable between chunks —
-      // sketch addition is order-independent, so the replay's ANSWER
-      // (unlike its chunking) is deterministic
-      val chunked = base
-        .withColumn("_rn", row_number().over(Window.orderBy("g", "v")))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-      val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-      try {
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(p.toString)
-          Sessionize.stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-      } finally { chunked.unpersist(); () }
+    import graft.ops.QuantileSketch.{mergeSketches, quantiles, sketch}
+    val base = rows.select(col(groupCol).cast("string").as("g"),
+      col(valueCol).cast("long").as("v"))
+    val state = Replay.fold(Replay.Source("quantiles", base, Seq("g", "v"), nChunks),
+        sketch(base.limit(0), "g", "v", m)) { (state, batch, _) =>
+      mergeSketches(state, sketch(batch, "g", "v", m), "g").localCheckpoint()
     }
-    val schema = spark.read.parquet(srcPath.toString).schema
-    val ss = Sessionize.streamSession(spark)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcPath.toString)
-    var state = graft.ops.QuantileSketch.sketch(
-      spark.read.parquet(srcPath.toString).limit(0), "g", "v", m)
-    val q = stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        state = graft.ops.QuantileSketch.mergeSketches(state,
-          graft.ops.QuantileSketch.sketch(batch, "g", "v", m), "g")
-          .localCheckpoint()
-        ()
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    graft.ops.QuantileSketch.quantiles(state, "g", qs, m)
-      .withColumnRenamed("g", groupCol)
+    quantiles(state, "g", qs, m).withColumnRenamed("g", groupCol)
   }
 }

@@ -27,46 +27,10 @@ object StreamingStats {
     */
   def maintainedStats(rows: DataFrame, groupCol: String, valueCol: String,
                       nChunks: Int = 3): DataFrame = {
-    val spark = rows.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    val srcPath = Sessionize.preparedSource("graft-stream-stats-src",
-      rows.queryExecution.logical.semanticHash().toLong * 31L + nChunks) { p =>
-      val base = rows.select(col(groupCol).as("g"),
-        col(valueCol).cast("long").as("v"))
-      val n = base.count()
-      val per = math.max(1L, (n + nChunks - 1) / nChunks)
-      // rows with identical (g, v) are interchangeable between
-      // chunks — additive folding is order-independent, so the
-      // replay's answer (unlike its chunking) is deterministic
-      val chunked = base
-        .withColumn("_rn", row_number().over(Window.orderBy("g", "v")))
-        .withColumn("_c", ((col("_rn") - 1) / per).cast("int"))
-        .drop("_rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seen = scala.collection.mutable.Set.empty[java.nio.file.Path]
-      val stampBase = System.currentTimeMillis() - (nChunks + 2) * 60000L
-      try {
-        for (c <- 0 until nChunks) {
-          chunked.filter(col("_c") === c).drop("_c").coalesce(1)
-            .write.mode("append").parquet(p.toString)
-          Sessionize.stampNewFiles(p, seen, stampBase + c * 60000L)
-        }
-      } finally { chunked.unpersist(); () }
-    }
-    val schema = spark.read.parquet(srcPath.toString).schema
-    val ss = Sessionize.streamSession(spark)
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcPath.toString)
-    var stats = graft.ops.Merge.groupStats(
-      spark.read.parquet(srcPath.toString).limit(0), "g", "v")
-    val q = stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        stats = graft.ops.Merge.maintainGroupStats(stats, batch, "g", "v")
-          .localCheckpoint()
-        ()
-    }.start()
-    try q.processAllAvailable() finally q.stop()
-    stats.select(col("g").as(groupCol), col("n"), col("s"), col("s2"),
-      col("mn"), col("mx"))
+    val base = rows.select(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
+    Replay.fold(Replay.Source("stats", base, Seq("g", "v"), nChunks),
+        graft.ops.Merge.groupStats(base.limit(0), "g", "v")) { (stats, batch, _) =>
+      graft.ops.Merge.maintainGroupStats(stats, batch, "g", "v").localCheckpoint()
+    }.select(col("g").as(groupCol), col("n"), col("s"), col("s2"), col("mn"), col("mx"))
   }
 }

@@ -70,8 +70,16 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize preserves aspect contract") {
     import Multimodal._
-    val ds = media.limit(10).as[MediaRow]
-    val resized = (resizeStub(decodeImages(ds), maxSide = 32): @annotation.nowarn).collect()
+    import java.awt.image.BufferedImage
+    def png(w: Int, h: Int): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB), "png", bos)
+      bos.toByteArray
+    }
+    val ds = Seq((100, 60), (7, 90), (40, 40), (20, 12), (33, 32)).zipWithIndex
+      .map { case ((w, h), i) => MediaRow(i.toLong, "image", 0L, png(w, h)) }.toDS()
+    val resized = decodeImages(resizeImages(ds, maxSide = 32)).collect()
+    assert(resized.length == 5)
     resized.foreach { d => assert(math.max(d.width, d.height) <= 32) }
   }
 
@@ -105,7 +113,7 @@ class MultimodalSpec extends SparkSpec {
   test("frame sampling emits strided frames") {
     import Multimodal._
     val ds = media.limit(5).as[MediaRow]
-    val frames = sampleFramesStub(ds, stride = 4): @annotation.nowarn("cat=deprecation")
+    val frames = sampleFrames(ds, stride = 4).toDF()
     val grouped = frames.groupBy("media_id").agg(count(lit(1)).as("n"),
       max("frame_no").as("mx")).collect()
     assert(grouped.length == 5)

@@ -8,6 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sql = spark.sqlContext
+
+  /** `body` with the session conf keys in `conf` set; afterwards each
+    * key is back at its previous value, or unset if it had none.
+    */
+  def withConf[A](conf: (String, String)*)(body: => A): A = {
+    val previous = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally previous.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -72,15 +72,6 @@ class CaseMapSpec extends SparkSpec {
       .select(col("id"), col("raw"), col("raw").cast("string").as("text"))
   }
 
-  private def withConf[A](conf: (String, String)*)(body: => A): A = {
-    val previous = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally previous.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Rows where `got` and `want` differ by bytes (NULL only equals NULL). */
   private def mismatches(df: DataFrame, pairs: Seq[(String, Column, Column)]): Seq[String] = {
     val rows = df.select(col("id") +: pairs.flatMap { case (n, got, want) =>

@@ -112,15 +112,6 @@ class TextStatsSpec extends SparkSpec {
     case _ => a == b
   }
 
-  private def withConf(conf: (String, String)*)(body: => Unit): Unit = {
-    val previous = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally previous.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Bit-identity on every row; with `skipNull`, on every row but the
     * NULL text. */
   private def assertBitIdentical(skipNull: Boolean = false): Unit = {

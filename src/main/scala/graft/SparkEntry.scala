@@ -4838,7 +4838,7 @@ object SparkEntry {
     val params = graft.ops.Dedup.universalParams(k)
     // coalesce to the Long.MaxValue sentinel: for a sub-shingle text
     // the gram list is empty, list_min yields NULL, and NULL band
-    // keys never join — whereas the Spark kernel (PolyMinHash) leaves
+    // keys never join — whereas the Spark kernel (`Native.polyMinHash`) leaves
     // empty-gram components at Long.MaxValue, so such docs DO
     // band-collide. The fixture avoids sub-shingle reps today; the
     // sentinel keeps the two sides equivalent if one ever appears.

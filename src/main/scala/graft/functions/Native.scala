@@ -15,47 +15,403 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
-/** Native Catalyst expressions for the hot paths — preference order
-  * (b) from the build plan: a codegen'd `Expression` beats a UDF and
-  * composed higher-order functions because it runs inside
+/** Native Catalyst expressions for the hot paths. A native expression
+  * beats a UDF or composed higher-order functions: it runs inside
   * whole-stage codegen with primitive access, no per-element lambda
-  * dispatch and no intermediate array allocation.
+  * dispatch and no intermediate arrays.
+  *
+  * The kernel contract: each scalar expression's loop is written once,
+  * in Scala, as a method of a kernel object ([[Kernels]], [[TextScan]],
+  * [[CaseMapping]]) or of a table class ([[SplitTable]],
+  * [[NodeValueTable]]). `eval` calls that method, and `doGenCode`
+  * emits one call to the same method, with seeds, parameters and
+  * tables passed in codegen's references (`ctx.addReferenceObj`). The
+  * generated code holds no loop of its own (`NativeKernelLintSpec`),
+  * so whole-stage codegen and interpreted evaluation run the same
+  * loop (`NativeModesSpec`).
   */
 
+/** The loops of the array and string expressions below, one method
+  * per expression.
+  */
+object Kernels {
+
+  /** The modulus of the 31-base polynomial token hash. */
+  val P = 1000000007L
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** The 31-base polynomial hash of `s`'s UTF-16 code units mod [[P]]:
+    * the `aggregate(transform(split(t, ""), ascii), …)` fold, since
+    * `split` emits code units and `ascii` their values.
+    */
+  private def polyHash(s: String): Long = {
+    var h = 0L
+    var i = 0
+    while (i < s.length) { h = (h * 31L + s.charAt(i)) % P; i += 1 }
+    h
+  }
+
+  /** Each token's [[polyHash]] and 31^length mod [[P]]; a NULL token
+    * reads 0 for both.
+    */
+  private def tokenHashes(a: ArrayData): (Array[Long], Array[Long]) = {
+    val n = a.numElements()
+    val h = new Array[Long](n)
+    val pw = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i)) {
+        val s = a.getUTF8String(i).toString
+        h(i) = polyHash(s)
+        var p = 1L
+        var c = 0
+        while (c < s.length) { p = (p * 31L) % P; c += 1 }
+        pw(i) = p
+      }
+      i += 1
+    }
+    (h, pw)
+  }
+
+  /** The [[polyHash]] of tokens [i, i + n) joined by single spaces,
+    * composed from [[tokenHashes]] without building the string: the
+    * polynomial composes over concatenation, H(a ++ b) =
+    * H(a)·31^|b| + H(b), and the space adds `H·31 + 32`.
+    */
+  private def gramHash(h: Array[Long], pw: Array[Long], i: Int, n: Int): Long = {
+    var g = h(i)
+    var j = 1
+    while (j < n) {
+      g = (g * 31L + 32L) % P
+      g = (g * pw(i + j) + h(i + j)) % P
+      j += 1
+    }
+    g
+  }
+
+  /** See [[DoubleDot]]. */
+  def doubleDot(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    if (y.numElements() != n)
+      throw new IllegalArgumentException(
+        s"graft_dot: vector lengths differ: $n and ${y.numElements()}")
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i))
+        throw new IllegalArgumentException(s"graft_dot: NULL element at index $i")
+      s += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    s
+  }
+
+  /** See [[SortedIntersectCount]]. */
+  def sortedIntersectCount(x: ArrayData, y: ArrayData): Int = {
+    val (nx, ny) = (x.numElements(), y.numElements())
+    var i = 0; var j = 0; var c = 0
+    while (i < nx && j < ny) {
+      if (x.isNullAt(i)) i += 1
+      else if (y.isNullAt(j)) j += 1
+      else {
+        val xv = x.getLong(i); val yv = y.getLong(j)
+        if (xv == yv) { c += 1; i += 1; j += 1 }
+        else if (xv < yv) i += 1
+        else j += 1
+      }
+    }
+    c
+  }
+
+  /** See [[MinHashSig]]; `seeds(i)` is permutation i's XXH64 seed. */
+  def minHashSig(a: ArrayData, seeds: Array[Long]): ArrayData = {
+    val out = Array.fill(seeds.length)(Long.MaxValue)
+    var j = 0
+    while (j < a.numElements()) {
+      if (!a.isNullAt(j)) {
+        val s = a.getLong(j)
+        var i = 0
+        while (i < out.length) {
+          val h = XXH64.hashLong(s, seeds(i))
+          if (h < out(i)) out(i) = h
+          i += 1
+        }
+      }
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** See [[PolyMinHashGrams]]; permutation q is x ↦ (as(q)·x + bs(q)) mod [[P]]. */
+  def polyMinHashGrams(a: ArrayData, n: Int, as: Array[Long], bs: Array[Long]): ArrayData = {
+    val (h, pw) = tokenHashes(a)
+    val out = Array.fill(as.length)(Long.MaxValue)
+    var run = 0 // non-NULL tokens ending at i
+    var i = 0
+    while (i < h.length) {
+      run = if (a.isNullAt(i)) 0 else run + 1
+      if (run >= n) {
+        val g = gramHash(h, pw, i - n + 1, n)
+        var q = 0
+        while (q < out.length) {
+          val x = (g * as(q) + bs(q)) % P
+          if (x < out(q)) out(q) = x
+          q += 1
+        }
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** See [[SimHash30]]. */
+  def simHash30(a: ArrayData): Long = {
+    val n = a.numElements()
+    val seen = new java.util.HashSet[UTF8String](n * 2)
+    val counts = new Array[Int](30)
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i)) {
+        val s = a.getUTF8String(i)
+        if (seen.add(s)) {
+          val h = polyHash(s.toString)
+          var k = 0
+          while (k < 30) {
+            counts(k) += (if (((h >> k) & 1L) != 0L) 1 else -1)
+            k += 1
+          }
+        }
+      }
+      i += 1
+    }
+    var out = 0L
+    var k = 0
+    while (k < 30) { if (counts(k) > 0) out |= (1L << k); k += 1 }
+    out
+  }
+
+  /** See [[MaxFreq]]. */
+  def maxFreq(a: ArrayData): Int = {
+    val counts = new java.util.HashMap[UTF8String, Integer](a.numElements() * 2)
+    var best = 0
+    var i = 0
+    while (i < a.numElements()) {
+      if (!a.isNullAt(i)) {
+        val c = counts.merge(a.getUTF8String(i), 1, (x: Integer, y: Integer) => x + y)
+        if (c > best) best = c.intValue()
+      }
+      i += 1
+    }
+    best
+  }
+
+  /** See [[MaxFreqLong]]. */
+  def maxFreqLong(a: ArrayData): Int = {
+    val counts = new java.util.HashMap[java.lang.Long, Integer](a.numElements() * 2)
+    var best = 0
+    var i = 0
+    while (i < a.numElements()) {
+      if (!a.isNullAt(i)) {
+        val c = counts.merge(a.getLong(i), 1, (x: Integer, y: Integer) => x + y)
+        if (c > best) best = c.intValue()
+      }
+      i += 1
+    }
+    best
+  }
+
+  /** See [[GramHashes]]. */
+  def gramHashes(a: ArrayData, n: Int): ArrayData = {
+    val len = a.numElements()
+    val th = new Array[Long](len)
+    var i = 0
+    while (i < len) {
+      th(i) =
+        if (a.isNullAt(i)) 42L
+        else {
+          val s = a.getUTF8String(i)
+          XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+        }
+      i += 1
+    }
+    val out = new Array[Long](math.max(len - (n - 1), 0))
+    i = 0
+    while (i < out.length) {
+      var acc = th(i)
+      var j = 1
+      while (j < n) { acc = XXH64.hashLong(th(i + j), XXH64.hashLong(acc, 42L)); j += 1 }
+      out(i) = acc
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** See [[DupGramCounts]]. */
+  def dupGramCounts(a: ArrayData, n: Int): InternalRow = {
+    val m = a.numElements()
+    var dupOcc = 0L
+    var covered = 0L
+    if (m > 0) {
+      val g = a.toLongArray()
+      val srt = java.util.Arrays.copyOf(g, m)
+      java.util.Arrays.sort(srt)
+      // compact the sorted array down to its duplicated values
+      var d = 0
+      var i = 0
+      while (i < m) {
+        var j = i + 1
+        while (j < m && srt(j) == srt(i)) j += 1
+        if (j - i >= 2) { srt(d) = srt(i); d += 1 }
+        i = j
+      }
+      var lastEnd = 0L
+      var k = 0
+      while (k < m) {
+        if (d > 0 && java.util.Arrays.binarySearch(srt, 0, d, g(k)) >= 0) {
+          dupOcc += 1
+          val end = k + n.toLong
+          val from = math.max(lastEnd, k.toLong)
+          if (end > from) covered += end - from
+          if (end > lastEnd) lastEnd = end
+        }
+        k += 1
+      }
+    }
+    InternalRow(dupOcc, covered)
+  }
+
+  /** See [[WinnowMins]]. */
+  def winnowMins(a: ArrayData, k: Int, window: Int): ArrayData = {
+    val (h, pw) = tokenHashes(a)
+    val grams = h.length - (k - 1)
+    if (grams < window) return new GenericArrayData(Array.emptyLongArray)
+    val g = new Array[Long](grams)
+    var i = 0
+    while (i < grams) { g(i) = gramHash(h, pw, i, k); i += 1 }
+    val mins = new Array[Long](grams - window + 1)
+    i = 0
+    while (i < mins.length) {
+      var m = g(i)
+      var j = 1
+      while (j < window) { if (g(i + j) < m) m = g(i + j); j += 1 }
+      mins(i) = m
+      i += 1
+    }
+    java.util.Arrays.sort(mins)
+    var d = 0
+    i = 0
+    while (i < mins.length) {
+      if (i == 0 || mins(i) != mins(i - 1)) { mins(d) = mins(i); d += 1 }
+      i += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(mins, d))
+  }
+
+  /** See [[GreedyChunkIndices]]. */
+  def greedyChunkIndices(w: ArrayData, budget: Long): ArrayData = {
+    val out = new Array[Long](w.numElements())
+    var cnt = 0L; var idx = 0L; var i = 0
+    while (i < out.length) {
+      val p = if (w.isNullAt(i)) 0L else w.getLong(i)
+      if (cnt > 0L && cnt + p > budget) { idx += 1L; cnt = 0L }
+      cnt += p
+      out(i) = idx
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** See [[PackInt8]]. */
+  def packInt8(a: ArrayData): Array[Byte] = {
+    val out = new Array[Byte](a.numElements())
+    var i = 0
+    while (i < out.length) {
+      val x = if (a.isNullAt(i)) 0L else a.getLong(i)
+      out(i) = math.max(-127L, math.min(127L, x)).toByte
+      i += 1
+    }
+    out
+  }
+
+  /** See [[BinaryDot]]. */
+  def binaryDot(x: Array[Byte], y: Array[Byte]): Double = {
+    if (x.length != y.length)
+      throw new IllegalArgumentException(
+        s"graft_binary_dot: vector lengths differ: ${x.length} and ${y.length}")
+    var s = 0L
+    var i = 0
+    while (i < x.length) { s += x(i).toLong * y(i).toLong; i += 1 }
+    s.toDouble
+  }
+
+  /** See [[ConcatExcludingPositions]]. */
+  def concatExcluding(toks: ArrayData, ex: ArrayData): UTF8String = {
+    val n = toks.numElements(); val m = ex.numElements()
+    val kept = new java.util.ArrayList[UTF8String](n)
+    var i = 0; var j = 0
+    while (i < n) {
+      while (j < m && (ex.isNullAt(j) || ex.getInt(j) < i)) j += 1
+      val drop = j < m && ex.getInt(j) == i
+      if (!drop && !toks.isNullAt(i)) kept.add(toks.getUTF8String(i))
+      i += 1
+    }
+    UTF8String.concatWs(Space, kept.toArray(new Array[UTF8String](kept.size)): _*)
+  }
+
+  /** See [[NormalizeNfc]]. */
+  def normalizeNfc(s: UTF8String): UTF8String = {
+    val str = s.toString
+    if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
+    else UTF8String.fromString(java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
+  }
+
+  /** See [[CharBigramStats]]. */
+  def charBigramStats(s: UTF8String): InternalRow = {
+    val str = s.toString
+    val m = str.length - 1
+    var d = 0L
+    var sum = 0.0
+    if (m > 0) {
+      val codes = new Array[Long](m)
+      var i = 0
+      while (i < m) {
+        codes(i) = (str.charAt(i).toLong << 16) | str.charAt(i + 1).toLong
+        i += 1
+      }
+      java.util.Arrays.sort(codes)
+      var k = 0
+      while (k < m) {
+        var j = k + 1
+        while (j < m && codes(j) == codes(k)) j += 1
+        d += 1
+        val c = (j - k).toDouble
+        sum += c * math.log(c)
+        k = j
+      }
+    }
+    InternalRow(math.max(m, 0).toLong, d, sum)
+  }
+}
+
 /** Dot product of two `array<double>` columns as a tight primitive
-  * loop. Fold order is ascending index — identical to
-  * `aggregate(zip_with(...))` and DuckDB's `list_sum`, so results are
-  * bit-for-bit unchanged from the composed version it replaces.
+  * loop. Fold order is ascending index — that of
+  * `aggregate(zip_with(...))` and DuckDB's `list_sum`, so on vectors of
+  * one length without NULL elements the result is bit-for-bit the
+  * composed form's. Where that form reads NULL — lengths that differ,
+  * or a NULL element — this raises an error naming the lengths or the
+  * element's index, never a truncated sum.
   */
 case class DoubleDot(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.doubleDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.doubleDot($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DoubleDot =
     copy(left = l, right = r)
@@ -79,52 +435,18 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (nx, ny) = (x.numElements(), y.numElements())
-    var i = 0; var j = 0; var c = 0
-    while (i < nx && j < ny) {
-      if (x.isNullAt(i)) i += 1
-      else if (y.isNullAt(j)) j += 1
-      else {
-        val xv = x.getLong(i); val yv = y.getLong(j)
-        if (xv == yv) { c += 1; i += 1; j += 1 }
-        else if (xv < yv) i += 1
-        else j += 1
-      }
-    }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $nx = $a.numElements(); int $ny = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $nx && $j < $ny) {
-         |  if ($a.isNullAt($i)) { $i++; }
-         |  else if ($b.isNullAt($j)) { $j++; }
-         |  else {
-         |    long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-         |    if ($xv == $yv) { $c++; $i++; $j++; }
-         |    else if ($xv < $yv) { $i++; } else { $j++; }
-         |  }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.sortedIntersectCount($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectCount =
     copy(left = l, right = r)
 }
 
 /** k-permutation MinHash signature of an `array<long>` shingle-hash
-  * column as one tight Java loop — BIT-IDENTICAL to the
+  * column as one tight loop — BIT-IDENTICAL to the
   * `aggregate(zip_with(...least(m, xxhash64(i, s))))` fold it
   * replaces (same XXH64 chain: seed 42 → hashInt(permutation index)
   * → hashLong(shingle)), so signatures interoperate with every
@@ -142,147 +464,27 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 
   // XXH64 chain prefix: xxhash64(i, s) hashes the INT index into the
   // default seed 42, then the LONG shingle into that.
-  @transient private lazy val seeds: Array[Long] =
-    Array.tabulate(k)(i => org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashInt(i, 42L))
+  @transient private lazy val seeds: Array[Long] = Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val out = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      if (!a.isNullAt(j)) {
-        val s = a.getLong(j)
-        var i = 0
-        while (i < k) {
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashLong(s, seeds(i))
-          if (h < out(i)) out(i) = h
-          i += 1
-        }
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
+  override def nullSafeEval(v: Any): Any = Kernels.minHashSig(v.asInstanceOf[ArrayData], seeds)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val seedsRef = ctx.addReferenceObj("minhashSeeds", seeds, "long[]")
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.minHashSig($a, $seedsRef)")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val seedsRef = ctx.addReferenceObj("minhashSeeds", seeds, "long[]")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val out = ctx.freshName("out")
-      val s = ctx.freshName("s"); val h = ctx.freshName("h")
-      val xxh = "org.apache.spark.sql.catalyst.expressions.XXH64"
-      s"""
-         |int $n = $a.numElements();
-         |long[] $out = new long[$k];
-         |java.util.Arrays.fill($out, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if (!$a.isNullAt($j)) {
-         |    long $s = $a.getLong($j);
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      long $h = $xxh.hashLong($s, $seedsRef[$i]);
-         |      if ($h < $out[$i]) $out[$i] = $h;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(c: Expression): MinHashSig =
     copy(child = c)
 }
 
-/** Universal-hash MinHash signature over STRING shingles as one Java
-  * loop: per shingle the 31-base polynomial hash over its UTF-16 code
-  * units mod p = 1e9+7 (bit-identical to the
-  * `aggregate(transform(split(t, ""), ascii), ...)` fold — `split`
-  * emits code units and `ascii` their values), then k affine
-  * permutations h_i = (a_i·H + b_i) mod p with a running minimum.
-  * The composed-HOF form ran interpreted with per-character lambda
-  * dispatch plus a k-long accumulator allocation per shingle.
-  */
-case class PolyMinHash(child: Expression, k: Int,
-                       params: Seq[(Long, Long)]) extends UnaryExpression {
-
-  require(k > 0 && params.length == k)
-
-  val P = 1000000007L
-
-  @transient private lazy val as: Array[Long] = params.map(_._1).toArray
-  @transient private lazy val bs: Array[Long] = params.map(_._2).toArray
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  private def polyHash(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val str = s.toString
-    var acc = 0L
-    var i = 0
-    while (i < str.length) { acc = (acc * 31L + str.charAt(i)) % P; i += 1 }
-    acc
-  }
-
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      if (!arr.isNullAt(j)) {
-        val h = polyHash(arr.getUTF8String(j))
-        var i = 0
-        while (i < k) {
-          val x = (h * as(i) + bs(i)) % P
-          if (x < out(i)) out(i) = x
-          i += 1
-        }
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val asRef = ctx.addReferenceObj("pmhA", as, "long[]")
-      val bsRef = ctx.addReferenceObj("pmhB", bs, "long[]")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val n = ctx.freshName("n")
-      val out = ctx.freshName("out"); val str = ctx.freshName("str")
-      val acc = ctx.freshName("acc"); val x = ctx.freshName("x")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $out = new long[$k];
-         |java.util.Arrays.fill($out, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if (!$a.isNullAt($j)) {
-         |    String $str = $a.getUTF8String($j).toString();
-         |    long $acc = 0L;
-         |    for (int $c = 0; $c < $str.length(); $c++) {
-         |      $acc = ($acc * 31L + $str.charAt($c)) % ${P}L;
-         |    }
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      long $x = ($acc * $asRef[$i] + $bsRef[$i]) % ${P}L;
-         |      if ($x < $out[$i]) $out[$i] = $x;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): PolyMinHash =
-    copy(child = c)
-}
-
 /** Universal-hash MinHash over word n-GRAMS of a token array,
-  * without ever materializing the gram strings. Two exact algebraic
-  * facts make this bit-identical to
-  * `PolyMinHash(array_distinct(ngrams(tokens, n)), k)`:
+  * without ever materializing the gram strings: per gram the 31-base
+  * polynomial hash over its UTF-16 code units mod p = 1e9+7, then k
+  * affine permutations h_i = (a_i·H + b_i) mod p with a running
+  * minimum. Two exact algebraic facts make this bit-identical to the
+  * universal MinHash of `array_distinct(ngrams(tokens, n))`'s strings:
   *
-  *   1. the 31-base polynomial composes over concatenation —
+  *   1. the polynomial composes over concatenation —
   *      H(a ++ b) = H(a)·31^|b| + H(b) (mod p) — so each gram's hash
   *      is assembled from per-token (hash, 31^length) pairs computed
   *      ONCE, with the joining space contributing `acc·31 + 32`;
@@ -290,121 +492,28 @@ case class PolyMinHash(child: Expression, k: Int,
   *      string form needs (to bound the per-gram work) changes no
   *      signature component and is simply dropped.
   *
-  * The string form walks every character of every OVERLAPPING gram
-  * (n× re-walk) after an interpreted slices+zip_with concat built
-  * the gram array; this is one pass over the tokens plus O(1) per
-  * gram per permutation.
+  * A gram holding a NULL token is skipped; no gram at all gives all
+  * `Long.MaxValue`. At n = 1 each gram is one element, so this is the
+  * universal MinHash of a string array ([[Native.polyMinHash]]).
   */
 case class PolyMinHashGrams(child: Expression, n: Int, k: Int,
                             params: Seq[(Long, Long)]) extends UnaryExpression {
 
   require(n > 0 && k > 0 && params.length == k)
 
-  val P = 1000000007L
-
   @transient private lazy val as: Array[Long] = params.map(_._1).toArray
   @transient private lazy val bs: Array[Long] = params.map(_._2).toArray
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    val ph = new Array[Long](len)
-    val pw = new Array[Long](len)
-    val nul = new Array[Boolean](len)
-    var i = 0
-    while (i < len) {
-      if (arr.isNullAt(i)) nul(i) = true
-      else {
-        val str = arr.getUTF8String(i).toString
-        var acc = 0L; var pow = 1L; var c = 0
-        while (c < str.length) {
-          acc = (acc * 31L + str.charAt(c)) % P
-          pow = (pow * 31L) % P
-          c += 1
-        }
-        ph(i) = acc; pw(i) = pow
-      }
-      i += 1
-    }
-    val out = Array.fill(k)(Long.MaxValue)
-    val cnt = len - (n - 1)
-    i = 0
-    while (i < cnt) {
-      var ok = true
-      var j = 0
-      while (j < n) { if (nul(i + j)) ok = false; j += 1 }
-      if (ok) {
-        var h = ph(i)
-        j = 1
-        while (j < n) {
-          h = (h * 31L + 32L) % P
-          h = (h * pw(i + j) + ph(i + j)) % P
-          j += 1
-        }
-        var q = 0
-        while (q < k) {
-          val x = (h * as(q) + bs(q)) % P
-          if (x < out(q)) out(q) = x
-          q += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(v: Any): Any =
+    Kernels.polyMinHashGrams(v.asInstanceOf[ArrayData], n, as, bs)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val asRef = ctx.addReferenceObj("pmhgA", as, "long[]")
-      val bsRef = ctx.addReferenceObj("pmhgB", bs, "long[]")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val q = ctx.freshName("q"); val c = ctx.freshName("c")
-      val len = ctx.freshName("len"); val cnt = ctx.freshName("cnt")
-      val ph = ctx.freshName("ph"); val pw = ctx.freshName("pw")
-      val nul = ctx.freshName("nul"); val out = ctx.freshName("out")
-      val str = ctx.freshName("str"); val acc = ctx.freshName("acc")
-      val pow = ctx.freshName("pow"); val h = ctx.freshName("h")
-      val ok = ctx.freshName("ok"); val x = ctx.freshName("x")
-      s"""
-         |int $len = $a.numElements();
-         |long[] $ph = new long[$len];
-         |long[] $pw = new long[$len];
-         |boolean[] $nul = new boolean[$len];
-         |for (int $i = 0; $i < $len; $i++) {
-         |  if ($a.isNullAt($i)) { $nul[$i] = true; }
-         |  else {
-         |    String $str = $a.getUTF8String($i).toString();
-         |    long $acc = 0L; long $pow = 1L;
-         |    for (int $c = 0; $c < $str.length(); $c++) {
-         |      $acc = ($acc * 31L + $str.charAt($c)) % ${P}L;
-         |      $pow = ($pow * 31L) % ${P}L;
-         |    }
-         |    $ph[$i] = $acc; $pw[$i] = $pow;
-         |  }
-         |}
-         |long[] $out = new long[$k];
-         |java.util.Arrays.fill($out, Long.MAX_VALUE);
-         |int $cnt = $len - ${n - 1};
-         |for (int $i = 0; $i < $cnt; $i++) {
-         |  boolean $ok = true;
-         |  for (int $j = 0; $j < $n; $j++) { if ($nul[$i + $j]) $ok = false; }
-         |  if ($ok) {
-         |    long $h = $ph[$i];
-         |    for (int $j = 1; $j < $n; $j++) {
-         |      $h = ($h * 31L + 32L) % ${P}L;
-         |      $h = ($h * $pw[$i + $j] + $ph[$i + $j]) % ${P}L;
-         |    }
-         |    for (int $q = 0; $q < $k; $q++) {
-         |      long $x = ($h * $asRef[$q] + $bsRef[$q]) % ${P}L;
-         |      if ($x < $out[$q]) $out[$q] = $x;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val asRef = ctx.addReferenceObj("pmhgA", as, "long[]")
+    val bsRef = ctx.addReferenceObj("pmhgB", bs, "long[]")
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.polyMinHashGrams($a, $n, $asRef, $bsRef)")
+  }
 
   override protected def withNewChildInternal(c: Expression): PolyMinHashGrams =
     copy(child = c)
@@ -422,73 +531,12 @@ case class PolyMinHashGrams(child: Expression, n: Int, k: Int,
   */
 case class SimHash30(child: Expression) extends UnaryExpression {
 
-  val P = 1000000007L
-  val Bits = 30
-
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val seen = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](n * 2)
-    val counts = new Array[Int](Bits)
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val s = a.getUTF8String(i)
-        if (seen.add(s)) {
-          val str = s.toString
-          var h = 0L; var c = 0
-          while (c < str.length) { h = (h * 31L + str.charAt(c)) % P; c += 1 }
-          var k = 0
-          while (k < Bits) {
-            counts(k) += (if (((h >> k) & 1L) != 0L) 1 else -1)
-            k += 1
-          }
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var k = 0
-    while (k < Bits) { if (counts(k) > 0) out |= (1L << k); k += 1 }
-    out
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.simHash30(v.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val k = ctx.freshName("k")
-      val c = ctx.freshName("c"); val n = ctx.freshName("n")
-      val seen = ctx.freshName("seen"); val counts = ctx.freshName("counts")
-      val s = ctx.freshName("s"); val str = ctx.freshName("str")
-      val h = ctx.freshName("h"); val out = ctx.freshName("out")
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      s"""
-         |int $n = $a.numElements();
-         |java.util.HashSet<$u> $seen = new java.util.HashSet<$u>($n * 2);
-         |int[] $counts = new int[$Bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    $u $s = $a.getUTF8String($i);
-         |    if ($seen.add($s)) {
-         |      String $str = $s.toString();
-         |      long $h = 0L;
-         |      for (int $c = 0; $c < $str.length(); $c++) {
-         |        $h = ($h * 31L + $str.charAt($c)) % ${P}L;
-         |      }
-         |      for (int $k = 0; $k < $Bits; $k++) {
-         |        $counts[$k] += ((($h >> $k) & 1L) != 0L) ? 1 : -1;
-         |      }
-         |    }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $k = 0; $k < $Bits; $k++) {
-         |  if ($counts[$k] > 0) $out |= (1L << $k);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.simHash30($a)")
 
   override protected def withNewChildInternal(c: Expression): SimHash30 =
     copy(child = c)
@@ -503,46 +551,10 @@ case class MaxFreq(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val counts = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Integer](n * 2)
-    var best = 0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val s = a.getUTF8String(i)
-        val c = counts.merge(s, 1, (x: Integer, y: Integer) => x + y)
-        if (c > best) best = c.intValue()
-      }
-      i += 1
-    }
-    best
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.maxFreq(v.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts"); val best = ctx.freshName("best")
-      val s = ctx.freshName("s"); val c = ctx.freshName("c")
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      s"""
-         |int $n = $a.numElements();
-         |java.util.HashMap<$u, Integer> $counts =
-         |  new java.util.HashMap<$u, Integer>($n * 2);
-         |int $best = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    $u $s = $a.getUTF8String($i);
-         |    Integer $c = (Integer) $counts.get($s);
-         |    $c = ($c == null) ? Integer.valueOf(1) : Integer.valueOf($c.intValue() + 1);
-         |    $counts.put($s, $c);
-         |    if ($c.intValue() > $best) $best = $c.intValue();
-         |  }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.maxFreq($a)")
 
   override protected def withNewChildInternal(c: Expression): MaxFreq =
     copy(child = c)
@@ -558,44 +570,10 @@ case class MaxFreqLong(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val counts = new java.util.HashMap[java.lang.Long, Integer](n * 2)
-    var best = 0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val c = counts.merge(a.getLong(i), 1, (x: Integer, y: Integer) => x + y)
-        if (c > best) best = c.intValue()
-      }
-      i += 1
-    }
-    best
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.maxFreqLong(v.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts"); val best = ctx.freshName("best")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = $a.numElements();
-         |java.util.HashMap<Long, Integer> $counts =
-         |  new java.util.HashMap<Long, Integer>($n * 2);
-         |int $best = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    Long _k = Long.valueOf($a.getLong($i));
-         |    Integer $c = (Integer) $counts.get(_k);
-         |    $c = ($c == null) ? Integer.valueOf(1) : Integer.valueOf($c.intValue() + 1);
-         |    $counts.put(_k, $c);
-         |    if ($c.intValue() > $best) $best = $c.intValue();
-         |  }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.maxFreqLong($a)")
 
   override protected def withNewChildInternal(c: Expression): MaxFreqLong =
     copy(child = c)
@@ -619,73 +597,10 @@ case class GramHashes(child: Expression, n: Int) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val len = a.numElements()
-    val th = new Array[Long](len)
-    var i = 0
-    while (i < len) {
-      th(i) =
-        if (a.isNullAt(i)) 42L
-        else {
-          val s = a.getUTF8String(i)
-          org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-        }
-      i += 1
-    }
-    val cnt = len - (n - 1)
-    if (cnt <= 0) new GenericArrayData(Array.emptyLongArray)
-    else {
-      val out = new Array[Long](cnt)
-      i = 0
-      while (i < cnt) {
-        var acc = th(i)
-        var j = 1
-        while (j < n) {
-          acc = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(
-            th(i + j),
-            org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(acc, 42L))
-          j += 1
-        }
-        out(i) = acc
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.gramHashes(v.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val len = ctx.freshName("len"); val cnt = ctx.freshName("cnt")
-      val th = ctx.freshName("th"); val out = ctx.freshName("out")
-      val acc = ctx.freshName("acc"); val s = ctx.freshName("s")
-      val xxh = "org.apache.spark.sql.catalyst.expressions.XXH64"
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      s"""
-         |int $len = $a.numElements();
-         |long[] $th = new long[$len];
-         |for (int $i = 0; $i < $len; $i++) {
-         |  if ($a.isNullAt($i)) { $th[$i] = 42L; }
-         |  else {
-         |    $u $s = $a.getUTF8String($i);
-         |    $th[$i] = $xxh.hashUnsafeBytes(
-         |      $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), 42L);
-         |  }
-         |}
-         |int $cnt = $len - ${n - 1};
-         |long[] $out = new long[$cnt > 0 ? $cnt : 0];
-         |for (int $i = 0; $i < $cnt; $i++) {
-         |  long $acc = $th[$i];
-         |  for (int $j = 1; $j < $n; $j++) {
-         |    $acc = $xxh.hashLong($th[$i + $j], $xxh.hashLong($acc, 42L));
-         |  }
-         |  $out[$i] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.gramHashes($a, $n)")
 
   override protected def withNewChildInternal(c: Expression): GramHashes =
     copy(child = c)
@@ -715,81 +630,10 @@ case class DupGramCounts(child: Expression, n: Int) extends UnaryExpression {
     StructField("dup_occ", LongType, nullable = false),
     StructField("covered", LongType, nullable = false)))
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val m = a.numElements()
-    var dupOcc = 0L
-    var covered = 0L
-    if (m > 0) {
-      val g = a.toLongArray()
-      val srt = java.util.Arrays.copyOf(g, m)
-      java.util.Arrays.sort(srt)
-      // compact the sorted array down to its duplicated values
-      var d = 0
-      var i = 0
-      while (i < m) {
-        var j = i + 1
-        while (j < m && srt(j) == srt(i)) j += 1
-        if (j - i >= 2) { srt(d) = srt(i); d += 1 }
-        i = j
-      }
-      var lastEnd = 0L
-      var k = 0
-      while (k < m) {
-        if (d > 0 && java.util.Arrays.binarySearch(srt, 0, d, g(k)) >= 0) {
-          dupOcc += 1
-          val start = k + 1L
-          val end = k + n.toLong
-          val from = math.max(lastEnd, start - 1)
-          if (end > from) covered += end - from
-          if (end > lastEnd) lastEnd = end
-        }
-        k += 1
-      }
-    }
-    InternalRow(dupOcc, covered)
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.dupGramCounts(v.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val m = ctx.freshName("m"); val g = ctx.freshName("g")
-      val srt = ctx.freshName("srt"); val d = ctx.freshName("d")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val k = ctx.freshName("k"); val dupOcc = ctx.freshName("dupOcc")
-      val covered = ctx.freshName("covered"); val lastEnd = ctx.freshName("lastEnd")
-      val start = ctx.freshName("start"); val end = ctx.freshName("end")
-      val from = ctx.freshName("from")
-      s"""
-         |int $m = $a.numElements();
-         |long $dupOcc = 0L; long $covered = 0L;
-         |if ($m > 0) {
-         |  long[] $g = $a.toLongArray();
-         |  long[] $srt = java.util.Arrays.copyOf($g, $m);
-         |  java.util.Arrays.sort($srt);
-         |  int $d = 0;
-         |  int $i = 0;
-         |  while ($i < $m) {
-         |    int $j = $i + 1;
-         |    while ($j < $m && $srt[$j] == $srt[$i]) $j++;
-         |    if ($j - $i >= 2) { $srt[$d] = $srt[$i]; $d++; }
-         |    $i = $j;
-         |  }
-         |  long $lastEnd = 0L;
-         |  for (int $k = 0; $k < $m; $k++) {
-         |    if ($d > 0 && java.util.Arrays.binarySearch($srt, 0, $d, $g[$k]) >= 0) {
-         |      $dupOcc++;
-         |      long $start = $k + 1L;
-         |      long $end = $k + ${n}L;
-         |      long $from = Math.max($lastEnd, $start - 1L);
-         |      if ($end > $from) $covered += $end - $from;
-         |      if ($end > $lastEnd) $lastEnd = $end;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { $dupOcc, $covered });
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.dupGramCounts($a, $n)")
 
   override protected def withNewChildInternal(c: Expression): DupGramCounts =
     copy(child = c)
@@ -1141,123 +985,13 @@ case class WinnowMins(child: Expression, k: Int, window: Int)
 
   require(k > 0 && window > 0)
 
-  val P = 1000000007L
-
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    val ph = new Array[Long](len)
-    val pw = new Array[Long](len)
-    var i = 0
-    while (i < len) {
-      if (!arr.isNullAt(i)) {
-        val str = arr.getUTF8String(i).toString
-        var acc = 0L; var pow = 1L; var c = 0
-        while (c < str.length) {
-          acc = (acc * 31L + str.charAt(c)) % P
-          pow = (pow * 31L) % P
-          c += 1
-        }
-        ph(i) = acc; pw(i) = pow
-      }
-      i += 1
-    }
-    val cnt = len - (k - 1)
-    if (cnt < window) new GenericArrayData(Array.emptyLongArray)
-    else {
-      val gh = new Array[Long](cnt)
-      i = 0
-      while (i < cnt) {
-        var h = ph(i)
-        var j = 1
-        while (j < k) {
-          h = (h * 31L + 32L) % P
-          h = (h * pw(i + j) + ph(i + j)) % P
-          j += 1
-        }
-        gh(i) = h
-        i += 1
-      }
-      val wins = cnt - window + 1
-      val mins = new Array[Long](wins)
-      i = 0
-      while (i < wins) {
-        var mn = gh(i)
-        var j = 1
-        while (j < window) { if (gh(i + j) < mn) mn = gh(i + j); j += 1 }
-        mins(i) = mn
-        i += 1
-      }
-      java.util.Arrays.sort(mins)
-      var d = 0
-      i = 0
-      while (i < wins) {
-        if (i == 0 || mins(i) != mins(i - 1)) { mins(d) = mins(i); d += 1 }
-        i += 1
-      }
-      new GenericArrayData(java.util.Arrays.copyOf(mins, d))
-    }
-  }
+  override def nullSafeEval(v: Any): Any =
+    Kernels.winnowMins(v.asInstanceOf[ArrayData], k, window)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val len = ctx.freshName("len"); val ph = ctx.freshName("ph")
-      val pw = ctx.freshName("pw"); val i = ctx.freshName("i")
-      val j = ctx.freshName("j"); val c = ctx.freshName("c")
-      val str = ctx.freshName("str"); val acc = ctx.freshName("acc")
-      val pow = ctx.freshName("pow"); val cnt = ctx.freshName("cnt")
-      val gh = ctx.freshName("gh"); val h = ctx.freshName("h")
-      val wins = ctx.freshName("wins"); val mins = ctx.freshName("mins")
-      val mn = ctx.freshName("mn"); val d = ctx.freshName("d")
-      s"""
-         |int $len = $a.numElements();
-         |long[] $ph = new long[$len];
-         |long[] $pw = new long[$len];
-         |for (int $i = 0; $i < $len; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    String $str = $a.getUTF8String($i).toString();
-         |    long $acc = 0L; long $pow = 1L;
-         |    for (int $c = 0; $c < $str.length(); $c++) {
-         |      $acc = ($acc * 31L + $str.charAt($c)) % ${P}L;
-         |      $pow = ($pow * 31L) % ${P}L;
-         |    }
-         |    $ph[$i] = $acc; $pw[$i] = $pow;
-         |  }
-         |}
-         |int $cnt = $len - ${k - 1};
-         |if ($cnt < $window) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
-         |} else {
-         |  long[] $gh = new long[$cnt];
-         |  for (int $i = 0; $i < $cnt; $i++) {
-         |    long $h = $ph[$i];
-         |    for (int $j = 1; $j < $k; $j++) {
-         |      $h = ($h * 31L + 32L) % ${P}L;
-         |      $h = ($h * $pw[$i + $j] + $ph[$i + $j]) % ${P}L;
-         |    }
-         |    $gh[$i] = $h;
-         |  }
-         |  int $wins = $cnt - $window + 1;
-         |  long[] $mins = new long[$wins];
-         |  for (int $i = 0; $i < $wins; $i++) {
-         |    long $mn = $gh[$i];
-         |    for (int $j = 1; $j < $window; $j++) {
-         |      if ($gh[$i + $j] < $mn) $mn = $gh[$i + $j];
-         |    }
-         |    $mins[$i] = $mn;
-         |  }
-         |  java.util.Arrays.sort($mins);
-         |  int $d = 0;
-         |  for (int $i = 0; $i < $wins; $i++) {
-         |    if ($i == 0 || $mins[$i] != $mins[$i - 1]) { $mins[$d] = $mins[$i]; $d++; }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    java.util.Arrays.copyOf($mins, $d));
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.winnowMins($a, $k, $window)")
 
   override protected def withNewChildInternal(c: Expression): WinnowMins =
     copy(child = c)
@@ -1277,40 +1011,11 @@ case class GreedyChunkIndices(left: Expression, right: Expression)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(w: Any, b: Any): Any = {
-    val ws = w.asInstanceOf[ArrayData]
-    val budget = b.asInstanceOf[Long]
-    val n = ws.numElements()
-    val out = new Array[Long](n)
-    var cnt = 0L; var idx = 0L; var i = 0
-    while (i < n) {
-      val p = if (ws.isNullAt(i)) 0L else ws.getLong(i)
-      if (cnt > 0L && cnt + p > budget) { idx += 1L; cnt = 0L }
-      cnt += p
-      out(i) = idx
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(w: Any, b: Any): Any =
+    Kernels.greedyChunkIndices(w.asInstanceOf[ArrayData], b.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val cnt = ctx.freshName("cnt"); val idx = ctx.freshName("idx")
-      val out = ctx.freshName("out"); val p = ctx.freshName("p")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $out = new long[$n];
-         |long $cnt = 0L; long $idx = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $p = $a.isNullAt($i) ? 0L : $a.getLong($i);
-         |  if ($cnt > 0L && $cnt + $p > $b) { $idx++; $cnt = 0L; }
-         |  $cnt += $p;
-         |  $out[$i] = $idx;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (w, b) => s"graft.functions.Kernels.greedyChunkIndices($w, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): GreedyChunkIndices =
     copy(left = l, right = r)
@@ -1328,33 +1033,10 @@ case class PackInt8(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = BinaryType
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) {
-      val x = if (a.isNullAt(i)) 0L else a.getLong(i)
-      out(i) = math.max(-127L, math.min(127L, x)).toByte
-      i += 1
-    }
-    out
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.packInt8(v.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val out = ctx.freshName("out"); val x = ctx.freshName("x")
-      s"""
-         |int $n = $a.numElements();
-         |byte[] $out = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $x = $a.isNullAt($i) ? 0L : $a.getLong($i);
-         |  $out[$i] = (byte) java.lang.Math.max(-127L, java.lang.Math.min(127L, $x));
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.Kernels.packInt8($a)")
 
   override protected def withNewChildInternal(c: Expression): PackInt8 =
     copy(child = c)
@@ -1364,36 +1046,19 @@ case class PackInt8(child: Expression) extends UnaryExpression {
   * a tight signed-byte loop — the hot scan kernel of the quantized
   * ANN index. Sums in a long (max |dim × 127²| ≈ 1.2e7 at dim 768,
   * nowhere near overflow) and returns double for direct use in the
-  * approximate-cosine formula.
+  * approximate-cosine formula. Vectors of different lengths raise an
+  * error naming both lengths.
   */
 case class BinaryDot(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    val n = math.min(x.length, y.length)
-    var s = 0L
-    var i = 0
-    while (i < n) { s += x(i).toLong * y(i).toLong; i += 1 }
-    s.toDouble
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.binaryDot(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.length, $b.length);
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (long) $a[$i] * (long) $b[$i];
-         |}
-         |${ev.value} = (double) $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.binaryDot($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): BinaryDot =
     copy(left = l, right = r)
@@ -1415,43 +1080,11 @@ case class ConcatExcludingPositions(left: Expression, right: Expression)
 
   override def dataType: DataType = StringType
 
-  override def nullSafeEval(t: Any, e: Any): Any = {
-    val toks = t.asInstanceOf[ArrayData]
-    val ex = e.asInstanceOf[ArrayData]
-    val n = toks.numElements(); val m = ex.numElements()
-    val kept = new java.util.ArrayList[org.apache.spark.unsafe.types.UTF8String](n)
-    var i = 0; var j = 0
-    while (i < n) {
-      while (j < m && (ex.isNullAt(j) || ex.getInt(j) < i)) j += 1
-      val drop = j < m && ex.getInt(j) == i
-      if (!drop && !toks.isNullAt(i)) kept.add(toks.getUTF8String(i))
-      i += 1
-    }
-    org.apache.spark.unsafe.types.UTF8String.concatWs(
-      org.apache.spark.unsafe.types.UTF8String.fromString(" "),
-      kept.toArray(new Array[org.apache.spark.unsafe.types.UTF8String](kept.size)): _*)
-  }
+  override def nullSafeEval(t: Any, e: Any): Any =
+    Kernels.concatExcluding(t.asInstanceOf[ArrayData], e.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val kept = ctx.freshName("kept")
-      val drop = ctx.freshName("drop")
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |java.util.ArrayList<$u> $kept = new java.util.ArrayList<$u>($n);
-         |int $j = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  while ($j < $m && ($b.isNullAt($j) || $b.getInt($j) < $i)) { $j++; }
-         |  boolean $drop = $j < $m && $b.getInt($j) == $i;
-         |  if (!$drop && !$a.isNullAt($i)) { $kept.add($a.getUTF8String($i)); }
-         |}
-         |${ev.value} = $u.concatWs($u.fromString(" "),
-         |  ($u[]) $kept.toArray(new $u[0]));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (t, e) => s"graft.functions.Kernels.concatExcluding($t, $e)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ConcatExcludingPositions =
     copy(left = l, right = r)
@@ -1689,7 +1322,7 @@ case class CountMinLongs(
   require(width > 0 && depth > 0 && seeds.length == depth,
     "need width > 0 and one (a,b) seed pair per depth row")
 
-  val P = 1000000007L
+  private val P = Kernels.P
   @transient private lazy val as: Array[Long] = seeds.map(_._1).toArray
   @transient private lazy val bs: Array[Long] = seeds.map(_._2).toArray
 
@@ -1763,28 +1396,10 @@ case class NormalizeNfc(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = StringType
 
-  override def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-    val str = s.toString
-    if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
-    else org.apache.spark.unsafe.types.UTF8String.fromString(
-      java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.normalizeNfc(v.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val str = ctx.freshName("str")
-      val u = "org.apache.spark.unsafe.types.UTF8String"
-      s"""
-         |String $str = $c.toString();
-         |if (java.text.Normalizer.isNormalized($str, java.text.Normalizer.Form.NFC)) {
-         |  ${ev.value} = $c;
-         |} else {
-         |  ${ev.value} = $u.fromString(
-         |    java.text.Normalizer.normalize($str, java.text.Normalizer.Form.NFC));
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.normalizeNfc($c)")
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeNfc =
     copy(child = newChild)
@@ -1798,9 +1413,8 @@ case class NormalizeNfc(child: Expression) extends UnaryExpression {
   *
   * One pass per row, ZERO shuffle at any corpus size: each bigram
   * packs into a long (two UTF-16 units), counting is sort + run-scan
-  * over a primitive array — no hash map (Janino-friendly, no boxing)
-  * and no explode-groupBy(doc, gram), which would shuffle O(chars)
-  * rows. Σ accumulates in ascending-run order (sorted codes), so the
+  * over a primitive array — no hash map, no boxing, and no
+  * explode-groupBy(doc, gram), which would shuffle O(chars) rows. Σ accumulates in ascending-run order (sorted codes), so the
   * result is partition- and input-order-independent. UTF-16-unit
   * bigrams coincide with code-point bigrams for all BMP text (the
   * whole synthetic corpus and virtually all real text).
@@ -1812,70 +1426,10 @@ case class CharBigramStats(child: Expression) extends UnaryExpression {
     StructField("n_distinct", LongType, nullable = false),
     StructField("clogc", DoubleType, nullable = false)))
 
-  override def nullSafeEval(v: Any): Any = {
-    val str = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
-    val m = str.length - 1
-    var d = 0L
-    var s = 0.0
-    if (m > 0) {
-      val codes = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        codes(i) = (str.charAt(i).toLong << 16) | str.charAt(i + 1).toLong
-        i += 1
-      }
-      java.util.Arrays.sort(codes)
-      var k = 0
-      while (k < m) {
-        var j = k + 1
-        while (j < m && codes(j) == codes(k)) j += 1
-        d += 1
-        val c = (j - k).toDouble
-        s += c * math.log(c)
-        k = j
-      }
-    }
-    InternalRow(math.max(m, 0).toLong, d, s)
-  }
+  override def nullSafeEval(v: Any): Any = Kernels.charBigramStats(v.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val str = ctx.freshName("str"); val m = ctx.freshName("m")
-      val codes = ctx.freshName("codes"); val i = ctx.freshName("i")
-      val j = ctx.freshName("j"); val k = ctx.freshName("k")
-      val d = ctx.freshName("d"); val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val hi = ctx.freshName("hi"); val lo = ctx.freshName("lo")
-      // NOTE: Janino mis-parses "((long) x.charAt(i)) << 16" as a
-      // type expression — keep the cast and the shift in separate
-      // statements or codegen silently falls back to interpreted
-      // eval (caught by the fallback-disabled spec).
-      s"""
-         |String $str = $a.toString();
-         |int $m = $str.length() - 1;
-         |long $d = 0L; double $s = 0.0;
-         |if ($m > 0) {
-         |  long[] $codes = new long[$m];
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    long $hi = (long) $str.charAt($i);
-         |    long $lo = (long) $str.charAt($i + 1);
-         |    $codes[$i] = ($hi << 16) | $lo;
-         |  }
-         |  java.util.Arrays.sort($codes);
-         |  int $k = 0;
-         |  while ($k < $m) {
-         |    int $j = $k + 1;
-         |    while ($j < $m && $codes[$j] == $codes[$k]) $j++;
-         |    $d++;
-         |    double $c = (double) ($j - $k);
-         |    $s += $c * Math.log($c);
-         |    $k = $j;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { (long) Math.max($m, 0), $d, $s });
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.charBigramStats($c)")
 
   override protected def withNewChildInternal(newChild: Expression): CharBigramStats =
     copy(child = newChild)
@@ -2330,12 +1884,11 @@ object Native {
       GraftBridge.expression(tokens.cast("array<string>")), n))
 
   /** Codegen'd universal-hash MinHash over string shingles
-    * (bit-identical to the polynomial-hash fold form).
+    * (bit-identical to the polynomial-hash fold form): the n = 1 case
+    * of [[polyMinHashGrams]], where each gram is one shingle.
     */
-  def polyMinHash(shingles: Column, k: Int,
-                  params: Seq[(Long, Long)]): Column =
-    GraftBridge.column(PolyMinHash(
-      GraftBridge.expression(shingles.cast("array<string>")), k, params))
+  def polyMinHash(shingles: Column, k: Int, params: Seq[(Long, Long)]): Column =
+    polyMinHashGrams(shingles, 1, k, params)
 
   /** Codegen'd 30-bit SimHash of a token array (bit-identical to the
     * composed distinct+poly+majority fold).
@@ -2344,7 +1897,7 @@ object Native {
     GraftBridge.column(SimHash30(GraftBridge.expression(tokens.cast("array<string>"))))
 
   /** Codegen'd universal-hash MinHash over word n-grams of a token
-    * array (bit-identical to PolyMinHash over the distinct gram
+    * array (bit-identical to [[polyMinHash]] over the distinct gram
     * strings, which are never materialized).
     */
   def polyMinHashGrams(tokens: Column, n: Int, k: Int,

@@ -231,6 +231,11 @@ object Similarity {
       probes: Int = 0,
       maxBroadcastCandidates: Long = MaxBroadcastCandidates): DataFrame = {
     val dim = vecDim(corpus, vecCol)
+    // no corpus vector: no hyperplane to draw, no neighbour to find
+    if (dim == 0)
+      return queries.select(col(qIdCol).as("qid")).limit(0)
+        .crossJoin(corpus.select(col(idCol).as("id")))
+        .select(col("qid"), col("id"), lit(0).cast("int").as("rank"), lit(0.0).as("cos"))
     def sigs(vc: Column): Column = array((0 until tables).map { t =>
       hyperplaneSignature(vc, randomHyperplanes(dim, bitsPerTable, seed + t))
     }: _*)

@@ -19,54 +19,6 @@ class CaseMapLintSpec extends AnyFunSuite {
   /** (file, object) pairs whose body may call Spark's case mapping. */
   private val allowed = Seq("graft/ops/TextAnalysis.scala" -> "Composed")
 
-  /** `src` with every comment and string literal blanked to spaces;
-    * newlines stay, so offsets keep their line numbers.
-    */
-  private def codeOnly(src: String): String = {
-    val out = new StringBuilder(src.length)
-    def blank(c: Char): Char = if (c == '\n') '\n' else ' '
-    var i = 0
-    while (i < src.length) {
-      val end =
-        if (src.startsWith("//", i)) src.indexOf('\n', i) match { case -1 => src.length; case e => e }
-        else if (src.startsWith("/*", i)) src.indexOf("*/", i + 2) + 2
-        else if (src.startsWith("\"\"\"", i)) {
-          var e = src.indexOf("\"\"\"", i + 3) + 3
-          while (e < src.length && src.charAt(e) == '"') e += 1
-          e
-        } else if (src.charAt(i) == '"') stringEnd(src, i + 1)
-        else if (src.startsWith("'\"'", i)) i + 3
-        else -1
-      if (end < 0) { out += src.charAt(i); i += 1 }
-      else { src.substring(i, end).foreach(c => out += blank(c)); i = end }
-    }
-    out.result()
-  }
-
-  /** The offset just past the single-line string literal whose body
-    * starts at `i`, stepping over escapes and over `${…}` splices,
-    * which may hold strings of their own.
-    */
-  private def stringEnd(src: String, i: Int): Int = {
-    var e = i
-    while (src.charAt(e) != '"') {
-      if (src.charAt(e) == '\\') e += 2
-      else if (src.startsWith("${", e)) {
-        var depth = 0
-        e += 1
-        do {
-          src.charAt(e) match {
-            case '{' => depth += 1; e += 1
-            case '}' => depth -= 1; e += 1
-            case '"' => e = stringEnd(src, e + 1)
-            case _ => e += 1
-          }
-        } while (depth > 0)
-      } else e += 1
-    }
-    e + 1
-  }
-
   /** The offset range of `object name { … }`'s body in `code`. */
   private def objectBody(code: String, name: String): Range = {
     val open = code.indexOf('{', code.indexOf(s"object $name "))
@@ -88,15 +40,15 @@ class CaseMapLintSpec extends AnyFunSuite {
     def rel(p: Path): String = root.relativize(p).toString
     val hits = for {
       p <- sources
-      code = codeOnly(new String(Files.readAllBytes(p), "UTF-8"))
+      code = ScalaSource.codeOnly(new String(Files.readAllBytes(p), "UTF-8"))
       exempt = allowed.collect { case (f, o) if rel(p) == f => objectBody(code, o) }
       m <- call.findAllMatchIn(code) if !exempt.exists(_.contains(m.start))
-    } yield s"$p:${code.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+    } yield s"$p:${ScalaSource.lineOf(code, m.start)}: ${m.matched}"
     assert(hits.isEmpty, s"${hits.size} hits:\n" + hits.mkString("\n"))
   }
 
   test("the lint blanks comments and strings, splices included, but not code") {
-    val code = codeOnly(
+    val code = ScalaSource.codeOnly(
       "val a = lower(x) // upper(y)\n/* lower(z) */ val b = \"upper(w)\"\n" +
         "val c = s\"\"\"lower(v)\"\"\"; val d = functions.upper(u); val e = Native.lower(t)\n" +
         "val f = '\"'; val g = \"a\\\"lower(q)\"; val h = upper (p)\n" +

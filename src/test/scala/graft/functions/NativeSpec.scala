@@ -54,18 +54,19 @@ class NativeSpec extends SparkSpec {
   }
 
   test("every scalar native kernel codegen-COMPILES (fallback disabled)") {
-    // Janino rejects some valid-Java constructs (cast-then-shift bit
-    // CharBigramStats); with the default fallback the kernel silently
-    // runs interpreted and nothing fails. This sweep pins compile
-    // success for every scalar kernel (the TypedImperativeAggregates
-    // are interpreted by design).
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    // Janino rejects some valid-Java constructs; with the default
+    // fallback the kernel silently runs interpreted and nothing fails.
+    // This sweep pins compile success for every scalar kernel (the
+    // TypedImperativeAggregates are interpreted by design). A
+    // higher-order function in a projection keeps the whole projection
+    // out of whole-stage codegen, and expression-level codegen falls
+    // back to `eval` silently, so the inputs are built without one:
+    // per-token xxhash64 is GramHashes at n = 1, and sort_array sorts.
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
         .limit(20)
-        .select($"text",
-          split($"text", "\\s+").as("toks"),
-          transform(split($"text", "\\s+"), t => xxhash64(t)).as("hashes"))
+        .select($"text", split($"text", "\\s+").as("toks"))
+        .select($"text", $"toks", Native.gramHashes($"toks", 1).as("hashes"))
       val probes = docs.select(
         Native.charBigramStats($"text").as("a"),
         Native.normalizeNfc($"text").as("b"),
@@ -78,26 +79,37 @@ class NativeSpec extends SparkSpec {
         Native.polyMinHashGrams($"toks", 3, 4, Seq((3L, 7L), (5L, 11L), (7L, 13L), (11L, 17L))).as("i"),
         Native.winnowMins($"toks", 5, 4).as("j"),
         Native.sortedIntersectCount(
-          array_sort($"hashes"), array_sort($"hashes")).as("k"),
+          sort_array($"hashes"), sort_array($"hashes")).as("k"),
         Native.concatExcluding($"toks", array(lit(0))).as("l"),
         Native.dupGramCounts(Native.gramHashes($"toks", 2), 2).as("m"),
         Native.wsTokens($"text").as("n"),
         Native.textStats($"text", graft.ops.TextAnalysis.LangProfiles).as("o"))
       assert(probes.collect().length == 20)
+      assertCalls(probes, Seq("Kernels.charBigramStats", "Kernels.normalizeNfc",
+        "Kernels.minHashSig", "Kernels.maxFreq", "Kernels.maxFreqLong", "Kernels.gramHashes",
+        "Kernels.polyMinHashGrams", "Kernels.simHash30", "Kernels.winnowMins",
+        "Kernels.sortedIntersectCount", "Kernels.concatExcluding", "Kernels.dupGramCounts",
+        "TextScan.wsTokens", "TextScan.stats"))
       val vecs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
         .limit(10)
-        .select(transform($"embedding", x => x.cast("double")).as("v"))
+        .select($"embedding".cast("array<double>").as("v"))
       val p2 = vecs.select(
         Native.doubleDot($"v", $"v").as("a"),
-        Native.binaryDot(Native.packInt8(
-          transform($"v", x => least(greatest(x * 10, lit(-127.0)), lit(127.0))
-            .cast("long"))),
-          Native.packInt8(transform($"v", x =>
-            least(greatest(x * 10, lit(-127.0)), lit(127.0)).cast("long")))).as("b"),
-        Native.greedyChunkIndices(
-          transform($"v", x => lit(1L)), lit(4L)).as("c"))
+        Native.binaryDot(Native.packInt8($"v".cast("array<long>")),
+          Native.packInt8($"v".cast("array<long>"))).as("b"),
+        Native.greedyChunkIndices(array_repeat(lit(1L), size($"v")), lit(4L)).as("c"))
       assert(p2.collect().length == 10)
-    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+      assertCalls(p2, Seq("Kernels.doubleDot", "Kernels.binaryDot", "Kernels.packInt8",
+        "Kernels.greedyChunkIndices"))
+    }
+  }
+
+  /** Each of `kernels` is called from `df`'s generated code. */
+  private def assertCalls(df: org.apache.spark.sql.DataFrame, kernels: Seq[String]): Unit = {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val code = codegenStringSeq(df.queryExecution.executedPlan).map(_._2).mkString("\n")
+    val missing = kernels.filterNot(k => code.contains(s"graft.functions.$k("))
+    assert(missing.isEmpty, s"no generated call to ${missing.mkString(", ")}")
   }
 
   test("native dot participates in whole-stage codegen") {
@@ -190,22 +202,30 @@ class NativeSpec extends SparkSpec {
   }
 
   test("every scalar kernel's generated code actually compiles (no silent interpreted fallback)") {
-    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     // A janino compile error does NOT fail the query — Spark quietly
     // re-runs the stage interpreted, so the oracle stays green while
     // the codegen path is dead (this caught MaxFreq/MaxFreqLong:
     // janino erases generics, so `Integer c = map.get(k)` needs an
     // explicit cast). With spark.sql.codegen.fallback=false the
-    // compile error surfaces as a test failure instead.
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val df = Seq(
-        (Array("a", "b", "a", "c", "b", "a"), Array(1L, 2L, 1L, 9L), Array(1.0, 2.0, 3.0)),
-        (Array.empty[String], Array.empty[Long], Array(0.5, 0.5, 0.5))
-      ).toDF("toks", "longs", "vec")
+    // compile error surfaces as a test failure instead. The rows come
+    // from an RDD and BinaryDot's bytes from columns: a `Seq.toDF`
+    // frame is a local relation whose projection the optimizer
+    // evaluates through `eval`, as it folds a call on literals.
+    withConf("spark.sql.codegen.fallback" -> "false") {
+      val schema = StructType(Seq(
+        StructField("toks", ArrayType(StringType)), StructField("longs", ArrayType(LongType)),
+        StructField("vec", ArrayType(DoubleType)),
+        StructField("p", BinaryType), StructField("q", BinaryType)))
+      val rows = Seq(
+        Row(Seq("a", "b", "a", "c", "b", "a"), Seq(1L, 2L, 1L, 9L), Seq(1.0, 2.0, 3.0),
+          Array[Byte](1, 2), Array[Byte](3, 4)),
+        Row(Seq.empty[String], Seq.empty[Long], Seq(0.5, 0.5, 0.5),
+          Array[Byte](1, 2), Array[Byte](3, 4)))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       val params = Seq((3L, 7L), (11L, 13L))
-      val out = df.select(
+      val projected = df.select(
         Native.maxFreq($"toks"),
         Native.maxFreqLong($"longs"),
         Native.gramHashes($"toks", 2),
@@ -214,18 +234,18 @@ class NativeSpec extends SparkSpec {
         Native.polyMinHashGrams($"toks", 2, 2, params),
         Native.simHash30($"toks"),
         Native.doubleDot($"vec", $"vec"),
-        Native.binaryDot(lit(Array[Byte](1, 2)), lit(Array[Byte](3, 4))),
+        Native.binaryDot($"p", $"q"),
         Native.sortedIntersectCount($"longs", $"longs"),
         Native.concatExcluding($"toks", array(lit(1))),
         Native.greedyChunkIndices($"longs", lit(10L)),
-        Native.packInt8($"longs")).collect()
+        Native.packInt8($"longs"))
+      val out = projected.collect()
       assert(out.length == 2)
       assert(out(0).getInt(0) == 3) // maxFreq("a") over the first row
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-        case None => spark.conf.unset("spark.sql.codegen.fallback")
-      }
+      assertCalls(projected, Seq("Kernels.maxFreq", "Kernels.maxFreqLong", "Kernels.gramHashes",
+        "Kernels.minHashSig", "Kernels.polyMinHashGrams", "Kernels.simHash30",
+        "Kernels.doubleDot", "Kernels.binaryDot", "Kernels.sortedIntersectCount",
+        "Kernels.concatExcluding", "Kernels.greedyChunkIndices", "Kernels.packInt8"))
     }
   }
 
